@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Driver-run benchmark: times every registered query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A warmup pass (two small
@@ -22,12 +22,68 @@ import org.apache.spark.sql.SparkSession
   * stages came pre-built (`materialize_reused`).
   */
 object Bench {
+
+  /** One run's measurements: per-query seconds for each timing pass (-1
+    * when the query threw) and the per-pass steal and wall seconds.
+    */
+  final case class Run(sf: String, names: Seq[String],
+      pass1: Map[String, Double], pass2: Map[String, Double],
+      stealS: (Double, Double), wallS: (Double, Double)) {
+    /** min-of-2; a query that threw in either pass is -1, never a fast
+      * timing. */
+    val warm: Map[String, Double] = names.map { n =>
+      val (t1, t2) = (pass1(n), pass2(n))
+      n -> (if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2))
+    }.toMap
+    val nOk: Int = names.count(warm(_) >= 0)
+  }
+
+  private def fmt(v: Double, dp: Int): String =
+    if (v < 0) "-1" else BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toString
+
+  // Short keys (the qNN prefix) keep the stdout line inside its window.
+  private def shortKey(n: String): String = n.takeWhile(_ != '_')
+
+  private def qmap(names: Seq[String], m: String => Double, dp: Int): String =
+    names.map(n => "\"" + shortKey(n) + "\":" + fmt(m(n), dp))
+      .mkString("{", ",", "}")
+
+  private def errors(r: Run): String =
+    r.names.filter(r.warm(_) < 0).map("\"" + shortKey(_) + "\"")
+      .mkString("[", ",", "]")
+
+  // With errors, the sum covers an unequal query set and totals would
+  // be incomparable across runs — report null so nobody compares them;
+  // n_ok says how much of the set the run covered either way.
+  private def totalOf(vs: Seq[Double]): String =
+    if (vs.forall(_ >= 0)) fmt(vs.sum, 3) else "null"
+
+  /** The stdout line the driver parses. The driver keeps only the last
+    * 2000 chars of stdout before parsing. Round 15's line measured 2014
+    * chars and lost its head to that window (BENCH_r15 parsed:null —
+    * round 16 was judged with NO prev baseline). Two fixes, measured
+    * against the r16 artifact: build.sbt suppresses sbt's "[success]"
+    * epilogue (Global/showSuccess:=false, +73 chars of window), and the
+    * line carries the contract fields plus compact telemetry (~1880
+    * chars at 154 queries; the loadavg samples, cold_total and per-stage
+    * detail stay in bench_full.json). Graceful degradation, never a
+    * crash: a long errors list (or a much bigger registry) sheds the
+    * telemetry extras before it sheds the contract fields — a
+    * truncated-but-parsed line beats a dead bench.
+    */
+  def stdoutLine(r: Run): String = {
+    val total = totalOf(r.names.map(r.warm))
+    def mkLine(extras: String): String =
+      s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${r.nOk},"queries":${qmap(r.names, r.warm, 2)}$extras,"sf":"${r.sf}"}"""
+    val telemetry = s""","steal_s":[${fmt(r.stealS._1, 1)},${fmt(r.stealS._2, 1)}],"wall_s":[${fmt(r.wallS._1, 1)},${fmt(r.wallS._2, 1)}],"errors":${errors(r)}"""
+    Seq(mkLine(telemetry), mkLine(s""","n_err":${r.names.size - r.nOk}"""), mkLine(""))
+      .find(_.length <= 1900).getOrElse(mkLine(""))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCores
+    val spark = GraftSession.local(cpus, "bench")
     Seq("q1_pricing_summary", "q26_type_stats").foreach { w =>
       try SparkEntry.queries(w)(spark, sfDir).count()
       catch { case _: Throwable => () }
@@ -51,24 +107,24 @@ object Bench {
     // (last in pass 1, first in reversed pass 2) ran back-to-back inside
     // one stall and reported 34.5 s for a query that measures 4.7 s in
     // isolation — min-of-2 can't help when both samples are adjacent.
-    // A query that throws is reported as -1, never as a fast timing.
     // SPARK_GRAFT_BENCH_ONLY=q106,q107,... — rehearsal subset for scale
     // decades where a full 150-query sweep is wasteful (the sf10
-    // appendix runs ~15 queries). Matches the short qNN prefix. The
-    // artifact keeps the same shape; scaling.py's appendix mode joins it
-    // against a full lower-SF artifact, iterating the SUBSET's keys.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // accept either the short qNN prefix or the full registry name
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(o =>
-        o.contains(n.takeWhile(_ != '_')) || o.contains(n)))
-    require(names.nonEmpty, "SPARK_GRAFT_BENCH_ONLY matched no queries: " +
-      only.map(_.mkString(",")).getOrElse(""))
+    // appendix runs ~15 queries). The artifact keeps the same shape;
+    // scaling.py's appendix mode joins it against a full lower-SF
+    // artifact, iterating the SUBSET's keys.
+    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(Registry.select)
+      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+    // Registry guards full-name duplicates; the JSON keys are the short
+    // qNN prefixes, so a reused number would silently drop one timing.
+    require(names.map(shortKey).distinct.size == names.size,
+      "duplicate qNN bench keys would silently drop a timing")
+    // first failure per query, "<ExceptionClass>: <message>"
+    val failures = new java.util.TreeMap[String, String]()
     def once(name: String): Double = {
       val t0 = System.nanoTime()
       val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-               catch { case _: Throwable => false }
+               catch { case e: Throwable =>
+                 failures.putIfAbsent(shortKey(name), e.toString); false }
       val elapsed = (System.nanoTime() - t0) / 1e9
       // several pipelines localCheckpoint intermediates (CC labels,
       // minhash tables); left persisted they accumulate across 2x88
@@ -78,87 +134,26 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       if (ok) elapsed else -1.0
     }
-    // Host-load telemetry: the 1-minute loadavg sampled at pass
-    // boundaries, plus each pass's wall total. These numbers exist so a
-    // reader can tell contention-inflated runs from real regressions —
-    // round 5's artifact carried numbers 2–60x inflated by a loaded
-    // host and was indistinguishable from a regression without them.
-    // A loadavg far above this process's own footprint (or a pass wall
-    // total far above the per-query sum) says: re-run on a quiet host
-    // before reading the numbers as engine throughput.
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    // Hypervisor STEAL seconds (aggregate over all vCPUs, from
-    // /proc/stat field 8): on this VM the host visibly throttles a
-    // saturating run — steal accumulated during a pass is wall time no
-    // engine change can recover, and the cleanest explanation when two
-    // identical runs differ 30%+ with an idle-looking loadavg.
-    def stealSec(): Double =
-      try {
-        val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-          .find(_.startsWith("cpu ")).get.trim.split("\\s+")
-        cpu(8).toDouble / 100.0 // USER_HZ=100 ticks/s
-      } catch { case _: Throwable => -1.0 }
-    def fmt(v: Double, dp: Int): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toString
-
-    val load0 = loadavg(); val steal0 = stealSec()
+    // Host-load telemetry at pass boundaries, plus each pass's wall
+    // total. A loadavg far above this process's own footprint (or a pass
+    // wall total far above the per-query sum) says: re-run on a quiet
+    // host before reading the numbers as engine throughput.
+    val load0 = HostLoad.loadavg(); val steal0 = HostLoad.stealSec()
     val wall0 = System.nanoTime()
     val pass1 = names.map(n => n -> once(n)).toMap
-    val load1 = loadavg(); val steal1 = stealSec()
+    val load1 = HostLoad.loadavg(); val steal1 = HostLoad.stealSec()
     val wall1 = System.nanoTime()
     val half = names.size / 2
     val pass2 = (names.drop(half) ++ names.take(half)).map(n => n -> once(n)).toMap
-    val load2 = loadavg(); val steal2 = stealSec()
+    val load2 = HostLoad.loadavg(); val steal2 = HostLoad.stealSec()
     val wall2 = System.nanoTime()
-    def stealJ(a: Double, b: Double): String =
-      if (a < 0 || b < 0) "-1" else fmt(b - a, 1)
-    def loadJson = s"""{"start":${fmt(load0, 2)},"mid":${fmt(load1, 2)},"end":${fmt(load2, 2)},"cpus":$cpus,"steal_s":{"pass1":${stealJ(steal0, steal1)},"pass2":${stealJ(steal1, steal2)}}}"""
-    def wallJson = s"""{"pass1":${fmt((wall1 - wall0) / 1e9, 1)},"pass2":${fmt((wall2 - wall1) / 1e9, 1)}}"""
-    val results = names.map { n =>
-      val (t1, t2) = (pass1(n), pass2(n))
-      n -> (if (t1 < 0 || t2 < 0) -1.0 else math.min(t1, t2))
-    }
-    val warm = results.toMap
-    // The driver keeps only the last 2000 chars of stdout before parsing.
-    // Round 15's line measured 2014 chars and lost its head to that
-    // window (BENCH_r15 parsed:null — round 16 was judged with NO prev
-    // baseline). Two fixes, measured against the r16 artifact: build.sbt
-    // suppresses sbt's "[success]" epilogue (Global/showSuccess:=false,
-    // +73 chars of window), and the stdout line drops to the contract
-    // fields plus compact telemetry (~1880 chars at 154 queries; the
-    // loadavg samples, cold_total and per-stage detail stay in
-    // bench_full.json — nothing is no longer recorded). Short keys (the
-    // qNN prefix) and 2-dp seconds as before; timing methodology is
-    // UNCHANGED — this is emission only.
-    def shortKey(n: String): String = n.takeWhile(_ != '_')
-    // Registry guards full-name duplicates; the JSON keys are the short
-    // qNN prefixes, so a reused number would silently drop one timing.
-    require(names.map(shortKey).distinct.size == names.size,
-      "duplicate qNN bench keys would silently drop a timing")
-    def qmap(m: String => Double, dp: Int): String =
-      names.map(n => "\"" + shortKey(n) + "\":" + fmt(m(n), dp))
-        .mkString("{", ",", "}")
-    val errs = results.collect { case (k, v) if v < 0 => "\"" + shortKey(k) + "\"" }
-      .mkString("[", ",", "]")
-    val nOk = results.count(_._2 >= 0)
-    // With errors, the sum covers an unequal query set and totals would
-    // be incomparable across runs — report null so nobody compares them;
-    // n_ok says how much of the set the run covered either way.
-    def totalOf(vs: Seq[Double]): String =
-      if (vs.forall(_ >= 0)) fmt(vs.sum, 3) else "null"
-    val total = totalOf(results.map(_._2))
-    val coldTotal = totalOf(names.map(pass1))
-    def mkLine(extras: String): String =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_ok":$nOk,"queries":${qmap(warm, 2)}$extras,"sf":"$sfDir"}"""
-    val telemetry = s""","steal_s":[${stealJ(steal0, steal1)},${stealJ(steal1, steal2)}],"wall_s":[${fmt((wall1 - wall0) / 1e9, 1)},${fmt((wall2 - wall1) / 1e9, 1)}],"errors":$errs"""
-    // graceful degradation, never a crash: a long errors list (or a much
-    // bigger registry) sheds the telemetry extras before it sheds the
-    // contract fields — a truncated-but-parsed line beats a dead bench
-    val line = Seq(mkLine(telemetry), mkLine(s""","n_err":${results.size - nOk}"""), mkLine(""))
-      .find(_.length <= 1900).getOrElse(mkLine(""))
+    def stealDelta(a: Double, b: Double): Double = if (a < 0 || b < 0) -1.0 else b - a
+    val run = Run(sfDir, names, pass1, pass2,
+      (stealDelta(steal0, steal1), stealDelta(steal1, steal2)),
+      ((wall1 - wall0) / 1e9, (wall2 - wall1) / 1e9))
+    val line = stdoutLine(run)
+    val loadJson = s"""{"start":${fmt(load0, 2)},"mid":${fmt(load1, 2)},"end":${fmt(load2, 2)},"cpus":$cpus,"steal_s":{"pass1":${fmt(run.stealS._1, 1)},"pass2":${fmt(run.stealS._2, 1)}}}"""
+    val wallJson = s"""{"pass1":${fmt(run.wallS._1, 1)},"pass2":${fmt(run.wallS._2, 1)}}"""
     // Full detail (3-dp warm AND cold per query, plus per-stage landed-
     // table build seconds) goes to a file: the stdout line must stay
     // inside the driver's 2000-char tail window.
@@ -175,7 +170,8 @@ object Bench {
     val matBytes = graft.operators.Materialize.stageBytes.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"n_ok":$nOk,"n_queries":${results.size},"warm":${qmap(warm, 3)},"cold":${qmap(pass1, 3)},"materialize_s":$mat,"materialize_reused":$matReused,"materialize_bytes":$matBytes,"load":$loadJson,"wall_s":$wallJson,"errors":$errs,"sf":"$sfDir"}"""
+    val detail = new ObjectMapper().writeValueAsString(failures)
+    val full = s"""{"metric":"total","value":${totalOf(names.map(run.warm))},"unit":"sec","cold_total":${totalOf(names.map(pass1))},"n_ok":${run.nOk},"n_queries":${names.size},"warm":${qmap(names, run.warm, 3)},"cold":${qmap(names, pass1, 3)},"materialize_s":$mat,"materialize_reused":$matReused,"materialize_bytes":$matBytes,"load":$loadJson,"wall_s":$wallJson,"errors":${errors(run)},"error_detail":$detail,"sf":"$sfDir"}"""
     for ((f, s) <- Seq("bench.json" -> line, "bench_full.json" -> full)) {
       val w = new java.io.PrintWriter(f, "UTF-8")
       try w.println(s) finally w.close()

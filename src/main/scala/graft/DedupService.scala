@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.{IndexCompaction, IngestLoop}
 
@@ -151,9 +150,7 @@ object DedupService {
       .map(operators.Banding.parse(_, "--banding flag"))
       .getOrElse(operators.Banding.Auto)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    val spark = GraftSession.local(appName = "dedup-service")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

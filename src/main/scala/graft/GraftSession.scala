@@ -7,12 +7,12 @@ import org.apache.spark.sql.SparkSession
   * Local mode is a stand-in for a real cluster: `cores` executor threads in
   * one JVM. All scale-sensitive knobs (shuffle partitions, AQE, broadcast
   * threshold) are set here once so every entry point (tests, Verify, Bench)
-  * runs the same engine configuration.
+  * runs the same engine configuration. Every `main` builds its session
+  * through [[local]].
   */
 object GraftSession {
 
-  /** Shared config applied to any builder — also used by driver-run mains. */
-  def configure(b: SparkSession.Builder, cores: Int): SparkSession.Builder =
+  private def configure(b: SparkSession.Builder, cores: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
@@ -27,7 +27,7 @@ object GraftSession {
       // 23.1 s on quiet interleaved A/B passes — scheduling overhead, not
       // compute); at 100 TB the same rule yields thousands of ~64 MB
       // partitions. This matches Spark's own guidance on the knob
-      // ("recommended to set this to false") — NOT a local[32] constant.
+      // ("recommended to set this to false") — NOT a 32-core constant.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
@@ -60,7 +60,11 @@ object GraftSession {
         case None => new org.apache.spark.SparkConf(false)
       })
 
-  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+  /** `SPARK_GRAFT_CPUS`, else every core the JVM can see. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def local(cores: Int = defaultCores, appName: String = "graft"): SparkSession = {
     val s = configure(
       SparkSession.builder().master(s"local[$cores]").appName(appName),
       cores

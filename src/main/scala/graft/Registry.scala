@@ -30,4 +30,16 @@ object Registry {
 
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The sorted names a comma-separated list picks: each item is a short
+    * qNN prefix (`q1` is `q1_pricing_summary`, never `q10_…`) or a full
+    * name. A list that picks nothing fails.
+    */
+  def select(csv: String): Seq[String] = {
+    val only = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val names = all.map(_.name).sorted
+      .filter(n => only.contains(n.takeWhile(_ != '_')) || only.contains(n))
+    require(names.nonEmpty, s"no queries matched: $csv")
+    names
+  }
 }

@@ -33,19 +33,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQuer
   */
 object StreamBench {
 
-  private def loadavg(): Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
-      .split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
-
-  /** Hypervisor steal seconds (see Bench for the full story). */
-  private def stealSec(): Double =
-    try {
-      val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu ")).get.trim.split("\\s+")
-      cpu(8).toDouble / 100.0
-    } catch { case _: Throwable => -1.0 }
-
   private def fmt(v: Double, dp: Int = 1): String =
     if (v.isNaN || v.isInfinite) "-1"
     else BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toString
@@ -340,13 +327,11 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.defaultCores
     val nSlices = sys.env.getOrElse("SPARK_GRAFT_STREAM_SLICES", "12").toInt
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, "stream-bench")
     import spark.implicits._
-    val load0 = loadavg(); val steal0 = stealSec()
+    val load0 = HostLoad.loadavg(); val steal0 = HostLoad.stealSec()
     val base = "/tmp/graft_streambench"
 
     // ---- pre-sliced replay inputs (one file per micro-batch) ----
@@ -796,7 +781,7 @@ object StreamBench {
         docsAll.filter(col("doc_id") > qsI(0) && col("doc_id") <= qsI(1)),
         docsAll.filter(col("doc_id") > qsI(1)))
       // SPARK_GRAFT_FILES_PER_TRIGGER amortizes the per-micro-batch
-      // fixed cost (~0.7-1.2 s/trigger on local[32]) at higher SF; the
+      // fixed cost (~0.7-1.2 s/trigger on 32 local cores) at higher SF; the
       // admit decision is trigger-size-invariant (IngestLoopSpec)
       val filesPerTrigger =
         sys.env.getOrElse("SPARK_GRAFT_FILES_PER_TRIGGER", "1").toInt
@@ -1023,7 +1008,7 @@ object StreamBench {
     spark.conf.unset(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
 
-    val load1 = loadavg(); val steal1 = stealSec()
+    val load1 = HostLoad.loadavg(); val steal1 = HostLoad.stealSec()
     val stealS = if (steal0 < 0 || steal1 < 0) "-1" else fmt(steal1 - steal0)
     val line = s"""{"metric":"stream_bench","unit":"rows/sec",""" +
       s""""slices":$nSlices,"changelog_ckpt":$changelog,""" +
@@ -1041,12 +1026,10 @@ object StreamBench {
     println(line)
   }
 
-  /** The bounded-state sketch stages, shared between the full
-    * [[main]] sweep and `graft.tools.SketchScaleBench` (the sf10
-    * rehearsal runs ONLY these two — the corpus-size-INDEPENDENT state
-    * bounds are the claims a new decade can falsify cheaply).
+  /** The bounded-state sketch stages: their corpus-size-INDEPENDENT
+    * state bounds are the claims a new decade can falsify cheaply.
     */
-  private[graft] def hllLiveStage(spark: SparkSession, sfDir: String,
+  private def hllLiveStage(spark: SparkSession, sfDir: String,
       base: String, nSlices: Int): String = {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -1096,7 +1079,7 @@ object StreamBench {
   /** See [[hllLiveStage]] — the count-min twin (4×w cells, the
     * corpus-size-independent bound).
     */
-  private[graft] def cmLiveStage(spark: SparkSession, sfDir: String,
+  private def cmLiveStage(spark: SparkSession, sfDir: String,
       base: String, nSlices: Int): String = {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -431,7 +431,7 @@ object EventWindows {
     // offsets, and a per-user pivot-back restores the three rank
     // columns. Two narrow 3N-row shuffles replace three user-table
     // window shuffles + three broadcast builds — fewer exchanges at ANY
-    // scale, not a local[32] artifact.
+    // scale, not an artifact of 32 local cores.
     val ex = u.select(col("user_id"), col("m_cents"), explode(array(
         struct(lit("r").as("metric"), col("r_days").as("bkt"),
           lit(0L).as("o1")),

@@ -288,7 +288,7 @@ object Relational {
     // reduced nothing and the same bytes crossed the wire twice.
     // One keyed repartition moves the projected rows ONCE; the pair
     // sums and the window total then both run inside that partitioning
-    // with no further exchange (QueryStats: shufW 13.4 → 6.9 MB at
+    // with no further exchange (round 17, 04196ee: shufW 13.4 → 6.9 MB at
     // sf0.1). On a lake with real line duplication (TPC-H proper: ~7
     // lines/pair) the r16 shape wins instead — this is a data-shape
     // decision, re-measure before porting. numPartitions is left to

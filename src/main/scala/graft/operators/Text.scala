@@ -419,12 +419,12 @@ object Text {
     * reference-scale pin — every driver SF is under 12.5k docs, so the
     * 4×2 construction and all its oracle hashes are untouched; the
     * derivation only engages at rehearsal scale). Sized from
-    * tools.LshOccupancyProbe on the GenCorpus decades: at 500k docs the
-    * fixed r=2 band self-join emits 1.03M pairs/band (n^1.9 — the q35
-    * sf10 DNF), r=5 emits 28k (~0.056/doc, at the ~4.75% true-dup
-    * floor, where extra depth buys nothing); at 50k docs r=3 already
-    * sits on the floor. One row per quadrupling lands exactly those
-    * depths ((4,2)→≤12.5k, (5,3)→50k, (7,5)→500k) and keeps the
+    * band-occupancy counts on the GenCorpus decades (round 14, 1d627c2):
+    * at 500k docs the fixed r=2 band self-join emits 1.03M pairs/band
+    * (n^1.9 — the q35 sf10 DNF), r=5 emits 28k (~0.056/doc, at the
+    * ~4.75% true-dup floor, where extra depth buys nothing); at 50k docs
+    * r=3 already sits on the floor. One row per quadrupling lands
+    * exactly those depths ((4,2)→≤12.5k, (5,3)→50k, (7,5)→500k) and keeps the
     * emission near the floor for the next decades; the cap (8) bounds
     * the per-row streaming projection cost. Integer shift arithmetic,
     * not float log — the threshold crossings are exact.
@@ -499,7 +499,7 @@ object Text {
     * higher-order pass (with a boxed intermediate array) per minhash
     * per reference. Measured: the barriered production shape drops
     * 9.1 → 6.4 s/pass and the unbarriered plain shape 146 → 22 s at
-    * the reference-scale 4×2 (tools/BandingShapeBench, 47.5k-doc
+    * the reference-scale 4×2 (round 14, 359bd97: 47.5k-doc
     * corpus, identical output hash); at the corpus-derived (7,5) = 35
     * minhashes the 500k-doc streaming drains gain 37–77%
     * (tools/GateScaleBench — see [[minHashBankOnce]], which the
@@ -556,7 +556,7 @@ object Text {
     * transforms being interpreted, outside codegen subexpression
     * elimination — the corpus pays the pipeline 8×: measured 135 s vs
     * 7.8 s for one banding pass over the 47.5k-doc sf1 rehearsal
-    * corpus (tools/BandingShapeBench, identical output hash). A
+    * corpus (round 13, d6bec06; identical output hash). A
     * Generate between the hs project and its consumers is the cheapest
     * optimizer-proof barrier that works in streaming (no shuffle, no
     * state, no typed boundary); the executed-plan audits pin the
@@ -768,7 +768,7 @@ object Text {
     // filtered shingle self-join on `sh`) carries a Σc² mass over
     // shingle-value multiplicity, and a bounded-vocabulary corpus caps
     // distinct shingles at |V|³ — measured n²/|V|³ growth
-    // (tools.LshOccupancyProbe: 1.3e8 rows at 50k docs → 1.3e10 at
+    // (round 14, 1d627c2: 1.3e8 rows at 50k docs → 1.3e10 at
     // 500k, the q35 sf10 DNF) that no banding selectivity can fix,
     // because it grows with CORPUS size, not candidate count.
     val sizes = mh.select(col("doc_id"), col("n_sh"))
@@ -991,8 +991,8 @@ object Text {
     // pair contributes exactly two (doc, jraw) rows, pair counts come
     // back as `sum div 2`.
     //
-    // Optimization round 17 batch 2 (guide §1.2 step 2, measured by
-    // tools.Q110Probe): the round(jaccard, 6) comparison semantics are
+    // Optimization round 17 batch 2 (guide §1.2 step 2, measured in
+    // 66f1719): the round(jaccard, 6) comparison semantics are
     // the oracle contract, but the ROUNDED VALUE never reaches the
     // output — only the indicators round6(j) >= t and their per-doc
     // max. Spark's double Round is BigDecimal.valueOf(x).setScale(6,
@@ -2142,7 +2142,7 @@ object Text {
     // q94 discipline) and reverted on measurement — two of the four
     // consumers are TakeOrdered top-k's, which AQE executes as eager
     // driver-side jobs OUTSIDE the exchange stage cache, so without the
-    // checkpoint the sketch pipeline replays per consumer (QueryStats:
+    // checkpoint the sketch pipeline replays per consumer (1583ff6:
     // 9→12 jobs, warm CPU 0.24→0.74 s, wall 0.95→1.5 s; an explicit
     // term-not-null pin did not change it). The pinned table is
     // VOCAB-bounded (sublinear in corpus bytes), not corpus-row-sized,

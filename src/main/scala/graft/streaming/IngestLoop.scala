@@ -85,7 +85,7 @@ object IngestLoop {
     // lean emission: presence row on band 0 / short key + non-owner
     // verdicts only — ~4× fewer verdict rows per drain, same admit set
     // and same per-batch doc accounting (both spec-pinned; measured in
-    // tools/AdmitCostBench)
+    // round 13, dd5733d)
     val verdicts = TextStreams.streamingNearDupAdmit(spark,
       gated.select(col("doc_id"), col("text")), lean = true,
       banding = IndexCompaction.indexBanding(idxRoot))
@@ -126,7 +126,7 @@ object IngestLoop {
     * re-invoking with the same checkpoint finishes the cycle.
     *
     * `filesPerTrigger` prices the drain's FIXED cost: each micro-batch
-    * carries ~0.7–1.2 s of trigger overhead on local[32] (offset
+    * carries ~0.7–1.2 s of trigger overhead on 32 local cores (offset
     * commit, state-store snapshot, landing write) regardless of rows,
     * so a cycle of N files drains in ~N × fixed + data at the default
     * of 1. The flat drain_s across SFs in STREAM_SCALING.md is that

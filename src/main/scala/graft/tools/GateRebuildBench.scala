@@ -34,7 +34,7 @@ import graft.streaming.IndexCompaction
 object GateRebuildBench {
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(32, "gate-rebuild-bench")
+    val spark = GraftSession.local(appName = "gate-rebuild-bench")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))

@@ -34,7 +34,6 @@
 //   SPARK_GRAFT_SF_DIR=/tmp/gensf/sf10 sbt "runMain graft.tools.GateScaleBench"
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQueryListener, StreamingQueryProgress, Trigger}
 import graft.{GraftSession, StreamBench}
@@ -43,7 +42,6 @@ import org.apache.spark.sql.streaming.TTLConfig
 object GateScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/gensf/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val nSlices = sys.env.getOrElse("SPARK_GRAFT_STREAM_SLICES", "12").toInt
     val stages = sys.env.getOrElse("SPARK_GRAFT_GATE_STAGES", "gate,lsh,admit")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
@@ -53,8 +51,7 @@ object GateScaleBench {
     val ttlMs = sys.env.getOrElse("SPARK_GRAFT_TTL_MS", "2000").toLong
     val deadlineS =
       sys.env.getOrElse("SPARK_GRAFT_GATE_DEADLINE_S", "5400").toLong
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    val spark = GraftSession.local(appName = "gate-scale-bench")
     spark.sparkContext.setLogLevel("ERROR")
     val base = "/tmp/graft_gatescale"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))

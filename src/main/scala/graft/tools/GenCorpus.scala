@@ -281,9 +281,7 @@ object GenCorpus {
       case Array("--seed", v) => v.toLong }.getOrElse(42L)
     val docsOnly = args.contains("--docs-only")
     val skew = args.contains("--skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    val spark = graft.GraftSession.local(appName = "gen-corpus")
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()
     if (docsOnly) generateDocsEmb(spark, outDir, sf, seed, skew)

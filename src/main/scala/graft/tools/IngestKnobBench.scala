@@ -27,8 +27,7 @@ import graft.streaming.{IndexCompaction, IngestLoop}
 object IngestKnobBench {
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "ingest-knob-bench")
+    val spark = GraftSession.local(appName = "ingest-knob-bench")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

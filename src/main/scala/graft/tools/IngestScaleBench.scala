@@ -11,7 +11,6 @@
 //   SPARK_GRAFT_SF_DIR=/tmp/gensf/sf10 sbt "runMain graft.tools.IngestScaleBench"
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.{GraftSession, StreamBench}
 import graft.streaming.{IndexCompaction, IngestLoop}
@@ -19,12 +18,10 @@ import graft.streaming.{IndexCompaction, IngestLoop}
 object IngestScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/gensf/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val nSlices = sys.env.getOrElse("SPARK_GRAFT_STREAM_SLICES", "12").toInt
     val filesPerTrigger =
       sys.env.getOrElse("SPARK_GRAFT_FILES_PER_TRIGGER", "4").toInt
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    val spark = GraftSession.local(appName = "ingest-scale-bench")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val base = "/tmp/graft_ingestscale"

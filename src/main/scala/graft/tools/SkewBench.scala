@@ -4,7 +4,7 @@
 // Relational.saltedJoin escape hatch (README "Skew" section).
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.operators.Relational
@@ -38,7 +38,7 @@ object SkewBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(32, "skew-bench")
+    val spark = GraftSession.local(appName = "skew-bench")
     import spark.implicits._
 
     val nBig = 8000000L

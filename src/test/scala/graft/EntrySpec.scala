@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** Replicates the driver's contract checks locally so a regression is
   * caught by `sbt test` before the round gate runs them.
   */
@@ -19,5 +23,67 @@ class EntrySpec extends SparkSpec {
     val names = Registry.all.map(_.name)
     assert(names.size === names.distinct.size,
       s"duplicate names: ${names.diff(names.distinct)}")
+  }
+
+  test("Registry.select: a short qNN prefix picks that query, never q10..q19x") {
+    assert(Registry.select("q1") === Seq("q1_pricing_summary"))
+  }
+
+  test("Registry.select: a full name selects that query; lists are sorted") {
+    assert(Registry.select("q94_sole_return_supplier") ===
+      Seq("q94_sole_return_supplier"))
+    assert(Registry.select(" q94 ,q1_pricing_summary,") ===
+      Seq("q1_pricing_summary", "q94_sole_return_supplier"))
+  }
+
+  test("Registry.select: a list that matches nothing fails with its message") {
+    val e = intercept[IllegalArgumentException](Registry.select("q999,q1_nope"))
+    assert(e.getMessage.contains("no queries matched: q999,q1_nope"))
+  }
+
+  test("oracle_sql.json parses back to an equal map, control chars included") {
+    val sql = Map(
+      "q_tab" -> "select\t1 as \"a\"",
+      "q_cr" -> "select 1\r\nfrom t where s = 'C:\\dir'",
+      "q_ctl" -> "select '\u0001' as x")
+    val back = new ObjectMapper()
+      .readValue(Verify.oracleJson(sql), classOf[java.util.Map[String, String]])
+    assert(back.asScala.toMap === sql)
+  }
+
+  test("Bench stdout: the driver's last-2000-char window parses at 160+ queries") {
+    // deterministic timings shaped like a real sf0.1 pass: mostly sub-2 s,
+    // a tail to a minute; 8 queries throw in one of the two passes
+    val rnd = new scala.util.Random(7)
+    val names = (1 to 164).map(i => s"q${i}_synthetic").sorted
+    val failed = Set(3, 17, 40, 77, 101, 150, 151, 163)
+    def t(): Double = rnd.nextInt(20) match {
+      case 0 => 10 + rnd.nextDouble() * 50
+      case k if k < 6 => 2 + rnd.nextDouble() * 8
+      case _ => 0.05 + rnd.nextDouble() * 2
+    }
+    def pass(failIn: Int): Map[String, Double] = names.zipWithIndex.map {
+      case (q, i) => q -> (if (failed(i) && i % 2 == failIn) -1.0 else t())
+    }.toMap
+    val run = Bench.Run("/srv/testdata/sf0.1", names, pass(0), pass(1),
+      (3.2, 0.8), (212.4, 198.7))
+    val tail = (Bench.stdoutLine(run) + "\n").takeRight(2000)
+    val json = new ObjectMapper().readTree(tail)
+    for (k <- Seq("metric", "value", "n_ok", "queries"))
+      assert(json.has(k), s"missing $k in $tail")
+    assert(json.get("metric").asText === "total")
+    assert(json.get("n_ok").asInt === 156)
+    assert(json.get("queries").size === 164)
+  }
+
+  test("Bench stdout: the line's bytes are pinned") {
+    val run = Bench.Run("sf", Seq("q10_c", "q1_a", "q2_b"),
+      Map("q1_a" -> 0.125, "q2_b" -> 1.5, "q10_c" -> -1.0),
+      Map("q1_a" -> 0.131, "q2_b" -> 1.4449, "q10_c" -> 7.0),
+      (0.05, -1.0), (12.34, 11.0))
+    assert(Bench.stdoutLine(run) ===
+      """{"metric":"total","value":null,"unit":"sec","n_ok":2,""" +
+      """"queries":{"q10":-1,"q1":0.13,"q2":1.44},"steal_s":[0.1,-1],""" +
+      """"wall_s":[12.3,11.0],"errors":["q10"],"sf":"sf"}""")
   }
 }

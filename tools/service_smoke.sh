@@ -40,8 +40,8 @@ EOF
 # the q123 oracle drop set — BOTH legs assert landed == all - dropped
 # (the keep set), not just "no doc landed twice": a resume bug that
 # silently drops admitted docs must fail the smoke, not ship in it
-sbt -batch "runMain graft.tools.DumpOne q123_arrival_dedup $SF_DIR \
-  $WORK/q123" > "$WORK/q123_dump.log" 2>&1
+sbt -batch "runMain graft.Verify $SF_DIR $WORK/q123 q123" \
+  > "$WORK/q123_dump.log" 2>&1
 
 # ---- Leg A: 6 waves, 6 cycles, merge at cycle 3 ----------------------
 cp "$WORK/waves/wave_0.parquet" "$WORK/stream_a/"

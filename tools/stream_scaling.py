@@ -41,9 +41,9 @@ def main():
     runs.sort()
 
     # stage lists come from the artifact with the MOST stages, not the
-    # largest SF: the sf10 rehearsal artifact (tools.SketchScaleBench)
-    # carries only the two bounded sketch stages — it joins as an extra
-    # column of those sections, it must not collapse the others
+    # largest SF: a partial artifact (round 13's sf10 sketch rehearsal,
+    # d3878b1) carries only the two bounded sketch stages — it joins as
+    # an extra column of those sections, it must not collapse the others
     def stage_keys(d, marker):
         return [k for k, v in d.items()
                 if isinstance(v, dict) and marker in v]
