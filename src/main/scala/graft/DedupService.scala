@@ -152,10 +152,7 @@ object DedupService {
 
     val spark = GraftSession.local(appName = "dedup-service")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      "false")
+    GraftSession.useRocksDbState(spark, changelog = false)
 
     // pid file for operators (stop scripts, the kill-resume smoke):
     // the forked JVM's cmdline hides the main class behind an @argfile,

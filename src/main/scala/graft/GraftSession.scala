@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Local mode is a stand-in for a real cluster: `cores` executor threads in
   * one JVM. All scale-sensitive knobs (shuffle partitions, AQE, broadcast
-  * threshold) are set here once so every entry point (tests, Verify, Bench)
-  * runs the same engine configuration. Every `main` builds its session
-  * through [[local]].
+  * threshold, generated-class cache) are set here once so every entry
+  * point (tests, Verify, Bench) runs the same engine configuration. Every
+  * `main` builds its session through [[local]].
   */
 object GraftSession {
 
@@ -42,6 +42,17 @@ object GraftSession {
       // default 100-entry ring silently undercounts long drains
       .config("spark.sql.streaming.numRecentProgressUpdates", "4000")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      // Generated-class cache (a static conf: it sizes the JVM-wide LRU
+      // the first time a session compiles). Spark's 100-entry default is
+      // smaller than one pass over a working set: a perfbench
+      // catalog-floor pass cycles ~150 distinct classes and a
+      // stream-drain pass ~155, so the LRU missed on every lookup and
+      // every pass re-ran Janino on all of them and re-warmed the JIT on
+      // the fresh classes. Measured on 4 vCPUs at sf0.01 (catalog-floor,
+      // medians of 11 run pairs): compiles per repeated pass 150 → 0,
+      // pass CPU 9.9 → 5.6 s, for +5 MB of retained classes. 1024 is ~6×
+      // that working set; CodegenCacheSpec pins the zero recompiles.
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
       // rehearsal-only overrides (semicolon-separated k=v). Scale
       // rehearsals shrink DATA by 10-1000× but Spark's skew/advisory
       // byte thresholds don't shrink with it — a 100 TB cluster's
@@ -63,6 +74,29 @@ object GraftSession {
   /** `SPARK_GRAFT_CPUS`, else every core the JVM can see. */
   def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The RocksDB state store stateful streaming runs on
+    * (`transformWithState` requires it), with checkpoint file checksums
+    * off. `changelog` turns on changelog checkpointing: each commit
+    * uploads the batch's changed keys instead of a full snapshot, and a
+    * restore replays them over the last background snapshot.
+    */
+  def rocksDbStateConf(changelog: Boolean): Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+      changelog.toString)
+
+  /** Sets [[rocksDbStateConf]] on `spark`'s session conf. */
+  def useRocksDbState(spark: SparkSession, changelog: Boolean): Unit =
+    rocksDbStateConf(changelog).foreach { case (k, v) => spark.conf.set(k, v) }
+
+  /** `SPARK_GRAFT_CHANGELOG_CKPT` (default 1): whether the streaming benches
+    * run changelog checkpointing.
+    */
+  def changelogFromEnv: Boolean =
+    sys.env.getOrElse("SPARK_GRAFT_CHANGELOG_CKPT", "1") == "1"
 
   def local(cores: Int = defaultCores, appName: String = "graft"): SparkSession = {
     val s = configure(

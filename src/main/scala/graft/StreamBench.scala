@@ -418,22 +418,18 @@ object StreamBench {
     // stage 4: timer-driven inactivity sessions over the event replay —
     // watermark-evicted ValueState + event-time timers; the state
     // telemetry shows sessions closing (removed > 0) as the watermark
-    // advances across micro-batches
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    // Changelog checkpointing: each commit uploads the batch's changed
-    // keys instead of a full RocksDB snapshot (snapshots still land in
-    // the background at the maintenance interval); restore = last
-    // snapshot + changelog replay. Per-batch commit cost becomes
-    // O(delta) instead of O(state) — the difference between the two is
-    // exactly what a 100 TB standing pipeline pays per trigger, so the
-    // bench runs the production setting. Toggle off to measure the
-    // snapshot-per-commit mode: SPARK_GRAFT_CHANGELOG_CKPT=0.
-    val changelog = sys.env.getOrElse("SPARK_GRAFT_CHANGELOG_CKPT", "1") == "1"
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      changelog.toString)
+    // advances across micro-batches.
+    // RocksDB state from here on, with changelog checkpointing: each
+    // commit uploads the batch's changed keys instead of a full RocksDB
+    // snapshot (snapshots still land in the background at the
+    // maintenance interval); restore = last snapshot + changelog replay.
+    // Per-batch commit cost becomes O(delta) instead of O(state) — the
+    // difference between the two is exactly what a 100 TB standing
+    // pipeline pays per trigger, so the bench runs the production
+    // setting. Toggle off to measure the snapshot-per-commit mode:
+    // SPARK_GRAFT_CHANGELOG_CKPT=0.
+    val changelog = GraftSession.changelogFromEnv
+    GraftSession.useRocksDbState(spark, changelog)
     // KILLED mid-replay and restored: recovery here must replay BOTH the
     // per-key session aggregates and the registered event-time timers
     // (the timer replay path the other two kill-restore stages don't
@@ -1003,10 +999,7 @@ object StreamBench {
       streaming.EventStreams.nearbyPairs(eventsStream),
       OutputMode.Append, totalRows)
 
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.unset("spark.sql.streaming.checkpoint.fileChecksum.enabled")
-    spark.conf.unset(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    GraftSession.rocksDbStateConf(changelog).foreach { case (k, _) => spark.conf.unset(k) }
 
     val load1 = HostLoad.loadavg(); val steal1 = HostLoad.stealSec()
     val stealS = if (steal0 < 0 || steal1 < 0) "-1" else fmt(steal1 - steal0)

@@ -55,13 +55,8 @@ object GateScaleBench {
     spark.sparkContext.setLogLevel("ERROR")
     val base = "/tmp/graft_gatescale"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    val changelog = sys.env.getOrElse("SPARK_GRAFT_CHANGELOG_CKPT", "1") == "1"
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      changelog.toString)
+    val changelog = GraftSession.changelogFromEnv
+    GraftSession.useRocksDbState(spark, changelog)
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "400")
 
     // cumulative progress via a listener — recentProgress is a ring

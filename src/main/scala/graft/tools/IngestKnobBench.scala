@@ -29,10 +29,7 @@ object IngestKnobBench {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(appName = "ingest-knob-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-      "false")
+    GraftSession.useRocksDbState(spark, changelog = false)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val base = java.nio.file.Files.createTempDirectory("ingest_knob")
       .toFile.getAbsolutePath

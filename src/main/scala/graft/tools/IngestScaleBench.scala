@@ -26,12 +26,7 @@ object IngestScaleBench {
     import spark.implicits._
     val base = "/tmp/graft_ingestscale"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      (sys.env.getOrElse("SPARK_GRAFT_CHANGELOG_CKPT", "1") == "1").toString)
+    GraftSession.useRocksDbState(spark, GraftSession.changelogFromEnv)
 
     val idxRoot = s"$base/index"; val landRoot = s"$base/landed"
     val docsAll = spark.read.parquet(s"$sfDir/documents.parquet")

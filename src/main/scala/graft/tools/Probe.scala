@@ -2,6 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.LongAdder
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -25,6 +26,11 @@ import graft.{GraftSession, Registry, SparkEntry}
   * (`plan`, forcing `executedPlan`) and execution (`exec`) — and carries
   * executor cost counters that hypervisor steal cannot contaminate: CPU
   * and run seconds, jobs, stages, tasks, shuffle read/write and spill.
+  * `compiles` counts the rep's Janino compiles of generated code (the
+  * JVM-wide `CodegenMetrics` count, so its delta over the rep): a
+  * repeated rep that finds its classes in the codegen cache prints
+  * `compiles=0`, and a nonzero figure there is codegen in the query's
+  * fixed cost.
   * Execution is a full-output `noop` write, so every column the oracle
   * checks is computed; a `count()` lets Catalyst prune output-only
   * expressions, and its figures are not comparable with these.
@@ -77,6 +83,7 @@ object Probe {
     }
     for (name <- names; rep <- 1 to reps) {
       c.reset()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val (df, build) = timed(SparkEntry.queries(name)(spark, sfDir))
       val (_, plan) = timed(df.queryExecution.executedPlan)
       val (_, exec) = timed(df.write.format("noop").mode("overwrite").save())
@@ -88,7 +95,8 @@ object Probe {
         f"cpu=${c.cpuNs.sum / 1e9}%.2f run=${c.runMs.sum / 1e3}%.2f " +
         f"jobs=${c.jobs.sum} stages=${c.stages.sum} tasks=${c.tasks.sum} " +
         f"shufR=${c.shufR.sum / 1e6}%.1fMB shufW=${c.shufW.sum / 1e6}%.1fMB " +
-        f"spill=${c.spill.sum / 1e6}%.1fMB")
+        f"spill=${c.spill.sum / 1e6}%.1fMB " +
+        f"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0}")
     }
   }
 }

@@ -43,7 +43,8 @@ trait SparkSpec extends AnyFunSuite {
   /** `transformWithState` requires the RocksDB state store; scope it (and
     * the checksum workaround — see SessionTimersSpec) to one test body.
     */
-  def withRocksDb[A](body: => A): A = withRocksDbConf(Seq.empty)(body)
+  def withRocksDb[A](body: => A): A =
+    withConf(GraftSession.rocksDbStateConf(changelog = false))(body)
 
   /** [[withRocksDb]] plus changelog checkpointing — the production (and
     * StreamBench) setting: commits upload per-batch changelogs, restore
@@ -51,15 +52,10 @@ trait SparkSpec extends AnyFunSuite {
     * should run under this mode too, since it is the default the bench
     * measures.
     */
-  def withChangelogRocksDb[A](body: => A): A = withRocksDbConf(Seq(
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      -> "true"))(body)
+  def withChangelogRocksDb[A](body: => A): A =
+    withConf(GraftSession.rocksDbStateConf(changelog = true))(body)
 
-  private def withRocksDbConf[A](extra: Seq[(String, String)])(body: => A): A = {
-    val keys = Seq(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false") ++ extra
+  private def withConf[A](keys: Seq[(String, String)])(body: => A): A = {
     val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
