@@ -37,9 +37,9 @@ object GraftSession {
       // DuckDB's truncation)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.files.maxPartitionBytes", (128L << 20).toString)
-      // recentProgress is the source of batch counts (IngestLoop's
-      // CycleStats.batches, StreamBench's paced admission sums); the
-      // default 100-entry ring silently undercounts long drains
+      // recentProgress is the source of batch counts (perfbench's
+      // stream-drain telemetry); the default 100-entry ring silently
+      // undercounts long drains
       .config("spark.sql.streaming.numRecentProgressUpdates", "4000")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       // Generated-class cache (a static conf: it sizes the JVM-wide LRU

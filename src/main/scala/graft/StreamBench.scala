@@ -17,16 +17,23 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQuer
   *    memory bytes, rows removed, rows dropped by watermark) — at 100 TB
   *    the binding constraint of a standing pipeline is state bytes/key
   *    and cleanup rate, which single-batch rows/s cannot show, and
-  *  - for the two checkpointed stateful stages (span audit, standing
-  *    retrieval) one KILL-AND-RESTORE cycle: the query is stopped midway
-  *    through the replay and restarted from its checkpoint; `restore_s`
-  *    is the wall time from restart to fully drained — the recovery cost
-  *    a production pipeline pays after an executor/driver loss.
+  *  - for the checkpointed stateful stages (sessions, LSH ownership, span
+  *    audit, standing retrieval) one KILL-AND-RESTORE cycle: the query is
+  *    stopped midway through the replay and restarted from its
+  *    checkpoint; `restore_s` is the wall time from restart to fully
+  *    drained — the recovery cost a production pipeline pays after an
+  *    executor/driver loss.
   *
   * The reference's replay source emits ~10 events/s by design
   * (FlinkWindowLearning.scala:40); these stages measure what the same
   * logical pipelines sustain under Spark's micro-batch engine.
   *
+  *   runMain graft.StreamBench                          # every stage
+  *   runMain graft.StreamBench gate,lsh_dedup,admit_drain
+  *
+  * The optional argument selects stages by their JSON names; they run in
+  * [[stageNames]] order whatever the list order. The replay inputs are
+  * built on first use, so a selection pays only for what its stages read.
   * Prints ONE JSON line AND writes it to `stream_bench.json`, with the
   * same loadavg/steal telemetry as the batch bench — rows/s on a
   * contended host is a property of the host, not the engine.
@@ -38,7 +45,7 @@ object StreamBench {
     else BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toString
 
   /** Nearest-rank percentile over an unsorted sample. */
-  private def pct(xs: Seq[Double], p: Double): Double =
+  private[graft] def pct(xs: Seq[Double], p: Double): Double =
     if (xs.isEmpty) -1.0
     else {
       val s = xs.sorted
@@ -71,7 +78,7 @@ object StreamBench {
     sliced.unpersist()
   }
 
-  /** JSON fragments for one finished run's progress list. */
+  /** JSON fields of one finished run's progress list. */
   private def progressJson(progress: Seq[StreamingQueryProgress],
       inRows: Long, outRows: Long, wallSec: Double): String = {
     val data = progress.filter(_.numInputRows > 0)
@@ -108,38 +115,12 @@ object StreamBench {
       s""""max":${fmt(if (secs.isEmpty) -1.0 else secs.max, 2)}}""" + state
   }
 
-  /** Run one streaming stage to completion against a memory sink.
-    * Returns the JSON fragment, the wall seconds, and the raw progress
-    * list (the latter two feed the paced-latency stages' throughput and
-    * trigger-interval calibration).
-    */
-  private def stage(spark: SparkSession, name: String, df: DataFrame,
-      mode: OutputMode, inRows: Long)
-      : (String, Double, Seq[StreamingQueryProgress]) = {
-    val t0 = System.nanoTime()
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).start()
-    q.processAllAvailable()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val outRows = spark.table(name).count()
-    val progress = q.recentProgress.toSeq
-    q.stop()
-    // free the sink: a memory sink holds EVERY emitted row on the
-    // driver for the JVM's lifetime — nearby_pairs emits 9.3M rows at
-    // sf1, and carrying them degrades every later ProcessingTime-paced
-    // stage through GC pauses (observed: lsh_dedup_ttl 13 → 64 s wall
-    // with the sink retained, same code)
-    spark.catalog.dropTempView(name)
-    (s""""$name":{${progressJson(progress, inRows, outRows, wall)}}""",
-      wall, progress)
-  }
-
   /** Cumulative per-run progress recorder. `recentProgress` is a
     * BOUNDED buffer (`numRecentProgressUpdates`): a paced/TTL'd run
     * past the cap would undercount admissions read through it, spin to
     * the drain deadline, and misreport a progress-retention artifact
-    * as engine lag — so paced drains and paced stats read EVERY
-    * progress event via this listener instead.
+    * as engine lag — so every stage reads EVERY progress event via this
+    * listener instead.
     */
   private final class ProgressRecorder
       extends org.apache.spark.sql.streaming.StreamingQueryListener {
@@ -155,48 +136,193 @@ object StreamBench {
         .add(e.progress)
       ()
     }
-    def of(runId: java.util.UUID): Seq[StreamingQueryProgress] = {
+    /** The progress delivered so far for a running query. */
+    def seen(runId: java.util.UUID): Seq[StreamingQueryProgress] = {
       import scala.jdk.CollectionConverters._
       Option(byRun.get(runId)).map(_.asScala.toSeq).getOrElse(Seq.empty)
     }
     def admitted(runId: java.util.UUID): Long =
-      of(runId).map(_.numInputRows).sum
-  }
-  private val recorder = new ProgressRecorder
+      seen(runId).map(_.numInputRows).sum
 
-  /** Drain a PROCESSING-TIME-clocked query over a finite input: a TTL'd
-    * or fixed-interval-trigger query never goes idle (the clock keeps
-    * the engine triggering), so `processAllAvailable` cannot be used —
-    * instead poll until every input row has been admitted (cumulative
-    * listener count, immune to the recentProgress retention cap), then
-    * let it run `settleMs` longer (TTL eviction / trailing commits
-    * happen in those extra triggers) and stop. Returns the FULL
-    * recorded progress series and the wall-to-drain.
+    /** Every progress of the STOPPED query `q`. Listener events post
+      * asynchronously, so this waits until `q`'s last progress has been
+      * delivered; a snapshot taken earlier would drop trailing batches.
+      */
+    def of(q: StreamingQuery): Seq[StreamingQueryProgress] = {
+      val last = Option(q.lastProgress)
+      def arrived = last.forall(l => seen(q.runId).lastOption.exists(p =>
+        p.batchId == l.batchId && p.timestamp == l.timestamp))
+      val deadline = System.currentTimeMillis() + 60000
+      while (!arrived && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      if (!arrived) throw new IllegalStateException(
+        s"query ${q.name}: its last progress never reached the recorder")
+      seen(q.runId)
+    }
+  }
+
+  /** Hang deadline for a drain waiting on `rows` input rows: 5 min plus
+    * 2 ms a row, a floor rate of 500 rows/s — 8x below the slowest
+    * committed drain (admit_drain at sf100, 4.1k rows/s).
     */
-  private def runPaced(q: StreamingQuery, inRows: Long,
-      settleMs: Long): (Seq[StreamingQueryProgress], Double) = {
-    val t0 = System.nanoTime()
-    val deadline = System.currentTimeMillis() + 300000
-    while (q.isActive &&
-        recorder.admitted(q.runId) < inRows &&
+  private def drainDeadlineMs(rows: Long): Long = 300000L + 2L * rows
+
+  /** The TTL horizon of the TTL'd stages: ~4 of their 500 ms trigger
+    * intervals, the compaction-interval contract scaled to bench time.
+    */
+  private val TtlMs = 2000L
+
+  /** One run's session, replay inputs and measured as-fast stages. Every
+    * input is lazy: a stage selection builds only what its stages read.
+    */
+  private final class Ctx(val spark: SparkSession, val sfDir: String,
+      val nSlices: Int, val base: String) {
+    val recorder = new ProgressRecorder
+    /** Progress and wall of each as-fast run a paced stage is sized from. */
+    val measured =
+      scala.collection.mutable.Map.empty[String, (Seq[StreamingQueryProgress], Double)]
+
+    /** Replay of the parquet slices under `path`, one file a trigger. */
+    def fileStream(schema: org.apache.spark.sql.types.StructType,
+        path: String): DataFrame =
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(path)
+
+    lazy val events: DataFrame = sources.Tables.events(spark, sfDir)
+    lazy val totalRows: Long = events.count()
+    lazy val eventsStream: DataFrame = {
+      sliceOrdered(events, "ts", nSlices, s"$base/events")
+      fileStream(events.schema, s"$base/events")
+    }
+
+    lazy val docs: DataFrame = spark.read.parquet(s"$sfDir/documents.parquet")
+    lazy val corpus: DataFrame = docs.filter(col("source") === "src0")
+      .select(col("doc_id"), col("text"))
+    // arriving docs carry an event time that advances with arrival order
+    // (doc_id-derived), so watermarks progress batch over batch
+    lazy val arrivalsBatch: DataFrame = docs.filter(col("source") =!= "src0")
+      .withColumn("eventTime",
+        timestamp_seconds(lit(1735689600L) + col("doc_id")))
+    lazy val gateIn: Long = arrivalsBatch.count()
+    // ONE lake-wide banding for every LSH stage (the corpus-derived
+    // serving construction batch q35/q123 use on this dir): gates,
+    // intra-stream twins and index inits share it, or their drop sets
+    // would diverge from the batch rule once the derivation engages
+    // (sf1+ rehearsal corpora; every driver SF stays at the default)
+    lazy val lakeBanding: operators.Banding = operators.Text.bandingOf(spark, sfDir)
+    private lazy val arrivalsDir: String = {
+      sliceOrdered(arrivalsBatch, "doc_id", nSlices, s"$base/docs")
+      s"$base/docs"
+    }
+    def arrivals: DataFrame = fileStream(arrivalsBatch.schema, arrivalsDir)
+    def arrivalsText: DataFrame = arrivals.select(col("doc_id"), col("text"))
+
+    private lazy val emb: DataFrame = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    lazy val embRows: Long = emb.count()
+    lazy val embStream: DataFrame = {
+      sliceOrdered(emb, "vec_id", nSlices, s"$base/emb")
+      fileStream(emb.schema, s"$base/emb")
+    }
+
+    /** The events as JSON segment files for the DSv2 replay source, sized
+      * for ~nSlices micro-batches; the value is the event count.
+      */
+    lazy val replayRows: Int = {
+      val dir = new java.io.File(s"$base/replay_segments")
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      dir.mkdirs()
+      val rows = events.orderBy(col("ts"))
+        .select(col("user_id"), col("event_type"),
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
+        .collect()
+      rows.grouped(math.max(1, math.ceil(rows.length / nSlices.toDouble).toInt))
+        .zipWithIndex.foreach { case (group, i) =>
+          val body = group.map(r =>
+            s"""{"userId": "${r.get(0)}", "activity": "${r.get(1)}", "timestamp": "${r.get(2)}"}""")
+            .mkString("[\n", ",\n", "\n]")
+          java.nio.file.Files.write(dir.toPath.resolve(f"seg_$i%03d.json"),
+            body.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+        }
+      rows.length
+    }
+    def replayStream(eventsPerBatch: Int): DataFrame = {
+      replayRows
+      spark.readStream.format("user-activity-replay")
+        .option("path", s"$base/replay_segments")
+        .option("eventsPerBatch", eventsPerBatch.toString).load()
+        .select(col("userId").as("user_id"),
+          col("activity").as("event_type"),
+          to_timestamp(col("timestamp")).as("ts"))
+    }
+  }
+
+  /** Fail loudly unless `q` admits `rows` input rows (cumulative, from
+    * the recorder) before it dies or the hang deadline passes: a
+    * truncated drain would otherwise be rendered as rows/s for work
+    * never done.
+    */
+  private def awaitAdmitted(c: Ctx, stage: String, q: StreamingQuery,
+      rows: Long): Unit = {
+    val deadline = System.currentTimeMillis() + drainDeadlineMs(rows)
+    while (q.isActive && c.recorder.admitted(q.runId) < rows &&
         System.currentTimeMillis() < deadline)
       Thread.sleep(100)
-    q.exception.foreach(e => throw new IllegalStateException(
-      s"paced stage ${q.name} failed", e))
-    val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(settleMs)
-    // listener events post asynchronously: wait for the bus to quiesce
-    // before snapshotting so the trailing settle batches are included
-    var snap = recorder.of(q.runId)
-    var stable = 0
-    val qDeadline = System.currentTimeMillis() + 3000
-    while (stable < 2 && System.currentTimeMillis() < qDeadline) {
-      Thread.sleep(150)
-      val s2 = recorder.of(q.runId)
-      if (s2.size == snap.size) stable += 1 else { snap = s2; stable = 0 }
+    q.exception.foreach(e =>
+      throw new IllegalStateException(s"stage $stage failed", e))
+    val admitted = c.recorder.admitted(q.runId)
+    if (admitted < rows) {
+      q.stop()
+      throw new IllegalStateException(s"stage $stage admitted $admitted of " +
+        s"$rows rows within its ${drainDeadlineMs(rows) / 1000} s deadline")
     }
+  }
+
+  /** A PROCESSING-TIME-clocked drain: one trigger per `intervalMs`, done
+    * once `inRows` rows are admitted and `settleMs` more have passed
+    * (TTL eviction and trailing commits happen in those triggers).
+    */
+  private final case class Paced(intervalMs: Long, inRows: Long,
+      settleMs: Long = 0L)
+
+  /** Run `df` into a memory sink named `name` to the end of its finite
+    * input and return `read` of the sink, the run's full progress and
+    * the wall to drain. As fast as it runs by default
+    * (`processAllAvailable`); a TTL'd or fixed-interval query never goes
+    * idle, so a [[Paced]] one is drained by [[awaitAdmitted]] instead.
+    */
+  private def toMemory[A](c: Ctx, name: String, df: DataFrame,
+      mode: OutputMode, paced: Option[Paced] = None)(read: DataFrame => A)
+      : (A, Seq[StreamingQueryProgress], Double) = {
+    val t0 = System.nanoTime()
+    val w = df.writeStream.format("memory").queryName(name).outputMode(mode)
+    val q = paced.fold(w)(p =>
+      w.trigger(Trigger.ProcessingTime(s"${p.intervalMs} milliseconds"))).start()
+    paced match {
+      case None => q.processAllAvailable()
+      case Some(p) => awaitAdmitted(c, name, q, p.inRows)
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    paced.foreach(p => Thread.sleep(p.settleMs))
     q.stop()
-    (snap, wall)
+    val progress = c.recorder.of(q)
+    // free the sink: a memory sink holds EVERY emitted row on the
+    // driver for the JVM's lifetime — nearby_pairs emits 9.3M rows at
+    // sf1, and carrying them degrades every later ProcessingTime-paced
+    // stage through GC pauses (observed: lsh_dedup_ttl 13 → 64 s wall
+    // with the sink retained, same code)
+    val out = try read(c.spark.table(name))
+    finally c.spark.catalog.dropTempView(name)
+    (out, progress, wall)
+  }
+
+  /** An as-fast stage: [[toMemory]] rendered with the sink's row count,
+    * measured for a paced twin.
+    */
+  private def drain(c: Ctx, name: String, df: DataFrame, mode: OutputMode,
+      inRows: Long): String = {
+    val (outRows, progress, wall) = toMemory(c, name, df, mode)(_.count())
+    c.measured(name) = (progress, wall)
+    progressJson(progress, inRows, outRows, wall)
   }
 
   /** Per-batch execution p50 of a finished as-fast run — the fixed cost
@@ -218,9 +344,19 @@ object StreamBench {
   private def fitIntervalMs(asFastBatchP50: Double): Long =
     math.max(500L, (math.ceil(asFastBatchP50 * 1.3 / 250.0) * 250).toLong)
 
-  /** Latency-at-offered-rate analysis of a finished paced run; returns
-    * the JSON fields AFTER the stage's own prefix (offered_rps etc.),
-    * including the closing brace.
+  /** A paced stage: `df` on a `intervalMs` trigger until `inRows` are
+    * admitted, rendered as its offered rate plus [[pacedStats]].
+    */
+  private def pacedStage(c: Ctx, name: String, df: DataFrame,
+      mode: OutputMode, inRows: Long, intervalMs: Long, expected: Long,
+      offeredRps: Double): String = {
+    val (_, progress, wall) =
+      toMemory(c, name, df, mode, Some(Paced(intervalMs, inRows)))(_ => ())
+    s""""offered_rps":${fmt(offeredRps)},""" +
+      pacedStats(progress, intervalMs, expected, wall)
+  }
+
+  /** Latency-at-offered-rate analysis of a finished paced run.
     *
     * Schedule origin: the ProcessingTime trigger aligns to the engine's
     * own clock, not to batch 1's start — if batch 1 itself fired late
@@ -249,14 +385,12 @@ object StreamBench {
       intervalMs: Long, expected: Long, wall: Double): String = {
     val all = progress.filter(_.numInputRows > 0).sortBy(_.timestamp)
     if (all.isEmpty)
-      // a run that never produced a data batch (e.g. warmup exceeded
-      // the drain deadline) reports honestly instead of aborting the
-      // whole bench at its final stage
+      // an empty input admits no data batch: there is no latency to report
       return s""""interval_ms":$intervalMs,"batches":0,""" +
         s""""expected_batches":$expected,"warmup_batch_ms":0,""" +
         s""""wall_sec":${fmt(wall, 2)},""" +
         s""""e2e_ms":{"p50":-1,"p95":-1,"max":-1},""" +
-        s""""drift_growth_ms":-1,"kept_up":false}"""
+        s""""drift_growth_ms":-1,"kept_up":false"""
     val warmupMs = Option(all.head.durationMs.get("triggerExecution"))
       .map(_.toLong).getOrElse(0L)
     // exclude batch 0 whenever exclusion leaves a non-empty sample
@@ -272,9 +406,9 @@ object StreamBench {
     }
     val third = math.max(1, lats.size / 3)
     val driftGrowth = pct(lats.takeRight(third), 0.5) - pct(lats.take(third), 0.5)
-    // full admission on BOTH sides: fewer batches than the rate implies
-    // means a deadline-truncated run (rows never processed), more means
-    // partial-admission stutter; either breaks the offered-rate claim
+    // full admission on BOTH sides: a batch count off the one the rate
+    // implies (more means partial-admission stutter) breaks the
+    // offered-rate claim
     val keptUp = all.size >= expected && all.size <= expected + 1 &&
       driftGrowth < 2.0 * intervalMs
     s""""interval_ms":$intervalMs,"batches":${all.size},""" +
@@ -283,733 +417,753 @@ object StreamBench {
       s""""e2e_ms":{"p50":${fmt(pct(lats, 0.5))},""" +
       s""""p95":${fmt(pct(lats, 0.95))},""" +
       s""""max":${fmt(lats.max)}},""" +
-      s""""drift_growth_ms":${fmt(driftGrowth)},"kept_up":$keptUp}"""
+      s""""drift_growth_ms":${fmt(driftGrowth)},"kept_up":$keptUp"""
+  }
+
+  /** Rows a file sink landed under `dir`: 0 when it holds no parquet
+    * data file yet; any other read failure propagates.
+    */
+  private def sinkRows(spark: SparkSession, dir: String): Long = {
+    val d = new java.io.File(dir)
+    val hasData = d.isDirectory &&
+      !org.apache.commons.io.FileUtils.listFiles(d, Array("parquet"), true).isEmpty
+    if (hasData) spark.read.parquet(dir).count() else 0L
   }
 
   /** Run a checkpointed stage with one mid-replay KILL: stop the query
     * once ~half the micro-batches have committed, restart it from the
     * checkpoint, and drain. `restore_s` = wall time of the restarted run
-    * (state-store restore + replay of the uncommitted tail).
+    * (state-store restore + replay of the uncommitted tail). `start`
+    * gets the sink directory and the checkpoint location.
     */
-  private def killRestoreStage(spark: SparkSession, name: String,
-      start: String => StreamingQuery, inRows: Long, nSlices: Int,
-      outCount: () => Long): String = {
-    val ckpt = s"/tmp/graft_streambench/ckpt_$name"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-    val half = nSlices / 2
+  private def killRestore(c: Ctx, name: String, inRows: Long,
+      start: (String, String) => StreamingQuery): String = {
+    val out = s"${c.base}/out_$name"
+    val ckpt = s"${c.base}/ckpt_$name"
+    Seq(out, ckpt).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    def dataBatches(p: Seq[StreamingQueryProgress]) = p.count(_.numInputRows > 0)
+    val half = c.nSlices / 2
     val t0 = System.nanoTime()
-    val q1 = start(ckpt)
-    val deadline = System.currentTimeMillis() + 300000
+    val q1 = start(out, ckpt)
+    val deadline = System.currentTimeMillis() + drainDeadlineMs(inRows)
     // also break on query death: a failed first run would otherwise spin
     // the full deadline and then misreport the restart as restore_s
-    while (q1.isActive &&
-        q1.recentProgress.count(_.numInputRows > 0) < half &&
+    while (q1.isActive && dataBatches(c.recorder.seen(q1.runId)) < half &&
         System.currentTimeMillis() < deadline)
       Thread.sleep(50)
     q1.exception.foreach { e =>
       throw new IllegalStateException(
         s"stage $name failed before the kill point", e)
     }
-    val p1 = q1.recentProgress.toSeq
     q1.stop() // the KILL: uncommitted work is abandoned mid-replay
     val firstWall = (System.nanoTime() - t0) / 1e9
+    val p1 = c.recorder.of(q1)
     val t1 = System.nanoTime()
-    val q2 = start(ckpt)
+    val q2 = start(out, ckpt)
     q2.processAllAvailable()
     val restoreS = (System.nanoTime() - t1) / 1e9
-    val p2 = q2.recentProgress.toSeq
     q2.stop()
-    val wall = firstWall + restoreS
-    s""""$name":{${progressJson(p1 ++ p2, inRows, outCount(), wall)},""" +
-      s""""batches_before_kill":${p1.count(_.numInputRows > 0)},""" +
-      s""""restore_s":${fmt(restoreS, 2)}}"""
+    val p2 = c.recorder.of(q2)
+    s"""${progressJson(p1 ++ p2, inRows, sinkRows(c.spark, out), firstWall + restoreS)},""" +
+      s""""batches_before_kill":${dataBatches(p1)},""" +
+      s""""restore_s":${fmt(restoreS, 2)}"""
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = GraftSession.defaultCores
-    val nSlices = sys.env.getOrElse("SPARK_GRAFT_STREAM_SLICES", "12").toInt
-    val spark = GraftSession.local(cpus, "stream-bench")
-    import spark.implicits._
-    val load0 = HostLoad.loadavg(); val steal0 = HostLoad.stealSec()
-    val base = "/tmp/graft_streambench"
+  /** Final ownership state rows of a finished run. */
+  private def lastStateRows(progress: Seq[StreamingQueryProgress]): Long =
+    progress.filter(_.stateOperators.nonEmpty)
+      .lastOption.map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
 
-    // ---- pre-sliced replay inputs (one file per micro-batch) ----
-    val events = sources.Tables.events(spark, sfDir)
-    val totalRows = events.count()
-    sliceOrdered(events, "ts", nSlices, s"$base/events")
-    val eventsStream = spark.readStream.schema(events.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/events")
+  // ---------------------------------------------------------------- stages
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val corpus = docs.filter(col("source") === "src0")
-      .select(col("doc_id"), col("text"))
-    // arriving docs carry an event time that advances with arrival order
-    // (doc_id-derived), so watermarks progress batch over batch
-    val arrivalsBatch = docs.filter(col("source") =!= "src0")
-      .withColumn("eventTime",
-        timestamp_seconds(lit(1735689600L) + col("doc_id")))
-    val gateIn = arrivalsBatch.count()
-    // ONE lake-wide banding for every LSH stage (the corpus-derived
-    // serving construction batch q35/q123 use on this dir): gates,
-    // intra-stream twins and index inits share it, or their drop sets
-    // would diverge from the batch rule once the derivation engages
-    // (sf1+ rehearsal corpora; every driver SF stays at the default)
-    val lakeBanding = operators.Text.bandingOf(spark, sfDir)
-    sliceOrdered(arrivalsBatch, "doc_id", nSlices, s"$base/docs")
-    def arrivals = spark.readStream.schema(arrivalsBatch.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/docs")
+  // stage 1: watermarked tumbling aggregation over the events replay
+  private def sb(c: Ctx): String =
+    drain(c, "sb", streaming.EventStreams.tumblingSignupsOn(c.eventsStream, "1 hour"),
+      OutputMode.Complete, c.totalRows)
 
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val embRows = emb.count()
-    sliceOrdered(emb, "vec_id", nSlices, s"$base/emb")
-    val embStream = spark.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/emb")
+  // stage 2: near-dup ingest gate (stateless stream-static anti-joins;
+  // static sides read from the fingerprint-keyed LANDED stages, so a
+  // bench run after a verify run pays a parquet scan, not a
+  // shingle-pipeline derivation — the gate-restart contract)
+  private def gateDf(c: Ctx): DataFrame =
+    streaming.TextStreams.nearDupGateLanded(c.spark, c.arrivals, c.sfDir,
+      banding = c.lakeBanding)
+  private def gate(c: Ctx): String =
+    drain(c, "gate", gateDf(c), OutputMode.Append, c.gateIn)
 
-    // paced/TTL'd stages run many short triggers; keep every progress
-    // in the window so admission sums and latency distributions are
-    // computed over the full run, not a 100-entry suffix
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "400")
-    // cumulative progress for paced drains/stats — see ProgressRecorder
-    spark.streams.addListener(recorder)
+  // stage 2': the SLO view of the DEDUP SERVICE itself — the near-dup
+  // gate under a paced cadence, not drain rate. The file source's
+  // maxFilesPerTrigger=1 admits exactly one pre-sliced arrival
+  // segment per trigger, so offered rows/s = (rows/slice)/interval;
+  // the interval is sized from the gate's own as-fast per-batch p50
+  // and latency is measured against the best-fit schedule origin,
+  // same contract as paced_50/paced_90.
+  private def pacedGate(c: Ctx): String = {
+    val intervalMs = fitIntervalMs(batchP50Ms(c.measured("gate")._1))
+    pacedStage(c, "paced_gate", gateDf(c), OutputMode.Append, c.gateIn,
+      intervalMs, c.nSlices.toLong,
+      (c.gateIn.toDouble / c.nSlices) / (intervalMs / 1000.0))
+  }
 
-    // stage 1: watermarked tumbling aggregation over the events replay
-    val (tumbling, _, _) = stage(spark, "sb",
-      streaming.EventStreams.tumblingSignupsOn(eventsStream, "1 hour"),
-      OutputMode.Complete, totalRows)
+  // stage 3: stateless IVF cell assignment of the embedding stream
+  // (the vector store's write path — literal broadcast centroids,
+  // per-row argmin, zero shuffles)
+  private def cellAssign(c: Ctx): String =
+    drain(c, "cell_assign",
+      streaming.VectorStreams.cellAssign(c.spark, c.embStream, c.sfDir),
+      OutputMode.Append, c.embRows)
 
-    // stage 2: near-dup ingest gate (stateless stream-static anti-joins;
-    // static sides read from the fingerprint-keyed LANDED stages, so a
-    // bench run after a verify run pays a parquet scan, not a
-    // shingle-pipeline derivation — the gate-restart contract)
-    val (gate, _, gateProg) = stage(spark, "gate",
-      streaming.TextStreams.nearDupGateLanded(spark, arrivals, sfDir,
-        banding = lakeBanding),
-      OutputMode.Append, gateIn)
-
-    // stage 2': the SLO view of the DEDUP SERVICE itself — the near-dup
-    // gate under a paced cadence, not drain rate. The file source's
-    // maxFilesPerTrigger=1 admits exactly one pre-sliced arrival
-    // segment per trigger, so offered rows/s = (rows/slice)/interval;
-    // the interval is sized from the gate's own as-fast per-batch p50
-    // and latency is measured against the best-fit schedule origin,
-    // same contract as paced_50/paced_90.
-    val pacedGate = {
-      val intervalMs = fitIntervalMs(batchP50Ms(gateProg))
-      val rps = (gateIn.toDouble / nSlices) / (intervalMs / 1000.0)
-      val q = streaming.TextStreams.nearDupGateLanded(spark, arrivals, sfDir,
-        banding = lakeBanding)
-        .writeStream.format("memory").queryName("paced_gate")
-        .trigger(Trigger.ProcessingTime(s"$intervalMs milliseconds"))
-        .outputMode(OutputMode.Append).start()
-      val (progress, wall) = runPaced(q, gateIn, 0L)
-      spark.catalog.dropTempView("paced_gate")
-      s""""paced_gate":{"offered_rps":${fmt(rps)},""" +
-        pacedStats(progress, intervalMs, nSlices.toLong, wall)
-    }
-
-    // stage 3: stateless IVF cell assignment of the embedding stream
-    // (the vector store's write path — literal broadcast centroids,
-    // per-row argmin, zero shuffles)
-    val (assign, _, _) = stage(spark, "cell_assign",
-      streaming.VectorStreams.cellAssign(spark, embStream, sfDir),
-      OutputMode.Append, embRows)
-
-    // stage 4: timer-driven inactivity sessions over the event replay —
-    // watermark-evicted ValueState + event-time timers; the state
-    // telemetry shows sessions closing (removed > 0) as the watermark
-    // advances across micro-batches.
-    // RocksDB state from here on, with changelog checkpointing: each
-    // commit uploads the batch's changed keys instead of a full RocksDB
-    // snapshot (snapshots still land in the background at the
-    // maintenance interval); restore = last snapshot + changelog replay.
-    // Per-batch commit cost becomes O(delta) instead of O(state) — the
-    // difference between the two is exactly what a 100 TB standing
-    // pipeline pays per trigger, so the bench runs the production
-    // setting. Toggle off to measure the snapshot-per-commit mode:
-    // SPARK_GRAFT_CHANGELOG_CKPT=0.
-    val changelog = GraftSession.changelogFromEnv
-    GraftSession.useRocksDbState(spark, changelog)
-    // KILLED mid-replay and restored: recovery here must replay BOTH the
-    // per-key session aggregates and the registered event-time timers
-    // (the timer replay path the other two kill-restore stages don't
-    // exercise)
-    def sessionsIn = eventsStream
+  // stage 4: timer-driven inactivity sessions over the event replay —
+  // watermark-evicted ValueState + event-time timers; the state
+  // telemetry shows sessions closing (removed > 0) as the watermark
+  // advances across micro-batches. KILLED mid-replay and restored:
+  // recovery here must replay BOTH the per-key session aggregates and
+  // the registered event-time timers (the timer replay path the other
+  // kill-restore stages don't exercise)
+  private def sessionTimers(c: Ctx): String = {
+    import c.spark.implicits._
+    def sessionsIn = c.eventsStream
       .select(col("user_id"), col("ts"))
       .withWatermark("ts", "10 seconds")
       .select(col("user_id"), unix_millis(col("ts")))
       .as[(String, Long)]
-    val sessionsOut = s"$base/out_sessions"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sessionsOut))
-    val sessions = killRestoreStage(spark, "session_timers",
-      ckpt => streaming.SessionTimers.inactivitySessions(spark, sessionsIn,
+    killRestore(c, "session_timers", c.totalRows, (out, ckpt) =>
+      streaming.SessionTimers.inactivitySessions(c.spark, sessionsIn,
         gapMs = 30 * 60 * 1000L)
         .toDF().writeStream.format("parquet")
-        .option("path", sessionsOut)
+        .option("path", out)
         .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append).start(),
-      totalRows, nSlices,
-      () => try spark.read.parquet(sessionsOut).count() catch { case _: Throwable => 0L })
+        .outputMode(OutputMode.Append).start())
+  }
 
-    // stage 5: intra-stream LSH near-dup collisions — per-band-signature
-    // first-arrival ownership in the state store. Un-TTL'd here (a TTL'd
-    // run needs processing-time triggers, which never go idle under
-    // processAllAvailable — see the operator docs); state rows climb
-    // toward distinct band signatures and hold there, the dedup-history
-    // footprint a TTL would bound to its horizon in production. KILLED
-    // mid-replay and restored: of the four stateful stages this one has
-    // the LARGEST state (O(distinct signatures)), so its restore_s is
-    // the changelog-replay cost the others understate.
-    val lshOut = s"$base/out_lsh"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lshOut))
-    val lsh = killRestoreStage(spark, "lsh_dedup",
-      ckpt => streaming.TextStreams.streamingLshCollisions(spark,
-        arrivals.select(col("doc_id"), col("text")), banding = lakeBanding)
+  // stage 5: intra-stream LSH near-dup collisions — per-band-signature
+  // first-arrival ownership in the state store. Un-TTL'd here (a TTL'd
+  // run needs processing-time triggers, which never go idle under
+  // processAllAvailable — see the operator docs); state rows climb
+  // toward distinct band signatures and hold there, the dedup-history
+  // footprint a TTL would bound to its horizon in production. KILLED
+  // mid-replay and restored: of the stateful stages this one has the
+  // LARGEST state (O(distinct signatures)), so its restore_s is the
+  // changelog-replay cost the others understate.
+  private def lshDedup(c: Ctx): String =
+    killRestore(c, "lsh_dedup", c.gateIn, (out, ckpt) =>
+      streaming.TextStreams.streamingLshCollisions(c.spark, c.arrivalsText,
+        banding = c.lakeBanding)
         .toDF().writeStream.format("parquet")
-        .option("path", lshOut)
+        .option("path", out)
         .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append).start(),
-      gateIn, nSlices,
-      () => try spark.read.parquet(lshOut).count() catch { case _: Throwable => 0L })
+        .outputMode(OutputMode.Append).start())
 
-    // stage 5a': the TTL'd lsh_dedup variant MEASURED, not asserted —
-    // the production setting bounds ownership to a TTL horizon (sized
-    // ~4 trigger intervals here, i.e. the compaction-interval contract
-    // scaled down to bench time). Driven by a fixed ProcessingTime
-    // trigger because a TTL'd state store runs on the processing-time
-    // clock (processAllAvailable never sees it idle); the settle window
-    // after the last admission gives the clock time to evict, so
-    // rows_last shows the post-horizon plateau and ttl_expired > 0
-    // shows the cleanup actually ran.
-    val ttlMs = 2000L
-    val lshTtl = {
-      val q = streaming.TextStreams.streamingLshCollisions(spark,
-          arrivals.select(col("doc_id"), col("text")),
-          TTLConfig(java.time.Duration.ofMillis(ttlMs)), banding = lakeBanding)
-        .toDF().writeStream.format("memory").queryName("lsh_ttl")
-        .trigger(Trigger.ProcessingTime("500 milliseconds"))
-        .outputMode(OutputMode.Append).start()
-      val (progress, drainWall) = runPaced(q, gateIn, settleMs = 2 * ttlMs + 1500)
-      val outRows = spark.table("lsh_ttl").count()
-      spark.catalog.dropTempView("lsh_ttl")
-      s""""lsh_dedup_ttl":{${progressJson(progress, gateIn, outRows, drainWall)},""" +
-        s""""ttl_ms":$ttlMs}"""
+  // stage 5a': the TTL'd lsh_dedup variant MEASURED, not asserted —
+  // the production setting bounds ownership to a TTL horizon. Driven by
+  // a fixed ProcessingTime trigger because a TTL'd state store runs on
+  // the processing-time clock (processAllAvailable never sees it idle);
+  // the settle window after the last admission gives the clock time to
+  // evict, so rows_last shows the post-horizon plateau and
+  // ttl_expired > 0 shows the cleanup actually ran.
+  private def lshDedupTtl(c: Ctx): String = {
+    val (outRows, progress, wall) = toMemory(c, "lsh_dedup_ttl",
+      streaming.TextStreams.streamingLshCollisions(c.spark, c.arrivalsText,
+        TTLConfig(java.time.Duration.ofMillis(TtlMs)), banding = c.lakeBanding)
+        .toDF(),
+      OutputMode.Append, Some(Paced(500L, c.gateIn, 2 * TtlMs + 1500)))(_.count())
+    s"""${progressJson(progress, c.gateIn, outRows, wall)},"ttl_ms":$TtlMs"""
+  }
+
+  private def admitDf(c: Ctx, ttl: TTLConfig): DataFrame =
+    streaming.TextStreams.streamingNearDupAdmit(c.spark, c.arrivalsText, ttl,
+      banding = c.lakeBanding).toDF()
+
+  // stage 5a'''': the ADMIT surface measured — streamingNearDupAdmit
+  // emits one ownership verdict per (arrival, band) (4 per banded
+  // doc, 1 per short doc: ~4x the collision feed's worst case, the
+  // price of a total output), same single state operator, same TTL
+  // horizon. `admitted` is the foreachBatch reduction's answer — the
+  // deduped stream a consumer actually keeps (here reduced over the
+  // whole run: doc_ids are unique, so the per-batch and whole-run
+  // reductions agree).
+  private def admit(c: Ctx): String = {
+    val ((outRows, admitted), progress, wall) = toMemory(c, "admit",
+      admitDf(c, TTLConfig(java.time.Duration.ofMillis(TtlMs))),
+      OutputMode.Append, Some(Paced(500L, c.gateIn, 2 * TtlMs + 1500)))(v =>
+      (v.count(), streaming.TextStreams.admittedOf(v).count()))
+    c.measured("admit") = (progress, wall)
+    s"""${progressJson(progress, c.gateIn, outRows, wall)},""" +
+      s""""admitted":$admitted,"ttl_ms":$TtlMs"""
+  }
+
+  // stage 5a''''': the admit surface's SLO view — the totality cost
+  // (4 verdicts per banded doc + the total output) priced as a
+  // kept-up question: the SAME pipeline on a trigger interval sized
+  // from ITS OWN measured per-batch p50 (fitIntervalMs x1.3 headroom,
+  // the paced_gate contract). kept_up=true here means a deployment
+  // paying for total verdicts still meets an offered rate ~75% of
+  // its drain rate; the drain-rate gap vs the collisions-only twin
+  // stays visible in the admit/lsh_dedup_ttl rows_per_sec ratio.
+  private def pacedAdmit(c: Ctx): String = {
+    val intervalMs = fitIntervalMs(batchP50Ms(c.measured("admit")._1))
+    pacedStage(c, "paced_admit",
+      admitDf(c, TTLConfig(java.time.Duration.ofMillis(TtlMs))),
+      OutputMode.Append, c.gateIn, intervalMs, c.nSlices.toLong,
+      (c.gateIn.toDouble / c.nSlices) / (intervalMs / 1000.0))
+  }
+
+  // stage 5a''''''c: the un-TTL'd admit surface drained as fast as it
+  // runs — the admit twin of lsh_dedup's drain rate, and the admit row
+  // of the scale rehearsals (state climbs to bands x docs and holds)
+  private def admitDrain(c: Ctx): String =
+    drain(c, "admit_drain", admitDf(c, TTLConfig.NONE), OutputMode.Append,
+      c.gateIn)
+
+  // stage 5a'': the COMPACTION handoff measured. Phase 1 arrivals
+  // accrete ownership state; then IndexCompaction folds them into the
+  // landed gate index (the once-per-interval batch job); phase 2 runs
+  // against the compacted gate with a FRESH stream — its state holds
+  // only the phase-2 horizon. phase1_state_rows vs phase2_state_rows
+  // is the state the compaction moved out of the store; CompactionSpec
+  // pins that the drop DECISION is unchanged across the move.
+  private def lshCompaction(c: Ctx): String = {
+    import streaming.IndexCompaction
+    val spark = c.spark
+    val mid = c.arrivalsBatch.stat
+      .approxQuantile("doc_id", Array(0.5), 0.001).head
+    val p1 = c.arrivalsBatch.filter(col("doc_id") <= mid)
+    val p2 = c.arrivalsBatch.filter(col("doc_id") > mid)
+    val n2 = p2.count()
+    val half = math.max(2, c.nSlices / 2)
+    sliceOrdered(p1, "doc_id", half, s"${c.base}/docs_p1")
+    sliceOrdered(p2, "doc_id", half, s"${c.base}/docs_p2")
+    def str(path: String) = c.fileStream(c.arrivalsBatch.schema, path)
+    def ownershipRows(name: String, path: String): Long = {
+      val (_, progress, _) = toMemory(c, name,
+        streaming.TextStreams.streamingLshCollisions(spark,
+          str(path).select(col("doc_id"), col("text")),
+          banding = c.lakeBanding).toDF(),
+        OutputMode.Append)(_ => ())
+      lastStateRows(progress)
     }
+    // phase 1: ownership accretes over the phase-1 replay
+    val rowsBefore = ownershipRows("lshc_p1", s"${c.base}/docs_p1")
+    // the compaction job: phase-1 docs have landed in the lake
+    val idxRoot = s"${c.base}/gate_index"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxRoot))
+    // epoch-0 init is the one-time O(corpus) base build — keep it
+    // OUTSIDE the timed section so compact_s measures what the
+    // per-interval job actually costs: the O(new docs) delta
+    IndexCompaction.init(spark, idxRoot, c.corpus, banding = c.lakeBanding)
+    val tC = System.nanoTime()
+    IndexCompaction.compact(spark, idxRoot,
+      p1.select(col("doc_id"), col("text")))
+    val compactS = (System.nanoTime() - tC) / 1e9
+    // phase 2: gate owns phase-1 buckets statically now
+    val (admitted, gProg, gWall) = toMemory(c, "lshc_gate",
+      IndexCompaction.gate(spark, idxRoot, str(s"${c.base}/docs_p2")),
+      OutputMode.Append)(_.count())
+    val rowsAfter = ownershipRows("lshc_p2", s"${c.base}/docs_p2")
+    // MAJOR compaction: fold the delta-epoch segments into one.
+    // Measured here because its cost is what bounds how often a
+    // deployment can afford to re-base the gate's union-read; the
+    // decision-equality across merge is pinned in CompactionSpec.
+    val segsBefore = IndexCompaction.epochs(idxRoot).size
+    val tM = System.nanoTime()
+    IndexCompaction.merge(spark, idxRoot)
+    val mergeS = (System.nanoTime() - tM) / 1e9
+    val segsAfter = IndexCompaction.epochs(idxRoot).size
+    s""""phase1_state_rows":$rowsBefore,""" +
+      s""""compact_s":${fmt(compactS, 2)},""" +
+      s""""phase2_state_rows":$rowsAfter,""" +
+      s""""gate_dropped_after":${n2 - admitted},""" +
+      s""""merge_s":${fmt(mergeS, 2)},""" +
+      s""""segments":{"before":$segsBefore,"after":$segsAfter},""" +
+      s""""gate_after":{${progressJson(gProg, n2, admitted, gWall)}}"""
+  }
 
-    // stage 5a'''': the ADMIT surface measured — streamingNearDupAdmit
-    // emits one ownership verdict per (arrival, band) (4 per banded
-    // doc, 1 per short doc: ~4x the collision feed's worst case, the
-    // price of a total output), same single state operator, same TTL
-    // horizon. `admitted` is the foreachBatch reduction's answer — the
-    // deduped stream a consumer actually keeps (here reduced over the
-    // whole run: doc_ids are unique, so the per-batch and whole-run
-    // reductions agree).
-    val (admit, admitProg) = {
-      val q = streaming.TextStreams.streamingNearDupAdmit(spark,
-          arrivals.select(col("doc_id"), col("text")),
-          TTLConfig(java.time.Duration.ofMillis(ttlMs)),
-          banding = lakeBanding)
-        .toDF().writeStream.format("memory").queryName("admit_ttl")
-        .trigger(Trigger.ProcessingTime("500 milliseconds"))
-        .outputMode(OutputMode.Append).start()
-      val (progress, drainWall) = runPaced(q, gateIn, settleMs = 2 * ttlMs + 1500)
-      val verdicts = spark.table("admit_ttl")
-      val outRows = verdicts.count()
-      val admitted = streaming.TextStreams.admittedOf(verdicts).count()
-      spark.catalog.dropTempView("admit_ttl")
-      (s""""admit":{${progressJson(progress, gateIn, outRows, drainWall)},""" +
-        s""""admitted":$admitted,"ttl_ms":$ttlMs}""", progress)
-    }
-
-    // stage 5a''''': the admit surface's SLO view — the totality cost
-    // (4 verdicts per banded doc + the total output) priced as a
-    // kept-up question: the SAME pipeline on a trigger interval sized
-    // from ITS OWN as-fast per-batch p50 (fitIntervalMs x1.3 headroom,
-    // the paced_gate contract). kept_up=true here means a deployment
-    // paying for total verdicts still meets an offered rate ~75% of
-    // its drain rate; the drain-rate gap vs the collisions-only twin
-    // stays visible in the admit/lsh_dedup_ttl rows_per_sec ratio.
-    val pacedAdmit = {
-      val intervalMs = fitIntervalMs(batchP50Ms(admitProg))
-      val rps = (gateIn.toDouble / nSlices) / (intervalMs / 1000.0)
-      val q = streaming.TextStreams.streamingNearDupAdmit(spark,
-          arrivals.select(col("doc_id"), col("text")),
-          TTLConfig(java.time.Duration.ofMillis(ttlMs)),
-          banding = lakeBanding)
-        .toDF().writeStream.format("memory").queryName("paced_admit")
-        .trigger(Trigger.ProcessingTime(s"$intervalMs milliseconds"))
-        .outputMode(OutputMode.Append).start()
-      val (progress, wall) = runPaced(q, gateIn, 0L)
-      spark.catalog.dropTempView("paced_admit")
-      s""""paced_admit":{"offered_rps":${fmt(rps)},""" +
-        pacedStats(progress, intervalMs, nSlices.toLong, wall)
-    }
-
-    // stage 5a'': the COMPACTION handoff measured. Phase 1 arrivals
-    // accrete ownership state; then IndexCompaction folds them into the
-    // landed gate index (the once-per-interval batch job); phase 2 runs
-    // against the compacted gate with a FRESH stream — its state holds
-    // only the phase-2 horizon. phase1_state_rows vs phase2_state_rows
-    // is the state the compaction moved out of the store; CompactionSpec
-    // pins that the drop DECISION is unchanged across the move.
-    def lastStateRows(q: StreamingQuery): Long =
-      q.recentProgress.toSeq.filter(_.stateOperators.nonEmpty)
-        .lastOption.map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
-    val compaction = {
-      import streaming.IndexCompaction
-      val mid = arrivalsBatch.stat
-        .approxQuantile("doc_id", Array(0.5), 0.001).head
-      val p1 = arrivalsBatch.filter(col("doc_id") <= mid)
-      val p2 = arrivalsBatch.filter(col("doc_id") > mid)
-      val n2 = p2.count()
-      val half = math.max(2, nSlices / 2)
-      sliceOrdered(p1, "doc_id", half, s"$base/docs_p1")
-      sliceOrdered(p2, "doc_id", half, s"$base/docs_p2")
-      def str(path: String) = spark.readStream.schema(arrivalsBatch.schema)
-        .option("maxFilesPerTrigger", "1").parquet(path)
-      // phase 1: ownership accretes over the phase-1 replay
-      val q1 = streaming.TextStreams.streamingLshCollisions(spark,
-          str(s"$base/docs_p1").select(col("doc_id"), col("text")),
-          banding = lakeBanding)
-        .toDF().writeStream.format("memory").queryName("lshc_p1")
-        .outputMode(OutputMode.Append).start()
-      q1.processAllAvailable()
-      val rowsBefore = lastStateRows(q1)
-      q1.stop()
-      // the compaction job: phase-1 docs have landed in the lake
-      val idxRoot = s"$base/gate_index"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxRoot))
-      // epoch-0 init is the one-time O(corpus) base build — keep it
-      // OUTSIDE the timed section so compact_s measures what the
-      // per-interval job actually costs: the O(new docs) delta
-      IndexCompaction.init(spark, idxRoot, corpus, banding = lakeBanding)
+  // stage 5a''': the COMPOSED SERVICE measured over REPEATED
+  // compaction intervals — the steady-state claim, not one handoff.
+  // ONE TTL'd intra-stream collision query runs CONTINUOUSLY across
+  // all cycles while, per cycle: a FRESH GATE is constructed from the
+  // current epoch index (the rebuild a deployment pays after each
+  // compaction — measured in-line), the cycle's arrivals replay
+  // through gate + collision query together, the cycle's docs land
+  // in the lake, and a MINOR compaction folds them into the index;
+  // the middle cycle also runs the MAJOR merge concurrently with the
+  // live query and the next cycle's gate reads the post-merge epoch
+  // set (the grace-period deletion contract exercised end-to-end).
+  // The artifact is the per-cycle sawtooth: state rows climb while
+  // the cycle replays, then drain to the TTL plateau; compact_s
+  // stays O(delta) across cycles; epochs follow the minor/major
+  // cadence.
+  private def dedupService(c: Ctx): String = {
+    import streaming.IndexCompaction
+    val spark = c.spark
+    val nCycles = 3
+    val svcRoot = s"${c.base}/svc_docs"
+    val idxRoot = s"${c.base}/svc_index"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(svcRoot))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxRoot))
+    new java.io.File(svcRoot).mkdirs()
+    val arrivalsBatch = c.arrivalsBatch
+    val qs = arrivalsBatch.stat
+      .approxQuantile("doc_id", Array(1.0 / 3, 2.0 / 3), 0.001)
+    val phases = Seq(
+      arrivalsBatch.filter(col("doc_id") <= qs(0)),
+      arrivalsBatch.filter(col("doc_id") > qs(0) && col("doc_id") <= qs(1)),
+      arrivalsBatch.filter(col("doc_id") > qs(1)))
+    IndexCompaction.init(spark, idxRoot, c.corpus, banding = c.lakeBanding)
+    val collQ = streaming.TextStreams.streamingLshCollisions(spark,
+        c.fileStream(arrivalsBatch.schema, svcRoot)
+          .select(col("doc_id"), col("text")),
+        TTLConfig(java.time.Duration.ofMillis(TtlMs)), banding = c.lakeBanding)
+      .toDF().writeStream.format("memory").queryName("svc_coll")
+      .trigger(Trigger.ProcessingTime("500 milliseconds"))
+      .outputMode(OutputMode.Append).start()
+    var fed = 0L
+    val cycleJsons = try (0 until nCycles).map { cyc =>
+      val ph = phases(cyc)
+      val nPh = ph.count()
+      val cycDir = s"${c.base}/svc_c$cyc"
+      sliceOrdered(ph, "doc_id", math.max(2, c.nSlices / nCycles), cycDir)
+      val progBefore = c.recorder.seen(collQ.runId).size
+      // gate REBUILD from the live epoch listing: O(read) of the
+      // index segments, the per-interval restart cost
+      val tG = System.nanoTime()
+      val gateDf = IndexCompaction.gate(spark, idxRoot,
+        c.fileStream(arrivalsBatch.schema, cycDir))
+      val gateBuildS = (System.nanoTime() - tG) / 1e9
+      // feed the SAME arrival files to the standing collision query
+      // (distinct mtimes keep the file source's replay order)
+      new java.io.File(cycDir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+        .foreach { f =>
+          java.nio.file.Files.copy(f.toPath,
+            new java.io.File(svcRoot, s"c${cyc}_${f.getName}").toPath)
+          Thread.sleep(15)
+        }
+      val (admitted, _, _) = toMemory(c, s"svc_gate_$cyc", gateDf,
+        OutputMode.Append)(_.count())
+      fed += nPh
+      awaitAdmitted(c, "dedup_service", collQ, fed)
+      // settle past the TTL horizon: the sawtooth's drain edge
+      Thread.sleep(2 * TtlMs + 1500)
+      val cycleProg = c.recorder.seen(collQ.runId).drop(progBefore)
+        .filter(_.stateOperators.nonEmpty)
+      val rowsMax =
+        if (cycleProg.isEmpty) 0L
+        else cycleProg.map(_.stateOperators.map(_.numRowsTotal).sum).max
+      val rowsLast = lastStateRows(cycleProg)
+      // the cycle's docs have landed: fold them into the gate index
       val tC = System.nanoTime()
       IndexCompaction.compact(spark, idxRoot,
-        p1.select(col("doc_id"), col("text")))
+        ph.select(col("doc_id"), col("text")))
       val compactS = (System.nanoTime() - tC) / 1e9
-      // phase 2: gate owns phase-1 buckets statically now
-      val t2 = System.nanoTime()
-      val qg = IndexCompaction.gate(spark, idxRoot, str(s"$base/docs_p2"))
-        .writeStream.format("memory").queryName("lshc_gate")
-        .outputMode(OutputMode.Append).start()
-      qg.processAllAvailable()
-      val admitted = spark.table("lshc_gate").count()
-      val gWall = (System.nanoTime() - t2) / 1e9
-      val gProg = qg.recentProgress.toSeq
-      qg.stop()
-      Seq("lshc_p1", "lshc_gate").foreach(spark.catalog.dropTempView)
-      val q2 = streaming.TextStreams.streamingLshCollisions(spark,
-          str(s"$base/docs_p2").select(col("doc_id"), col("text")),
-          banding = lakeBanding)
-        .toDF().writeStream.format("memory").queryName("lshc_p2")
-        .outputMode(OutputMode.Append).start()
-      q2.processAllAvailable()
-      val rowsAfter = lastStateRows(q2)
-      q2.stop()
-      spark.catalog.dropTempView("lshc_p2")
-      // MAJOR compaction: fold the delta-epoch segments into one.
-      // Measured here because its cost is what bounds how often a
-      // deployment can afford to re-base the gate's union-read; the
-      // decision-equality across merge is pinned in CompactionSpec.
-      val segsBefore = IndexCompaction.epochs(idxRoot).size
-      val tM = System.nanoTime()
-      IndexCompaction.merge(spark, idxRoot)
-      val mergeS = (System.nanoTime() - tM) / 1e9
-      val segsAfter = IndexCompaction.epochs(idxRoot).size
-      s""""lsh_compaction":{"phase1_state_rows":$rowsBefore,""" +
+      // middle cycle: MAJOR merge while the collision query is live
+      val mergeS =
+        if (cyc == nCycles / 2) {
+          val tM = System.nanoTime()
+          IndexCompaction.merge(spark, idxRoot)
+          (System.nanoTime() - tM) / 1e9
+        } else -1.0
+      val epochsAfter = IndexCompaction.epochs(idxRoot).size
+      s"""{"cycle":$cyc,"arrivals":$nPh,"gate_admitted":$admitted,""" +
+        s""""gate_dropped":${nPh - admitted},""" +
+        s""""gate_build_s":${fmt(gateBuildS, 2)},""" +
+        s""""state_rows_max":$rowsMax,"state_rows_settled":$rowsLast,""" +
         s""""compact_s":${fmt(compactS, 2)},""" +
-        s""""phase2_state_rows":$rowsAfter,""" +
-        s""""gate_dropped_after":${n2 - admitted},""" +
-        s""""merge_s":${fmt(mergeS, 2)},""" +
-        s""""segments":{"before":$segsBefore,"after":$segsAfter},""" +
-        s""""gate_after":{${progressJson(gProg, n2, admitted, gWall)}}}"""
-    }
-
-    // stage 5a''': the COMPOSED SERVICE measured over REPEATED
-    // compaction intervals — the steady-state claim, not one handoff.
-    // ONE TTL'd intra-stream collision query runs CONTINUOUSLY across
-    // all cycles while, per cycle: a FRESH GATE is constructed from the
-    // current epoch index (the rebuild a deployment pays after each
-    // compaction — measured in-line), the cycle's arrivals replay
-    // through gate + collision query together, the cycle's docs land
-    // in the lake, and a MINOR compaction folds them into the index;
-    // the middle cycle also runs the MAJOR merge concurrently with the
-    // live query and the next cycle's gate reads the post-merge epoch
-    // set (the grace-period deletion contract exercised end-to-end).
-    // The artifact is the per-cycle sawtooth: state rows climb while
-    // the cycle replays, then drain to the TTL plateau; compact_s
-    // stays O(delta) across cycles; epochs follow the minor/major
-    // cadence.
-    val dedupService = {
-      import streaming.IndexCompaction
-      val nCycles = 3
-      val svcRoot = s"$base/svc_docs"
-      val idxRoot = s"$base/svc_index"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(svcRoot))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxRoot))
-      new java.io.File(svcRoot).mkdirs()
-      val qs = arrivalsBatch.stat
-        .approxQuantile("doc_id", Array(1.0 / 3, 2.0 / 3), 0.001)
-      val phases = Seq(
-        arrivalsBatch.filter(col("doc_id") <= qs(0)),
-        arrivalsBatch.filter(col("doc_id") > qs(0) && col("doc_id") <= qs(1)),
-        arrivalsBatch.filter(col("doc_id") > qs(1)))
-      IndexCompaction.init(spark, idxRoot, corpus, banding = lakeBanding)
-      val collQ = streaming.TextStreams.streamingLshCollisions(spark,
-          spark.readStream.schema(arrivalsBatch.schema)
-            .option("maxFilesPerTrigger", "1").parquet(svcRoot)
-            .select(col("doc_id"), col("text")),
-          TTLConfig(java.time.Duration.ofMillis(ttlMs)), banding = lakeBanding)
-        .toDF().writeStream.format("memory").queryName("svc_coll")
-        .trigger(Trigger.ProcessingTime("500 milliseconds"))
-        .outputMode(OutputMode.Append).start()
-      var fed = 0L
-      val cycleJsons = (0 until nCycles).map { c =>
-        val ph = phases(c)
-        val nPh = ph.count()
-        val cycDir = s"$base/svc_c$c"
-        sliceOrdered(ph, "doc_id", math.max(2, nSlices / nCycles), cycDir)
-        val progBefore = recorder.of(collQ.runId).size
-        // gate REBUILD from the live epoch listing: O(read) of the
-        // index segments, the per-interval restart cost
-        val tG = System.nanoTime()
-        val gateDf = IndexCompaction.gate(spark, idxRoot,
-          spark.readStream.schema(arrivalsBatch.schema)
-            .option("maxFilesPerTrigger", "1").parquet(cycDir))
-        val gateBuildS = (System.nanoTime() - tG) / 1e9
-        val gq = gateDf.writeStream.format("memory")
-          .queryName(s"svc_gate_$c").outputMode(OutputMode.Append).start()
-        // feed the SAME arrival files to the standing collision query
-        // (distinct mtimes keep the file source's replay order)
-        new java.io.File(cycDir).listFiles()
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-          .foreach { f =>
-            java.nio.file.Files.copy(f.toPath,
-              new java.io.File(svcRoot, s"c${c}_${f.getName}").toPath)
-            Thread.sleep(15)
-          }
-        gq.processAllAvailable()
-        val admitted = spark.table(s"svc_gate_$c").count()
-        gq.stop()
-        spark.catalog.dropTempView(s"svc_gate_$c")
-        fed += nPh
-        val deadline = System.currentTimeMillis() + 120000
-        while (collQ.isActive && recorder.admitted(collQ.runId) < fed &&
-            System.currentTimeMillis() < deadline)
-          Thread.sleep(100)
-        collQ.exception.foreach(e => throw new IllegalStateException(
-          "svc_coll failed", e))
-        // settle past the TTL horizon: the sawtooth's drain edge
-        Thread.sleep(2 * ttlMs + 1500)
-        val cycleProg = recorder.of(collQ.runId).drop(progBefore)
-          .filter(_.stateOperators.nonEmpty)
-        val rowsMax =
-          if (cycleProg.isEmpty) 0L
-          else cycleProg.map(_.stateOperators.map(_.numRowsTotal).sum).max
-        val rowsLast = cycleProg.lastOption
-          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L)
-        // the cycle's docs have landed: fold them into the gate index
-        val tC = System.nanoTime()
-        IndexCompaction.compact(spark, idxRoot,
-          ph.select(col("doc_id"), col("text")))
-        val compactS = (System.nanoTime() - tC) / 1e9
-        // middle cycle: MAJOR merge while the collision query is live
-        val mergeS =
-          if (c == nCycles / 2) {
-            val tM = System.nanoTime()
-            IndexCompaction.merge(spark, idxRoot)
-            (System.nanoTime() - tM) / 1e9
-          } else -1.0
-        val epochsAfter = IndexCompaction.epochs(idxRoot).size
-        s"""{"cycle":$c,"arrivals":$nPh,"gate_admitted":$admitted,""" +
-          s""""gate_dropped":${nPh - admitted},""" +
-          s""""gate_build_s":${fmt(gateBuildS, 2)},""" +
-          s""""state_rows_max":$rowsMax,"state_rows_settled":$rowsLast,""" +
-          s""""compact_s":${fmt(compactS, 2)},""" +
-          s""""merge_s":${if (mergeS < 0) "-1" else fmt(mergeS, 2)},""" +
-          s""""epochs_after":$epochsAfter}"""
-      }
+        s""""merge_s":${if (mergeS < 0) "-1" else fmt(mergeS, 2)},""" +
+        s""""epochs_after":$epochsAfter}"""
+    } finally {
       collQ.stop()
       spark.catalog.dropTempView("svc_coll")
-      s""""dedup_service":{"ttl_ms":$ttlMs,"cycles":[${cycleJsons.mkString(",")}]}"""
     }
+    s""""ttl_ms":$TtlMs,"cycles":[${cycleJsons.mkString(",")}]"""
+  }
 
-    // stage 5a'''''': the live per-(domain, lang) HLL dataset card —
-    // streamingHllBy maintains every group's 256-register sketch in ONE
-    // operator (state bounded by 256 x groups, ≤24 emissions per
-    // register over the stream's lifetime). After the full replay each
-    // group's hllEstimate must EQUAL the oracle-checked batch q134
-    // n_hll — groups_match counts that equality.
-    val hllLive = hllLiveStage(spark, sfDir, base, nSlices)
+  // stage 5a'''''': the live per-(domain, lang) HLL dataset card —
+  // streamingHllBy maintains every group's 256-register sketch in ONE
+  // operator (state bounded by 256 x groups, ≤24 emissions per
+  // register over the stream's lifetime). After the full replay each
+  // group's hllEstimate must EQUAL the oracle-checked batch q134
+  // n_hll — groups_match counts that equality. The sketch stages'
+  // corpus-size-INDEPENDENT state bounds are the claims a new decade
+  // can falsify cheaply.
+  private def hllLive(c: Ctx): String = {
+    val spark = c.spark
+    import spark.implicits._
+    val docsAll = c.docs.select(col("doc_id"), col("lang"), col("text"))
+    val nDocs = docsAll.count()
+    sliceOrdered(docsAll, "doc_id", c.nSlices, s"${c.base}/docs_all")
+    val dstream = c.fileStream(docsAll.schema, s"${c.base}/docs_all")
+    val toks = dstream.select(lit("token").as("domain"), col("lang"),
+      explode(split(col("text"), " ")).as("item"))
+    val shing = dstream
+      .select(col("lang"), split(col("text"), " ").as("w"))
+      .filter(size(col("w")) >= 3)
+      .select(lit("shingle").as("domain"), col("lang"),
+        explode(array_distinct(expr(
+          "transform(sequence(0, size(w)-3), i -> concat_ws(' ', slice(w, i+1, 3)))"
+        ))).as("item"))
+    val items = toks.unionAll(shing)
+      .select(concat_ws("|", col("domain"), col("lang")), col("item"))
+      .as[(String, String)]
+    val (regs, progress, wall) = toMemory(c, "hll_live",
+      streaming.TextStreams.streamingHllBy(spark, items).toDF("grp", "bucket", "r"),
+      OutputMode.Update)(_.as[(String, Long, Int)].collect())
+    val est = regs.groupBy(_._1).view.mapValues(rs =>
+      streaming.TextStreams.hllEstimate(rs.map(t => (t._2, t._3)))).toMap
+    val batch = SparkEntry.queries("q134_hll_distinct")(spark, c.sfDir)
+      .select(concat_ws("|", col("domain"), col("lang")).as("g"),
+        col("n_hll"))
+      .as[(String, Long)].collect().toMap
+    val matches = batch.count { case (g, n) => est.get(g).contains(n) }
+    // in_rows: both stream branches scan the doc replay → 2x docs
+    s"""${progressJson(progress, 2 * nDocs, regs.length.toLong, wall)},""" +
+      s""""groups":${batch.size},"groups_match":$matches,""" +
+      s""""state_rows_bound":${256L * batch.size}"""
+  }
 
-    // stage 5a''''''b: the live count-min frequency sketch —
-    // streamingCountMin maintains the q90 d×w cell table incrementally
-    // (ONE state row per sketch cell), so state is bounded at 4·w = 64
-    // rows CORPUS-SIZE-INDEPENDENT — the strongest state bound in this
-    // file: the sketch never grows with the stream, only its cell sums
-    // do. After the full replay, every vocabulary term's
-    // min-over-hash-rows estimate read from the live cells must EQUAL
-    // the oracle-checked batch q90 estimate (terms_match == vocab).
-    val cmLive = cmLiveStage(spark, sfDir, base, nSlices)
+  // stage 5a''''''b: the live count-min frequency sketch —
+  // streamingCountMin maintains the q90 d×w cell table incrementally
+  // (ONE state row per sketch cell), so state is bounded at 4·w = 64
+  // rows CORPUS-SIZE-INDEPENDENT — the strongest state bound in this
+  // file: the sketch never grows with the stream, only its cell sums
+  // do. After the full replay, every vocabulary term's
+  // min-over-hash-rows estimate read from the live cells must EQUAL
+  // the oracle-checked batch q90 estimate (terms_match == vocab).
+  private def countMinLive(c: Ctx): String = {
+    val spark = c.spark
+    import spark.implicits._
+    val w = operators.Text.CountMinWidth
+    val docsAll = c.docs.select(col("doc_id"), col("text"))
+    val nToks = docsAll.select(explode(split(col("text"), " "))).count()
+    sliceOrdered(docsAll, "doc_id", c.nSlices, s"${c.base}/docs_cm")
+    val terms = c.fileStream(docsAll.schema, s"${c.base}/docs_cm")
+      .select(explode(split(col("text"), " ")).as("t")).as[String]
+    val (emitted, progress, wall) = toMemory(c, "countmin_live",
+      streaming.TextStreams.streamingCountMin(spark, terms).toDF("cell", "csum"),
+      OutputMode.Update)(_.as[(Long, Long)].collect())
+    // cell sums are monotone, so the max emission per cell is the
+    // final cell value — no snapshot read of the state store needed
+    val cells = emitted.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
+    val batch = SparkEntry.queries("q90_countmin")(spark, c.sfDir)
+      .select(col("term"), col("est")).as[(String, Long)].collect().toMap
+    val matches = batch.count { case (term, est) =>
+      val live = (0 until 4).map { j =>
+        cells.getOrElse(
+          j.toLong * w + streaming.TextStreams.hash60(s"$term#$j") % w, 0L)
+      }.min
+      live == est
+    }
+    s"""${progressJson(progress, nToks, emitted.length.toLong, wall)},""" +
+      s""""vocab":${batch.size},"terms_match":$matches,""" +
+      s""""state_rows_bound":${4L * w}"""
+  }
 
-    // stage 5a''''''': the COMPOSED INGEST LOOP — gate → admit →
-    // exactly-once landing → minor compaction, repeated over three
-    // cycles from an EMPTY index (streaming.IngestLoop, the pipeline
-    // the other stages measure piecewise). Invariant per cycle:
-    // admitted == landed == folded. End to end the landed set is
-    // audited against the oracle-checked batch q123 keep set —
-    // missed_q123 must be 0 (the loop never drops a q123 keeper) and
-    // every extra admit must be a cross-cycle bridge whose earlier
-    // band sharers were ALL never landed (extras_bridge_only; the
-    // policy IngestLoopSpec pins).
-    val ingestLoop = {
-      import streaming.{IndexCompaction, IngestLoop}
-      val b2 = s"$base/ingest"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(b2))
-      val idxRoot = s"$b2/index"; val landRoot = s"$b2/landed"
-      val docsAll = docs.select(col("doc_id"), col("text"))
-      IndexCompaction.init(spark, idxRoot, docsAll.filter(lit(false)),
-        banding = lakeBanding)
-      val qsI = docsAll.stat
-        .approxQuantile("doc_id", Array(1.0 / 3, 2.0 / 3), 0.001)
-      val phases = Seq(
-        docsAll.filter(col("doc_id") <= qsI(0)),
-        docsAll.filter(col("doc_id") > qsI(0) && col("doc_id") <= qsI(1)),
-        docsAll.filter(col("doc_id") > qsI(1)))
-      // SPARK_GRAFT_FILES_PER_TRIGGER amortizes the per-micro-batch
-      // fixed cost (~0.7-1.2 s/trigger on 32 local cores) at higher SF; the
-      // admit decision is trigger-size-invariant (IngestLoopSpec)
-      val filesPerTrigger =
-        sys.env.getOrElse("SPARK_GRAFT_FILES_PER_TRIGGER", "1").toInt
-      val cycleJ = phases.zipWithIndex.map { case (ph, c) =>
-        val cycDir = s"$b2/in_$c"
-        sliceOrdered(ph, "doc_id", math.max(2, nSlices / 3), cycDir)
-        val st = IngestLoop.runCycle(spark, idxRoot, landRoot, c, cycDir,
-          ph.schema, ph.count(), filesPerTrigger = filesPerTrigger)
-        s"""{"cycle":$c,"arrivals":${st.arrivals},""" +
-          s""""gate_admitted":${st.gateAdmitted},""" +
-          s""""admitted":${st.admitted},"landed":${st.landed},""" +
-          s""""folded":${st.folded},"epochs_after":${st.epochsAfter},""" +
-          s""""gate_build_s":${fmt(st.gateBuildS, 2)},""" +
-          s""""drain_s":${fmt(st.drainWallS, 2)},""" +
-          s""""compact_s":${fmt(st.compactS, 2)},""" +
-          s""""batches":${st.batches}}"""
+  // stage 5a''''''': the COMPOSED INGEST LOOP — gate → admit →
+  // exactly-once landing → minor compaction, repeated over three
+  // cycles from an EMPTY index (streaming.IngestLoop, the pipeline
+  // the other stages measure piecewise). Invariant per cycle:
+  // admitted == landed == folded. End to end the landed set is
+  // audited against the oracle-checked batch q123 keep set —
+  // missed_q123 must be 0 (the loop never drops a q123 keeper) and
+  // every extra admit must be a cross-cycle bridge whose earlier
+  // band sharers were ALL never landed (extras_bridge_only; the
+  // policy IngestLoopSpec pins).
+  private def ingestLoop(c: Ctx): String = {
+    import streaming.{IndexCompaction, IngestLoop}
+    val spark = c.spark
+    import spark.implicits._
+    val b2 = s"${c.base}/ingest"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(b2))
+    val idxRoot = s"$b2/index"; val landRoot = s"$b2/landed"
+    val docsAll = c.docs.select(col("doc_id"), col("text"))
+    IndexCompaction.init(spark, idxRoot, docsAll.filter(lit(false)),
+      banding = c.lakeBanding)
+    val qsI = docsAll.stat
+      .approxQuantile("doc_id", Array(1.0 / 3, 2.0 / 3), 0.001)
+    val phases = Seq(
+      docsAll.filter(col("doc_id") <= qsI(0)),
+      docsAll.filter(col("doc_id") > qsI(0) && col("doc_id") <= qsI(1)),
+      docsAll.filter(col("doc_id") > qsI(1)))
+    // SPARK_GRAFT_FILES_PER_TRIGGER amortizes the per-micro-batch
+    // fixed cost (~0.7-1.2 s/trigger on 32 local cores) at higher SF; the
+    // admit decision is trigger-size-invariant (IngestLoopSpec)
+    val filesPerTrigger =
+      sys.env.getOrElse("SPARK_GRAFT_FILES_PER_TRIGGER", "1").toInt
+    val cycleJ = phases.zipWithIndex.map { case (ph, cyc) =>
+      val cycDir = s"$b2/in_$cyc"
+      sliceOrdered(ph, "doc_id", math.max(2, c.nSlices / 3), cycDir)
+      val st = IngestLoop.runCycle(spark, idxRoot, landRoot, cyc, cycDir,
+        ph.schema, ph.count(), filesPerTrigger = filesPerTrigger)
+      s"""{"cycle":$cyc,"arrivals":${st.arrivals},""" +
+        s""""gate_admitted":${st.gateAdmitted},""" +
+        s""""admitted":${st.admitted},"landed":${st.landed},""" +
+        s""""folded":${st.folded},"epochs_after":${st.epochsAfter},""" +
+        s""""gate_build_s":${fmt(st.gateBuildS, 2)},""" +
+        s""""drain_s":${fmt(st.drainWallS, 2)},""" +
+        s""""compact_s":${fmt(st.compactS, 2)},""" +
+        s""""batches":${st.batches}}"""
+    }
+    val landedIds = IngestLoop.landedAll(spark, landRoot)
+      .select(col("doc_id")).as[Long].collect().toSet
+    val dropSet = operators.Text.arrivalDedup(spark, c.sfDir)
+      .select(col("doc_id")).as[Long].collect().toSet
+    val allIds = docsAll.select(col("doc_id")).as[Long].collect().toSet
+    val keep = allIds -- dropSet
+    val extras = landedIds -- keep
+    val missed = keep -- landedIds
+    val bridgeOnly =
+      if (extras.isEmpty) true
+      else {
+        val bands = operators.Text.mhBands(
+          operators.Text.minhashAgg(spark, c.sfDir, c.lakeBanding), c.lakeBanding)
+        bands.as("a")
+          .join(bands.as("b"),
+            col("a.band") === col("b.band") &&
+              col("a.sig") === col("b.sig") &&
+              col("b.doc_id") < col("a.doc_id"))
+          .select(col("a.doc_id").as("e"), col("b.doc_id").as("earlier"))
+          .filter(col("e").isin(extras.toSeq: _*))
+          .select(col("earlier")).distinct()
+          .as[Long].collect().forall(d => !landedIds.contains(d))
       }
-      val landedIds = IngestLoop.landedAll(spark, landRoot)
-        .select(col("doc_id")).as[Long].collect().toSet
-      val dropSet = operators.Text.arrivalDedup(spark, sfDir)
-        .select(col("doc_id")).as[Long].collect().toSet
-      val allIds = docsAll.select(col("doc_id")).as[Long].collect().toSet
-      val keep = allIds -- dropSet
-      val extras = landedIds -- keep
-      val missed = keep -- landedIds
-      val bridgeOnly =
-        if (extras.isEmpty) true
-        else {
-          val bd = operators.Text.bandingOf(spark, sfDir)
-          val bands = operators.Text.mhBands(
-            operators.Text.minhashAgg(spark, sfDir, bd), bd)
-          bands.as("a")
-            .join(bands.as("b"),
-              col("a.band") === col("b.band") &&
-                col("a.sig") === col("b.sig") &&
-                col("b.doc_id") < col("a.doc_id"))
-            .select(col("a.doc_id").as("e"), col("b.doc_id").as("earlier"))
-            .filter(col("e").isin(extras.toSeq: _*))
-            .select(col("earlier")).distinct()
-            .as[Long].collect().forall(d => !landedIds.contains(d))
-        }
-      s""""ingest_loop":{"cycles":[${cycleJ.mkString(",")}],""" +
-        s""""files_per_trigger":$filesPerTrigger,""" +
-        s""""landed_total":${landedIds.size},"q123_keep":${keep.size},""" +
-        s""""extra_admitted":${extras.size},"missed_q123":${missed.size},""" +
-        s""""extras_bridge_only":$bridgeOnly}"""
-    }
+    s""""cycles":[${cycleJ.mkString(",")}],""" +
+      s""""files_per_trigger":$filesPerTrigger,""" +
+      s""""landed_total":${landedIds.size},"q123_keep":${keep.size},""" +
+      s""""extra_admitted":${extras.size},"missed_q123":${missed.size},""" +
+      s""""extras_bridge_only":$bridgeOnly"""
+  }
 
-    // stage 5b: the DSv2 paced replay source itself, over a multi-file
-    // segment directory built from the events table — measures what the
-    // custom source sustains (admission-controlled offsets, per-file
-    // executor-side parsing) rather than the built-in file source.
-    // eventsPerBatch is sized for ~nSlices micro-batches, matching the
-    // other stages' batch structure.
-    val replayDir = new java.io.File(s"$base/replay_segments")
-    org.apache.commons.io.FileUtils.deleteQuietly(replayDir)
-    replayDir.mkdirs()
-    val activityRows = events
-      .orderBy(col("ts"))
-      .select(col("user_id"),
-        col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-      .collect()
-    activityRows.grouped(
-      math.max(1, math.ceil(activityRows.length / nSlices.toDouble).toInt))
-      .zipWithIndex.foreach { case (group, i) =>
-        val body = group.map(r =>
-          s"""{"userId": "${r.get(0)}", "activity": "${r.get(1)}", "timestamp": "${r.get(2)}"}""")
-          .mkString("[\n", ",\n", "\n]")
-        java.nio.file.Files.write(
-          replayDir.toPath.resolve(f"seg_$i%03d.json"),
-          body.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-      }
-    val replayed = spark.readStream.format("user-activity-replay")
-      .option("path", replayDir.toString)
-      .option("eventsPerBatch",
-        math.max(1, activityRows.length / nSlices).toString).load()
-      .select(col("userId").as("user_id"),
-        col("activity").as("event_type"),
-        to_timestamp(col("timestamp")).as("ts"))
-    val (replaySrc, replayWall, replayProg) = stage(spark, "replay_source",
-      streaming.EventStreams.tumblingSignupsOn(replayed, "1 hour"),
-      OutputMode.Complete, activityRows.length.toLong)
+  // stage 5b: the DSv2 paced replay source itself, over a multi-file
+  // segment directory built from the events table — measures what the
+  // custom source sustains (admission-controlled offsets, per-file
+  // executor-side parsing) rather than the built-in file source.
+  // eventsPerBatch is sized for ~nSlices micro-batches, matching the
+  // other stages' batch structure.
+  private def replaySource(c: Ctx): String =
+    drain(c, "replay_source", streaming.EventStreams.tumblingSignupsOn(
+      c.replayStream(math.max(1, c.replayRows / c.nSlices)), "1 hour"),
+      OutputMode.Complete, c.replayRows.toLong)
 
-    // stage 5b': latency under a SUSTAINED ARRIVAL RATE, not drain
-    // rate — the number an SLO is written against. The as-fast replay
-    // above measures what the pipeline can drain; production offers a
-    // RATE, and the binding metric is event-to-commit latency at that
-    // rate. The DSv2 source's admission control paces the offer:
-    // eventsPerBatch per fixed ProcessingTime trigger = the offered
-    // rows/s. Per data batch, latency = commit end − the batch's
-    // SCHEDULED admission instant (first-batch start + k·interval) —
-    // falling behind the offered rate accumulates queueing delay into
-    // the number, exactly as an arriving event experiences it. Run at
-    // 50% and 90% of the measured as-fast throughput.
-    val maxRps = activityRows.length / math.max(replayWall, 0.001)
-    // The trigger interval is a deployment knob sized from the as-fast
-    // run's measured per-batch p50 (see fitIntervalMs), exactly as a
-    // deployment would: the latency floor scales with the interval,
-    // which is the micro-batch latency/efficiency trade-off stated
-    // honestly.
-    val intervalMs = fitIntervalMs(batchP50Ms(replayProg))
-    def pacedRun(tag: String, perBatch: Int, interval: Long,
-        rps: Double): String = {
-      val src = spark.readStream.format("user-activity-replay")
-        .option("path", replayDir.toString)
-        .option("eventsPerBatch", perBatch.toString).load()
-        .select(col("userId").as("user_id"),
-          col("activity").as("event_type"),
-          to_timestamp(col("timestamp")).as("ts"))
-      val q = streaming.EventStreams.tumblingSignupsOn(src, "1 hour")
-        .writeStream.format("memory").queryName(s"paced_$tag")
-        .trigger(Trigger.ProcessingTime(s"$interval milliseconds"))
-        .outputMode(OutputMode.Complete).start()
-      val (progress, wall) = runPaced(q, activityRows.length.toLong, 0L)
-      spark.catalog.dropTempView(s"paced_$tag")
-      val expected = math.ceil(activityRows.length.toDouble / perBatch).toLong
-      s""""paced_$tag":{"offered_rps":${fmt(rps)},""" +
-        pacedStats(progress, interval, expected, wall)
-    }
-    def paced(tag: String, frac: Double): String = {
-      val rps = maxRps * frac
-      pacedRun(tag, math.max(1, (rps * intervalMs / 1000.0).toInt),
-        intervalMs, rps)
-    }
-    val paced50 = paced("50", 0.5)
-    val paced90 = paced("90", 0.9)
+  /** The replay pipeline offered `perBatch` events per `intervalMs`. */
+  private def pacedReplay(c: Ctx, tag: String, perBatch: Int,
+      intervalMs: Long, offeredRps: Double): String =
+    pacedStage(c, s"paced_$tag", streaming.EventStreams.tumblingSignupsOn(
+      c.replayStream(perBatch), "1 hour"),
+      OutputMode.Complete, c.replayRows.toLong, intervalMs,
+      math.ceil(c.replayRows.toDouble / perBatch).toLong, offeredRps)
 
-    // stage 5b'': NEGATIVE CONTROL — the same pipeline deliberately
-    // OVER-offered: as-fast-sized batches on a trigger interval set
-    // BELOW the measured per-batch cost (~60% of p50), an offered rate
-    // no interval-sizing could sustain. The backlog instrumentation has
-    // only ever been artifacted in the kept-up direction; this stage
-    // must report kept_up=false with visibly growing drift, proving the
-    // SLO instrument reads both ways (a detector that has never fired
-    // is unproven exactly where it matters).
-    val pacedOver = {
-      val overMs = math.max(250L,
-        ((batchP50Ms(replayProg) * 0.6) / 250.0).toLong * 250L)
-      // batch size derived from the OFFERED RATE (120% of measured
-      // as-fast drain), not from the as-fast batch shape: when the
-      // interval clamps to the 250 ms floor on a fast host, a
-      // shape-derived batch can quietly become sustainable and the
-      // negative control stops being negative (observed on a quiet
-      // run: kept_up=true at the floor). 1.2x the drain rate cannot
-      // be sustained whatever the batch size.
-      val perBatch = math.max(1,
-        math.ceil(1.2 * maxRps * overMs / 1000.0).toInt)
-      pacedRun("over", perBatch, overMs, perBatch * 1000.0 / overMs)
-    }
+  /** The as-fast replay's drain rate, rows/s. */
+  private def replayMaxRps(c: Ctx): Double =
+    c.replayRows / math.max(c.measured("replay_source")._2, 0.001)
 
-    // stage 5c: multimodal CAS ingest gate — binary payloads through
-    // content-address dedup (watermark-bounded intra-stream state keyed
-    // by the 16-byte checksum + broadcast anti-join vs the landed
-    // store); payload bytes never shuffle
-    val landedBlobs = corpus
+  // stage 5b': latency under a SUSTAINED ARRIVAL RATE, not drain
+  // rate — the number an SLO is written against. The as-fast replay
+  // above measures what the pipeline can drain; production offers a
+  // RATE, and the binding metric is event-to-commit latency at that
+  // rate. The DSv2 source's admission control paces the offer:
+  // eventsPerBatch per fixed ProcessingTime trigger = the offered
+  // rows/s. Per data batch, latency = commit end − the batch's
+  // SCHEDULED admission instant (first-batch start + k·interval) —
+  // falling behind the offered rate accumulates queueing delay into
+  // the number, exactly as an arriving event experiences it. Run at
+  // 50% and 90% of the measured as-fast throughput. The trigger
+  // interval is a deployment knob sized from the as-fast run's measured
+  // per-batch p50 (see fitIntervalMs), exactly as a deployment would:
+  // the latency floor scales with the interval, which is the
+  // micro-batch latency/efficiency trade-off stated honestly.
+  private def pacedAt(tag: String, frac: Double)(c: Ctx): String = {
+    val intervalMs = fitIntervalMs(batchP50Ms(c.measured("replay_source")._1))
+    val rps = replayMaxRps(c) * frac
+    pacedReplay(c, tag, math.max(1, (rps * intervalMs / 1000.0).toInt),
+      intervalMs, rps)
+  }
+
+  // stage 5b'': NEGATIVE CONTROL — the same pipeline deliberately
+  // OVER-offered: as-fast-sized batches on a trigger interval set
+  // BELOW the measured per-batch cost (~60% of p50), an offered rate
+  // no interval-sizing could sustain. The backlog instrumentation has
+  // only ever been artifacted in the kept-up direction; this stage
+  // must report kept_up=false with visibly growing drift, proving the
+  // SLO instrument reads both ways (a detector that has never fired
+  // is unproven exactly where it matters).
+  private def pacedOver(c: Ctx): String = {
+    val overMs = math.max(250L,
+      ((batchP50Ms(c.measured("replay_source")._1) * 0.6) / 250.0).toLong * 250L)
+    // batch size derived from the OFFERED RATE (120% of measured
+    // as-fast drain), not from the as-fast batch shape: when the
+    // interval clamps to the 250 ms floor on a fast host, a
+    // shape-derived batch can quietly become sustainable and the
+    // negative control stops being negative (observed on a quiet
+    // run: kept_up=true at the floor). 1.2x the drain rate cannot
+    // be sustained whatever the batch size.
+    val perBatch = math.max(1,
+      math.ceil(1.2 * replayMaxRps(c) * overMs / 1000.0).toInt)
+    pacedReplay(c, "over", perBatch, overMs, perBatch * 1000.0 / overMs)
+  }
+
+  // stage 5c: multimodal CAS ingest gate — binary payloads through
+  // content-address dedup (watermark-bounded intra-stream state keyed
+  // by the 16-byte checksum + broadcast anti-join vs the landed
+  // store); payload bytes never shuffle
+  private def blobIngest(c: Ctx): String = {
+    val landedBlobs = c.corpus
       .select(encode(col("text"), "UTF-8").as("payload"))
       .withColumn("meta", struct(md5(col("payload")).as("checksum")))
-    val (blobGate, _, _) = stage(spark, "blob_ingest",
+    drain(c, "blob_ingest",
       streaming.MediaStreams.blobIngest(
-        arrivals.select(col("doc_id"),
+        c.arrivals.select(col("doc_id"),
           encode(col("text"), "UTF-8").as("payload"), col("eventTime")),
         landedBlobs),
-      OutputMode.Append, gateIn)
+      OutputMode.Append, c.gateIn)
+  }
 
-    // stage 6: span contamination audit — watermark-finalized per-doc
-    // span accounting, KILLED mid-replay and restored from checkpoint.
-    // Append mode: the advancing eventTime finalizes groups as the
-    // watermark passes them, so state stays bounded and emits flow
-    // batch-over-batch (the production shape). The foreachBatch sink is
-    // EXACTLY-once, not at-least-once: each batch lands in its own
-    // batch_id partition via the idempotent dynamic-overwrite writer, so
-    // a batch replayed after the kill overwrites itself instead of
-    // appending duplicates (plain mode("append") would double-count any
-    // batch whose files landed before the offset commit).
-    val auditOut = s"$base/out_span_audit"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(auditOut))
-    val audit = killRestoreStage(spark, "span_audit",
-      ckpt => streaming.TextStreams.spanContaminationAudit(arrivals, corpus)
+  // stage 6: span contamination audit — watermark-finalized per-doc
+  // span accounting, KILLED mid-replay and restored from checkpoint.
+  // Append mode: the advancing eventTime finalizes groups as the
+  // watermark passes them, so state stays bounded and emits flow
+  // batch-over-batch (the production shape). The foreachBatch sink is
+  // EXACTLY-once, not at-least-once: each batch lands in its own
+  // batch_id partition via the idempotent dynamic-overwrite writer, so
+  // a batch replayed after the kill overwrites itself instead of
+  // appending duplicates (plain mode("append") would double-count any
+  // batch whose files landed before the offset commit).
+  private def spanAudit(c: Ctx): String =
+    killRestore(c, "span_audit", c.gateIn, (out, ckpt) =>
+      streaming.TextStreams.spanContaminationAudit(c.arrivals, c.corpus)
         .writeStream
         .foreachBatch { (df: DataFrame, batchId: Long) =>
           sources.Sinks.backfillPartitions(
-            df.withColumn("batch_id", lit(batchId)), "batch_id", auditOut)
+            df.withColumn("batch_id", lit(batchId)), "batch_id", out)
         }
         .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append).start(),
-      gateIn, nSlices,
-      () => try spark.read.parquet(auditOut).count() catch { case _: Throwable => 0L })
+        .outputMode(OutputMode.Append).start())
 
-    // stage 7: standing-query retrieval — frozen-stats scoring + per-query
-    // stateful top-k, KILLED mid-replay and restored (top-k state must
-    // survive; ReplaySourceSpec/EventStreamsSpec pin the semantics,
-    // this measures the cost)
-    val standingOut = s"$base/out_standing"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(standingOut))
-    val standing = killRestoreStage(spark, "standing_retrieval",
-      ckpt => streaming.TextStreams.standingRetrieval(spark, arrivals, sfDir)
+  // stage 7: standing-query retrieval — frozen-stats scoring + per-query
+  // stateful top-k, KILLED mid-replay and restored (top-k state must
+  // survive; ReplaySourceSpec/EventStreamsSpec pin the semantics,
+  // this measures the cost)
+  private def standingRetrieval(c: Ctx): String =
+    killRestore(c, "standing_retrieval", c.gateIn, (out, ckpt) =>
+      streaming.TextStreams.standingRetrieval(c.spark, c.arrivals, c.sfDir)
         .toDF().writeStream.format("parquet")
-        .option("path", standingOut)
+        .option("path", out)
         .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append).start(),
-      gateIn, nSlices,
-      () => try spark.read.parquet(standingOut).count() catch { case _: Throwable => 0L })
+        .outputMode(OutputMode.Append).start())
 
-    // stage LAST: the stream-stream range join (q149's streaming twin)
-    // — both sides of the no-equi-key temporal join read the SAME
-    // events replay; the time-bucket fanout (err side probes b−1/b/b+1)
-    // gives the symmetric hash join its equi-key, and the 10 s
-    // watermark plus the ±60 s range condition bound BOTH sides'
-    // buffered state to the horizon — expect rows_max to plateau and
-    // removed > 0 as the watermark advances across micro-batches
-    // (horizon-bounded, not input-tracking). Runs LAST deliberately:
-    // the join holds 4 state stores × 32 partitions, and at sf1 the
-    // loaded RocksDB providers linger past q.stop() until store
-    // maintenance unloads them — run mid-sweep they inflate the
-    // following stateful stages' batch times ~2x (measured: lsh_dedup
-    // 16 → 40 s wall when this stage preceded it).
-    val (nearby, _, _) = stage(spark, "nearby_pairs",
-      streaming.EventStreams.nearbyPairs(eventsStream),
-      OutputMode.Append, totalRows)
+  // stage LAST: the stream-stream range join (q149's streaming twin)
+  // — both sides of the no-equi-key temporal join read the SAME
+  // events replay; the time-bucket fanout (err side probes b−1/b/b+1)
+  // gives the symmetric hash join its equi-key, and the 10 s
+  // watermark plus the ±60 s range condition bound BOTH sides'
+  // buffered state to the horizon — expect rows_max to plateau and
+  // removed > 0 as the watermark advances across micro-batches
+  // (horizon-bounded, not input-tracking). Runs LAST deliberately:
+  // the join holds 4 state stores × 32 partitions, and at sf1 the
+  // loaded RocksDB providers linger past q.stop() until store
+  // maintenance unloads them — run mid-sweep they inflate the
+  // following stateful stages' batch times ~2x (measured: lsh_dedup
+  // 16 → 40 s wall when this stage preceded it).
+  private def nearbyPairs(c: Ctx): String =
+    drain(c, "nearby_pairs", streaming.EventStreams.nearbyPairs(c.eventsStream),
+      OutputMode.Append, c.totalRows)
 
-    GraftSession.rocksDbStateConf(changelog).foreach { case (k, _) => spark.conf.unset(k) }
+  /** Every stage, keyed by its JSON name, in run order. */
+  private val table: Seq[(String, Ctx => String)] = Seq(
+    "sb" -> sb _, "gate" -> gate _, "paced_gate" -> pacedGate _,
+    "cell_assign" -> cellAssign _, "session_timers" -> sessionTimers _,
+    "lsh_dedup" -> lshDedup _, "lsh_dedup_ttl" -> lshDedupTtl _,
+    "admit" -> admit _, "paced_admit" -> pacedAdmit _,
+    "admit_drain" -> admitDrain _, "lsh_compaction" -> lshCompaction _,
+    "dedup_service" -> dedupService _, "hll_live" -> hllLive _,
+    "countmin_live" -> countMinLive _, "ingest_loop" -> ingestLoop _,
+    "replay_source" -> replaySource _, "paced_50" -> pacedAt("50", 0.5) _,
+    "paced_90" -> pacedAt("90", 0.9) _, "paced_over" -> pacedOver _,
+    "blob_ingest" -> blobIngest _, "span_audit" -> spanAudit _,
+    "standing_retrieval" -> standingRetrieval _, "nearby_pairs" -> nearbyPairs _)
 
+  /** Stage names in run order. */
+  private[graft] val stageNames: Seq[String] = table.map(_._1)
+
+  /** Each paced stage's as-fast twin, whose measured per-batch cost
+    * sizes its trigger interval.
+    */
+  private val twinOf = Map("paced_gate" -> "gate", "paced_admit" -> "admit",
+    "paced_50" -> "replay_source", "paced_90" -> "replay_source",
+    "paced_over" -> "replay_source")
+
+  /** RocksDB state from this stage on, with changelog checkpointing:
+    * each commit uploads the batch's changed keys instead of a full
+    * RocksDB snapshot (snapshots still land in the background at the
+    * maintenance interval); restore = last snapshot + changelog replay.
+    * Per-batch commit cost becomes O(delta) instead of O(state) — the
+    * difference between the two is exactly what a 100 TB standing
+    * pipeline pays per trigger, so the bench runs the production
+    * setting. Toggle off to measure the snapshot-per-commit mode:
+    * SPARK_GRAFT_CHANGELOG_CKPT=0. The stages before it keep the
+    * session's default store.
+    */
+  private val rocksDbFrom = stageNames.indexOf("session_timers")
+
+  /** The stages a command-line selection names, in run order: every
+    * stage without one. Fails on an unknown name and on a paced stage
+    * selected without its as-fast twin.
+    */
+  private[graft] def select(csv: Option[String]): Seq[String] = csv match {
+    case None => stageNames
+    case Some(list) =>
+      val want = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = want -- stageNames
+      require(want.nonEmpty && unknown.isEmpty,
+        s"unknown stages: ${unknown.toSeq.sorted.mkString(",")}; " +
+          s"known: ${stageNames.mkString(",")}")
+      val orphans = want.toSeq.sorted.filter(s => twinOf.get(s).exists(t => !want(t)))
+      require(orphans.isEmpty, "paced stages need their as-fast twin: " +
+        orphans.map(s => s"$s needs ${twinOf(s)}").mkString(", "))
+      stageNames.filter(want)
+  }
+
+  /** Run `stages` (names from [[select]]) against the lake at `sfDir`,
+    * staging replay inputs under `base`, and return the JSON line. The
+    * session's state-store confs are restored afterwards.
+    */
+  private[graft] def run(spark: SparkSession, sfDir: String,
+      stages: Seq[String], base: String = "/tmp/graft_streambench"): String = {
+    val nSlices = sys.env.getOrElse("SPARK_GRAFT_STREAM_SLICES", "12").toInt
+    val c = new Ctx(spark, sfDir, nSlices, base)
+    val changelog = GraftSession.changelogFromEnv
+    val prev = GraftSession.rocksDbStateConf(changelog)
+      .map { case (k, _) => k -> spark.conf.getOption(k) }
+    val load0 = HostLoad.loadavg(); val steal0 = HostLoad.stealSec()
+    val stage = table.toMap
+    spark.streams.addListener(c.recorder)
+    val parts = try stages.map { name =>
+      if (stageNames.indexOf(name) >= rocksDbFrom)
+        GraftSession.useRocksDbState(spark, changelog)
+      s""""$name":{${stage(name)(c)}}"""
+    } finally {
+      spark.streams.removeListener(c.recorder)
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
     val load1 = HostLoad.loadavg(); val steal1 = HostLoad.stealSec()
     val stealS = if (steal0 < 0 || steal1 < 0) "-1" else fmt(steal1 - steal0)
-    val line = s"""{"metric":"stream_bench","unit":"rows/sec",""" +
+    s"""{"metric":"stream_bench","unit":"rows/sec",""" +
       s""""slices":$nSlices,"changelog_ckpt":$changelog,""" +
-      s"""$tumbling,$replaySrc,$paced50,$paced90,$pacedOver,$gate,$pacedGate,$assign,$sessions,$nearby,""" +
-      s"""$lsh,$lshTtl,$admit,$pacedAdmit,$compaction,$dedupService,""" +
-      s"""$hllLive,$cmLive,$ingestLoop,$blobGate,$audit,$standing,""" +
-      s""""load":{"start":${fmt(load0, 2)},"end":${fmt(load1, 2)},"cpus":$cpus,"steal_s":$stealS},""" +
+      parts.map(_ + ",").mkString +
+      s""""load":{"start":${fmt(load0, 2)},"end":${fmt(load1, 2)},""" +
+      s""""cpus":${spark.sparkContext.defaultParallelism},"steal_s":$stealS},""" +
       s""""sf":"$sfDir"}"""
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length <= 1, "usage: StreamBench [stage,...]")
+    val stages = select(args.headOption)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.local(appName = "stream-bench")
+    val line = run(spark, sfDir, stages)
     val w = new java.io.PrintWriter("stream_bench.json", "UTF-8")
     try w.println(line) finally w.close()
     try spark.stop()
@@ -1017,101 +1171,5 @@ object StreamBench {
       System.err.println(s"[stream_bench] spark.stop failed: ${e.getMessage}")
     }
     println(line)
-  }
-
-  /** The bounded-state sketch stages: their corpus-size-INDEPENDENT
-    * state bounds are the claims a new decade can falsify cheaply.
-    */
-  private def hllLiveStage(spark: SparkSession, sfDir: String,
-      base: String, nSlices: Int): String = {
-    import spark.implicits._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    locally {
-      val docsAll = docs.select(col("doc_id"), col("lang"), col("text"))
-      val nDocs = docsAll.count()
-      sliceOrdered(docsAll, "doc_id", nSlices, s"$base/docs_all")
-      val dstream = spark.readStream.schema(docsAll.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/docs_all")
-      val toks = dstream.select(lit("token").as("domain"), col("lang"),
-        explode(split(col("text"), " ")).as("item"))
-      val shing = dstream
-        .select(col("lang"), split(col("text"), " ").as("w"))
-        .filter(size(col("w")) >= 3)
-        .select(lit("shingle").as("domain"), col("lang"),
-          explode(array_distinct(expr(
-            "transform(sequence(0, size(w)-3), i -> concat_ws(' ', slice(w, i+1, 3)))"
-          ))).as("item"))
-      val items = toks.unionAll(shing)
-        .select(concat_ws("|", col("domain"), col("lang")), col("item"))
-        .as[(String, String)]
-      val t0 = System.nanoTime()
-      val q = streaming.TextStreams.streamingHllBy(spark, items)
-        .toDF("grp", "bucket", "r")
-        .writeStream.format("memory").queryName("hll_live")
-        .outputMode(OutputMode.Update).start()
-      q.processAllAvailable()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val progress = q.recentProgress.toSeq
-      q.stop()
-      val regs = spark.table("hll_live").as[(String, Long, Int)].collect()
-      spark.catalog.dropTempView("hll_live")
-      val est = regs.groupBy(_._1).view.mapValues(rs =>
-        streaming.TextStreams.hllEstimate(rs.map(t => (t._2, t._3)))).toMap
-      val batch = SparkEntry.queries("q134_hll_distinct")(spark, sfDir)
-        .select(concat_ws("|", col("domain"), col("lang")).as("g"),
-          col("n_hll"))
-        .as[(String, Long)].collect().toMap
-      val matches = batch.count { case (g, n) => est.get(g).contains(n) }
-      // in_rows: both stream branches scan the doc replay → 2x docs
-      s""""hll_live":{${progressJson(progress, 2 * nDocs, regs.length.toLong, wall)},""" +
-        s""""groups":${batch.size},"groups_match":$matches,""" +
-        s""""state_rows_bound":${256L * batch.size}}"""
-    }
-  }
-
-  /** See [[hllLiveStage]] — the count-min twin (4×w cells, the
-    * corpus-size-independent bound).
-    */
-  private def cmLiveStage(spark: SparkSession, sfDir: String,
-      base: String, nSlices: Int): String = {
-    import spark.implicits._
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    locally {
-      val w = operators.Text.CountMinWidth
-      val docsAll = docs.select(col("doc_id"), col("text"))
-      val nToks = docsAll.select(explode(split(col("text"), " "))).count()
-      sliceOrdered(docsAll, "doc_id", nSlices, s"$base/docs_cm")
-      val dstream = spark.readStream.schema(docsAll.schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/docs_cm")
-      val terms = dstream
-        .select(explode(split(col("text"), " ")).as("t")).as[String]
-      val t0 = System.nanoTime()
-      val q = streaming.TextStreams.streamingCountMin(spark, terms)
-        .toDF("cell", "csum")
-        .writeStream.format("memory").queryName("cm_live")
-        .outputMode(OutputMode.Update).start()
-      q.processAllAvailable()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val progress = q.recentProgress.toSeq
-      q.stop()
-      // cell sums are monotone, so the max emission per cell is the
-      // final cell value — no snapshot read of the state store needed
-      val cells = spark.table("cm_live").as[(Long, Long)].collect()
-        .groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
-      val batch = SparkEntry.queries("q90_countmin")(spark, sfDir)
-        .select(col("term"), col("est")).as[(String, Long)].collect().toMap
-      val matches = batch.count { case (term, est) =>
-        val live = (0 until 4).map { j =>
-          cells.getOrElse(
-            j.toLong * w + streaming.TextStreams.hash60(s"$term#$j") % w, 0L)
-        }.min
-        live == est
-      }
-      val emissions = spark.table("cm_live").count()
-      spark.catalog.dropTempView("cm_live")
-      s""""countmin_live":{${progressJson(progress, nToks, emissions, wall)},""" +
-        s""""vocab":${batch.size},"terms_match":$matches,""" +
-        s""""state_rows_bound":${4L * w}}"""
-    }
   }
 }

@@ -502,7 +502,7 @@ object Text {
     * the reference-scale 4×2 (round 14, 359bd97: 47.5k-doc
     * corpus, identical output hash); at the corpus-derived (7,5) = 35
     * minhashes the 500k-doc streaming drains gain 37–77%
-    * (tools/GateScaleBench — see [[minHashBankOnce]], which the
+    * (gate_scale_sf10.json — see [[minHashBankOnce]], which the
     * serving paths bind so the bank is evaluated once per row). The
     * bank depth is the banding's total minhash count (every
     * [[Banding]] in the library is [[scaleBands]]-shaped, so it

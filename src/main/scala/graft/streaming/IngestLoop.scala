@@ -191,7 +191,6 @@ object IngestLoop {
       gateBuildS, drainWallS, compactS, batches)
   }
 
-  /** All landed docs across the loop's cycles so far (doc_id, text). */
   /** The landed cycle dirs that actually contain batch partitions — a
     * zero-admit cycle lands no `batch_id=` dirs at all, and reading
     * such a dir would throw "Unable to infer schema".
@@ -211,6 +210,7 @@ object IngestLoop {
     */
   def hasLanded(landRoot: String): Boolean = landedDirs(landRoot).nonEmpty
 
+  /** All landed docs across the loop's cycles so far (doc_id, text). */
   def landedAll(spark: SparkSession, landRoot: String): DataFrame = {
     val dirs = landedDirs(landRoot)
     require(dirs.nonEmpty, s"no landed cycles under $landRoot")

@@ -86,4 +86,63 @@ class EntrySpec extends SparkSpec {
       """"queries":{"q10":-1,"q1":0.13,"q2":1.44},"steal_s":[0.1,-1],""" +
       """"wall_s":[12.3,11.0],"errors":["q10"],"sf":"sf"}""")
   }
+
+  test("StreamBench.select: no argument selects every stage in table order") {
+    assert(StreamBench.select(None) === StreamBench.stageNames)
+    assert(StreamBench.stageNames.take(3) === Seq("sb", "gate", "paced_gate"))
+    assert(StreamBench.stageNames.last === "nearby_pairs")
+  }
+
+  test("StreamBench.select: a subset keeps table order") {
+    assert(StreamBench.select(Some(" admit_drain,lsh_dedup, gate")) ===
+      Seq("gate", "lsh_dedup", "admit_drain"))
+    assert(StreamBench.select(Some("ingest_loop")) === Seq("ingest_loop"))
+  }
+
+  test("StreamBench.select: an unknown stage fails and lists the known ones") {
+    val e = intercept[IllegalArgumentException](
+      StreamBench.select(Some("gate,lsh")))
+    assert(e.getMessage.contains("unknown stages: lsh"))
+    assert(e.getMessage.contains(StreamBench.stageNames.mkString(",")))
+  }
+
+  test("StreamBench.select: a paced stage without its as-fast twin fails up front") {
+    for ((paced, twin) <- Seq("paced_gate" -> "gate", "paced_admit" -> "admit",
+        "paced_50" -> "replay_source", "paced_90" -> "replay_source",
+        "paced_over" -> "replay_source")) {
+      val e = intercept[IllegalArgumentException](
+        StreamBench.select(Some(s"sb,$paced")))
+      assert(e.getMessage.contains(s"$paced needs $twin"))
+      assert(StreamBench.select(Some(s"$paced,$twin")).toSet === Set(paced, twin))
+    }
+  }
+
+  test("StreamBench.pct is nearest-rank: the p50 of 1..12 is the 6th value") {
+    val xs = (12 to 1 by -1).map(_.toDouble)
+    assert(StreamBench.pct(xs, 0.5) === 6.0)
+    assert(StreamBench.pct(xs, 0.95) === 12.0)
+    assert(StreamBench.pct(Seq.empty, 0.5) === -1.0)
+  }
+
+  test("StreamBench.run: gate + ingest_loop line parses; the loop lands every q123 keeper") {
+    val rocks = GraftSession.rocksDbStateConf(changelog = true).map(_._1)
+    val before = rocks.map(k => k -> spark.conf.getOption(k))
+    val line = StreamBench.run(spark, sfDir, Seq("gate", "ingest_loop"),
+      tempDir("streambench").getPath)
+    assert(rocks.map(k => k -> spark.conf.getOption(k)) === before)
+    val json = new ObjectMapper().readTree(line)
+    assert(json.get("metric").asText === "stream_bench")
+    val gate = json.get("gate")
+    assert(gate.get("in_rows").asLong > 0)
+    assert(gate.get("out_rows").asLong <= gate.get("in_rows").asLong)
+    val loop = json.get("ingest_loop")
+    assert(loop.get("missed_q123").asLong === 0L, line)
+    val cycles = loop.get("cycles").elements().asScala.toSeq
+    assert(cycles.size === 3)
+    for (c <- cycles) {
+      assert(c.get("admitted").asLong === c.get("landed").asLong, line)
+      assert(c.get("landed").asLong === c.get("folded").asLong, line)
+    }
+    assert(loop.get("landed_total").asLong === cycles.map(_.get("landed").asLong).sum)
+  }
 }

@@ -19,6 +19,14 @@ only the active horizon; 'tracks input' = state accretes with the
 corpus and nothing evicts — a dedup-history store, which production
 bounds via TTL/compaction as the operator docs specify.
 
+A full `graft.StreamBench` run carries every stage; a stage selection
+(`runMain graft.StreamBench gate,lsh_dedup,admit_drain`, the scale
+rehearsals) carries only its stages and joins as an extra SF column of
+those sections. The committed gate_scale_sf*.json predate the
+selections: the since-deleted GateScaleBench main (44c9eb5) wrote them,
+with a plain-drain lsh_dedup row (no kill-and-restore, so no restore s)
+and an upper-median batch p50.
+
 Usage: stream_scaling.py out.md sf1:stream_bench_1.json sf2:...
 """
 import json
@@ -50,9 +58,8 @@ def main():
     richest = max((r[1] for r in runs),
                   key=lambda d: len(stage_keys(d, "rows_per_sec")))
     stages = stage_keys(richest, "rows_per_sec")
-    # stages only a partial artifact carries (e.g. the sf10 rehearsal's
-    # admit_drain) still get their section — appended after the full
-    # sweep's ordering, never silently dropped
+    # stages only a partial artifact carries still get their section —
+    # appended after the full sweep's ordering, never silently dropped
     for _, d in runs:
         for k in stage_keys(d, "rows_per_sec"):
             if k not in stages:
@@ -80,6 +87,14 @@ def main():
         "cost is the delta OVER that floor as rows grow, which at these",
         "SFs is noise. The meaningful columns at bench scale are state",
         "ROWS and the eviction counters.",
+        "",
+        "A stage-selection artifact (the sf10 scale rehearsal) adds a",
+        "column only to its own stages. The committed gate_scale_sf10",
+        "row came from the since-deleted GateScaleBench main (44c9eb5):",
+        "its lsh_dedup is a plain as-fast drain, not StreamBench's",
+        "kill-and-restore run, so it has no restore s and is not the",
+        "same measurement as the rows above it; its batch p50 is the",
+        "upper median, not StreamBench's nearest-rank p50.",
         "",
     ]
     for st in stages:
