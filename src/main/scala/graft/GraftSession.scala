@@ -53,6 +53,20 @@ object GraftSession {
       // pass CPU 9.9 → 5.6 s, for +5 MB of retained classes. 1024 is ~6×
       // that working set; CodegenCacheSpec pins the zero recompiles.
       .config("spark.sql.codegen.cache.maxEntries", "1024")
+      // Per-session artifact class loaders off (read once, at session
+      // creation). That cache is keyed on the compiling thread's class
+      // loader, and with isolation on the executor gives every session
+      // UUID its own loader (`Executor.isolatedSessionCache`); each
+      // streaming query runs on a cloned session
+      // (`StreamExecution.sparkSessionForStream`), so every new stream
+      // query missed the cache on byte-identical code and its tasks
+      // re-ran Janino and re-warmed the JIT. The isolation only scopes
+      // session artifacts (`addArtifact`/`addJar`/`addFile`), and the
+      // engine adds none. Measured on 4 vCPUs (perfbench stream-drain,
+      // medians of 11 run pairs): compiles per timed pass 79 → 0, pass
+      // CPU 18.0 → 14.1 s, 5 MB less heap. CodegenCacheSpec pins the
+      // zero recompiles of a restarted stream stage.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // rehearsal-only overrides (semicolon-separated k=v). Scale
       // rehearsals shrink DATA by 10-1000× but Spark's skew/advisory
       // byte thresholds don't shrink with it — a 100 TB cluster's

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQueryProgress, TTLConfig, Trigger}
@@ -1124,8 +1125,10 @@ object StreamBench {
   }
 
   /** Run `stages` (names from [[select]]) against the lake at `sfDir`,
-    * staging replay inputs under `base`, and return the JSON line. The
-    * session's state-store confs are restored afterwards.
+    * staging replay inputs under `base`, and return the JSON line. Each
+    * stage's object ends with `compiles`, the generated classes compiled
+    * while it ran, so a stage that recompiles cached code shows in the
+    * artifact. The session's state-store confs are restored afterwards.
     */
   private[graft] def run(spark: SparkSession, sfDir: String,
       stages: Seq[String], base: String = "/tmp/graft_streambench"): String = {
@@ -1140,7 +1143,10 @@ object StreamBench {
     val parts = try stages.map { name =>
       if (stageNames.indexOf(name) >= rocksDbFrom)
         GraftSession.useRocksDbState(spark, changelog)
-      s""""$name":{${stage(name)(c)}}"""
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val body = stage(name)(c)
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      s""""$name":{$body,"compiles":$compiles}"""
     } finally {
       spark.streams.removeListener(c.recorder)
       prev.foreach {

@@ -21,10 +21,6 @@ object Sinks {
       .partitionBy("year")
       .parquet(path)
 
-  /** Plain parquet append sink (used by streaming foreachBatch too). */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path)
-
   /** Idempotent partition backfill: overwrite ONLY the partitions
     * present in `df`, leaving every other partition's files untouched —
     * `partitionOverwriteMode=dynamic` scoped to this write via the

@@ -136,6 +136,8 @@ class EntrySpec extends SparkSpec {
     assert(gate.get("in_rows").asLong > 0)
     assert(gate.get("out_rows").asLong <= gate.get("in_rows").asLong)
     val loop = json.get("ingest_loop")
+    for (st <- Seq(gate, loop))
+      assert(st.get("compiles").isIntegralNumber && st.get("compiles").asLong >= 0L, line)
     assert(loop.get("missed_q123").asLong === 0L, line)
     val cycles = loop.get("cycles").elements().asScala.toSeq
     assert(cycles.size === 3)
