@@ -38,14 +38,16 @@ object Bench {
     val nOk: Int = names.count(warm(_) >= 0)
   }
 
-  private def fmt(v: Double, dp: Int): String =
-    if (v < 0) "-1" else BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toString
+  /** A measurement, or `-1` where it failed: a query that threw, a host
+    * counter that is not exposed. */
+  private def measured(v: Double, dp: Int): String =
+    if (v < 0) "-1" else Json.decimal(v, dp)
 
   // Short keys (the qNN prefix) keep the stdout line inside its window.
   private def shortKey(n: String): String = n.takeWhile(_ != '_')
 
   private def qmap(names: Seq[String], m: String => Double, dp: Int): String =
-    names.map(n => "\"" + shortKey(n) + "\":" + fmt(m(n), dp))
+    names.map(n => "\"" + shortKey(n) + "\":" + measured(m(n), dp))
       .mkString("{", ",", "}")
 
   private def errors(r: Run): String =
@@ -56,7 +58,7 @@ object Bench {
   // be incomparable across runs — report null so nobody compares them;
   // n_ok says how much of the set the run covered either way.
   private def totalOf(vs: Seq[Double]): String =
-    if (vs.forall(_ >= 0)) fmt(vs.sum, 3) else "null"
+    if (vs.forall(_ >= 0)) measured(vs.sum, 3) else "null"
 
   /** The stdout line the driver parses. The driver keeps only the last
     * 2000 chars of stdout before parsing. Round 15's line measured 2014
@@ -75,7 +77,7 @@ object Bench {
     val total = totalOf(r.names.map(r.warm))
     def mkLine(extras: String): String =
       s"""{"metric":"total","value":$total,"unit":"sec","n_ok":${r.nOk},"queries":${qmap(r.names, r.warm, 2)}$extras,"sf":"${r.sf}"}"""
-    val telemetry = s""","steal_s":[${fmt(r.stealS._1, 1)},${fmt(r.stealS._2, 1)}],"wall_s":[${fmt(r.wallS._1, 1)},${fmt(r.wallS._2, 1)}],"errors":${errors(r)}"""
+    val telemetry = s""","steal_s":[${measured(r.stealS._1, 1)},${measured(r.stealS._2, 1)}],"wall_s":[${measured(r.wallS._1, 1)},${measured(r.wallS._2, 1)}],"errors":${errors(r)}"""
     Seq(mkLine(telemetry), mkLine(s""","n_err":${r.names.size - r.nOk}"""), mkLine(""))
       .find(_.length <= 1900).getOrElse(mkLine(""))
   }
@@ -152,13 +154,13 @@ object Bench {
       (stealDelta(steal0, steal1), stealDelta(steal1, steal2)),
       ((wall1 - wall0) / 1e9, (wall2 - wall1) / 1e9))
     val line = stdoutLine(run)
-    val loadJson = s"""{"start":${fmt(load0, 2)},"mid":${fmt(load1, 2)},"end":${fmt(load2, 2)},"cpus":$cpus,"steal_s":{"pass1":${fmt(run.stealS._1, 1)},"pass2":${fmt(run.stealS._2, 1)}}}"""
-    val wallJson = s"""{"pass1":${fmt(run.wallS._1, 1)},"pass2":${fmt(run.wallS._2, 1)}}"""
+    val loadJson = s"""{"start":${measured(load0, 2)},"mid":${measured(load1, 2)},"end":${measured(load2, 2)},"cpus":$cpus,"steal_s":{"pass1":${measured(run.stealS._1, 1)},"pass2":${measured(run.stealS._2, 1)}}}"""
+    val wallJson = s"""{"pass1":${measured(run.wallS._1, 1)},"pass2":${measured(run.wallS._2, 1)}}"""
     // Full detail (3-dp warm AND cold per query, plus per-stage landed-
     // table build seconds) goes to a file: the stdout line must stay
     // inside the driver's 2000-char tail window.
     val mat = graft.operators.Materialize.buildSeconds.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }
+      .map { case (k, v) => "\"" + k + "\":" + measured(v, 3) }
       .mkString("{", ",", "}")
     // stages reused from a previous process (fingerprint-matched landed
     // tables): when non-empty, this run's "cold" pass measured a warm

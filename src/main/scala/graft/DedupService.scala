@@ -16,7 +16,8 @@ import graft.streaming.{IndexCompaction, IngestLoop}
   * compaction, and prints one JSON telemetry line per cycle (the same
   * fields StreamBench's `ingest_loop` stage artifacts). Every 4th
   * cycle it also runs the MAJOR merge (the epoch-fold cadence
-  * GateRebuildBench prices). An empty interval is a no-op cycle.
+  * StreamBench's `gate_rebuild` stage prices). An empty interval is a
+  * no-op cycle.
   *
   * Stop by touching `<serviceRoot>/STOP` (or let `--max-cycles` end a
   * bounded run, the smoke/bench mode). State layout under
@@ -96,6 +97,21 @@ object DedupService {
   private def jstr(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
+  /** The telemetry line of a finished cycle over `files` arrived files;
+    * `mergeS` is -1 when the cycle ran no MAJOR merge.
+    */
+  private[graft] def cycleLine(st: IngestLoop.CycleStats, files: Int,
+      mergeS: Double, indexDocs: Long, drift: Boolean): String =
+    s"""{"service":"dedup","cycle":${st.cycle},"files":$files,""" +
+      s""""arrivals":${st.arrivals},"gate_admitted":${st.gateAdmitted},""" +
+      s""""admitted":${st.admitted},"landed":${st.landed},""" +
+      s""""folded":${st.folded},"epochs":${st.epochsAfter},""" +
+      s""""gate_build_s":${Json.decimal(st.gateBuildS, 2)},""" +
+      s""""drain_s":${Json.decimal(st.drainWallS, 2)},""" +
+      s""""compact_s":${Json.decimal(st.compactS, 2)},""" +
+      s""""merge_s":${if (mergeS < 0) "-1" else Json.decimal(mergeS, 2)},""" +
+      s""""index_docs":$indexDocs,"reband_drift":$drift}"""
+
   private[graft] def claimByManifest(fresh: Seq[java.io.File],
       workDir: java.io.File): Unit = {
     val manifest = fresh.map { f =>
@@ -152,7 +168,8 @@ object DedupService {
 
     val spark = GraftSession.local(appName = "dedup-service")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.useRocksDbState(spark, changelog = false)
+    GraftSession.rocksDbStateConf(changelog = false)
+      .foreach { case (k, v) => spark.conf.set(k, v) }
 
     // pid file for operators (stop scripts, the kill-resume smoke):
     // the forked JVM's cmdline hides the main class behind an @argfile,
@@ -274,17 +291,7 @@ object DedupService {
             IndexCompaction.merge(spark, idxRoot)
             (System.nanoTime() - tM) / 1e9
           } else -1.0
-        println(
-          s"""{"service":"dedup","cycle":$cycle,"files":${fresh.length},""" +
-          s""""arrivals":${st.arrivals},"gate_admitted":${st.gateAdmitted},""" +
-          s""""admitted":${st.admitted},"landed":${st.landed},""" +
-          s""""folded":${st.folded},"epochs":${st.epochsAfter},""" +
-          f""""gate_build_s":${st.gateBuildS}%.2f,""" +
-          f""""drain_s":${st.drainWallS}%.2f,""" +
-          f""""compact_s":${st.compactS}%.2f,""" +
-          (if (mergeS < 0) """"merge_s":-1,"""
-           else f""""merge_s":$mergeS%.2f,""") +
-          s""""index_docs":$indexDocs,"reband_drift":$drift}""")
+        println(cycleLine(st, fresh.length, mergeS, indexDocs, drift))
         // BETWEEN cycles (the single-writer maintenance window): the
         // drift signal just fired and no gate is under construction —
         // rebuild the index from the full lake under the corpus-derived
@@ -305,7 +312,7 @@ object DedupService {
             val bd = IndexCompaction.reband(spark, idxRoot, lake)
             println(s"""{"service":"dedup","cycle":$cycle,""" +
               s""""rebanded":"$bd","lake_docs":$indexDocs,""" +
-              f""""reband_s":${(System.nanoTime() - tR) / 1e9}%.2f}""")
+              s""""reband_s":${Json.decimal((System.nanoTime() - tR) / 1e9, 2)}}""")
           } catch {
             case e: IllegalStateException =>
               println(s"""{"service":"dedup","cycle":$cycle,""" +

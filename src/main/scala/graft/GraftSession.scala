@@ -102,9 +102,18 @@ object GraftSession {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
       changelog.toString)
 
-  /** Sets [[rocksDbStateConf]] on `spark`'s session conf. */
-  def useRocksDbState(spark: SparkSession, changelog: Boolean): Unit =
-    rocksDbStateConf(changelog).foreach { case (k, v) => spark.conf.set(k, v) }
+  /** Runs `body` with `pairs` set on `spark`'s session conf, then puts
+    * each key back: its old value, or unset if it had none.
+    */
+  def withConf[A](spark: SparkSession, pairs: Seq[(String, String)])(body: => A): A = {
+    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** `SPARK_GRAFT_CHANGELOG_CKPT` (default 1): whether the streaming benches
     * run changelog checkpointing.

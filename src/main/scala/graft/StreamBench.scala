@@ -41,10 +41,6 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, StreamingQuer
   */
 object StreamBench {
 
-  private def fmt(v: Double, dp: Int = 1): String =
-    if (v.isNaN || v.isInfinite) "-1"
-    else BigDecimal(v).setScale(dp, BigDecimal.RoundingMode.HALF_UP).toString
-
   /** Nearest-rank percentile over an unsorted sample. */
   private[graft] def pct(xs: Seq[Double], p: Double): Double =
     if (xs.isEmpty) -1.0
@@ -108,12 +104,12 @@ object StreamBench {
           s""""ttl_expired":$ttlExpired,""" +
           s""""dropped_by_watermark":$dropped}"""
       }
-    s""""rows_per_sec":${fmt(inRows / wallSec)},"in_rows":$inRows,""" +
-      s""""out_rows":$outRows,"wall_sec":${fmt(wallSec, 2)},""" +
+    s""""rows_per_sec":${Json.decimal(inRows / wallSec, 1)},"in_rows":$inRows,""" +
+      s""""out_rows":$outRows,"wall_sec":${Json.decimal(wallSec, 2)},""" +
       s""""batches":${data.size},""" +
-      s""""batch_sec":{"p50":${fmt(pct(secs, 0.5), 2)},""" +
-      s""""p95":${fmt(pct(secs, 0.95), 2)},""" +
-      s""""max":${fmt(if (secs.isEmpty) -1.0 else secs.max, 2)}}""" + state
+      s""""batch_sec":{"p50":${Json.decimal(pct(secs, 0.5), 2)},""" +
+      s""""p95":${Json.decimal(pct(secs, 0.95), 2)},""" +
+      s""""max":${Json.decimal(if (secs.isEmpty) -1.0 else secs.max, 2)}}""" + state
   }
 
   /** Cumulative per-run progress recorder. `recentProgress` is a
@@ -353,7 +349,7 @@ object StreamBench {
       offeredRps: Double): String = {
     val (_, progress, wall) =
       toMemory(c, name, df, mode, Some(Paced(intervalMs, inRows)))(_ => ())
-    s""""offered_rps":${fmt(offeredRps)},""" +
+    s""""offered_rps":${Json.decimal(offeredRps, 1)},""" +
       pacedStats(progress, intervalMs, expected, wall)
   }
 
@@ -389,7 +385,7 @@ object StreamBench {
       // an empty input admits no data batch: there is no latency to report
       return s""""interval_ms":$intervalMs,"batches":0,""" +
         s""""expected_batches":$expected,"warmup_batch_ms":0,""" +
-        s""""wall_sec":${fmt(wall, 2)},""" +
+        s""""wall_sec":${Json.decimal(wall, 2)},""" +
         s""""e2e_ms":{"p50":-1,"p95":-1,"max":-1},""" +
         s""""drift_growth_ms":-1,"kept_up":false"""
     val warmupMs = Option(all.head.durationMs.get("triggerExecution"))
@@ -414,11 +410,11 @@ object StreamBench {
       driftGrowth < 2.0 * intervalMs
     s""""interval_ms":$intervalMs,"batches":${all.size},""" +
       s""""expected_batches":$expected,""" +
-      s""""warmup_batch_ms":$warmupMs,"wall_sec":${fmt(wall, 2)},""" +
-      s""""e2e_ms":{"p50":${fmt(pct(lats, 0.5))},""" +
-      s""""p95":${fmt(pct(lats, 0.95))},""" +
-      s""""max":${fmt(lats.max)}},""" +
-      s""""drift_growth_ms":${fmt(driftGrowth)},"kept_up":$keptUp"""
+      s""""warmup_batch_ms":$warmupMs,"wall_sec":${Json.decimal(wall, 2)},""" +
+      s""""e2e_ms":{"p50":${Json.decimal(pct(lats, 0.5), 1)},""" +
+      s""""p95":${Json.decimal(pct(lats, 0.95), 1)},""" +
+      s""""max":${Json.decimal(lats.max, 1)}},""" +
+      s""""drift_growth_ms":${Json.decimal(driftGrowth, 1)},"kept_up":$keptUp"""
   }
 
   /** Rows a file sink landed under `dir`: 0 when it holds no parquet
@@ -468,7 +464,7 @@ object StreamBench {
     val p2 = c.recorder.of(q2)
     s"""${progressJson(p1 ++ p2, inRows, sinkRows(c.spark, out), firstWall + restoreS)},""" +
       s""""batches_before_kill":${dataBatches(p1)},""" +
-      s""""restore_s":${fmt(restoreS, 2)}"""
+      s""""restore_s":${Json.decimal(restoreS, 2)}"""
   }
 
   /** Final ownership state rows of a finished run. */
@@ -672,10 +668,10 @@ object StreamBench {
     val mergeS = (System.nanoTime() - tM) / 1e9
     val segsAfter = IndexCompaction.epochs(idxRoot).size
     s""""phase1_state_rows":$rowsBefore,""" +
-      s""""compact_s":${fmt(compactS, 2)},""" +
+      s""""compact_s":${Json.decimal(compactS, 2)},""" +
       s""""phase2_state_rows":$rowsAfter,""" +
       s""""gate_dropped_after":${n2 - admitted},""" +
-      s""""merge_s":${fmt(mergeS, 2)},""" +
+      s""""merge_s":${Json.decimal(mergeS, 2)},""" +
       s""""segments":{"before":$segsBefore,"after":$segsAfter},""" +
       s""""gate_after":{${progressJson(gProg, n2, admitted, gWall)}}"""
   }
@@ -768,16 +764,73 @@ object StreamBench {
       val epochsAfter = IndexCompaction.epochs(idxRoot).size
       s"""{"cycle":$cyc,"arrivals":$nPh,"gate_admitted":$admitted,""" +
         s""""gate_dropped":${nPh - admitted},""" +
-        s""""gate_build_s":${fmt(gateBuildS, 2)},""" +
+        s""""gate_build_s":${Json.decimal(gateBuildS, 2)},""" +
         s""""state_rows_max":$rowsMax,"state_rows_settled":$rowsLast,""" +
-        s""""compact_s":${fmt(compactS, 2)},""" +
-        s""""merge_s":${if (mergeS < 0) "-1" else fmt(mergeS, 2)},""" +
+        s""""compact_s":${Json.decimal(compactS, 2)},""" +
+        s""""merge_s":${if (mergeS < 0) "-1" else Json.decimal(mergeS, 2)},""" +
         s""""epochs_after":$epochsAfter}"""
     } finally {
       collQ.stop()
       spark.catalog.dropTempView("svc_coll")
     }
     s""""ttl_ms":$TtlMs,"cycles":[${cycleJsons.mkString(",")}]"""
+  }
+
+  // stage 5a'''b: the gate REBUILD priced against index segmentation
+  // — the input to the MAJOR-merge cadence dedup_service runs. Every
+  // interval and every restart pays IndexCompaction.gate's eager
+  // static side (union-read every epoch's bands/hashes, checkpoint
+  // both); minor compactions keep it O(corpus read) but grow the
+  // segment count. The SAME corpus is spread over 1/4/16/64 delta
+  // epochs by doc_id range and `build_s` timed at each; at the widest
+  // point `merge_s` is the MAJOR merge back to one segment and
+  // `build_after_merge_s` the rebuild it buys. The merge pays for
+  // itself once the per-interval rebuild delta beats its amortized
+  // cost. A throwaway index is built and read first, so the first
+  // point does not absorb codegen and parquet-reader start-up.
+  private def gateRebuild(c: Ctx): String = {
+    import streaming.IndexCompaction
+    val spark = c.spark
+    val docs = c.docs.select(col("doc_id"), col("text")).localCheckpoint(true)
+    val n = docs.count()
+    val b2 = s"${c.base}/gate_rebuild"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(b2))
+    def buildSecs(root: String): Double = {
+      val t0 = System.nanoTime()
+      IndexCompaction.bands(spark, root).localCheckpoint(true).count(): Unit
+      IndexCompaction.hashes(spark, root).localCheckpoint(true).count(): Unit
+      (System.nanoTime() - t0) / 1e9
+    }
+    IndexCompaction.init(spark, s"$b2/warmup", docs)
+    buildSecs(s"$b2/warmup"): Unit
+    val widths = Seq(1, 4, 16, 64)
+    val points = widths.map { e =>
+      val root = s"$b2/idx_$e"
+      val bounds = docs.stat.approxQuantile("doc_id",
+        (1 to e).map(_.toDouble / e).toArray, 0.001)
+      var lo = Long.MinValue
+      bounds.foreach { b =>
+        val hi = b.toLong
+        val slice = docs.filter(col("doc_id") > lo && col("doc_id") <= hi)
+        // epoch 0 derives its banding from its own slice (Auto), as the
+        // committed gate_rebuild artifacts were measured
+        if (IndexCompaction.epochs(root).isEmpty)
+          IndexCompaction.init(spark, root, slice)
+        else IndexCompaction.compact(spark, root, slice): Unit
+        lo = hi
+      }
+      (IndexCompaction.epochs(root).size, buildSecs(root))
+    }
+    val widest = s"$b2/idx_${widths.last}"
+    val tM = System.nanoTime()
+    IndexCompaction.merge(spark, widest): Unit
+    val mergeS = (System.nanoTime() - tM) / 1e9
+    val afterS = buildSecs(widest)
+    s""""docs":$n,"points":[${points.map { case (e, secs) =>
+        s"""{"epochs":$e,"build_s":${Json.decimal(secs, 2)}}"""
+      }.mkString(",")}],""" +
+      s""""merge_s":${Json.decimal(mergeS, 2)},""" +
+      s""""build_after_merge_s":${Json.decimal(afterS, 2)}"""
   }
 
   // stage 5a'''''': the live per-(domain, lang) HLL dataset card —
@@ -900,9 +953,9 @@ object StreamBench {
         s""""gate_admitted":${st.gateAdmitted},""" +
         s""""admitted":${st.admitted},"landed":${st.landed},""" +
         s""""folded":${st.folded},"epochs_after":${st.epochsAfter},""" +
-        s""""gate_build_s":${fmt(st.gateBuildS, 2)},""" +
-        s""""drain_s":${fmt(st.drainWallS, 2)},""" +
-        s""""compact_s":${fmt(st.compactS, 2)},""" +
+        s""""gate_build_s":${Json.decimal(st.gateBuildS, 2)},""" +
+        s""""drain_s":${Json.decimal(st.drainWallS, 2)},""" +
+        s""""compact_s":${Json.decimal(st.compactS, 2)},""" +
         s""""batches":${st.batches}}"""
     }
     val landedIds = IngestLoop.landedAll(spark, landRoot)
@@ -933,6 +986,49 @@ object StreamBench {
       s""""landed_total":${landedIds.size},"q123_keep":${keep.size},""" +
       s""""extra_admitted":${extras.size},"missed_q123":${missed.size},""" +
       s""""extras_bridge_only":$bridgeOnly"""
+  }
+
+  // stage 5a'''''''b: the ingest loop's files-per-trigger knob on ONE
+  // fixed arrival set — every document, sliced into 12 files — drained
+  // under filesPerTrigger 1, 3 and 12 (12, 4 and 1 micro-batches), each
+  // from its own EMPTY index. `drain_s`/`batches` price the knob: the
+  // drain pays a near-constant cost per micro-batch, so fpt=12
+  // approaches the pure data cost. The landed doc_id set must be
+  // IDENTICAL at every setting (trigger-size invariance, the
+  // IngestLoopSpec pin, rerun at bench scale); the stage fails
+  // otherwise.
+  private def ingestKnob(c: Ctx): String = {
+    import streaming.{IndexCompaction, IngestLoop}
+    val spark = c.spark
+    import spark.implicits._
+    val b2 = s"${c.base}/ingest_knob"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(b2))
+    val docsAll = c.docs.select(col("doc_id"), col("text"))
+    val n = docsAll.count()
+    val files = 12
+    sliceOrdered(docsAll, "doc_id", files, s"$b2/in")
+    val runs = Seq(1, 3, files).map { fpt =>
+      val idxRoot = s"$b2/index_$fpt"; val landRoot = s"$b2/landed_$fpt"
+      // Auto banding over an empty corpus: the reference 4x2, not
+      // lakeBanding — the construction the committed knob artifacts used
+      IndexCompaction.init(spark, idxRoot, docsAll.filter(lit(false)))
+      val st = IngestLoop.runCycle(spark, idxRoot, landRoot, 0, s"$b2/in",
+        docsAll.schema, n, filesPerTrigger = fpt)
+      val landed = IngestLoop.landedAll(spark, landRoot)
+        .select(col("doc_id")).as[Long].collect().toSet
+      (fpt, st, landed)
+    }
+    val ref = runs.head._3
+    for ((fpt, _, landed) <- runs) require(landed == ref,
+      s"fpt=$fpt landed a DIFFERENT set (${landed.size} vs ${ref.size}): " +
+        "trigger-size invariance violated")
+    s""""arrivals":$n,"files":$files,"landed_set_identical":true,""" +
+      s""""runs":[${runs.map { case (fpt, st, _) =>
+        s"""{"files_per_trigger":$fpt,"batches":${st.batches},""" +
+          s""""drain_s":${Json.decimal(st.drainWallS, 2)},""" +
+          s""""s_per_batch":${Json.decimal(st.drainWallS / math.max(1, st.batches), 2)},""" +
+          s""""landed":${st.landed}}"""
+      }.mkString(",")}]"""
   }
 
   // stage 5b: the DSv2 paced replay source itself, over a multi-file
@@ -1076,8 +1172,9 @@ object StreamBench {
     "lsh_dedup" -> lshDedup _, "lsh_dedup_ttl" -> lshDedupTtl _,
     "admit" -> admit _, "paced_admit" -> pacedAdmit _,
     "admit_drain" -> admitDrain _, "lsh_compaction" -> lshCompaction _,
-    "dedup_service" -> dedupService _, "hll_live" -> hllLive _,
-    "countmin_live" -> countMinLive _, "ingest_loop" -> ingestLoop _,
+    "dedup_service" -> dedupService _, "gate_rebuild" -> gateRebuild _,
+    "hll_live" -> hllLive _, "countmin_live" -> countMinLive _,
+    "ingest_loop" -> ingestLoop _, "ingest_knob" -> ingestKnob _,
     "replay_source" -> replaySource _, "paced_50" -> pacedAt("50", 0.5) _,
     "paced_90" -> pacedAt("90", 0.9) _, "paced_over" -> pacedOver _,
     "blob_ingest" -> blobIngest _, "span_audit" -> spanAudit _,
@@ -1135,31 +1232,26 @@ object StreamBench {
     val nSlices = sys.env.getOrElse("SPARK_GRAFT_STREAM_SLICES", "12").toInt
     val c = new Ctx(spark, sfDir, nSlices, base)
     val changelog = GraftSession.changelogFromEnv
-    val prev = GraftSession.rocksDbStateConf(changelog)
-      .map { case (k, _) => k -> spark.conf.getOption(k) }
     val load0 = HostLoad.loadavg(); val steal0 = HostLoad.stealSec()
     val stage = table.toMap
-    spark.streams.addListener(c.recorder)
-    val parts = try stages.map { name =>
-      if (stageNames.indexOf(name) >= rocksDbFrom)
-        GraftSession.useRocksDbState(spark, changelog)
+    def runStage(name: String): String = {
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val body = stage(name)(c)
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       s""""$name":{$body,"compiles":$compiles}"""
-    } finally {
-      spark.streams.removeListener(c.recorder)
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
+    val (before, onRocksDb) = stages.span(stageNames.indexOf(_) < rocksDbFrom)
+    spark.streams.addListener(c.recorder)
+    val parts = try before.map(runStage) ++
+      GraftSession.withConf(spark, GraftSession.rocksDbStateConf(changelog))(
+        onRocksDb.map(runStage))
+    finally spark.streams.removeListener(c.recorder)
     val load1 = HostLoad.loadavg(); val steal1 = HostLoad.stealSec()
-    val stealS = if (steal0 < 0 || steal1 < 0) "-1" else fmt(steal1 - steal0)
+    val stealS = if (steal0 < 0 || steal1 < 0) "-1" else Json.decimal(steal1 - steal0, 1)
     s"""{"metric":"stream_bench","unit":"rows/sec",""" +
       s""""slices":$nSlices,"changelog_ckpt":$changelog,""" +
       parts.map(_ + ",").mkString +
-      s""""load":{"start":${fmt(load0, 2)},"end":${fmt(load1, 2)},""" +
+      s""""load":{"start":${Json.decimal(load0, 2)},"end":${Json.decimal(load1, 2)},""" +
       s""""cpus":${spark.sparkContext.defaultParallelism},"steal_s":$stealS},""" +
       s""""sf":"$sfDir"}"""
   }

@@ -286,8 +286,8 @@ object GenCorpus {
     val t0 = System.nanoTime()
     if (docsOnly) generateDocsEmb(spark, outDir, sf, seed, skew)
     else generate(spark, outDir, sf, seed, skew)
-    println(f"""{"gen":"corpus","sf":$sf,"seed":$seed,"skew":$skew,""" +
-      f""""out":"$outDir","wall_s":${(System.nanoTime() - t0) / 1e9}%.1f}""")
+    println(s"""{"gen":"corpus","sf":$sf,"seed":$seed,"skew":$skew,""" +
+      s""""out":"$outDir","wall_s":${graft.Json.decimal((System.nanoTime() - t0) / 1e9, 1)}}""")
     spark.stop()
   }
 }

@@ -97,6 +97,8 @@ class EntrySpec extends SparkSpec {
     assert(StreamBench.select(Some(" admit_drain,lsh_dedup, gate")) ===
       Seq("gate", "lsh_dedup", "admit_drain"))
     assert(StreamBench.select(Some("ingest_loop")) === Seq("ingest_loop"))
+    assert(StreamBench.select(Some("ingest_knob,hll_live,gate_rebuild,ingest_loop,dedup_service")) ===
+      Seq("dedup_service", "gate_rebuild", "hll_live", "ingest_loop", "ingest_knob"))
   }
 
   test("StreamBench.select: an unknown stage fails and lists the known ones") {
@@ -127,7 +129,7 @@ class EntrySpec extends SparkSpec {
   test("StreamBench.run: gate + ingest_loop line parses; the loop lands every q123 keeper") {
     val rocks = GraftSession.rocksDbStateConf(changelog = true).map(_._1)
     val before = rocks.map(k => k -> spark.conf.getOption(k))
-    val line = StreamBench.run(spark, sfDir, Seq("gate", "ingest_loop"),
+    val line = StreamBench.run(spark, sfDir, Seq("gate", "ingest_loop", "ingest_knob"),
       tempDir("streambench").getPath)
     assert(rocks.map(k => k -> spark.conf.getOption(k)) === before)
     val json = new ObjectMapper().readTree(line)
@@ -146,5 +148,32 @@ class EntrySpec extends SparkSpec {
       assert(c.get("landed").asLong === c.get("folded").asLong, line)
     }
     assert(loop.get("landed_total").asLong === cycles.map(_.get("landed").asLong).sum)
+    // ingest_knob: one arrival set under filesPerTrigger 1/3/12 lands the same docs
+    val knob = json.get("ingest_knob")
+    assert(knob.get("arrivals").asLong === 500L, line)
+    assert(knob.get("landed_set_identical").asBoolean, line)
+    val runs = knob.get("runs").elements().asScala.toSeq
+    assert(runs.map(_.get("files_per_trigger").asInt) === Seq(1, 3, 12), line)
+    assert(runs.map(_.get("batches").asLong) === Seq(12L, 4L, 1L), line)
+    assert(runs.map(_.get("landed").asLong).distinct.size === 1, line)
+    assert(runs.head.get("landed").asLong > 0L, line)
+  }
+
+  test("Json.decimal ignores the default locale: DedupService's line stays JSON under de-DE") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      assert(Json.decimal(1.234, 2) === "1.23")
+      assert(Json.decimal(-0.05, 1) === "-0.1")
+      assert(Json.decimal(Double.NaN, 2) === "-1")
+      val st = streaming.IngestLoop.CycleStats(3, 10L, 9L, 8L, 8L, 8L, 2,
+        1.234, 5.678, 0.5)
+      val json = new ObjectMapper().readTree(
+        DedupService.cycleLine(st, 4, 2.345, 108L, drift = false))
+      assert(json.get("gate_build_s").asDouble === 1.23)
+      assert(json.get("drain_s").asDouble === 5.68)
+      assert(json.get("merge_s").asDouble === 2.35)
+      assert(json.get("cycle").asInt === 3)
+    } finally java.util.Locale.setDefault(saved)
   }
 }

@@ -44,7 +44,7 @@ trait SparkSpec extends AnyFunSuite {
     * the checksum workaround — see SessionTimersSpec) to one test body.
     */
   def withRocksDb[A](body: => A): A =
-    withConf(GraftSession.rocksDbStateConf(changelog = false))(body)
+    GraftSession.withConf(spark, GraftSession.rocksDbStateConf(changelog = false))(body)
 
   /** [[withRocksDb]] plus changelog checkpointing — the production (and
     * StreamBench) setting: commits upload per-batch changelogs, restore
@@ -53,17 +53,7 @@ trait SparkSpec extends AnyFunSuite {
     * measures.
     */
   def withChangelogRocksDb[A](body: => A): A =
-    withConf(GraftSession.rocksDbStateConf(changelog = true))(body)
-
-  private def withConf[A](keys: Seq[(String, String)])(body: => A): A = {
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(p)) => spark.conf.set(k, p)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+    GraftSession.withConf(spark, GraftSession.rocksDbStateConf(changelog = true))(body)
 
   def fixturePath: String =
     getClass.getResource("/user_activity_fixture.json").getPath

@@ -25,7 +25,10 @@ rehearsals) carries only its stages and joins as an extra SF column of
 those sections. The committed gate_scale_sf*.json predate the
 selections: the since-deleted GateScaleBench main (44c9eb5) wrote them,
 with a plain-drain lsh_dedup row (no kill-and-restore, so no restore s)
-and an upper-median batch p50.
+and an upper-median batch p50. The committed gate_rebuild.json and
+ingest_knob_sf*.json came from the since-deleted GateRebuildBench and
+IngestKnobBench mains (d240e5a); the gate_rebuild and ingest_knob stage
+objects carry the same fields.
 
 Usage: stream_scaling.py out.md sf1:stream_bench_1.json sf2:...
 """
@@ -94,7 +97,11 @@ def main():
         "its lsh_dedup is a plain as-fast drain, not StreamBench's",
         "kill-and-restore run, so it has no restore s and is not the",
         "same measurement as the rows above it; its batch p50 is the",
-        "upper median, not StreamBench's nearest-rank p50.",
+        "upper median, not StreamBench's nearest-rank p50. The",
+        "committed gate_rebuild.json and ingest_knob_sf*.json came",
+        "from the since-deleted GateRebuildBench and IngestKnobBench",
+        "mains (d240e5a); the StreamBench gate_rebuild and",
+        "ingest_knob stage objects carry the same fields.",
         "",
     ]
     for st in stages:
@@ -224,8 +231,9 @@ def main():
                 f"| {fmt(v.get('merge_s'), 2)} | {segs} |")
         lines.append("")
 
-    # gate rebuild vs index segmentation (optional artifact from
-    # graft.tools.GateRebuildBench): the MAJOR-merge cadence input
+    # gate rebuild vs index segmentation (optional artifact, the
+    # gate_rebuild stage object of a StreamBench run): the MAJOR-merge
+    # cadence input
     try:
         with open("gate_rebuild.json") as f:
             gr = json.load(f)
@@ -234,7 +242,7 @@ def main():
     if gr:
         lines.append("## gate rebuild vs index segmentation (gate_rebuild)")
         lines.append("")
-        lines.append("`tools.GateRebuildBench`: the SAME corpus spread over")
+        lines.append("StreamBench `gate_rebuild`: the SAME corpus spread over")
         lines.append("1/4/16/64 delta epochs; `build s` is the gate's eager")
         lines.append("static-side rebuild (union-read every epoch + checkpoint")
         lines.append("both sides) — the cost a deployment pays per compaction")
@@ -442,7 +450,7 @@ def main():
         fpts = {d["ingest_loop"].get("files_per_trigger", 1)
                 for _, d in runs if "ingest_loop" in d}
         # the knob's measured effect comes from the committed
-        # ingest_knob_sf*.json artifacts (graft.tools.IngestKnobBench) —
+        # ingest_knob_sf*.json artifacts (StreamBench's ingest_knob stage) —
         # read, never hardcoded, so regenerated artifacts can't drift
         # from this prose
         import glob as _glob
@@ -461,7 +469,7 @@ def main():
                     f" {lo['landed']} at every setting")
             except Exception as e:
                 knob_bits.append(f"{kp}: unreadable ({e})")
-        measured = ("MEASURED (graft.tools.IngestKnobBench, same 12-file "
+        measured = ("MEASURED (StreamBench ingest_knob, same 12-file "
                     "arrival set, landed doc set asserted IDENTICAL "
                     "across settings): " + "; ".join(knob_bits) + ". "
                     if knob_bits else "")
@@ -478,8 +486,8 @@ def main():
             "decision — within a micro-batch the ownership processor "
             "orders each signature's docs by doc_id (= arrival order), "
             "so k files in one trigger decide exactly as k triggers do "
-            "(pinned in IngestLoopSpec, re-asserted by the knob bench "
-            "before it writes its artifact).")
+            "(pinned in IngestLoopSpec, re-asserted by the ingest_knob "
+            "stage before it reports).")
         lines.append("")
         lines.append("| sf | landed total | q123 keep | extra | missed q123 "
                      "| bridge only |")
