@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -58,21 +56,13 @@ object MinGramHash60 {
 
   private val GramLen = 8
 
-  /** One MessageDigest per thread, reused across rows: `digest()` resets
-    * the instance, and `getInstance` per row is provider-lookup overhead
-    * in the scan-stage hot loop on short-text corpora.
-    */
-  private val mdLocal = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
   /** Long.MaxValue signals "no gram" (text shorter than 8 code points);
     * real hashes are < 2^60 so the sentinel can never collide.
     */
   def compute(s: UTF8String): Long = {
     val n = s.numChars()
     if (n < GramLen) return Long.MaxValue
-    val md = mdLocal.get()
+    val md = Hash60.md5()
     val out = new Array[Byte](16)
     var best = Long.MaxValue
     if (s.numBytes() == n) {
@@ -83,7 +73,7 @@ object MinGramHash60 {
       while (i <= n - GramLen) {
         md.update(bytes, i, GramLen)
         md.digest(out, 0, 16)
-        val v = fold60(out)
+        val v = Hash60.fold60(out)
         if (v < best) best = v
         i += 1
       }
@@ -92,22 +82,12 @@ object MinGramHash60 {
       while (i <= n - GramLen) {
         // code-point substring — same semantics as Spark's substring()
         val d = md.digest(s.substring(i, i + GramLen).getBytes)
-        val v = fold60(d)
+        val v = Hash60.fold60(d)
         if (v < best) best = v
         md.reset()
         i += 1
       }
     }
     best
-  }
-
-  /** First 15 hex chars of md5 = bytes 0..6 plus the high nibble of
-    * byte 7 — exactly conv(substr(md5_hex,1,15),16,10).
-    */
-  private def fold60(d: Array[Byte]): Long = {
-    var v = 0L
-    var b = 0
-    while (b < 7) { v = (v << 8) | (d(b) & 0xFF); b += 1 }
-    (v << 4) | ((d(7) & 0xFF) >>> 4)
   }
 }

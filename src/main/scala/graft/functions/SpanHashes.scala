@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -61,16 +59,12 @@ object SpanHashes60 {
   val SpanW = 60
   val SpanStride = 30
 
-  private val mdLocal = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
   private val Empty = new GenericArrayData(new Array[Long](0))
 
   def compute(s: UTF8String): GenericArrayData = {
     val n = s.numChars()
     if (n < SpanW) return Empty
-    val md = mdLocal.get()
+    val md = Hash60.md5()
     val out = new Array[Byte](16)
     val vals = new Array[Long]((n - SpanW) / SpanStride + 1)
     if (s.numBytes() == n) {
@@ -82,7 +76,7 @@ object SpanHashes60 {
       while (i <= n - SpanW) {
         md.update(bytes, i, SpanW)
         md.digest(out, 0, 16)
-        vals(k) = fold60(out)
+        vals(k) = Hash60.fold60(out)
         k += 1
         i += SpanStride
       }
@@ -91,22 +85,12 @@ object SpanHashes60 {
       var k = 0
       while (i <= n - SpanW) {
         // code-point substring — same semantics as Spark's substring()
-        vals(k) = fold60(md.digest(s.substring(i, i + SpanW).getBytes))
+        vals(k) = Hash60.fold60(md.digest(s.substring(i, i + SpanW).getBytes))
         md.reset()
         k += 1
         i += SpanStride
       }
     }
     new GenericArrayData(vals)
-  }
-
-  /** First 15 hex chars of md5 = bytes 0..6 plus the high nibble of
-    * byte 7 — exactly conv(substr(md5_hex,1,15),16,10).
-    */
-  private def fold60(d: Array[Byte]): Long = {
-    var v = 0L
-    var b = 0
-    while (b < 7) { v = (v << 8) | (d(b) & 0xFF); b += 1 }
-    (v << 4) | ((d(7) & 0xFF) >>> 4)
   }
 }

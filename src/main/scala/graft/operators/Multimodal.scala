@@ -102,14 +102,14 @@ object Multimodal {
     val ds = blobs(s, dir)
       .select(col("doc_id"), col("source"), col("payload")).as[DocBlob]
     ds.mapPartitions { it =>
+      val hex = java.util.HexFormat.of()
       it.map { b =>
         // STUB: real media resize happens here (decode -> scale -> encode)
         val resized = b.payload.indices.collect {
           case i if i % factor == 0 => b.payload(i)
         }.toArray
         (b.doc_id, b.payload.length.toLong, resized.length.toLong,
-          java.security.MessageDigest.getInstance("MD5").digest(resized)
-            .map("%02x".format(_)).mkString)
+          hex.formatHex(graft.functions.Hash60.md5().digest(resized)))
       }
     }.toDF("doc_id", "orig_bytes", "resized_bytes", "resized_md5")
       .orderBy(col("doc_id"))

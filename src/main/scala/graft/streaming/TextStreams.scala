@@ -603,6 +603,11 @@ object TextStreams {
         TimeMode.None(), OutputMode.Append())
   }
 
+  /** JVM-side replica of operators.Text.hash60 (md5-prefix 60-bit),
+    * computed by the shared [[graft.functions.Hash60]] kernel.
+    */
+  private[graft] def hash60(s: String): Long = graft.functions.Hash60.of(s)
+
   /** The q90 count-min sketch maintained INCREMENTALLY over a term
     * stream: each sketch cell (hash row j × bucket) is one
     * `transformWithState` key holding its running sum, so the sketch
@@ -616,16 +621,6 @@ object TextStreams {
     * carries the key's whole batch), so state writes are O(touched
     * cells), not O(stream rows).
     */
-  private val cmsDigest: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-
-  /** JVM-side replica of operators.Text.hash60 (md5-prefix 60-bit). */
-  private[graft] def hash60(s: String): Long = {
-    val hex = cmsDigest.get().digest(s.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.take(15), 16)
-  }
-
   class CountMinCellProcessor
       extends StatefulProcessor[Long, (Long, Long), (Long, Long)] {
     @transient private var sum: ValueState[Long] = _

@@ -1126,15 +1126,28 @@ class EventStreamsSpec extends SparkSpec {
     }
   }
 
+  test("JVM hash60 equals Spark's conv(substr(md5(s),1,15),16,10) bit for " +
+      "bit over 500+ strings, empty and multi-byte UTF-8 included") {
+    import spark.implicits._
+    val strings = (0 until 500).map(i => s"t$i#${i % 4}") ++
+      Seq("", "the#0", "é", "中", "\uD83D\uDE00", "café#1", "中文#2",
+        "\uD83D\uDE42emoji#3", "naïve résumé 漢字 \uD83D\uDC4D")
+    val got = strings.toDF("s").select(col("s"), md5(col("s").cast("binary")),
+        conv(substring(md5(col("s").cast("binary")), 1, 15), 16, 10)
+          .cast("long"))
+      .as[(String, String, Long)].collect()
+    assert(got.length === strings.length)
+    got.foreach { case (str, _, sparkH) =>
+      assert(TextStreams.hash60(str) === sparkH, s"hash60 of '$str'")
+      assert(sparkH >= 0L && sparkH < (1L << 60), s"'$str' -> $sparkH")
+    }
+    assert(got.exists { case (_, hex, _) => Integer.parseInt(hex.take(2), 16) >= 0x80 },
+      "the set must cover an MD5 byte 0 >= 0x80 (the sign-extension case)")
+  }
+
   test("streaming count-min cell sums accumulate across micro-batches to the batch sketch") {
     withRocksDb {
     import spark.implicits._
-    // the JVM-side hash must be the Spark-expression hash, bit for bit
-    val sparkH = spark.sql(
-      "SELECT CAST(conv(substr(md5(CAST('the#0' AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
-    ).head.getLong(0)
-    assert(sparkH === TextStreams.hash60("the#0"))
-
     val mem = MemoryStream[String](spark)
     val q = TextStreams.streamingCountMin(spark, mem.toDS())
       .writeStream.format("memory").queryName("cms_stream")

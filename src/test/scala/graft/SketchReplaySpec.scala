@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.streaming.TextStreams
 
 /** Second-opinion oracle for the trickiest sketch queries: an
   * independent PURE-SCALA replay of each sketch's arithmetic over the
@@ -45,6 +46,13 @@ class SketchReplaySpec extends SparkSpec {
       cells(k) = cells.getOrElse(k, 0L) + c
     }
     cells.toMap
+  }
+
+  test("the independent h60 equals TextStreams.hash60 over every corpus " +
+      "term's salted rows and every document text") {
+    val items = termFreq.keys.toSeq.flatMap(t => (0 until 4).map(j => s"$t#$j")) ++
+      docs.map(_._2)
+    items.foreach(s => assert(TextStreams.hash60(s) === h60(s), s"'$s'"))
   }
 
   test("q90 count-min: every term's estimate replays in pure Scala " +
