@@ -940,7 +940,7 @@ object StreamBench {
       docsAll.filter(col("doc_id") > qsI(0) && col("doc_id") <= qsI(1)),
       docsAll.filter(col("doc_id") > qsI(1)))
     // SPARK_GRAFT_FILES_PER_TRIGGER amortizes the per-micro-batch
-    // fixed cost (~0.7-1.2 s/trigger on 32 local cores) at higher SF; the
+    // fixed cost (IngestLoop.runCycle prices it) at higher SF; the
     // admit decision is trigger-size-invariant (IngestLoopSpec)
     val filesPerTrigger =
       sys.env.getOrElse("SPARK_GRAFT_FILES_PER_TRIGGER", "1").toInt
@@ -1009,9 +1009,8 @@ object StreamBench {
     sliceOrdered(docsAll, "doc_id", files, s"$b2/in")
     val runs = Seq(1, 3, files).map { fpt =>
       val idxRoot = s"$b2/index_$fpt"; val landRoot = s"$b2/landed_$fpt"
-      // Auto banding over an empty corpus: the reference 4x2, not
-      // lakeBanding — the construction the committed knob artifacts used
-      IndexCompaction.init(spark, idxRoot, docsAll.filter(lit(false)))
+      IndexCompaction.init(spark, idxRoot, docsAll.filter(lit(false)),
+        banding = c.lakeBanding)
       val st = IngestLoop.runCycle(spark, idxRoot, landRoot, 0, s"$b2/in",
         docsAll.schema, n, filesPerTrigger = fpt)
       val landed = IngestLoop.landedAll(spark, landRoot)

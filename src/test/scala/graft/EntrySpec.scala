@@ -129,8 +129,8 @@ class EntrySpec extends SparkSpec {
   test("StreamBench.run: gate + ingest_loop line parses; the loop lands every q123 keeper") {
     val rocks = GraftSession.rocksDbStateConf(changelog = true).map(_._1)
     val before = rocks.map(k => k -> spark.conf.getOption(k))
-    val line = StreamBench.run(spark, sfDir, Seq("gate", "ingest_loop", "ingest_knob"),
-      tempDir("streambench").getPath)
+    val base = tempDir("streambench").getPath
+    val line = StreamBench.run(spark, sfDir, Seq("gate", "ingest_loop", "ingest_knob"), base)
     assert(rocks.map(k => k -> spark.conf.getOption(k)) === before)
     val json = new ObjectMapper().readTree(line)
     assert(json.get("metric").asText === "stream_bench")
@@ -157,6 +157,13 @@ class EntrySpec extends SparkSpec {
     assert(runs.map(_.get("batches").asLong) === Seq(12L, 4L, 1L), line)
     assert(runs.map(_.get("landed").asLong).distinct.size === 1, line)
     assert(runs.head.get("landed").asLong > 0L, line)
+    // both stages gate under the lake's banding, so the one-cycle knob
+    // lands the three-cycle loop's doc set
+    def landed(root: String): Set[Long] = {
+      import spark.implicits._
+      streaming.IngestLoop.landedAll(spark, root).select("doc_id").as[Long].collect().toSet
+    }
+    assert(landed(s"$base/ingest_knob/landed_1") === landed(s"$base/ingest/landed"))
   }
 
   test("Json.decimal ignores the default locale: DedupService's line stays JSON under de-DE") {
