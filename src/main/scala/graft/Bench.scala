@@ -3,10 +3,13 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Driver-run benchmark: times every registered query at
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A warmup pass (two small
-  * queries) pays the one-time JVM/codegen/parquet-footer cost so the
-  * per-query numbers reflect steady-state engine throughput, which is
-  * what the 100 TB comparison cares about.
+  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A timing covers the
+  * query's full output, consumed by [[Registry.consume]] (a `noop`
+  * write, as in `Probe stats`); a `count()` would let Catalyst prune
+  * every output-only expression. A warmup pass (two small queries) pays
+  * the one-time JVM/codegen/parquet-footer cost so the per-query
+  * numbers reflect steady-state engine throughput, which is what the
+  * 100 TB comparison cares about.
   *
   * Cold vs warm: several pipelines land shared stages as parquet via
   * [[graft.operators.Materialize]] (pair tables, CC labels, IVF/ADC
@@ -87,7 +90,7 @@ object Bench {
     val cpus = GraftSession.defaultCores
     val spark = GraftSession.local(cpus, "bench")
     Seq("q1_pricing_summary", "q26_type_stats").foreach { w =>
-      try SparkEntry.queries(w)(spark, sfDir).count()
+      try Registry.consume(SparkEntry.queries(w)(spark, sfDir))
       catch { case _: Throwable => () }
     }
     // cold_total charges every landed-stage build to the pass-1 query
@@ -124,7 +127,7 @@ object Bench {
     val failures = new java.util.TreeMap[String, String]()
     def once(name: String): Double = {
       val t0 = System.nanoTime()
-      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+      val ok = try { Registry.consume(SparkEntry.queries(name)(spark, sfDir)); true }
                catch { case e: Throwable =>
                  failures.putIfAbsent(shortKey(name), e.toString); false }
       val elapsed = (System.nanoTime() - t0) / 1e9
@@ -132,7 +135,7 @@ object Bench {
       // minhash tables); left persisted they accumulate across 2x88
       // queries and the resulting storage/GC pressure inflates whatever
       // runs late in the pass. Each query's blocks are dead once its
-      // count() returns, so drop them before timing the next one.
+      // write returns, so drop them before timing the next one.
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       if (ok) elapsed else -1.0
     }

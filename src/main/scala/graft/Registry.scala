@@ -31,6 +31,12 @@ object Registry {
   def oracleSql: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
+  /** Run `df` to its full output without collecting it. A `noop` write
+    * computes every column the oracle checks; `count()` lets Catalyst
+    * prune output-only expressions, so it times less than the query.
+    */
+  def consume(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
   /** The sorted names a comma-separated list picks: each item is a short
     * qNN prefix (`q1` is `q1_pricing_summary`, never `q10_…`) or a full
     * name. A list that picks nothing fails.

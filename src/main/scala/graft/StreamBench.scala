@@ -169,11 +169,14 @@ object StreamBench {
     */
   private val TtlMs = 2000L
 
+  /** Parquet slices (micro-batches) each replay input is cut into. */
+  private val Slices = 12
+
   /** One run's session, replay inputs and measured as-fast stages. Every
     * input is lazy: a stage selection builds only what its stages read.
     */
   private final class Ctx(val spark: SparkSession, val sfDir: String,
-      val nSlices: Int, val base: String) {
+      val base: String) {
     val recorder = new ProgressRecorder
     /** Progress and wall of each as-fast run a paced stage is sized from. */
     val measured =
@@ -188,7 +191,7 @@ object StreamBench {
     lazy val events: DataFrame = sources.Tables.events(spark, sfDir)
     lazy val totalRows: Long = events.count()
     lazy val eventsStream: DataFrame = {
-      sliceOrdered(events, "ts", nSlices, s"$base/events")
+      sliceOrdered(events, "ts", Slices, s"$base/events")
       fileStream(events.schema, s"$base/events")
     }
 
@@ -208,7 +211,7 @@ object StreamBench {
     // (sf1+ rehearsal corpora; every driver SF stays at the default)
     lazy val lakeBanding: operators.Banding = operators.Text.bandingOf(spark, sfDir)
     private lazy val arrivalsDir: String = {
-      sliceOrdered(arrivalsBatch, "doc_id", nSlices, s"$base/docs")
+      sliceOrdered(arrivalsBatch, "doc_id", Slices, s"$base/docs")
       s"$base/docs"
     }
     def arrivals: DataFrame = fileStream(arrivalsBatch.schema, arrivalsDir)
@@ -217,12 +220,12 @@ object StreamBench {
     private lazy val emb: DataFrame = spark.read.parquet(s"$sfDir/embeddings.parquet")
     lazy val embRows: Long = emb.count()
     lazy val embStream: DataFrame = {
-      sliceOrdered(emb, "vec_id", nSlices, s"$base/emb")
+      sliceOrdered(emb, "vec_id", Slices, s"$base/emb")
       fileStream(emb.schema, s"$base/emb")
     }
 
     /** The events as JSON segment files for the DSv2 replay source, sized
-      * for ~nSlices micro-batches; the value is the event count.
+      * for ~[[Slices]] micro-batches; the value is the event count.
       */
     lazy val replayRows: Int = {
       val dir = new java.io.File(s"$base/replay_segments")
@@ -232,7 +235,7 @@ object StreamBench {
         .select(col("user_id"), col("event_type"),
           date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
         .collect()
-      rows.grouped(math.max(1, math.ceil(rows.length / nSlices.toDouble).toInt))
+      rows.grouped(math.max(1, math.ceil(rows.length / Slices.toDouble).toInt))
         .zipWithIndex.foreach { case (group, i) =>
           val body = group.map(r =>
             s"""{"userId": "${r.get(0)}", "activity": "${r.get(1)}", "timestamp": "${r.get(2)}"}""")
@@ -440,7 +443,7 @@ object StreamBench {
     Seq(out, ckpt).foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
     def dataBatches(p: Seq[StreamingQueryProgress]) = p.count(_.numInputRows > 0)
-    val half = c.nSlices / 2
+    val half = Slices / 2
     val t0 = System.nanoTime()
     val q1 = start(out, ckpt)
     val deadline = System.currentTimeMillis() + drainDeadlineMs(inRows)
@@ -499,8 +502,8 @@ object StreamBench {
   private def pacedGate(c: Ctx): String = {
     val intervalMs = fitIntervalMs(batchP50Ms(c.measured("gate")._1))
     pacedStage(c, "paced_gate", gateDf(c), OutputMode.Append, c.gateIn,
-      intervalMs, c.nSlices.toLong,
-      (c.gateIn.toDouble / c.nSlices) / (intervalMs / 1000.0))
+      intervalMs, Slices.toLong,
+      (c.gateIn.toDouble / Slices) / (intervalMs / 1000.0))
   }
 
   // stage 3: stateless IVF cell assignment of the embedding stream
@@ -573,10 +576,8 @@ object StreamBench {
       banding = c.lakeBanding).toDF()
 
   // stage 5a'''': the ADMIT surface measured — streamingNearDupAdmit
-  // emits one ownership verdict per (arrival, band) (4 per banded
-  // doc, 1 per short doc: ~4x the collision feed's worst case, the
-  // price of a total output), same single state operator, same TTL
-  // horizon. `admitted` is the foreachBatch reduction's answer — the
+  // emits the collision feed plus one presence row per arrival, same
+  // single state operator, same TTL horizon. `admitted` is the foreachBatch reduction's answer — the
   // deduped stream a consumer actually keeps (here reduced over the
   // whole run: doc_ids are unique, so the per-batch and whole-run
   // reductions agree).
@@ -590,20 +591,20 @@ object StreamBench {
       s""""admitted":$admitted,"ttl_ms":$TtlMs"""
   }
 
-  // stage 5a''''': the admit surface's SLO view — the totality cost
-  // (4 verdicts per banded doc + the total output) priced as a
-  // kept-up question: the SAME pipeline on a trigger interval sized
-  // from ITS OWN measured per-batch p50 (fitIntervalMs x1.3 headroom,
-  // the paced_gate contract). kept_up=true here means a deployment
-  // paying for total verdicts still meets an offered rate ~75% of
-  // its drain rate; the drain-rate gap vs the collisions-only twin
-  // stays visible in the admit/lsh_dedup_ttl rows_per_sec ratio.
+  // stage 5a''''': the admit surface's SLO view — the cost of per-doc
+  // presence priced as a kept-up question: the SAME pipeline on a
+  // trigger interval sized from ITS OWN measured per-batch p50
+  // (fitIntervalMs x1.3 headroom, the paced_gate contract). kept_up=true
+  // here means a deployment paying for presence rows still meets an
+  // offered rate ~75% of its drain rate; the drain-rate gap vs the
+  // collisions-only twin stays visible in the admit/lsh_dedup_ttl
+  // rows_per_sec ratio.
   private def pacedAdmit(c: Ctx): String = {
     val intervalMs = fitIntervalMs(batchP50Ms(c.measured("admit")._1))
     pacedStage(c, "paced_admit",
       admitDf(c, TTLConfig(java.time.Duration.ofMillis(TtlMs))),
-      OutputMode.Append, c.gateIn, intervalMs, c.nSlices.toLong,
-      (c.gateIn.toDouble / c.nSlices) / (intervalMs / 1000.0))
+      OutputMode.Append, c.gateIn, intervalMs, Slices.toLong,
+      (c.gateIn.toDouble / Slices) / (intervalMs / 1000.0))
   }
 
   // stage 5a''''''c: the un-TTL'd admit surface drained as fast as it
@@ -628,7 +629,7 @@ object StreamBench {
     val p1 = c.arrivalsBatch.filter(col("doc_id") <= mid)
     val p2 = c.arrivalsBatch.filter(col("doc_id") > mid)
     val n2 = p2.count()
-    val half = math.max(2, c.nSlices / 2)
+    val half = Slices / 2
     sliceOrdered(p1, "doc_id", half, s"${c.base}/docs_p1")
     sliceOrdered(p2, "doc_id", half, s"${c.base}/docs_p2")
     def str(path: String) = c.fileStream(c.arrivalsBatch.schema, path)
@@ -720,7 +721,7 @@ object StreamBench {
       val ph = phases(cyc)
       val nPh = ph.count()
       val cycDir = s"${c.base}/svc_c$cyc"
-      sliceOrdered(ph, "doc_id", math.max(2, c.nSlices / nCycles), cycDir)
+      sliceOrdered(ph, "doc_id", Slices / nCycles, cycDir)
       val progBefore = c.recorder.seen(collQ.runId).size
       // gate REBUILD from the live epoch listing: O(read) of the
       // index segments, the per-interval restart cost
@@ -846,7 +847,7 @@ object StreamBench {
     import spark.implicits._
     val docsAll = c.docs.select(col("doc_id"), col("lang"), col("text"))
     val nDocs = docsAll.count()
-    sliceOrdered(docsAll, "doc_id", c.nSlices, s"${c.base}/docs_all")
+    sliceOrdered(docsAll, "doc_id", Slices, s"${c.base}/docs_all")
     val dstream = c.fileStream(docsAll.schema, s"${c.base}/docs_all")
     val toks = dstream.select(lit("token").as("domain"), col("lang"),
       explode(split(col("text"), " ")).as("item"))
@@ -890,7 +891,7 @@ object StreamBench {
     val w = operators.Text.CountMinWidth
     val docsAll = c.docs.select(col("doc_id"), col("text"))
     val nToks = docsAll.select(explode(split(col("text"), " "))).count()
-    sliceOrdered(docsAll, "doc_id", c.nSlices, s"${c.base}/docs_cm")
+    sliceOrdered(docsAll, "doc_id", Slices, s"${c.base}/docs_cm")
     val terms = c.fileStream(docsAll.schema, s"${c.base}/docs_cm")
       .select(explode(split(col("text"), " ")).as("t")).as[String]
     val (emitted, progress, wall) = toMemory(c, "countmin_live",
@@ -946,7 +947,7 @@ object StreamBench {
       sys.env.getOrElse("SPARK_GRAFT_FILES_PER_TRIGGER", "1").toInt
     val cycleJ = phases.zipWithIndex.map { case (ph, cyc) =>
       val cycDir = s"$b2/in_$cyc"
-      sliceOrdered(ph, "doc_id", math.max(2, c.nSlices / 3), cycDir)
+      sliceOrdered(ph, "doc_id", Slices / 3, cycDir)
       val st = IngestLoop.runCycle(spark, idxRoot, landRoot, cyc, cycDir,
         ph.schema, ph.count(), filesPerTrigger = filesPerTrigger)
       s"""{"cycle":$cyc,"arrivals":${st.arrivals},""" +
@@ -1034,11 +1035,11 @@ object StreamBench {
   // segment directory built from the events table — measures what the
   // custom source sustains (admission-controlled offsets, per-file
   // executor-side parsing) rather than the built-in file source.
-  // eventsPerBatch is sized for ~nSlices micro-batches, matching the
+  // eventsPerBatch is sized for ~Slices micro-batches, matching the
   // other stages' batch structure.
   private def replaySource(c: Ctx): String =
     drain(c, "replay_source", streaming.EventStreams.tumblingSignupsOn(
-      c.replayStream(math.max(1, c.replayRows / c.nSlices)), "1 hour"),
+      c.replayStream(math.max(1, c.replayRows / Slices)), "1 hour"),
       OutputMode.Complete, c.replayRows.toLong)
 
   /** The replay pipeline offered `perBatch` events per `intervalMs`. */
@@ -1228,8 +1229,7 @@ object StreamBench {
     */
   private[graft] def run(spark: SparkSession, sfDir: String,
       stages: Seq[String], base: String = "/tmp/graft_streambench"): String = {
-    val nSlices = sys.env.getOrElse("SPARK_GRAFT_STREAM_SLICES", "12").toInt
-    val c = new Ctx(spark, sfDir, nSlices, base)
+    val c = new Ctx(spark, sfDir, base)
     val changelog = GraftSession.changelogFromEnv
     val load0 = HostLoad.loadavg(); val steal0 = HostLoad.stealSec()
     val stage = table.toMap
@@ -1248,7 +1248,7 @@ object StreamBench {
     val load1 = HostLoad.loadavg(); val steal1 = HostLoad.stealSec()
     val stealS = if (steal0 < 0 || steal1 < 0) "-1" else Json.decimal(steal1 - steal0, 1)
     s"""{"metric":"stream_bench","unit":"rows/sec",""" +
-      s""""slices":$nSlices,"changelog_ckpt":$changelog,""" +
+      s""""slices":$Slices,"changelog_ckpt":$changelog,""" +
       parts.map(_ + ",").mkString +
       s""""load":{"start":${Json.decimal(load0, 2)},"end":${Json.decimal(load1, 2)},""" +
       s""""cpus":${spark.sparkContext.defaultParallelism},"steal_s":$stealS},""" +

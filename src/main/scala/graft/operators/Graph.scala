@@ -66,9 +66,7 @@ object Graph {
       .localCheckpoint(true)
     var converged = false
     var rounds = 0
-    val dbg = sys.props.contains("graft.cc.debug")
     while (!converged && rounds < 40) {
-      val t0 = System.nanoTime()
       // one broadcast of the label map per round, chained three times:
       // each join steps node -> lab(prev), so the chain applies lab^4 in
       // a single plan whose three identical broadcast subtrees collapse
@@ -90,7 +88,6 @@ object Graph {
         .filter(col("lab") < col("old")).isEmpty
       labels = next
       rounds += 1
-      if (dbg) println(f"[cc] round $rounds ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     require(converged, s"label propagation did not converge in $rounds rounds")
     val result = labels.select(col("node").as(outCol), col("lab").as("cluster_id"),

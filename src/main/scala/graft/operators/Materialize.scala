@@ -22,10 +22,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * second JVM over the same inputs computes the same fingerprint and
   * reads the landed stage (a test run followed by a bench run pays the
   * stage graph once, like a warm lake); any in-place change to the
-  * source data changes the fingerprint, so the new run builds fresh and
-  * can never serve a stale intermediate. Keys are additionally
-  * namespaced by source dir and every semantic parameter (threshold,
-  * table counts, …).
+  * source data changes the fingerprint, so the new run builds fresh.
+  * Keys are additionally namespaced by source dir and every semantic
+  * parameter (threshold, table counts, …) — but never by the CODE that
+  * built the stage: a stage landed by an older build of a pipeline is
+  * served to a newer one over the same data. Check a change to how a
+  * stage is built under a fresh root (`-Djava.io.tmpdir=<new dir>`).
   *
   * Publish is ATOMIC: each build writes to a process-private temp dir
   * and renames it into place (same filesystem), so a reader can never

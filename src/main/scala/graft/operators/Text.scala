@@ -242,13 +242,19 @@ object Text {
     * 100 TB path; this exact form is the oracle-checkable ground truth.
     */
   def ngramJaccardPairs(s: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
-    // round(·, 6) builds a BigDecimal per row (measured 55–865 CPU-s
-    // over the 115M-pair decade); the threshold filter is equivalent to
-    // ONE raw-double compare against the exact boundary constant
-    // ([[round6Boundary]], engine-pinned by RoundBoundarySpec), so the
-    // rounded value — which IS in the output — is computed only for the
-    // surviving pairs (thousands, not the whole pair table).
-    shingleInter(s, dir)
+    jaccardAtLeast(shingleInter(s, dir), threshold)
+
+  /** The (d1, d2, n_common, jaccard) pairs of an intersection table
+    * ([[shingleInterOf]]'s shape) whose 6-dp Jaccard reaches `threshold`.
+    * round(·, 6) builds a BigDecimal per row (measured 55–865 CPU-s
+    * over the 115M-pair decade); the threshold filter is equivalent to
+    * ONE raw-double compare against the exact boundary constant
+    * ([[round6Boundary]], engine-pinned by RoundBoundarySpec), so the
+    * rounded value — which IS in the output — is computed only for the
+    * surviving pairs (thousands, not the whole pair table).
+    */
+  private def jaccardAtLeast(inter: DataFrame, threshold: Double): DataFrame =
+    inter
       .withColumn("jraw",
         col("n_common") / (col("s1") + col("s2") - col("n_common")))
       .filter(col("jraw") >= round6Boundary(threshold))
@@ -300,6 +306,20 @@ object Text {
     * corpus, landed) and the SAMPLED audits (q55's derived-mod
     * containment, q153's pinned 1/8 twin) — the caller bounds the doc
     * set; this emits every co-occurrence of what it is given.
+    *
+    * The pair join is hinted SHUFFLE_HASH: sort-merge on ~25-char string
+    * keys spends its time sorting strings (measured 5.3 s vs 2.1 s at
+    * sf0.1 for identical output); hashing them is strictly cheaper, and
+    * the per-partition build side is one shingle posting list — bounded,
+    * never the corpus. (Three pruning/key variants were measured and
+    * rejected on this corpus: posting-list pair expansion — no gain;
+    * the SSJoin/ppjoin prefix filter, which left 409 k of 600 k pairs
+    * as candidates here and doubled the runtime; and joining on
+    * [[hash60]]-hashed shingles instead of the strings — ~25% SLOWER
+    * across q34/q35/q49 because the per-shingle md5 costs more than the
+    * narrower shuffle saves at this scale. Hot-shingle skew at scale is
+    * handled by AQE skew-join splitting; a boilerplate-heavy corpus
+    * would flip the decision back to the prefix filter.)
     */
   private[graft] def shingleInterOf(sh: DataFrame): DataFrame = {
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
@@ -311,86 +331,9 @@ object Text {
       .join(sizes.toDF("d2", "s2"), "d2")
   }
 
-  /** Same operator over an arbitrary (doc_id, sh) shingle set.
-    *
-    * The pair join is hinted SHUFFLE_HASH: sort-merge on ~25-char string
-    * keys spends its time sorting strings (measured 5.3 s vs 2.1 s at
-    * sf0.1 for identical output); hashing them is strictly cheaper, and
-    * the per-partition build side is one shingle posting list — bounded,
-    * never the corpus. (Three pruning/key variants were measured and
-    * rejected on this corpus: posting-list pair expansion — r1, no
-    * gain; the SSJoin/ppjoin prefix filter, kept as
-    * [[ngramJaccardPairsPrefix]], which left 409 k of 600 k pairs as
-    * candidates here and doubled the runtime; and joining on
-    * [[hash60]]-hashed shingles instead of the strings — r2, ~25%
-    * SLOWER across q34/q35/q49 because the per-shingle md5 costs more
-    * than the narrower shuffle saves at this scale. Hot-shingle skew at
-    * scale is handled by AQE skew-join splitting; a boilerplate-heavy
-    * corpus would flip the decision back to the prefix filter.)
-    */
-  def ngramJaccardPairsOf(sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val a = sh.toDF("d1", "sh").hint("SHUFFLE_HASH")
-    val b = sh.toDF("d2", "sh").hint("SHUFFLE_HASH")
-    val inter = a.join(b, "sh").filter(col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("n_common"))
-    inter
-      .join(sizes.toDF("d1", "s1"), "d1")
-      .join(sizes.toDF("d2", "s2"), "d2")
-      .withColumn("jaccard",
-        round(col("n_common") / (col("s1") + col("s2") - col("n_common")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("d1"), col("d2"), col("n_common"), col("jaccard"))
-      .orderBy(col("d1"), col("d2"))
-  }
-
-  /** PREFIX-FILTERED variant (Chaudhuri SSJoin / Bayardo all-pairs /
-    * Xiao ppjoin): order every doc's shingles by one global total order
-    * (ascending corpus frequency, shingle as tie-break — rarest first);
-    * if J(A,B) ≥ t then |A∩B| ≥ ⌈t·|A|⌉, so by the prefix-filter lemma
-    * the first |A|−⌈t·|A|⌉+1 shingles of A and first |B|−⌈t·|B|⌉+1 of B
-    * must intersect, and the candidate join can run over prefixes alone
-    * — provably no lost pairs (spec-asserted equal to
-    * [[ngramJaccardPairsOf]]). Prefix lengths use exact integer
-    * micro-unit arithmetic (no float-boundary risk).
-    *
-    * This is the right shape when boilerplate shingles create quadratic
-    * hot keys (they sort last and fall out of prefixes). On THIS corpus
-    * it was measured 2× slower than the direct join — shared shingles
-    * are spread evenly, so 409 k of 600 k pairs stayed candidates while
-    * the frequency join + per-doc window added two extra shuffles —
-    * which is why the declared q34 uses the direct form.
-    */
-  def ngramJaccardPairsPrefix(sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val tMicro = math.round(threshold * 1e6) - 1
-    val freq = sh.groupBy(col("sh")).agg(count(lit(1)).as("f"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("f"), col("sh"))
-    val pref = sh.join(freq, "sh")
-      .withColumn("rnk", row_number().over(w))
-      .join(sizes, "doc_id")
-      .filter(col("rnk") <=
-        expr(s"n_sh - (($tMicro * n_sh + 999999) div 1000000) + 1"))
-      .select(col("doc_id"), col("sh"))
-    val cand = pref.toDF("d1", "sh").join(pref.toDF("d2", "sh"), "sh")
-      .filter(col("d1") < col("d2"))
-      .select(col("d1"), col("d2")).distinct()
-    // exact-Jaccard verify touches only candidate docs' shingles
-    val candDocs = cand.select(col("d1").as("doc_id"))
-      .union(cand.select(col("d2").as("doc_id"))).distinct()
-    val shCand = sh.join(broadcast(candDocs), "doc_id")
-    val inter = shCand.toDF("d1", "sh").join(shCand.toDF("d2", "sh"), "sh")
-      .filter(col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("n_common"))
-    cand.join(inter, Seq("d1", "d2"))
-      .join(sizes.toDF("d1", "s1"), "d1")
-      .join(sizes.toDF("d2", "s2"), "d2")
-      .withColumn("jaccard",
-        round(col("n_common") / (col("s1") + col("s2") - col("n_common")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("d1"), col("d2"), col("n_common"), col("jaccard"))
-      .orderBy(col("d1"), col("d2"))
-  }
+  /** [[ngramJaccardPairs]] over an arbitrary (doc_id, sh) shingle set. */
+  def ngramJaccardPairsOf(sh: DataFrame, threshold: Double): DataFrame =
+    jaccardAtLeast(shingleInterOf(sh), threshold)
 
   /** MinHash + banded LSH near-dup detection — the scale path.
     * `bands×rows` seeded min-hashes per doc ([[hash60]] over distinct

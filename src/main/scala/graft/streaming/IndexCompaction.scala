@@ -76,32 +76,29 @@ object IndexCompaction {
     */
   private val Folded = "_graft_folded"
 
-  private def isFolded(root: String, e: Long): Boolean =
-    new java.io.File(new java.io.File(root, epochName(e)), Folded).isFile
-
-  /** LIVE epoch numbers under `root`, ascending. A dir counts only once
-    * fully renamed into place (atomic publish), so a reader never sees
-    * a half-written epoch; epochs tombstoned by a merge are excluded
-    * (their content is in the merged segment).
+  /** Published epoch numbers under `root` whose `Folded` marker is
+    * present iff `folded`, ascending. A dir counts only once fully
+    * renamed into place (atomic publish), so a reader never sees a
+    * half-written epoch.
     */
-  def epochs(root: String): Seq[Long] =
+  private def epochsWhere(root: String, folded: Boolean): Seq[Long] =
     Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("epoch_") &&
         !f.getName.contains(".tmp_") &&
-        !new java.io.File(f, Folded).isFile)
+        new java.io.File(f, Folded).isFile == folded)
       .flatMap(f => f.getName.stripPrefix("epoch_").toLongOption)
       .sorted.toSeq
+
+  /** LIVE epoch numbers under `root`, ascending; epochs tombstoned by a
+    * merge are excluded (their content is in the merged segment).
+    */
+  def epochs(root: String): Seq[Long] = epochsWhere(root, folded = false)
 
   /** Epoch numbers tombstoned by a previous merge and awaiting the next
     * merge's physical sweep (grace-period dirs).
     */
   private[graft] def foldedEpochs(root: String): Seq[Long] =
-    Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch_") &&
-        !f.getName.contains(".tmp_") &&
-        new java.io.File(f, Folded).isFile)
-      .flatMap(f => f.getName.stripPrefix("epoch_").toLongOption)
-      .sorted.toSeq
+    epochsWhere(root, folded = true)
 
   /** Write `(bands, hashes)` as epoch `n` under `root`, atomically.
     * Returns true if OUR rename published the epoch, false if another

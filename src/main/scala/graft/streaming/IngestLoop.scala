@@ -82,12 +82,8 @@ object IngestLoop {
         (if (schema.fieldNames.contains("eventTime")) col("eventTime")
          else timestamp_seconds(col("doc_id"))).as("eventTime"))
     val gated = IndexCompaction.gate(spark, idxRoot, stream, keepText = true)
-    // lean emission: presence row on band 0 / short key + non-owner
-    // verdicts only — ~4× fewer verdict rows per drain, same admit set
-    // and same per-batch doc accounting (both spec-pinned; measured in
-    // round 13, dd5733d)
     val verdicts = TextStreams.streamingNearDupAdmit(spark,
-      gated.select(col("doc_id"), col("text")), lean = true,
+      gated.select(col("doc_id"), col("text")),
       banding = IndexCompaction.indexBanding(idxRoot))
     // the cycle's lake segment, for attaching payloads to admitted ids
     val cycleBatch = spark.read.parquet(cycleDir)

@@ -151,32 +151,73 @@ object TextStreams {
     else gated.select(col("doc_id"), col("eventTime"))
   }
 
-  /** One intra-stream LSH collision: `docId` shares `band`'s signature
-    * with the earlier-arrived `ownerDoc`.
+  /** One per-(arrival, band) ownership verdict: `ownerDoc == docId`
+    * means the arrival owns the bucket (first arrival inside the TTL
+    * horizon); otherwise it collides with the earlier `ownerDoc`.
     */
-  final case class LshCollision(docId: Long, band: Int, ownerDoc: Long)
+  final case class BandVerdict(docId: Long, band: Int, ownerDoc: Long)
 
-  /** Per-band-signature first-arrival owner. Within a micro-batch rows
-    * are processed in doc_id order, so the owner (and every emitted
-    * collision) is deterministic regardless of partition arrival order.
+  /** Per-(band, sig) first-arrival owner. Within a micro-batch rows are
+    * processed in doc_id order, so the owner (and every emitted verdict)
+    * is deterministic regardless of partition arrival order.
+    *
+    * Emits every NON-OWNER verdict (the rows that can flip an admit
+    * decision) plus one presence row per doc: its band-0 verdict (every
+    * banded doc has a band 0) or its doc-unique short key (band −1).
+    * Presence keeps per-batch doc accounting (distinct docId) total;
+    * [[admittedOf]] reads only whether some row shows an earlier owner,
+    * so owner rows on bands > 0 — ~3/4 of the emission at 4 bands — are
+    * never emitted.
     */
   class BandOwnerProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[String, (String, Int, Long), LshCollision] {
+      extends StatefulProcessor[String, (String, Int, Long), BandVerdict] {
     @transient private var owner: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       owner = getHandle.getValueState("owner", Encoders.scalaLong, ttl)
 
     override def handleInputRows(sig: String, rows: Iterator[(String, Int, Long)],
-        timerValues: TimerValues): Iterator[LshCollision] = {
+        timerValues: TimerValues): Iterator[BandVerdict] = {
       val sorted = rows.toSeq.sortBy { case (_, _, doc) => doc }
       var own = if (owner.exists()) owner.get() else -1L
-      val out = Seq.newBuilder[LshCollision]
+      val out = Seq.newBuilder[BandVerdict]
       sorted.foreach { case (_, band, doc) =>
         if (own < 0L) { own = doc; owner.update(doc) }
-        else if (doc != own) out += LshCollision(doc, band, own)
+        if (band <= 0 || doc != own) out += BandVerdict(doc, band, own)
       }
       out.result().iterator
+    }
+  }
+
+  /** The keyed stateful tail both near-dup surfaces share: `banded`
+    * carries `doc_id` and one exploded `b` = (band, sig) struct per row;
+    * each (band, sig) bucket is one `transformWithState` key holding its
+    * first-arrival owner.
+    */
+  private def bandOwners(spark: SparkSession, banded: DataFrame,
+      ttl: TTLConfig): Dataset[BandVerdict] = {
+    import spark.implicits._
+    banded
+      .select(col("b.sig").as("sig"), col("b.band").as("band"), col("doc_id"))
+      .as[(String, Int, Long)]
+      // state key is the (band, sig) PAIR — the batch bucket definition
+      // (arrivalDedup windows on (band, sig); nearDupGate anti-joins per
+      // band). Keying by sig alone would let a cross-band signature
+      // equality (~2^-60/pair, but nonzero) emit a collision the batch
+      // rule does not; the stream == batch drop-set claim is exact only
+      // under the pair key.
+      .groupByKey { case (sig, band, _) => s"$band|$sig" }
+      // a TTL'd state store needs the processing-time clock; without a
+      // TTL the operator is clock-free
+      .transformWithState(new BandOwnerProcessor(ttl),
+        if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime(),
+        OutputMode.Append())
+  }
+
+  private def bandStructs(banding: Banding) = {
+    import graft.operators.Text
+    (0 until banding.bands).map { b =>
+      struct(lit(b).as("band"), Text.bandSigFromBank(b, banding.rows).as("sig"))
     }
   }
 
@@ -191,8 +232,9 @@ object TextStreams {
     * first-arrival owner — O(distinct band signatures in the horizon)
     * state, 8 bytes each, never the text.
     *
-    * Emits one append-only collision row per (doc, colliding band);
-    * consumers drop `distinct docId` (a quarantine feed, like
+    * Emits one append-only collision row per (doc, colliding band): the
+    * [[streamingNearDupAdmit]] verdicts with `ownerDoc != docId`.
+    * Consumers drop `distinct docId` (a quarantine feed, like
     * [[spanContaminationAudit]] — emission, not in-stream filtering,
     * keeps the plan to ONE stateful operator). A doc_id RE-ARRIVING in a
     * later batch re-emits any collisions its bands still have — the feed
@@ -224,13 +266,9 @@ object TextStreams {
     */
   def streamingLshCollisions(spark: SparkSession, stream: DataFrame,
       ttl: TTLConfig = TTLConfig.NONE,
-      banding: Banding = Banding.Default): Dataset[LshCollision] = {
-    import spark.implicits._
+      banding: Banding = Banding.Default): Dataset[BandVerdict] = {
     import graft.operators.Text
-    val bandStructs = (0 until banding.bands).map { b =>
-      struct(lit(b).as("band"), Text.bandSigFromBank(b, banding.rows).as("sig"))
-    }
-    stream
+    val banded = stream
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 3)
       // plain hs, NO Generate barrier on the shingle pipeline: this
@@ -239,83 +277,24 @@ object TextStreams {
       // are pure element extraction (see Text.minHashBankOnce)
       .withColumn("hs", Text.shingleHashes)
       .withColumn("mhb", Text.minHashBankOnce(banding))
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("bs.sig").as("sig"), col("bs.band").as("band"), col("doc_id"))
-      .as[(String, Int, Long)]
-      // state key is the (band, sig) PAIR — the batch bucket definition
-      // (arrivalDedup windows on (band, sig); nearDupGate anti-joins per
-      // band). Keying by sig alone would let a cross-band signature
-      // equality (~2^-60/pair, but nonzero) emit a collision the batch
-      // rule does not; the stream == batch drop-set claim is exact only
-      // under the pair key.
-      .groupByKey { case (sig, band, _) => s"$band|$sig" }
-      // a TTL'd state store needs the processing-time clock; without a
-      // TTL the operator is clock-free
-      .transformWithState(new BandOwnerProcessor(ttl),
-        if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime(),
-        OutputMode.Append())
+      .select(col("doc_id"), explode(array(bandStructs(banding): _*)).as("b"))
+    bandOwners(spark, banded, ttl).filter(col("ownerDoc") =!= col("docId"))
   }
 
-  /** One per-(arrival, band) ownership verdict: `ownerDoc == docId`
-    * means the arrival owns the bucket (first arrival inside the TTL
-    * horizon); otherwise it collides with the earlier `ownerDoc`.
-    */
-  final case class BandVerdict(docId: Long, band: Int, ownerDoc: Long)
-
-  /** [[BandOwnerProcessor]]'s total sibling: same state contract
-    * (first-arrival owner per (band, sig) key, same TTL semantics) but
-    * emits a verdict for EVERY input row, owned or not — the shape the
-    * ADMIT reduction needs, where silence cannot stand in for
-    * admission.
-    *
-    * `lean` keeps the reduction's contract at a quarter of the
-    * emission: every doc still proves presence with exactly one
-    * guaranteed row — its band-0 verdict (every banded doc has a band
-    * 0) or its doc-unique short key (band −1) — while bands 1..3 emit
-    * only NON-OWNER verdicts (the rows that can flip an admit
-    * decision). [[admittedOf]] is emission-shape-agnostic (admit iff no
-    * row shows an earlier owner), so lean and total reduce to the SAME
-    * admit set (spec-pinned); per-batch doc accounting (distinct docId)
-    * also survives, because presence is still total per doc. Measured
-    * at sf1 the total shape's 4×/doc emission is the dominant admit
-    * cost — see STREAM_SCALING.md's admit cost table.
-    */
-  class BandVerdictProcessor(ttl: TTLConfig, lean: Boolean = false)
-      extends StatefulProcessor[String, (String, Int, Long), BandVerdict] {
-    @transient private var owner: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      owner = getHandle.getValueState("owner", Encoders.scalaLong, ttl)
-
-    override def handleInputRows(sig: String, rows: Iterator[(String, Int, Long)],
-        timerValues: TimerValues): Iterator[BandVerdict] = {
-      val sorted = rows.toSeq.sortBy { case (_, _, doc) => doc }
-      var own = if (owner.exists()) owner.get() else -1L
-      val out = Seq.newBuilder[BandVerdict]
-      sorted.foreach { case (_, band, doc) =>
-        if (own < 0L) { own = doc; owner.update(doc) }
-        if (!lean || band <= 0 || doc != own)
-          out += BandVerdict(doc, band, own)
-      }
-      out.result().iterator
-    }
-  }
-
-  /** The ADMITTED-stream side of intra-stream near-dup: per arrival,
-    * one verdict per band bucket ([[BandVerdict]]), from which
-    * [[admittedOf]] reduces the batch-q123 KEEP set — admit iff the doc
-    * owns EVERY one of its buckets. [[streamingLshCollisions]] is the
-    * quarantine feed (emits only the collisions); this is its total
-    * complement for pipelines that want the deduped stream itself, at
-    * the same cost: identical banding, identical single
-    * `transformWithState`, identical O(distinct signatures in the
-    * horizon) state.
+  /** The ADMITTED-stream side of intra-stream near-dup: per arrival, the
+    * [[BandOwnerProcessor]] verdicts, from which [[admittedOf]] reduces
+    * the batch-q123 KEEP set — admit iff the doc owns EVERY one of its
+    * buckets. [[streamingLshCollisions]] is the quarantine feed (its
+    * non-owner rows); this adds each doc's presence row for pipelines
+    * that want the deduped stream itself, at the same cost: identical
+    * banding, identical single `transformWithState`, identical
+    * O(distinct signatures in the horizon) state.
     *
     * Docs under 3 words carry no band signatures and are NEVER dropped
     * by the batch rule; silence would read as a missing verdict, so
     * each short doc flows through the SAME operator under a
     * doc-unique key (`band = -1`) it trivially owns — one TTL'd state
-    * row, the price of a total output. The per-doc admit decision is
+    * row, the price of per-doc presence. The per-doc admit decision is
     * complete WITHIN each micro-batch (an arrival's verdicts are
     * produced by the batch that processed it), so [[admittedOf]] runs
     * inside `foreachBatch` with no second stateful operator.
@@ -326,14 +305,10 @@ object TextStreams {
     * `processAllAvailable`.
     */
   def streamingNearDupAdmit(spark: SparkSession, stream: DataFrame,
-      ttl: TTLConfig = TTLConfig.NONE, lean: Boolean = false,
+      ttl: TTLConfig = TTLConfig.NONE,
       banding: Banding = Banding.Default): Dataset[BandVerdict] = {
-    import spark.implicits._
     import graft.operators.Text
-    val bandStructs = (0 until banding.bands).map { b =>
-      struct(lit(b).as("band"), Text.bandSigFromBank(b, banding.rows).as("sig"))
-    }
-    stream
+    val banded = stream
       .withColumn("w", split(col("text"), " "))
       .withColumn("hs", Text.shingleHashesOnce)
       // the bank behind its own barrier: the conditional band array
@@ -342,16 +317,11 @@ object TextStreams {
       // BAND — measured 2,300 vs 4,912 rows/s on the 500k-doc drain
       .withColumn("mhb", Text.minHashBankOnce(banding))
       .withColumn("bs",
-        when(size(col("w")) >= 3, array(bandStructs: _*))
+        when(size(col("w")) >= 3, array(bandStructs(banding): _*))
           .otherwise(array(struct(lit(-1).as("band"),
             concat(lit("short|"), col("doc_id")).as("sig")))))
       .select(col("doc_id"), explode(col("bs")).as("b"))
-      .select(col("b.sig").as("sig"), col("b.band").as("band"), col("doc_id"))
-      .as[(String, Int, Long)]
-      .groupByKey { case (sig, band, _) => s"$band|$sig" }
-      .transformWithState(new BandVerdictProcessor(ttl, lean),
-        if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime(),
-        OutputMode.Append())
+    bandOwners(spark, banded, ttl)
   }
 
   /** Reduce one micro-batch of [[streamingNearDupAdmit]] verdicts to
@@ -608,70 +578,85 @@ object TextStreams {
     */
   private[graft] def hash60(s: String): Long = graft.functions.Hash60.of(s)
 
-  /** The q90 count-min sketch maintained INCREMENTALLY over a term
-    * stream: each sketch cell (hash row j × bucket) is one
-    * `transformWithState` key holding its running sum, so the sketch
-    * partitions across executors, lives in the state store (RocksDB,
-    * checkpoint-restartable) and never needs a batch rebuild. Emits the
-    * updated (cell, sum) on every change; after any prefix of the
-    * stream the emitted cell sums equal the batch sketch built over the
-    * same terms — asserted in `EventStreamsSpec`.
-    *
-    * Per-key merge happens once per micro-batch (the input iterator
-    * carries the key's whole batch), so state writes are O(touched
-    * cells), not O(stream rows).
+  /** One running SUM per state key — a count-min cell. Per-key merge
+    * happens once per micro-batch (the input iterator carries the key's
+    * whole batch), so state writes are O(touched keys), not O(stream
+    * rows). Emits the updated (key, sum) on every change.
     */
-  class CountMinCellProcessor
-      extends StatefulProcessor[Long, (Long, Long), (Long, Long)] {
+  class RunningSumProcessor[K]
+      extends StatefulProcessor[K, (K, Long), (K, Long)] {
     @transient private var sum: ValueState[Long] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       sum = getHandle.getValueState("sum", Encoders.scalaLong, TTLConfig.NONE)
 
-    override def handleInputRows(cell: Long, rows: Iterator[(Long, Long)],
-        timerValues: TimerValues): Iterator[(Long, Long)] = {
+    override def handleInputRows(key: K, rows: Iterator[(K, Long)],
+        timerValues: TimerValues): Iterator[(K, Long)] = {
       val next = (if (sum.exists()) sum.get() else 0L) + rows.map(_._2).sum
       sum.update(next)
-      Iterator.single(cell -> next)
+      Iterator.single(key -> next)
     }
   }
 
-  /** `ds` = one row per term occurrence. Cell id = j·w + bucket, the
-    * same d=4 salted buckets as the batch q90 sketch.
+  /** One running MAX per state key — an HLL register. Monotone, so
+    * per-batch merges and checkpoint restores are order-insensitive and
+    * exact. Emits (key, rank) only on increase: at most 24 emissions per
+    * register over a stream's whole lifetime.
+    */
+  class RunningMaxProcessor[K]
+      extends StatefulProcessor[K, (K, Int), (K, Int)] {
+    @transient private var reg: ValueState[Int] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      reg = getHandle.getValueState("r", Encoders.scalaInt, TTLConfig.NONE)
+
+    override def handleInputRows(key: K, rows: Iterator[(K, Int)],
+        timerValues: TimerValues): Iterator[(K, Int)] = {
+      val incoming = rows.map(_._2).max
+      val cur = if (reg.exists()) reg.get() else 0
+      if (incoming > cur) {
+        reg.update(incoming)
+        Iterator.single(key -> incoming)
+      } else Iterator.empty
+    }
+  }
+
+  /** The 4 count-min cells `term` increments: cell id = j·w + bucket,
+    * the same d=4 salted buckets as the batch q90 sketch.
+    */
+  private[graft] def countMinCells(term: String): Seq[Long] = {
+    val w = graft.operators.Text.CountMinWidth
+    (0 until 4).map(j => j.toLong * w + hash60(s"$term#$j") % w)
+  }
+
+  /** The HLL register `item` updates and its rank: the batch q134
+    * sketch's 256 buckets of the 60-bit hash and its trailing-zero rank
+    * of the remaining bits, capped at 24.
+    */
+  private[graft] def hllRegister(item: String): (Long, Int) = {
+    val h = hash60(item)
+    val v = h >>> 8
+    val rho =
+      if (v == 0L) 24
+      else math.min(java.lang.Long.numberOfTrailingZeros(v) + 1, 24)
+    (h % 256, rho)
+  }
+
+  /** The q90 count-min sketch maintained INCREMENTALLY over a term
+    * stream (`ds` = one row per term occurrence): each sketch cell is
+    * one `transformWithState` key holding its running sum, so the sketch
+    * partitions across executors, lives in the state store (RocksDB,
+    * checkpoint-restartable) and never needs a batch rebuild. After any
+    * prefix of the stream the emitted cell sums equal the batch sketch
+    * built over the same terms — asserted in `EventStreamsSpec`.
     */
   def streamingCountMin(spark: SparkSession,
       ds: Dataset[String]): Dataset[(Long, Long)] = {
     import spark.implicits._
-    val w = graft.operators.Text.CountMinWidth
-    ds.flatMap { term =>
-      (0 until 4).map(j => (j.toLong * w + hash60(s"$term#$j") % w, 1L))
-    }
+    ds.flatMap(term => countMinCells(term).map(_ -> 1L))
       .groupByKey(_._1)
-      .transformWithState(new CountMinCellProcessor,
+      .transformWithState(new RunningSumProcessor[Long],
         TimeMode.None(), OutputMode.Update())
-  }
-
-  /** One cell of one GROUP's count-min sketch per state key — the
-    * keyed variant of [[CountMinCellProcessor]] for maintaining many
-    * sketches (one per lang/source/domain) in a single operator. Same
-    * once-per-micro-batch running-sum rule; state is bounded at
-    * 4·w cells PER GROUP regardless of stream length.
-    */
-  class KeyedCountMinCellProcessor
-      extends StatefulProcessor[(String, Long), (String, Long, Long),
-        (String, Long, Long)] {
-    @transient private var sum: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      sum = getHandle.getValueState("sum", Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(key: (String, Long),
-        rows: Iterator[(String, Long, Long)],
-        timerValues: TimerValues): Iterator[(String, Long, Long)] = {
-      val next = (if (sum.exists()) sum.get() else 0L) + rows.map(_._3).sum
-      sum.update(next)
-      Iterator.single((key._1, key._2, next))
-    }
   }
 
   /** MANY live count-min sketches in one operator — [[streamingCountMin]]
@@ -684,92 +669,31 @@ object TextStreams {
   def streamingCountMinBy(spark: SparkSession,
       ds: Dataset[(String, String)]): Dataset[(String, Long, Long)] = {
     import spark.implicits._
-    val w = graft.operators.Text.CountMinWidth
-    ds.flatMap { case (grp, term) =>
-      (0 until 4).map(j =>
-        (grp, j.toLong * w + hash60(s"$term#$j") % w, 1L))
-    }
-      .groupByKey { case (grp, cell, _) => (grp, cell) }
-      .transformWithState(new KeyedCountMinCellProcessor,
+    ds.flatMap { case (grp, term) => countMinCells(term).map(c => ((grp, c), 1L)) }
+      .groupByKey(_._1)
+      .transformWithState(new RunningSumProcessor[(String, Long)],
         TimeMode.None(), OutputMode.Update())
-  }
-
-  /** One HLL register as one `transformWithState` key: its value is
-    * the running MAX rank — monotone, so per-batch merges and
-    * checkpoint restores are order-insensitive and exact. Emits
-    * (bucket, rank) only on increase: at most 24 emissions per
-    * register over a stream's whole lifetime.
-    */
-  class HllRegisterProcessor
-      extends StatefulProcessor[Long, (Long, Int), (Long, Int)] {
-    @transient private var reg: ValueState[Int] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      reg = getHandle.getValueState("r", Encoders.scalaInt, TTLConfig.NONE)
-
-    override def handleInputRows(bucket: Long, rows: Iterator[(Long, Int)],
-        timerValues: TimerValues): Iterator[(Long, Int)] = {
-      val incoming = rows.map(_._2).max
-      val cur = if (reg.exists()) reg.get() else 0
-      if (incoming > cur) {
-        reg.update(incoming)
-        Iterator.single(bucket -> incoming)
-      } else Iterator.empty
-    }
+      .map { case ((grp, cell), sum) => (grp, cell, sum) }
   }
 
   /** The q134 HyperLogLog maintained INCREMENTALLY over an item
     * stream — the live distinct counter: each of the 256 registers is
-    * one `transformWithState` key holding its running max rank
-    * (same 60-bit hash, same trailing-zero rank capped at 24 as the
-    * batch sketch), so the sketch partitions across executors, lives
-    * in the state store, and never needs a batch rebuild. Duplicate
-    * and re-fed items are absorbed by the max — exactly the HLL
-    * insert rule. After any stream prefix, the latest emission per
-    * bucket equals the batch register table over the same items, and
-    * [[hllEstimate]] over those registers is the batch q134 estimate —
-    * asserted in `EventStreamsSpec`.
+    * one `transformWithState` key holding its running max rank, so the
+    * sketch partitions across executors, lives in the state store, and
+    * never needs a batch rebuild. Duplicate and re-fed items are
+    * absorbed by the max — exactly the HLL insert rule. After any
+    * stream prefix, the latest emission per bucket equals the batch
+    * register table over the same items, and [[hllEstimate]] over those
+    * registers is the batch q134 estimate — asserted in
+    * `EventStreamsSpec`.
     */
   def streamingHll(spark: SparkSession,
       ds: Dataset[String]): Dataset[(Long, Int)] = {
     import spark.implicits._
-    ds.map { item =>
-      val h = hash60(item)
-      val v = h >>> 8
-      val rho =
-        if (v == 0L) 24
-        else math.min(java.lang.Long.numberOfTrailingZeros(v) + 1, 24)
-      (h % 256, rho)
-    }
+    ds.map(hllRegister)
       .groupByKey(_._1)
-      .transformWithState(new HllRegisterProcessor,
+      .transformWithState(new RunningMaxProcessor[Long],
         TimeMode.None(), OutputMode.Update())
-  }
-
-  /** One register of one GROUP's sketch per state key — the keyed
-    * variant of [[HllRegisterProcessor]] for maintaining many sketches
-    * (one per (domain, lang), the q134 shape) in a single operator.
-    * Same monotone max-rank rule; emits (group, bucket, rank) only on
-    * increase.
-    */
-  class KeyedHllRegisterProcessor
-      extends StatefulProcessor[(String, Long), (String, Long, Int),
-        (String, Long, Int)] {
-    @transient private var reg: ValueState[Int] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      reg = getHandle.getValueState("r", Encoders.scalaInt, TTLConfig.NONE)
-
-    override def handleInputRows(key: (String, Long),
-        rows: Iterator[(String, Long, Int)],
-        timerValues: TimerValues): Iterator[(String, Long, Int)] = {
-      val incoming = rows.map(_._3).max
-      val cur = if (reg.exists()) reg.get() else 0
-      if (incoming > cur) {
-        reg.update(incoming)
-        Iterator.single((key._1, key._2, incoming))
-      } else Iterator.empty
-    }
   }
 
   /** MANY live HLL sketches in one operator — [[streamingHll]] keyed by
@@ -784,16 +708,13 @@ object TextStreams {
       ds: Dataset[(String, String)]): Dataset[(String, Long, Int)] = {
     import spark.implicits._
     ds.map { case (grp, item) =>
-      val h = hash60(item)
-      val v = h >>> 8
-      val rho =
-        if (v == 0L) 24
-        else math.min(java.lang.Long.numberOfTrailingZeros(v) + 1, 24)
-      (grp, h % 256, rho)
+      val (bucket, rho) = hllRegister(item)
+      ((grp, bucket), rho)
     }
-      .groupByKey { case (grp, bucket, _) => (grp, bucket) }
-      .transformWithState(new KeyedHllRegisterProcessor,
+      .groupByKey(_._1)
+      .transformWithState(new RunningMaxProcessor[(String, Long)],
         TimeMode.None(), OutputMode.Update())
+      .map { case ((grp, bucket), rank) => (grp, bucket, rank) }
   }
 
   /** The q134 estimate over a register snapshot (latest rank per

@@ -97,7 +97,7 @@ object Probe {
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val (df, build) = timed(SparkEntry.queries(name)(spark, sfDir))
       val (_, plan) = timed(df.queryExecution.executedPlan)
-      val (_, exec) = timed(df.write.format("noop").mode("overwrite").save())
+      val (_, exec) = timed(Registry.consume(df))
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       // listener events are async; give the bus a beat before reading
       Thread.sleep(300)

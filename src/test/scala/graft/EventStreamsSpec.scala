@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -355,20 +356,17 @@ class EventStreamsSpec extends SparkSpec {
     }
   }
 
-  test("LEAN admit emission reduces to the same admit set as the total " +
-      "shape, at under half the verdict rows") {
+  test("admit emission: one presence row per doc plus every non-owner " +
+      "verdict, and its non-owner rows are exactly the collision feed") {
     withRocksDb {
       import spark.implicits._
-      // TTLConfig.NONE keeps the run deterministic (a TTL'd horizon
-      // evicts on the wall clock, so two pacing-different runs can admit
-      // differently — that's TTL timing, not emission shape)
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text")).orderBy(col("doc_id"))
         .as[(Long, String)].collect()
-      def run(lean: Boolean, name: String): (Set[Long], Long, Set[Long]) = {
+      def run(name: String, op: DataFrame => Dataset[TextStreams.BandVerdict])
+          : Seq[(Long, Int, Long)] = {
         val mem = MemoryStream[(Long, String)](spark)
-        val q = TextStreams.streamingNearDupAdmit(
-          spark, mem.toDF().toDF("doc_id", "text"), lean = lean)
+        val q = op(mem.toDF().toDF("doc_id", "text"))
           .writeStream.format("memory").queryName(name)
           .outputMode(OutputMode.Append).start()
         try {
@@ -376,20 +374,22 @@ class EventStreamsSpec extends SparkSpec {
             mem.addData(slice.toSeq)
             q.processAllAvailable()
           }
-          val out = spark.table(name)
-          (TextStreams.admittedOf(out).as[Long].collect().toSet,
-            out.count(),
-            out.select(col("docId")).distinct().as[Long].collect().toSet)
+          spark.table(name).as[(Long, Int, Long)].collect().toSeq
         } finally q.stop()
       }
-      val (admitTotal, rowsTotal, docsTotal) = run(lean = false, "lean_a")
-      val (admitLean, rowsLean, docsLean) = run(lean = true, "lean_b")
-      assert(admitLean === admitTotal, "emission shape changed the admit set")
-      // presence stays total per doc: the per-batch doc accounting the
-      // ingest loop derives from DISTINCT docId is shape-invariant
-      assert(docsLean === docsTotal)
-      assert(rowsLean * 2 < rowsTotal,
-        s"lean should cut emission >2x (got $rowsLean vs $rowsTotal)")
+      val admit = run("shape_admit", TextStreams.streamingNearDupAdmit(spark, _))
+      val coll = run("shape_coll", TextStreams.streamingLshCollisions(spark, _))
+      val ids = docs.map(_._1).toSet
+      assert(admit.map(_._1).toSet === ids, "every input doc must prove presence")
+      // the presence row: band 0 for a banded doc, band -1 for a short one
+      val presence = admit.filter(_._2 <= 0).groupBy(_._1).view.mapValues(_.size).toMap
+      assert(presence.keySet === ids && presence.values.forall(_ == 1),
+        "exactly one band <= 0 row per doc")
+      assert(!admit.exists { case (doc, band, own) => band > 0 && own == doc },
+        "a band > 0 owner row carries nothing admittedOf reads")
+      assert(coll.sorted === admit.filter { case (doc, _, own) => own != doc }.sorted,
+        "the collision feed must be the admit feed's non-owner rows")
+      assert(coll.nonEmpty, "fixture must contain collisions")
     }
   }
 

@@ -55,17 +55,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(fast(4L) === Some(slow(4L)), "non-ASCII code-point path must match")
   }
 
-  test("prefix-filtered Jaccard variant == direct inverted-index join") {
-    val sh = Text.shinglesOf(sources.Tables.documents(spark, sfDir))
-    val direct = Text.ngramJaccardPairsOf(sh, 0.5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val prefixed = Text.ngramJaccardPairsPrefix(sh, 0.5).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(direct.nonEmpty)
-    assert(prefixed === direct,
-      s"missed=${(direct -- prefixed).take(5)} invented=${(prefixed -- direct).take(5)}")
-  }
-
   test("simhash: identical docs collide, hamming distance is edit-robust") {
     val sh = Text.simhash(spark, sfDir)
     assert(sh.count() === 500)

@@ -43,8 +43,16 @@ HASH60_NOTE = [
     "re-measured.",
 ]
 
+ADMIT_NOTE = [
+    "Measured under the total emission shape: one verdict per (arrival,",
+    "band). `streamingNearDupAdmit` now emits the non-owner verdicts plus",
+    "one presence row per doc, about a quarter of the rows at 4 bands, for",
+    "the same admit set. Not re-measured.",
+]
+
 # prose under a stage's table
-STAGE_NOTES = {"hll_live": HASH60_NOTE, "countmin_live": HASH60_NOTE}
+STAGE_NOTES = {"hll_live": HASH60_NOTE, "countmin_live": HASH60_NOTE,
+               "admit": ADMIT_NOTE, "admit_drain": ADMIT_NOTE}
 
 # a knob artifact measured before a change to what the stage decides
 KNOB_NOTES = {
@@ -256,6 +264,8 @@ def main():
                     f"| {v.get('warmup_batch_ms', '-')} "
                     f"| {v['kept_up']} |")
         lines.append("")
+        if "paced_admit" in paced:
+            lines.extend(["`paced_admit`:"] + ADMIT_NOTE + [""])
 
     # compaction handoff: state rows moved out of the store per run
     if any("lsh_compaction" in d for _, d in runs):
