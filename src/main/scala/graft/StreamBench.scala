@@ -482,13 +482,13 @@ object StreamBench {
     drain(c, "sb", streaming.EventStreams.tumblingSignupsOn(c.eventsStream, "1 hour"),
       OutputMode.Complete, c.totalRows)
 
-  // stage 2: near-dup ingest gate (stateless stream-static anti-joins;
-  // static sides read from the fingerprint-keyed LANDED stages, so a
-  // bench run after a verify run pays a parquet scan, not a
-  // shingle-pipeline derivation — the gate-restart contract)
+  // stage 2: near-dup ingest gate (stateless stream-static anti-joins)
+  // over the lake's landed src0 index: a bench run after a verify run
+  // reads the published epoch, not a shingle-pipeline derivation — the
+  // gate-restart contract
   private def gateDf(c: Ctx): DataFrame =
-    streaming.TextStreams.nearDupGateLanded(c.spark, c.arrivals, c.sfDir,
-      banding = c.lakeBanding)
+    streaming.IndexCompaction.gate(c.spark, streaming.IndexCompaction.lakeIndex(
+      c.spark, c.sfDir, "gate_idx_src0", c.corpus, c.lakeBanding), c.arrivals)
   private def gate(c: Ctx): String =
     drain(c, "gate", gateDf(c), OutputMode.Append, c.gateIn)
 
@@ -851,13 +851,8 @@ object StreamBench {
     val dstream = c.fileStream(docsAll.schema, s"${c.base}/docs_all")
     val toks = dstream.select(lit("token").as("domain"), col("lang"),
       explode(split(col("text"), " ")).as("item"))
-    val shing = dstream
-      .select(col("lang"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= 3)
-      .select(lit("shingle").as("domain"), col("lang"),
-        explode(array_distinct(expr(
-          "transform(sequence(0, size(w)-3), i -> concat_ws(' ', slice(w, i+1, 3)))"
-        ))).as("item"))
+    val shing = operators.Text.shinglesOf(dstream, "lang")
+      .select(lit("shingle").as("domain"), col("lang"), col("sh").as("item"))
     val items = toks.unionAll(shing)
       .select(concat_ws("|", col("domain"), col("lang")), col("item"))
       .as[(String, String)]
@@ -970,7 +965,7 @@ object StreamBench {
     val bridgeOnly =
       if (extras.isEmpty) true
       else {
-        val bands = operators.Text.mhBands(
+        val bands = operators.Text.bandRows(
           operators.Text.minhashAgg(spark, c.sfDir, c.lakeBanding), c.lakeBanding)
         bands.as("a")
           .join(bands.as("b"),

@@ -78,9 +78,8 @@ object TextQueries {
   private[graft] def BAND_CTES: String = BAND_CTES_OF("documents")
 
   private[graft] def BAND_CTES_OF(src: String): String = {
-    val P = 1073741789L
-    val mins = (0 until 8).map(j =>
-      s"MIN((${operators.Text.mhA(j)} * h + ${operators.Text.mhB(j)}) % $P) AS mh$j")
+    import graft.functions.MinHashes60.{P, mhA, mhB}
+    val mins = (0 until 8).map(j => s"MIN((${mhA(j)} * h + ${mhB(j)}) % $P) AS mh$j")
       .mkString(", ")
     s"""${SHINGLES_OF(src)},
        |shh AS (SELECT doc_id, ${h60("sh")} % $P AS h FROM sh),
@@ -133,40 +132,36 @@ object TextQueries {
     * past [[operators.Text.AuditSampleTarget]] docs the probe side is a
     * deterministic 1/mod sample of the corpus, stratified by CONTENT
     * FINGERPRINT — here mh0, the first seeded minhash, which the landed
-    * minhash aggregate already carries, so the sample costs ONE pushed
-    * filter on a doc-sized scan (no shingle re-aggregation). mh0
-    * conditioning keeps collision partners together (docs sharing a
-    * band-0 bucket share mh0 by construction; partners in other bands
-    * share it with probability ≈ Jaccard), so the sampled audit is
-    * positives-enriched — the right bias for a drop-decision audit,
-    * and deterministic in any engine (the oracle computes the same
-    * mh0). Sentinel 0 derives the mod from corpus size: mod 1 (the
-    * FULL audit — bit-identical to the pre-derivation q152) at every
-    * driver SF, sf1 and sf10; mod 16 first at the 5M-doc fourth
-    * decade. The m≥2 solo-bucket skip stays valid for any corpus
-    * SUBSET: a sampled doc in a size-1 bucket is that bucket's owner,
-    * so it can never be a drop.
+    * minhash stage already carries, so the sample costs ONE filter on
+    * a doc-sized scan (no shingle re-aggregation). mh0 conditioning
+    * keeps collision partners together (docs sharing a band-0 bucket
+    * share mh0 by construction; partners in other bands share it with
+    * probability ≈ Jaccard), so the sampled audit is positives-enriched
+    * — the right bias for a drop-decision audit, and deterministic in
+    * any engine (the oracle computes the same mh0). Sentinel 0 derives
+    * the mod from corpus size: mod 1 (the FULL audit — bit-identical to
+    * the pre-derivation q152) at every driver SF, sf1 and sf10; mod 16
+    * first at the 5M-doc fourth decade. The m≥2 solo-bucket skip stays
+    * valid for any corpus SUBSET: a sampled doc in a size-1 bucket is
+    * that bucket's owner, so it can never be a drop.
     */
   private def arrivalAuditIndexed(s: org.apache.spark.sql.SparkSession,
       d: String, sampleMod: Int = 0): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, element_at}
     val bd = operators.Text.bandingOf(s, d)
-    // v2: the epoch-bands layout grew (owner, m) audit columns — the
-    // versioned key keeps a pre-upgrade artifact from being reused
-    val root = operators.Materialize.artifactRoot(s"text_idx_v2_$d", d)
-    graft.streaming.IndexCompaction.init(s, root.getPath,
+    val root = graft.streaming.IndexCompaction.lakeIndex(s, d, "text_idx",
       graft.sources.Tables.documents(s, d).select(col("doc_id"), col("text")),
       bd)
     val mod =
       if (sampleMod > 0) sampleMod
       else operators.Text.sampleModOf(operators.Text.nDocsOf(s, d),
         operators.Text.AuditSampleTarget)
-    // self-audit from the LANDED batch minhash aggregate (pinned equal
-    // to the per-row banding) — no per-row re-banding of the corpus
+    // self-audit from the LANDED batch minhash stage (pinned equal to
+    // the per-row banding) — no per-row re-banding of the corpus
     val mh = operators.Text.minhashAgg(s, d, bd)
-    val probe = if (mod <= 1) mh else mh.filter(col("mh0") % mod === 0)
-    graft.streaming.IndexCompaction.arrivalSelfAudit(s, root.getPath,
-      operators.Text.mhBands(probe, bd))
+    val probe = if (mod <= 1) mh else mh.filter(element_at(col("mhb"), 1) % mod === 0)
+    graft.streaming.IndexCompaction.arrivalSelfAudit(s, root,
+      operators.Text.bandRows(probe, bd))
   }
 
   def defs: Seq[QueryDef] = Seq(
@@ -236,10 +231,10 @@ object TextQueries {
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     // q152: the INDEX-BACKED arrival-order audit — q123's decisions
     // re-derived through the dedup service's own landed epoch index
-    // (IndexCompaction.arrivalAudit over a Materialize-rooted index of
-    // the corpus). This is the serving path oracle-pinned: the index
+    // (IndexCompaction.arrivalSelfAudit over a Materialize-rooted index
+    // of the corpus). This is the serving path oracle-pinned: the index
     // side is READ (epoch owners min-folded), the docs side is the
-    // per-row streaming banding, and a re-audit after a compaction
+    // landed minhash stage's bands, and a re-audit after a compaction
     // costs O(delta) instead of re-paying the bands×corpus aggregate.
     // The DuckDB twin is spelled independently of q123's (GROUP-BY
     // owners join, not a window).
@@ -260,7 +255,7 @@ object TextQueries {
     // audit join is the steepest remaining audit cell) has its own
     // exact DuckDB twin at every driver SF. The sample is stratified
     // by mh0 — the first seeded minhash, a content fingerprint the
-    // landed aggregate already carries (one pushed filter, no shingle
+    // landed minhash stage already carries (one filter, no shingle
     // re-aggregation; the oracle's mh CTE computes the identical
     // value). The OWNERS side stays the FULL index — per-doc drop
     // decisions are exact, only the set of audited docs is sampled.
@@ -278,20 +273,7 @@ object TextQueries {
          |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin)),
 
     QueryDef("q35_minhash_lsh", (s, d) => minhashLshPairs(s, d), Some {
-      val P = 1073741789L
-      val mins = (0 until 8).map(j =>
-        s"MIN((${operators.Text.mhA(j)} * h + ${operators.Text.mhB(j)}) % $P) AS mh$j")
-        .mkString(", ")
-      s"""WITH $SHINGLES,
-         |shh AS (SELECT doc_id, ${h60("sh")} % $P AS h FROM sh),
-         |mh AS (
-         |  SELECT doc_id, $mins
-         |  FROM shh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, concat_ws('_', mh0, mh1) AS sig FROM mh
-         |  UNION ALL SELECT doc_id, 1, concat_ws('_', mh2, mh3) FROM mh
-         |  UNION ALL SELECT doc_id, 2, concat_ws('_', mh4, mh5) FROM mh
-         |  UNION ALL SELECT doc_id, 3, concat_ws('_', mh6, mh7) FROM mh),
+      s"""WITH $BAND_CTES,
          |cand AS (
          |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
          |  FROM bands a JOIN bands b
@@ -309,18 +291,7 @@ object TextQueries {
     }),
 
     QueryDef("q49_edit_distance", (s, d) => editDistancePairs(s, d), Some {
-      val P = 1073741789L
-      val mins = (0 until 8).map(j =>
-        s"MIN((${operators.Text.mhA(j)} * h + ${operators.Text.mhB(j)}) % $P) AS mh$j")
-        .mkString(", ")
-      s"""WITH $SHINGLES,
-         |shh AS (SELECT doc_id, ${h60("sh")} % $P AS h FROM sh),
-         |mh AS (SELECT doc_id, $mins FROM shh GROUP BY doc_id),
-         |bands AS (
-         |  SELECT doc_id, 0 AS band, concat_ws('_', mh0, mh1) AS sig FROM mh
-         |  UNION ALL SELECT doc_id, 1, concat_ws('_', mh2, mh3) FROM mh
-         |  UNION ALL SELECT doc_id, 2, concat_ws('_', mh4, mh5) FROM mh
-         |  UNION ALL SELECT doc_id, 3, concat_ws('_', mh6, mh7) FROM mh),
+      s"""WITH $BAND_CTES,
          |cand0 AS (
          |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
          |  FROM bands a JOIN bands b

@@ -8,14 +8,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Codegen'd one-pass seeded-minhash bank: `min_hashes60(hs, nMh)` =
   * the array of `nMh` minima `min_h (a_j·h + b_j) mod P` over the
-  * row's shingle-hash set `hs`, with the shared universal family
-  * `a_j/b_j` (operators.Text.mhA/mhB's LCG constants, P = 2³⁰-ish
-  * prime — all products stay under 2⁶⁰, exact 64-bit arithmetic).
+  * row's shingle-hash set `hs`, with the universal family
+  * `a_j/b_j` defined below (the one definition of the family: the
+  * batch minhash stage, the streaming gate/admit banding and the DuckDB
+  * oracle SQL all read it from here).
   *
   * Semantically identical to `nMh` separate
   * `array_min(transform(hs, h -> (a_jL * h + b_jL) % PL))` columns
   * (pinned element-for-element in BandingSpec/PipelineOpsSpec against
-  * the batch groupBy path) but computed in ONE primitive pass: the
+  * an explicit `min` aggregate) but computed in ONE primitive pass: the
   * higher-order form is interpreted — outside whole-stage codegen and
   * its subexpression elimination — and allocates a boxed intermediate
   * array PER MINHASH per row, which at the corpus-derived banding
@@ -64,10 +65,15 @@ case class MinHashes60(left: Expression, right: Expression)
 
 object MinHashes60 {
 
-  /** Shared with operators.Text's oracle constants. */
+  /** Universal-hash family for MinHash: one md5 per shingle, then
+    * `h_j = (a_j * (h mod P) + b_j) mod P` with P < 2^30 so every
+    * product stays below 2^60 — exact, overflow-free 64-bit arithmetic
+    * on any engine. The constants derive from a fixed LCG so the oracle
+    * SQL embeds the same literals.
+    */
   val P: Long = 1073741789L
-  private def mhA(j: Int): Long = (1103515245L * (j + 1) + 12345L) % P
-  private def mhB(j: Int): Long = (1103515245L * (j + 101) + 54321L) % P
+  def mhA(j: Int): Long = (1103515245L * (j + 1) + 12345L) % P
+  def mhB(j: Int): Long = (1103515245L * (j + 101) + 54321L) % P
 
   /** (a, b) constant banks, cached per depth (one per JVM per nMh). */
   private val consts =

@@ -18,16 +18,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Cross-run reuse & staleness: landed tables live under one shared
   * scratch root, and each stage's directory name carries a FINGERPRINT
-  * of its source data dir (relative file names + sizes + mtimes). A
-  * second JVM over the same inputs computes the same fingerprint and
+  * of its source data dir (relative file names + sizes + mtimes) and
+  * the [[buildTag]] of the engine build that landed it. A second JVM
+  * of the same build over the same inputs computes the same name and
   * reads the landed stage (a test run followed by a bench run pays the
   * stage graph once, like a warm lake); any in-place change to the
-  * source data changes the fingerprint, so the new run builds fresh.
-  * Keys are additionally namespaced by source dir and every semantic
-  * parameter (threshold, table counts, …) — but never by the CODE that
-  * built the stage: a stage landed by an older build of a pipeline is
-  * served to a newer one over the same data. Check a change to how a
-  * stage is built under a fresh root (`-Djava.io.tmpdir=<new dir>`).
+  * source data changes the fingerprint, and any rebuild of the engine
+  * changes the tag, so the new run builds fresh — a stage landed by
+  * another build of a pipeline is never served. Keys are additionally
+  * namespaced by source dir and every semantic parameter (threshold,
+  * table counts, …).
   *
   * Publish is ATOMIC: each build writes to a process-private temp dir
   * and renames it into place (same filesystem), so a reader can never
@@ -39,7 +39,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Sweeping (all fail-safe — a disk leak beats deleting a live run's
   * tables): at startup, published stages whose recorded source dir now
   * fingerprints differently (data changed or deleted) are removed, as
-  * are crashed builds' temp dirs whose embedded host matches this
+  * are stages of another engine build left untouched for
+  * [[LegacyTmpGraceMs]] (a run touches every stage it uses, so a live
+  * run of another build keeps its stages), and crashed builds' temp
+  * dirs whose embedded host matches this
   * machine AND whose owner pid is provably dead (a foreign host's pid
   * is meaningless in the local /proc, so its temp dirs are never
   * touched). Legacy per-process scratch dirs from older layouts are
@@ -99,6 +102,26 @@ object Materialize {
     }
   }
 
+  /** Fingerprint of the engine build this class was loaded from: the
+    * code source of `graft.operators.Materialize` — a classes directory
+    * through the [[fingerprint]] walk, a jar by its size and mtime (an
+    * unknown source yields "nobuild"). Computed once per JVM; every
+    * stage name carries it.
+    */
+  private[graft] lazy val buildTag: String = {
+    val src = Option(getClass.getProtectionDomain.getCodeSource)
+      .map(cs => java.nio.file.Paths.get(cs.getLocation.toURI))
+    src match {
+      case Some(p) if java.nio.file.Files.isDirectory(p) => fingerprint(p.toString)
+      case Some(p) if java.nio.file.Files.isRegularFile(p) =>
+        java.security.MessageDigest.getInstance("MD5")
+          .digest(s"${java.nio.file.Files.size(p)}:${p.toFile.lastModified}"
+            .getBytes("UTF-8"))
+          .take(8).map(b => f"$b%02x").mkString
+      case _ => "nobuild"
+    }
+  }
+
   // fingerprints are computed once per (process, source dir): stages are
   // keyed for a consistent view within one run even if data changes
   // mid-run (which the test suites never do), and the walk isn't re-paid
@@ -154,9 +177,20 @@ object Materialize {
   private[graft] def tmpName(base: String): String =
     s"$base.tmp_${pid}_${hostTag}_${System.nanoTime()}"
 
+  /** Name of `key`'s stage dir for engine build `tag` and source-data
+    * fingerprint `fp`: `<key>__<tag>_<fp>` (the key with every
+    * non-alphanumeric character mapped to '_').
+    */
+  private[graft] def stageName(key: String, tag: String, fp: String): String =
+    key.map(c => if (c.isLetterOrDigit) c else '_') + s"__${tag}_$fp"
+
   /** Fail-SAFE staleness test for an entry under the shared root.
-    * Published stage dirs (name `<key>__<fp>`, marker present): stale
-    * iff the recorded source dir now fingerprints differently.
+    * Published stage dirs (name `<key>__<tag>_<fp>`, marker present):
+    * stale iff the recorded source dir now fingerprints differently,
+    * or the stage belongs to another engine build (a tag other than
+    * `tag`, or none: the pre-tag `<key>__<fp>` layout) and its dir has
+    * sat untouched past [[LegacyTmpGraceMs]] — a run touches every
+    * stage it uses, so a live run of another build keeps its own.
     * Abandoned temp dirs (name `…​.tmp_<pid>_<host>_<nanos>`): stale iff
     * the embedded host matches THIS machine AND the owner pid is
     * provably dead — on shared storage a remote run's pid is
@@ -175,7 +209,8 @@ object Materialize {
   private[graft] def isStaleShared(dir: java.io.File,
       procRoot: java.io.File = new java.io.File("/proc"),
       host: String = hostTag,
-      nowMs: Long = System.currentTimeMillis()): Boolean = {
+      nowMs: Long = System.currentTimeMillis(),
+      tag: String = buildTag): Boolean = {
     val name = dir.getName
     val tmpIdx = name.indexOf(".tmp_")
     if (tmpIdx >= 0) {
@@ -212,9 +247,14 @@ object Materialize {
         mtime > 0L && nowMs - mtime > LegacyTmpGraceMs
       } else {
         val named = name.drop(fpIdx + 2)
+        val sep = named.lastIndexOf('_')
+        val (stageTag, fp) =
+          if (sep < 0) ("", named) else (named.take(sep), named.drop(sep + 1))
         val src = try java.nio.file.Files.readString(marker.toPath).trim
                   catch { case _: Throwable => return false }
-        fingerprint(src) != named
+        val mtime = dir.lastModified()
+        fingerprint(src) != fp || stageTag != tag && mtime > 0L &&
+          nowMs - mtime > LegacyTmpGraceMs
       }
     }
   }
@@ -276,12 +316,6 @@ object Materialize {
       .map(d => d.getName -> sz(d)).toMap
   }
 
-  /** Return `key`'s materialized table for source data `srcDir`,
-    * building and landing it on first use in any process. `build` must
-    * be deterministic for (key, source data) — all semantic parameters
-    * encoded in the key — which every graft pipeline stage is by
-    * construction.
-    */
   /** A stable landed-ARTIFACT root (not a single parquet table) keyed
     * like [[table]] — for stages with their own multi-dir layout, e.g.
     * an IndexCompaction epoch index. The caller owns the layout and
@@ -292,10 +326,9 @@ object Materialize {
     * exactly the staleness discipline every landed table gets.
     */
   def artifactRoot(key: String, srcDir: String): java.io.File = {
-    val safe = key.map(c => if (c.isLetterOrDigit) c else '_') +
-      "__" + fpOf(srcDir)
-    val dir = new java.io.File(base, safe)
+    val dir = new java.io.File(base, stageName(key, buildTag, fpOf(srcDir)))
     if (dir.mkdirs() || dir.isDirectory) {
+      dir.setLastModified(System.currentTimeMillis()): Unit
       val marker = dir.toPath.resolve(SrcMarker)
       if (!java.nio.file.Files.exists(marker)) {
         // marker lands ATOMICALLY (tmp + move), like table()'s publish:
@@ -318,15 +351,24 @@ object Materialize {
     dir
   }
 
+  /** Return `key`'s materialized table for source data `srcDir`,
+    * building and landing it on first use in any process of the same
+    * engine build (`tag`, the [[buildTag]] outside tests). `build` must
+    * be deterministic for (key, source data, build) — all semantic
+    * parameters encoded in the key — which every graft pipeline stage
+    * is by construction. A process's first use of a landed stage
+    * touches its dir (see [[isStaleShared]]).
+    */
   def table(s: SparkSession, key: String, srcDir: String,
-      build: => DataFrame): DataFrame = {
-    val safe = key.map(c => if (c.isLetterOrDigit) c else '_') +
-      "__" + fpOf(srcDir)
+      build: => DataFrame, tag: String = buildTag): DataFrame = {
+    val safe = stageName(key, tag, fpOf(srcDir))
     val path = new java.io.File(base, safe)
     val lock = locks.computeIfAbsent(safe, _ => new Object)
     lock.synchronized {
       if (!built.contains(safe)) {
         if (path.isDirectory) {
+          // the use that keeps another build's sweep off this stage
+          path.setLastModified(System.currentTimeMillis()): Unit
           reused.add(safe): Unit
         } else {
           val t0 = System.nanoTime()

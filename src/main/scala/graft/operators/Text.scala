@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.MinHashes60
 import graft.sources.Tables
 
 /** Text-analysis + deduplication operators over the `documents` table —
@@ -28,7 +29,7 @@ import graft.sources.Tables
 /** Serving text-LSH banding construction: `bands` bands of `rows`
   * seeded minhashes each — band `b` reads minhash indices
   * `b*rows until (b+1)*rows` of the shared universal family
-  * ([[Text.mhA]]/[[Text.mhB]]), so `Banding(4, 2)` reproduces the
+  * ([[graft.functions.MinHashes60]]), so `Banding(4, 2)` reproduces the
   * reference-scale mh0..mh7 / 4×2 construction bit-for-bit (the
   * driver-SF oracle pin). `Banding(0, 0)` is the derive-from-corpus
   * sentinel, the `Vectors.resolveLsh` convention.
@@ -94,15 +95,22 @@ object Text {
   /** Whitespace tokens (the documents corpus is single-space separated). */
   private def words: Column = split(col("text"), " ")
 
-  /** Distinct word-3-gram shingles per doc: (doc_id, shingle). */
-  private[graft] def shinglesOf(docs: DataFrame): DataFrame =
+  /** SQL for the array of positional word `n`-grams of the token
+    * array `w` (empty when `w` has fewer than `n` tokens).
+    */
+  private def wordGrams(n: Int): String =
+    s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))"
+
+  /** Distinct word-3-gram shingles per doc: (doc_id, `keep`…, sh). Docs
+    * under 3 words carry no shingles.
+    */
+  private[graft] def shinglesOf(docs: DataFrame, keep: String*): DataFrame = {
+    val ids = col("doc_id") +: keep.map(col)
     docs
-      .select(col("doc_id"), words.as("w"))
+      .select(ids :+ words.as("w"): _*)
       .filter(size(col("w")) >= 3)
-      .select(col("doc_id"),
-        explode(array_distinct(expr(
-          "transform(sequence(0, size(w)-3), i -> concat_ws(' ', slice(w, i+1, 3)))"
-        ))).as("sh"))
+      .select(ids :+ explode(array_distinct(expr(wordGrams(3)))).as("sh"): _*)
+  }
 
   /** The corpus shingle stage, LANDED once per corpus ([[Materialize]]):
     * per-doc-distinct word-3-grams with provenance and the shared 60-bit
@@ -118,13 +126,7 @@ object Text {
     */
   private[graft] def docShingles(s: SparkSession, dir: String): DataFrame =
     Materialize.table(s, s"text_docsh_$dir", dir,
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"), words.as("w"))
-        .filter(size(col("w")) >= 3)
-        .select(col("doc_id"), col("source"),
-          explode(array_distinct(expr(
-            "transform(sequence(0, size(w)-3), i -> concat_ws(' ', slice(w, i+1, 3)))"
-          ))).as("sh"))
+      shinglesOf(Tables.documents(s, dir), "source")
         .withColumn("h", hash60(col("sh"))))
 
   private def shingles(s: SparkSession, dir: String): DataFrame =
@@ -335,28 +337,6 @@ object Text {
   def ngramJaccardPairsOf(sh: DataFrame, threshold: Double): DataFrame =
     jaccardAtLeast(shingleInterOf(sh), threshold)
 
-  /** MinHash + banded LSH near-dup detection — the scale path.
-    * `bands×rows` seeded min-hashes per doc ([[hash60]] over distinct
-    * shingles), banded by the corpus-derived construction
-    * ([[bandingOf]]: the reference-scale 4×2 at every driver SF,
-    * deeper-and-wider beyond — [[scaleRows]]/[[scaleBands]]); docs
-    * sharing any band signature become candidate pairs (equi-join on
-    * the band key — shuffle-friendly, no quadratic blowup), then
-    * candidates are verified with exact Jaccard (keyed per pair, see
-    * [[minhashLshPairsBuild]]) and filtered. Same final semantics as
-    * [[ngramJaccardPairs]] at high thresholds, with recall traded for
-    * scalability at low ones.
-    */
-  /** Universal-hash family for MinHash: one md5 per shingle, then
-    * `h_j = (a_j * (h mod p) + b_j) mod p` with p < 2^30 so every product
-    * stays below 2^60 — exact, overflow-free 64-bit arithmetic on any
-    * engine. Constants derive from a fixed LCG so the oracle embeds the
-    * same literals.
-    */
-  private val P = 1073741789L
-  private[graft] def mhA(j: Int): Long = (1103515245L * (j + 1) + 12345L) % P
-  private[graft] def mhB(j: Int): Long = (1103515245L * (j + 101) + 54321L) % P
-
   /** Occupancy-targeted rows-per-band: one extra minhash row per
     * QUADRUPLING of the corpus beyond `base` docs, floor 2 (the
     * reference-scale pin — every driver SF is under 12.5k docs, so the
@@ -414,75 +394,57 @@ object Text {
   private[graft] def resolveBanding(b: Banding, nDocs: => Long): Banding =
     if (b.isAuto) bandingFor(nDocs) else b
 
-  /** Per-row minhash band signatures — the SAME 8 seeded minhashes and
-    * 4×2 banding as [[minhashLshPairsBuild]], but computed with array
-    * expressions over the in-row shingle set instead of an
-    * explode + groupBy, so a STREAMING row can carry its band keys with
-    * no stateful aggregation. `hs` must hold the seeded-hash inputs
-    * ([[shingleHashes]]); docs under 3 words get an empty `hs`, a
-    * null minhash and an empty signature — which matches no corpus
-    * band, exactly like the batch pipeline where they emit no shingle
-    * rows.
+  /** Per-row shingle-hash set `hs`: the md5-60 hash mod P of each
+    * distinct word 3-gram — the input of the minhash bank
+    * ([[minHashBankOnce]]), computed with array expressions over the
+    * in-row shingle set instead of an explode + groupBy, so a STREAMING
+    * row can carry its band keys with no stateful aggregation. Docs
+    * under 3 words get an empty `hs`, a null minhash and an empty
+    * signature — which matches no corpus band, exactly like the batch
+    * pipeline where they emit no shingle rows.
     */
   private[graft] val shingleHashes: Column =
     expr(s"""CASE WHEN size(w) >= 3 THEN transform(
-      array_distinct(transform(sequence(0, size(w)-3),
-        i -> concat_ws(' ', slice(w, i+1, 3)))),
+      array_distinct(${wordGrams(3)}),
       sh -> CAST(conv(substring(md5(CAST(sh AS BINARY)), 1, 15), 16, 10)
-             AS BIGINT) % ${P}L)
+             AS BIGINT) % ${MinHashes60.P}L)
     ELSE array() END""")
 
-  /** Band `bnd`'s signature from the per-row shingle-hash column `hs`,
-    * through the codegen'd one-pass minhash bank
-    * ([[graft.functions.MinHashes60]]): ONE primitive pass computes the
-    * construction's full minhash array, and every band reference is a
-    * per-element `element_at` over it — common-subexpression-eliminated
-    * inside whole-stage codegen, where the previous
-    * `array_min(transform(hs, …))` spelling ran one INTERPRETED
-    * higher-order pass (with a boxed intermediate array) per minhash
-    * per reference. Measured: the barriered production shape drops
-    * 9.1 → 6.4 s/pass and the unbarriered plain shape 146 → 22 s at
-    * the reference-scale 4×2 (round 14, 359bd97: 47.5k-doc
-    * corpus, identical output hash); at the corpus-derived (7,5) = 35
-    * minhashes the 500k-doc streaming drains gain 37–77%
-    * (gate_scale_sf10.json — see [[minHashBankOnce]], which the
-    * serving paths bind so the bank is evaluated once per row). The
-    * bank depth is the banding's total minhash count (every
-    * [[Banding]] in the library is [[scaleBands]]-shaped, so it
-    * derives from `rows` alone — and the SAME literal depth across a
-    * projection's bands is what makes the references one CSE'd
-    * computation).
-    */
-  private[graft] def bandSigCol(bnd: Int, rows: Int = 2): Column = {
-    val nMh = math.max(scaleBands(rows) * rows, (bnd + 1) * rows)
-    val mh = call_function("min_hashes60", col("hs"), lit(nMh))
-    concat_ws("_",
-      (bnd * rows until (bnd + 1) * rows).map(j => element_at(mh, j + 1)): _*)
-  }
-
-  /** The minhash BANK as a per-row column, behind the same 1:1 Generate
-    * barrier as [[shingleHashesOnce]]: one `min_hashes60` evaluation
-    * per row, period. A projection that references the bank expression
-    * from several band signatures relies on codegen subexpression
-    * elimination to collapse them — which a conditional (`when`) band
-    * array defeats, exactly as it did for the shingle pipeline in r13;
-    * measured on the 500k-doc admit drain, the unbarriered bank ran 7
-    * evaluations/row at 2,300 rows/s vs 4,912 behind the barrier.
-    * Consumers bind `mhb` once after `hs` and extract with
-    * [[bandSigFromBank]].
+  /** The construction's minhash BANK over the shingle-hash array `hs`:
+    * the codegen'd one-pass `min_hashes60` ([[MinHashes60]]) computes
+    * every minhash of the family in one primitive loop per row, where
+    * the earlier per-minhash `array_min(transform(hs, …))` spelling ran
+    * one INTERPRETED higher-order pass per minhash per reference —
+    * measured 9.1 → 6.4 s/pass (barriered) and 146 → 22 s (unbarriered)
+    * at the reference-scale 4×2 on a 47.5k-doc corpus (round 14,
+    * 359bd97), and 37–77% faster 500k-doc drains at the derived (7,5)
+    * (gate_scale_sf10.json).
     *
-    * The bank is sized from the FULL banding — `max(banding.bands,
-    * scaleBands(banding.rows)) * rows` — because [[bandSigFromBank]]
-    * reads indices up to `banding.bands * rows`: a pinned manifest
-    * banding with more bands than the scaleBands shape (constructible
-    * via IndexCompaction.init's public param) would otherwise make
+    * Sized from the FULL banding — `max(banding.bands,
+    * scaleBands(banding.rows)) * rows` — because [[bandArray]] reads
+    * indices up to `banding.bands * rows`: a pinned manifest banding
+    * with more bands than the scaleBands shape (constructible via
+    * IndexCompaction.init's public param) would otherwise make
     * `element_at` read past the bank and, with ANSI off, silently
     * truncate high-band signatures to empty — turning every arrival
     * into a collision and the gate into a drop-everything sieve.
     */
+  private def minHashBank(banding: Banding): Column =
+    call_function("min_hashes60", col("hs"),
+      lit(math.max(banding.bands, scaleBands(banding.rows)) * banding.rows))
+
+  /** [[minHashBank]] behind the same 1:1 Generate barrier as
+    * [[shingleHashesOnce]]: one bank evaluation per row, period. A
+    * projection that references the bank from several band signatures
+    * relies on codegen subexpression elimination to collapse them —
+    * which a conditional (`when`) band array defeats, exactly as it did
+    * for the shingle pipeline in r13; measured on the 500k-doc admit
+    * drain, the unbarriered bank ran 7 evaluations/row at 2,300 rows/s
+    * vs 4,912 behind the barrier. Consumers bind `mhb` once after `hs`
+    * and project bands with [[bandArray]].
+    */
   private[graft] def minHashBankOnce(banding: Banding): Column =
-    explode(array(call_function("min_hashes60", col("hs"),
-      lit(math.max(banding.bands, scaleBands(banding.rows)) * banding.rows))))
+    explode(array(minHashBank(banding)))
 
   /** Band `bnd`'s signature as pure element extraction over the bound
     * `mhb` bank column — zero recompute per reference.
@@ -490,6 +452,24 @@ object Text {
   private[graft] def bandSigFromBank(bnd: Int, rows: Int): Column =
     concat_ws("_", (bnd * rows until (bnd + 1) * rows)
       .map(j => element_at(col("mhb"), j + 1)): _*)
+
+  /** THE band projection: every band of `banding` as a (band, sig)
+    * struct over the bound bank column `mhb`. The landed batch minhash
+    * stage, the gate index and both streaming near-dup surfaces all
+    * band through it, so one construction serves batch and stream.
+    */
+  private[graft] def bandArray(banding: Banding): Column =
+    array((0 until banding.bands).map { b =>
+      struct(lit(b).as("band"), bandSigFromBank(b, banding.rows).as("sig"))
+    }: _*)
+
+  /** (doc_id, band, sig) rows of a frame carrying `doc_id` and the bank
+    * `mhb` — explode, not union: one pass over the bank instead of
+    * re-evaluating its subtree once per band.
+    */
+  private[graft] def bandRows(mh: DataFrame, banding: Banding): DataFrame =
+    mh.select(col("doc_id"), explode(bandArray(banding)).as("bs"))
+      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
 
   /** [[shingleHashes]] behind a 1:1 Generate barrier (explode of a
     * single-element array — same row count). Every per-row banding
@@ -511,30 +491,16 @@ object Text {
     * streaming.TextStreams.streamingLshCollisions' drop rule: with
     * arrival order = doc_id order, a doc drops iff an EARLIER doc shares
     * ≥1 of its 4 band signatures; per dropped doc, the earliest such
-    * owner and how many of its bands collide. One banding pass, a
-    * window partitioned by (band, sig) — the bucket, never the corpus —
-    * and an O(collisions) aggregation; the DuckDB oracle replays the
-    * identical banding SQL (TextQueries.BAND_CTES), closing the loop
+    * owner and how many of its bands collide. The DuckDB oracle replays
+    * the identical banding SQL (TextQueries.BAND_CTES), closing the loop
     * stream == batch rule == portable SQL. Docs under 3 words carry no
     * bands, exactly like the streaming operator and the pair pipeline.
-    *
-    * The band rows come from [[mhBands]] over the shared minhash
-    * aggregate (one read of the landed shingle stage), and the owner
-    * side is the landed [[bandOwners]] stage — a groupBy-min with
-    * map-side partial aggregation instead of the previous
-    * `min().over(Window.partitionBy(band, sig))`, whose full sort of
-    * the bands×docs rows was the one slope>1.0 cell in the r14 sf100
-    * rehearsal (27.6 s at 5M docs). The join never materializes
-    * pairs — an m-doc hot bucket costs O(m), where the pair table's
-    * self-join costs O(m²); the decision query must stay cheap even
-    * where the truth stage is expensive.
+    * The decisions are read off the landed [[bandHits]] stage; the join
+    * never materializes pairs — an m-doc hot bucket costs O(m), where
+    * the pair table's self-join costs O(m²).
     */
   def arrivalDedup(s: SparkSession, dir: String): DataFrame =
-    bandHits(s, dir, bandingOf(s, dir))
-      .groupBy(col("doc_id"))
-      .agg(min(col("owner")).as("owner"),
-        count(lit(1)).cast(LongType).as("n_bands_hit"))
-      .orderBy(col("doc_id"))
+    hitDecisions(bandHits(s, dir, bandingOf(s, dir)))
 
   /** Landed BAND-HITS stage: one row per (later doc, band) whose band
     * signature is owned by an EARLIER doc — the corpus's arrival-order
@@ -544,25 +510,15 @@ object Text {
     * same derivation). O(collisions) rows — at the occupancy floor a
     * few percent of the corpus — so every re-audit over an unchanged
     * corpus is a small read instead of the bands×docs recompute. The
-    * build is one corpus pass: owners via groupBy-min with map-side
-    * partial aggregation (no sort — the Window spelling's full sort of
-    * 45M rows was the 27.6 s / slope-1.21 cell at 5M docs in r14),
-    * solo buckets dropped before the hits join (their only member is
-    * their owner), then one equi-join back onto the band rows.
+    * build is one read of the landed minhash stage: owners via
+    * [[bucketOwners]], solo buckets dropped before the hits join
+    * (their only member is their owner), then [[earlierOwnerHits]].
     */
   private[graft] def bandHits(s: SparkSession, dir: String,
       banding: Banding): DataFrame =
     Materialize.table(s, hitsKey(dir, banding), dir, {
-      val bands = mhBands(minhashAgg(s, dir, banding), banding)
-      val owners = bands.groupBy(col("band"), col("sig"))
-        .agg(min(col("doc_id")).as("owner"), count(lit(1)).as("m"))
-        .filter(col("m") >= 2)
-        .select(col("band"), col("sig"), col("owner"))
-      // owners as the hinted shuffle-hash build side: the bands side
-      // is corpus×bands-sized and must never be the broadcast or the
-      // sorted side (see IndexCompaction.auditJoin)
-      bands.join(owners.hint("SHUFFLE_HASH"), Seq("band", "sig"))
-        .filter(col("owner") < col("doc_id"))
+      val bands = bandRows(minhashAgg(s, dir, banding), banding)
+      earlierOwnerHits(bands, bucketOwners(bands).filter(col("m") >= 2))
         .select(col("doc_id"), col("band"), col("owner"))
     })
 
@@ -570,47 +526,77 @@ object Text {
     if (bd == Banding.Default) s"text_bandhits_$dir"
     else s"text_bandhits_${dir}_$bd"
 
+  /** Per (band, sig) bucket of `bandRows` (doc_id, band, sig): its
+    * arrival-order owner (minimum doc_id) and size `m` — a groupBy-min
+    * with map-side partial aggregation, where the earlier
+    * `min().over(Window.partitionBy(band, sig))` fully sorted the
+    * bands×docs rows (27.6 s and the one slope>1.0 cell at 5M docs in
+    * the r14 sf100 rehearsal).
+    */
+  private[graft] def bucketOwners(bandRows: DataFrame): DataFrame =
+    bandRows.groupBy(col("band"), col("sig"))
+      .agg(min(col("doc_id")).as("owner"), count(lit(1)).as("m"))
+
+  /** The band rows of `bandRows` whose bucket `owner` (from `owners`:
+    * band, sig, owner) is an EARLIER doc: (doc_id, band, sig, owner).
+    *
+    * The hash is built on the OWNERS side, shuffled: the band side is
+    * corpus×bands-sized and a post-Generate size misestimate can tip
+    * the planner into broadcasting IT (measured at sf10: the 3.5M-row
+    * exploded side got broadcast, 6.2 s; at 45M rows that is an OOM,
+    * and the sort-merge fallback re-imports the full sort that
+    * [[bucketOwners]] removed). The hinted shuffle hash join shuffles
+    * both sides by the band key and builds only per-partition owner
+    * maps — scale-safe at any corpus size, and AQE still downgrades to
+    * broadcast when the owners side is genuinely small.
+    */
+  private[graft] def earlierOwnerHits(bandRows: DataFrame,
+      owners: DataFrame): DataFrame =
+    bandRows
+      .join(owners.select(col("band"), col("sig"), col("owner"))
+          .hint("SHUFFLE_HASH"),
+        Seq("band", "sig"))
+      .filter(col("owner") < col("doc_id"))
+
+  /** q123's decision table from band hits (doc_id, owner): per dropped
+    * doc the earliest owner and the number of its bands hit.
+    */
+  private[graft] def hitDecisions(hits: DataFrame): DataFrame =
+    hits.groupBy(col("doc_id"))
+      .agg(min(col("owner")).as("owner"),
+        count(lit(1)).cast(LongType).as("n_bands_hit"))
+      .orderBy(col("doc_id"))
+
   /** Per-row (doc_id, band, sig) band rows of a corpus through the
     * STREAMING per-row minhash path ([[shingleHashesOnce]] +
     * [[minHashBankOnce]] barriers) — the un-aggregated form shared by
     * the static gate index ([[bandIndexOf]]) and the index-backed
     * arrival audit (IndexCompaction.arrivalAudit), which needs the
-    * doc_id kept. BandingSpec pins its agreement with the batch
-    * [[mhBands]]-over-[[minhashAgg]] spelling.
+    * doc_id kept. BandingSpec pins its agreement with the landed
+    * [[minhashAgg]] stage.
     */
-  private[graft] def docBands(docs: DataFrame, bd: Banding): DataFrame = {
-    val bandStructs = (0 until bd.bands).map { b =>
-      struct(lit(b).as("band"), bandSigFromBank(b, bd.rows).as("sig"))
-    }
-    docs.select(col("doc_id"), words.as("w"))
+  private[graft] def docBands(docs: DataFrame, bd: Banding): DataFrame =
+    bandRows(docs.select(col("doc_id"), words.as("w"))
       .filter(size(col("w")) >= 3)
       .withColumn("hs", shingleHashesOnce)
-      .withColumn("mhb", minHashBankOnce(bd))
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("bs.band").as("band"), col("bs.sig").as("sig"),
-        col("doc_id"))
-  }
+      .withColumn("mhb", minHashBankOnce(bd)), bd)
 
   /** Static (band, sig, owner, m) index over a corpus — the right-hand
     * side of the streaming near-dup gate's anti-joins (which project
-    * `sig`), PLUS the arrival-order bucket owner (minimum doc_id per
-    * band signature) and the bucket size `m` that make the landed
-    * index an O(delta) audit oracle: a later doc drops iff any of its
-    * band signatures carries an index owner earlier than it, and a
-    * SELF-audit can skip solo buckets (m = 1 — their only member is
-    * their owner) before the join. One row per distinct (band, sig);
-    * owner/m cost two longs per row. `banding` is the index's pinned
-    * construction ([[Banding.Auto]] derives it from THIS corpus's
-    * size — correct for a fresh index, wrong for a delta being folded
-    * into an existing one, whose pin the caller must pass).
+    * `sig`), PLUS the arrival-order bucket owner and size
+    * ([[bucketOwners]]) that make the landed index an O(delta) audit
+    * oracle: a later doc drops iff any of its band signatures carries
+    * an index owner earlier than it, and a SELF-audit can skip solo
+    * buckets (m = 1 — their only member is their owner) before the
+    * join. One row per distinct (band, sig); owner/m cost two longs
+    * per row. `banding` is the index's pinned construction
+    * ([[Banding.Auto]] derives it from THIS corpus's size — correct for
+    * a fresh index, wrong for a delta being folded into an existing
+    * one, whose pin the caller must pass).
     */
   private[graft] def bandIndexOf(docs: DataFrame,
-      banding: Banding = Banding.Auto): DataFrame = {
-    val bd = resolveBanding(banding, docs.count())
-    docBands(docs, bd)
-      .groupBy(col("band"), col("sig"))
-      .agg(min(col("doc_id")).as("owner"), count(lit(1)).as("m"))
-  }
+      banding: Banding = Banding.Auto): DataFrame =
+    bucketOwners(docBands(docs, resolveBanding(banding, docs.count())))
 
   /** Distinct md5 content hashes of a corpus (single column `h`) — the
     * exact-dup side of the streaming near-dup gate and the compaction
@@ -619,6 +605,18 @@ object Text {
   private[graft] def contentHashesOf(docs: DataFrame): DataFrame =
     docs.select(md5(col("text").cast("binary")).as("h")).distinct()
 
+  /** MinHash + banded LSH near-dup detection — the scale path.
+    * `bands×rows` seeded min-hashes per doc ([[hash60]] over distinct
+    * shingles), banded by the corpus-derived construction
+    * ([[bandingOf]]: the reference-scale 4×2 at every driver SF,
+    * deeper-and-wider beyond — [[scaleRows]]/[[scaleBands]]); docs
+    * sharing any band signature become candidate pairs (equi-join on
+    * the band key — shuffle-friendly, no quadratic blowup), then
+    * candidates are verified with exact Jaccard (keyed per pair, see
+    * [[minhashLshPairsBuild]]) and filtered. Same final semantics as
+    * [[ngramJaccardPairs]] at high thresholds, with recall traded for
+    * scalability at low ones.
+    */
   def minhashLshPairs(s: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
     val bd = bandingOf(s, dir)
     val key = if (bd == Banding.Default) s"text_pairs_${dir}_$threshold"
@@ -627,53 +625,39 @@ object Text {
       .orderBy(col("d1"), col("d2"))
   }
 
-  /** One pass computes the banding's minhashes AND the shingle-set
-    * size. The
-    * minhash table feeds THREE consumers in the LSH build (bands, sizes
-    * s1, sizes s2) and the candidate table three more — without
-    * materialization each consumer replays the shingle explode + hash +
-    * aggregate (measured ~0.6 s/pass at sf0.1, the bulk of the
-    * pipeline's cost). One row per doc — never corpus-sized — so the
-    * eager local checkpoint is scale-safe; the corpus-sized shingle
-    * stream itself stays lazy.
+  /** The landed per-doc minhash stage: (doc_id, mhb, n_sh) — the
+    * construction's minhash bank and the shingle-set size, from ONE
+    * read of the landed shingle stage (only `doc_id` and `h` — the
+    * string column is pruned at the parquet scan): each doc's hashes
+    * mod P are collected and banked by the same `min_hashes60` kernel
+    * the per-row serving paths use, so batch and stream share one
+    * minhash computation. The batch stage does not band per row from
+    * the text ([[docBands]]): that route re-pays the interpreted
+    * per-shingle md5 `transform` whose output the landed shingle stage
+    * already holds.
+    *
+    * The minhash table feeds THREE consumers in the LSH build (bands,
+    * sizes s1, sizes s2) and the candidate table three more, and
+    * several callers per corpus (the collision-stage build, the
+    * pair-verification build, q123's band hits, q152's self-audit):
+    * landed, not `localCheckpoint`ed, because a checkpoint caches only
+    * within one DataFrame instance. One row per doc — never
+    * corpus-sized.
     */
   private[graft] def minhashAgg(s: SparkSession, dir: String,
       banding: Banding = Banding.Default): DataFrame =
-    Materialize.table(s, mhKey(dir, banding), dir, {
-      // reads only (doc_id, h) from the landed shingle stage — the string
-      // column is pruned at the parquet scan. Landed (not just
-      // localCheckpoint'd): three consumers call this per corpus — the
-      // collision-stage build, the pair-verification build, and q123's
-      // per-run banding — and a checkpoint caches only within one
-      // DataFrame instance, so each caller would re-pay the groupBy.
-      val shh = docShingles(s, dir).select(col("doc_id"), (col("h") % P).as("h"))
-      val mhCols = (0 until banding.nMh).map(j =>
-        min((lit(mhA(j)) * col("h") + lit(mhB(j))) % P).as(s"mh$j")) :+
-        count(lit(1)).as("n_sh")
-      shh.groupBy(col("doc_id")).agg(mhCols.head, mhCols.tail: _*)
-    })
+    Materialize.table(s, mhKey(dir, banding), dir,
+      docShingles(s, dir).groupBy(col("doc_id"))
+        .agg(collect_list(col("h") % MinHashes60.P).as("hs"),
+          count(lit(1)).as("n_sh"))
+        .select(col("doc_id"), minHashBank(banding).as("mhb"), col("n_sh")))
 
   /** Landed-stage keys carry the construction when it is NOT the
     * reference-scale default — two bandings of one corpus must never
-    * share a landed table, and default-keyed tables landed before the
-    * derivation existed stay valid.
+    * share a landed table.
     */
   private def mhKey(dir: String, bd: Banding): String =
-    if (bd == Banding.Default) s"text_mh_$dir" else s"text_mh_${dir}_$bd"
-
-  /** (doc_id, band, sig) — explode, not union: one pass over the minhash
-    * aggregate instead of re-evaluating its subtree once per band.
-    */
-  private[graft] def mhBands(mh: DataFrame,
-      banding: Banding = Banding.Default): DataFrame = {
-    val bandStructs = (0 until banding.bands).map { bnd =>
-      struct(lit(bnd).as("band"),
-        concat_ws("_", (bnd * banding.rows until (bnd + 1) * banding.rows)
-          .map(j => col(s"mh$j")): _*).as("sig"))
-    }
-    mh.select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-  }
+    if (bd == Banding.Default) s"text_mhb_$dir" else s"text_mhb_${dir}_$bd"
 
   /** Shared banded-LSH collision stage: every doc pair sharing ANY band
     * signature, tagged with the FIRST (minimum) band that catches it —
@@ -689,7 +673,7 @@ object Text {
     val key = if (bd == Banding.Default) s"text_minband_$dir"
       else s"text_minband_${dir}_$bd"
     Materialize.table(s, key, dir, {
-      val bands = mhBands(minhashAgg(s, dir, bd), bd)
+      val bands = bandRows(minhashAgg(s, dir, bd), bd)
       bands.toDF("d1", "band", "sig")
         .join(bands.toDF("d2", "band", "sig"), Seq("band", "sig"))
         .filter(col("d1") < col("d2"))
@@ -843,7 +827,7 @@ object Text {
             .select(col("doc_id"), col("sh"))
           val truePairs = ngramJaccardPairsOf(sh, threshold)
             .select(col("d1"), col("d2"))
-          val bands = mhBands(minhashAgg(s, dir, bd).join(ids, "doc_id"), bd)
+          val bands = bandRows(minhashAgg(s, dir, bd).join(ids, "doc_id"), bd)
           val minB = bands.toDF("d1", "band", "sig")
             .join(bands.toDF("d2", "band", "sig"), Seq("band", "sig"))
             .filter(col("d1") < col("d2"))
@@ -1433,9 +1417,7 @@ object Text {
     val grams = Tables.documents(s, dir)
       .select(col("doc_id"), words.as("w"))
       .filter(size(col("w")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))"
-      )).as("gram"))
+      .select(col("doc_id"), explode(expr(wordGrams(n))).as("gram"))
     val hot = grams.groupBy(col("gram"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs)
@@ -1470,9 +1452,8 @@ object Text {
     val grams = Tables.documents(s, dir)
       .select(col("doc_id"), words.as("w"))
       .filter(size(col("w")) >= n)
-      .select(col("doc_id"), explode(array_distinct(expr(
-        s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', slice(w, i+1, $n)))"
-      ))).as("gram"))
+      .select(col("doc_id"),
+        explode(array_distinct(expr(wordGrams(n)))).as("gram"))
     val evalGrams = grams.filter(col("doc_id") % evalMod === 0)
       .select(col("gram")).distinct()
     val train = grams.filter(col("doc_id") % evalMod =!= 0)

@@ -28,13 +28,15 @@ import graft.{CountFire, UserActivity}
   */
 object CountTriggerStream {
 
-  private def fold(every: Int)(
-      events: Iterator[UserActivity],
-      state: GroupState[(Long, Long, Long)]): Iterator[CountFire] = {
-    var (seen, regs, fires) = state.getOption.getOrElse((0L, 0L, 0L))
+  /** The operator's one step, pure: fold `events` in event-time order
+    * into the `(seen, registrations, fires)` counter, firing on every
+    * `every`-th element. Returns the new counter and the fires emitted.
+    */
+  private def step(every: Int, counter: (Long, Long, Long),
+      events: Iterator[UserActivity]): ((Long, Long, Long), Seq[CountFire]) = {
+    var (seen, regs, fires) = counter
     val out = Seq.newBuilder[CountFire]
-    val ordered = events.toSeq.sortBy(a => Instant.parse(a.timestamp))
-    ordered.foreach { a =>
+    events.toSeq.sortBy(a => Instant.parse(a.timestamp)).foreach { a =>
       seen += 1
       if (a.activity == "register") regs += 1
       if (seen % every == 0) {
@@ -42,8 +44,15 @@ object CountTriggerStream {
         out += CountFire(fires, seen, regs)
       }
     }
-    state.update((seen, regs, fires))
-    out.result().iterator
+    ((seen, regs, fires), out.result())
+  }
+
+  private def fold(every: Int)(
+      events: Iterator[UserActivity],
+      state: GroupState[(Long, Long, Long)]): Iterator[CountFire] = {
+    val (next, out) = step(every, state.getOption.getOrElse((0L, 0L, 0L)), events)
+    state.update(next)
+    out.iterator
   }
 
   /** Global count-trigger fires. Works on batch Datasets too (one pass,
@@ -72,19 +81,10 @@ object CountTriggerStream {
 
     override def handleInputRows(key: Int, rows: Iterator[UserActivity],
         timerValues: TimerValues): Iterator[CountFire] = {
-      var (seen, regs, fires) =
-        if (state.exists()) state.get() else (0L, 0L, 0L)
-      val out = Seq.newBuilder[CountFire]
-      rows.toSeq.sortBy(a => Instant.parse(a.timestamp)).foreach { a =>
-        seen += 1
-        if (a.activity == "register") regs += 1
-        if (seen % every == 0) {
-          fires += 1
-          out += CountFire(fires, seen, regs)
-        }
-      }
-      state.update((seen, regs, fires))
-      out.result().iterator
+      val (next, out) =
+        step(every, if (state.exists()) state.get() else (0L, 0L, 0L), rows)
+      state.update(next)
+      out.iterator
     }
   }
 

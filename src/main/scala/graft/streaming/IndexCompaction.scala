@@ -8,8 +8,8 @@ import graft.operators.{Banding, Materialize, Text}
   * service's lifecycle loop. A continuously-running near-dup service is
   * two operators plus this handoff:
   *
-  *  - [[TextStreams.nearDupGate]] drops arrivals colliding with the
-  *    LANDED corpus (stateless stream-static anti-joins on this index);
+  *  - [[gate]] drops arrivals colliding with the LANDED corpus
+  *    (stateless stream-static anti-joins on this index);
   *  - [[TextStreams.streamingLshCollisions]] flags arrivals colliding
   *    with EARLIER ARRIVALS (first-arrival bucket ownership in the
   *    state store, TTL'd to the compaction interval);
@@ -147,11 +147,6 @@ object IndexCompaction {
     n
   }
 
-  private def bandsOf(docs: DataFrame, banding: Banding): DataFrame =
-    Text.bandIndexOf(docs, banding)
-
-  private def hashesOf(docs: DataFrame): DataFrame = Text.contentHashesOf(docs)
-
   /** The banding manifest: the index's LSH construction, pinned at
     * [[init]] and read by every later delta/gate — a lake that grows
     * across the corpus-derived threshold must NOT silently split one
@@ -196,7 +191,8 @@ object IndexCompaction {
       // a lost init race means another process published epoch 0 over
       // the SAME base corpus — identical by construction, keep theirs
       // (both writers also pin the same derived banding)
-      publish(root, 0L, bandsOf(corpus, bd), hashesOf(corpus)): Unit
+      publish(root, 0L, Text.bandIndexOf(corpus, bd),
+        Text.contentHashesOf(corpus)): Unit
     }
 
   /** REBAND migration — the maintenance job for a lake that has
@@ -344,7 +340,8 @@ object IndexCompaction {
   def compact(spark: SparkSession, root: String, landedDocs: DataFrame): Long = {
     requireAuditSchema(spark, root, "compact a delta into this index")
     publishRetrying(root, epochs(root).lastOption.getOrElse(-1L) + 1L,
-      bandsOf(landedDocs, indexBanding(root)), hashesOf(landedDocs))
+      Text.bandIndexOf(landedDocs, indexBanding(root)),
+      Text.contentHashesOf(landedDocs))
   }
 
   /** MAJOR compaction: merge every live epoch into one distinct
@@ -456,16 +453,74 @@ object IndexCompaction {
   def hashes(spark: SparkSession, root: String): DataFrame =
     union(spark, root, "hashes")
 
-  /** [[TextStreams.nearDupGate]] against this landed index: the gate a
-    * continuously-running service constructs after each compaction
-    * (and after every restart — O(read), no derivation).
+  /** The landed index of a lake's corpus: `corpus` (doc_id, text —
+    * the docs of the lake at `dir`, or a subset of them such as one
+    * source) indexed once under `banding` at a
+    * [[Materialize.artifactRoot]] named `name`, so it is keyed on the
+    * lake's fingerprint and the engine build and swept like a landed
+    * stage. Returns the index root; a later call (in this process or
+    * another) reads the published epoch instead of re-deriving it.
+    */
+  def lakeIndex(spark: SparkSession, dir: String, name: String,
+      corpus: DataFrame, banding: Banding): String = {
+    val root = Materialize.artifactRoot(s"${name}_${dir}_$banding", dir).getPath
+    init(spark, root, corpus, banding)
+    root
+  }
+
+  /** Stream-static NEAR-DUP GATE over this landed index — the
+    * streaming twin of batch q63 (incremental dedup vs an existing
+    * corpus), built after each compaction and after every restart
+    * (O(read), no derivation). Each arriving doc (doc_id, text,
+    * eventTime) is admitted only if it is (a) not byte-identical to any
+    * indexed doc (anti-join on the content hash) and (b) shares no band
+    * signature with the index under its pinned banding (one anti-join
+    * per band). Both layers are STATELESS stream-static anti-joins — no
+    * state store, so state never grows with the corpus; the static side
+    * is the O(bands·docs) signature index, not the corpus text, and each
+    * arrival's band keys are per-row array expressions (no streaming
+    * aggregation). Duplicate rows across epochs are harmless (left-anti
+    * semantics), so append-only delta epochs never need a rewrite.
+    *
+    * Conservative by construction: a band collision drops the doc
+    * without exact verification — precision traded for a stateless
+    * plan (batch q63's fingerprint layer makes the same trade); docs
+    * under 3 words have no bands and always pass the LSH layer.
+    * `keepText` keeps the text for a downstream consumer that
+    * re-derives shingles (the gate→admit ingest-loop chain).
     */
   def gate(spark: SparkSession, root: String, stream: DataFrame,
-      keepText: Boolean = false): DataFrame =
-    TextStreams.nearDupGateOn(stream,
-      bands(spark, root).localCheckpoint(true),
-      hashes(spark, root).localCheckpoint(true), keepText,
-      banding = indexBanding(root))
+      keepText: Boolean = false): DataFrame = {
+    val banding = indexBanding(root)
+    // both static sides land ONCE at gate construction: a stream-static
+    // join re-evaluates the static plan EVERY micro-batch, and the band
+    // fold joins the index once per band per batch
+    val bandIdx = bands(spark, root).localCheckpoint(true)
+    val hashIdx = hashes(spark, root).localCheckpoint(true)
+    // exact content-hash anti-join FIRST: rows the cheap byte-identical
+    // layer eliminates never pay the shingle pipeline or the nMh-deep
+    // minhash bank — at the derived (7,5)+ depths the bank projection
+    // is the dominant per-row cost, and the LSH fold is its only
+    // consumer.
+    val afterExact = stream
+      .withColumn("h", md5(col("text").cast("binary")))
+      .join(hashIdx, Seq("h"), "left_anti")
+    val withSig = afterExact
+      .withColumn("w", split(col("text"), " "))
+      .withColumn("hs", Text.shingleHashesOnce)
+      // one minhash-bank evaluation per row, shared by every band's
+      // anti-join step (Text.minHashBankOnce — the barrier keeps the
+      // fold's per-step projections from re-deriving it)
+      .withColumn("mhb", Text.minHashBankOnce(banding))
+    val gated = (0 until banding.bands).foldLeft(withSig) { (df, b) =>
+      df.withColumn("sig", Text.bandSigFromBank(b, banding.rows))
+        .join(bandIdx.filter(col("band") === b).select(col("sig")),
+          Seq("sig"), "left_anti")
+        .drop("sig")
+    }
+    if (keepText) gated.select(col("doc_id"), col("text"), col("eventTime"))
+    else gated.select(col("doc_id"), col("eventTime"))
+  }
 
   /** Arrival-order dedup AUDIT of `docs` (doc_id, text) against this
     * landed index: a doc drops iff any of its band signatures carries
@@ -486,12 +541,11 @@ object IndexCompaction {
   def arrivalAudit(spark: SparkSession, root: String,
       docs: DataFrame): DataFrame =
     auditJoin(indexOwners(spark, root),
-      Text.docBands(docs.select(col("doc_id"), col("text")),
-        indexBanding(root)))
+      Text.docBands(docs, indexBanding(root)))
 
   /** Full-corpus SELF-audit: the arrival-order decision table for the
     * index's OWN corpus, from band rows the caller already has (e.g.
-    * the landed batch minhash aggregate — one landed-stage read, no
+    * the landed batch minhash stage — one landed-stage read, no
     * per-row re-banding of the whole corpus). Solo buckets (m = 1)
     * are skipped before the join — their only member is their owner,
     * so they can't produce a drop; at the LSH occupancy floor that
@@ -523,23 +577,5 @@ object IndexCompaction {
   }
 
   private def auditJoin(owners: DataFrame, bandRows: DataFrame): DataFrame =
-    bandRows
-      // build the hash on the OWNERS side, shuffled: the bands side is
-      // corpus×bands-sized and a post-Generate size misestimate can
-      // tip the planner into broadcasting IT (measured at sf10: the
-      // 3.5M-row exploded side got broadcast, 6.2 s; at 45M rows that
-      // is an OOM, and the sort-merge fallback re-imports the full
-      // sort the band-hits respelling removed). The hinted shuffle
-      // hash join shuffles both sides by the band key and builds only
-      // per-partition owner maps — scale-safe at any corpus size, and
-      // AQE still downgrades to broadcast when the owners side is
-      // genuinely small.
-      .join(owners.select(col("band"), col("sig"), col("owner"))
-          .hint("SHUFFLE_HASH"),
-        Seq("band", "sig"))
-      .filter(col("owner") < col("doc_id"))
-      .groupBy(col("doc_id"))
-      .agg(min(col("owner")).as("owner"),
-        count(lit(1)).cast("long").as("n_bands_hit"))
-      .orderBy(col("doc_id"))
+    Text.hitDecisions(Text.earlierOwnerHits(bandRows, owners))
 }

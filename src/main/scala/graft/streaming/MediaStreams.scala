@@ -18,7 +18,7 @@ object MediaStreams {
     *     content address, never the payload;
     *  2. stream-static: one broadcast anti-join against the landed
     *     store's checksum set (collected once at gate construction, the
-    *     [[TextStreams.nearDupGate]] contract — a stream-static join
+    *     [[IndexCompaction.gate]] contract — a stream-static join
     *     re-evaluates its static plan every micro-batch otherwise).
     *
     * Emits the admitted blobs' flat metadata row (the shape a CAS writer

@@ -49,108 +49,6 @@ object TextStreams {
         call_function("min_gram_hash60", col("red")).as("fingerprint"))
   }
 
-  /** Stream-static NEAR-DUP GATE — the streaming twin of batch q63
-    * (incremental dedup vs an existing corpus): each arriving doc is
-    * admitted only if it is (a) not byte-identical to any corpus doc
-    * (anti-join on the content hash) and (b) not a MinHash-LSH
-    * candidate against the corpus band index (one anti-join per band
-    * key, the same corpus-derived banding as batch q35 —
-    * `Banding.Auto` derives from the corpus size, exactly like the
-    * batch side's `Text.bandingOf`, so the stream==batch drop-set
-    * equality holds by construction; an index-backed deployment passes
-    * the index's pinned banding instead). Both layers are
-    * STATELESS stream-static anti-joins — no state store at all, so
-    * state never grows with the corpus; the static side is the
-    * O(4·docs) band index, not the corpus text, and each doc's band
-    * keys are per-row array expressions (no streaming aggregation).
-    *
-    * Conservative by construction: a band collision drops the doc
-    * without exact verification — precision traded for a stateless
-    * plan (batch q63's fingerprint layer makes the same trade); docs
-    * under 3 words have no bands and always pass the LSH layer.
-    */
-  def nearDupGate(stream: DataFrame, corpus: DataFrame,
-      banding: Banding = Banding.Auto): DataFrame = {
-    import graft.operators.Text
-    val bd = Text.resolveBanding(banding, corpus.count())
-    // land both static sides ONCE at gate construction: a stream-static
-    // join re-evaluates the static plan EVERY micro-batch, and the fold
-    // below joins the band index four times per batch — without this the
-    // gate re-derives the corpus shingle/minhash pipeline 5× per trigger
-    // (measured 300 rows/s vs ~20k after). At 100 TB the same contract
-    // is a pre-built landed index table, not a per-run derivation —
-    // that spelling is [[nearDupGateLanded]] (fingerprint-keyed landed
-    // stage) and [[IndexCompaction]] (the continuously-folded index);
-    // this DataFrame-corpus variant serves ad-hoc/in-memory corpora.
-    val bandIdx = Text.bandIndexOf(corpus, bd).localCheckpoint(true)
-    val hashes = Text.contentHashesOf(corpus).localCheckpoint(true)
-    nearDupGateOn(stream, bandIdx, hashes, banding = bd)
-  }
-
-  /** [[nearDupGate]] with the static sides read from LANDED
-    * fingerprint-keyed stages ([[graft.operators.Materialize]]) instead
-    * of per-process `localCheckpoint`s: gate restarts are O(read), not
-    * O(derive) — a second process over the same corpus (a gate restart
-    * after a crash, or bench-after-test) pays a parquet scan where the
-    * DataFrame variant re-runs the shingle→minhash pipeline. The landed
-    * corpus is the docs at `dir` from `corpusSource` (the landed-lake
-    * convention the bench and specs use: src0 is the lake, other
-    * sources arrive).
-    */
-  def nearDupGateLanded(spark: SparkSession, stream: DataFrame, dir: String,
-      corpusSource: String = "src0", banding: Banding = Banding.Auto): DataFrame = {
-    import graft.operators.{Materialize, Text}
-    def corpus = graft.sources.Tables.parquetCached(spark, s"$dir/documents.parquet")
-      .filter(col("source") === corpusSource)
-      .select(col("doc_id"), col("text"))
-    val bd = Text.resolveBanding(banding, corpus.count())
-    val idxKey = if (bd == Banding.Default) s"gate_bandidx_${corpusSource}_$dir"
-      else s"gate_bandidx_${corpusSource}_${dir}_$bd"
-    val bandIdx = Materialize.table(spark, idxKey, dir,
-      Text.bandIndexOf(corpus, bd))
-    val hashes = Materialize.table(spark,
-      s"gate_hashes_${corpusSource}_$dir", dir, Text.contentHashesOf(corpus))
-    nearDupGateOn(stream, bandIdx, hashes, banding = bd)
-  }
-
-  /** The gate's join core against PRE-BUILT static sides: `bandIdx` is
-    * a (band, sig) table, `hashes` a single-column `h` md5 table.
-    * Duplicate rows on either static side are harmless (left-anti join
-    * semantics), which is what lets [[IndexCompaction]] serve the gate
-    * append-only delta segments without a rewrite.
-    */
-  private[graft] def nearDupGateOn(stream: DataFrame, bandIdx: DataFrame,
-      hashes: DataFrame, keepText: Boolean = false,
-      banding: Banding = Banding.Default): DataFrame = {
-    import graft.operators.Text
-    // exact content-hash anti-join FIRST: rows the cheap byte-identical
-    // layer eliminates never pay the shingle pipeline or the nMh-deep
-    // minhash bank — at the derived (7,5)+ depths the bank projection
-    // is the dominant per-row cost, and the LSH fold is its only
-    // consumer.
-    val afterExact = stream
-      .withColumn("h", md5(col("text").cast("binary")))
-      .join(hashes, Seq("h"), "left_anti")
-    val withSig = afterExact
-      .withColumn("w", split(col("text"), " "))
-      .withColumn("hs", Text.shingleHashesOnce)
-      // one minhash-bank evaluation per row, shared by every band's
-      // anti-join step (Text.minHashBankOnce — the barrier keeps the
-      // fold's per-step projections from re-deriving it)
-      .withColumn("mhb", Text.minHashBankOnce(banding))
-    val gated = (0 until banding.bands).foldLeft(withSig) { (df, b) =>
-      df.withColumn("sig", Text.bandSigFromBank(b, banding.rows))
-        .join(bandIdx.filter(col("band") === b).select(col("sig")),
-          Seq("sig"), "left_anti")
-        .drop("sig")
-    }
-    // keepText feeds a downstream consumer that re-derives shingles
-    // (e.g. the gate→admit ingest-loop chain); the default projection
-    // stays minimal for the drop-only gate
-    if (keepText) gated.select(col("doc_id"), col("text"), col("eventTime"))
-    else gated.select(col("doc_id"), col("eventTime"))
-  }
-
   /** One per-(arrival, band) ownership verdict: `ownerDoc == docId`
     * means the arrival owns the bucket (first arrival inside the TTL
     * horizon); otherwise it collides with the earlier `ownerDoc`.
@@ -201,7 +99,7 @@ object TextStreams {
       .select(col("b.sig").as("sig"), col("b.band").as("band"), col("doc_id"))
       .as[(String, Int, Long)]
       // state key is the (band, sig) PAIR — the batch bucket definition
-      // (arrivalDedup windows on (band, sig); nearDupGate anti-joins per
+      // (arrivalDedup windows on (band, sig); the gate anti-joins per
       // band). Keying by sig alone would let a cross-band signature
       // equality (~2^-60/pair, but nonzero) emit a collision the batch
       // rule does not; the stream == batch drop-set claim is exact only
@@ -214,16 +112,9 @@ object TextStreams {
         OutputMode.Append())
   }
 
-  private def bandStructs(banding: Banding) = {
-    import graft.operators.Text
-    (0 until banding.bands).map { b =>
-      struct(lit(b).as("band"), Text.bandSigFromBank(b, banding.rows).as("sig"))
-    }
-  }
-
   /** Intra-STREAM near-dup collision feed — the stateful complement of
-    * [[nearDupGate]]: the gate drops arrivals that collide with a LANDED
-    * corpus, this detects arrivals that collide with EARLIER ARRIVALS
+    * [[IndexCompaction.gate]]: the gate drops arrivals that collide
+    * with a LANDED corpus, this detects arrivals that collide with EARLIER ARRIVALS
     * (neither in any landed index yet — the first hours of a crawl, or
     * the window between index compactions). Same 8-hash 4×2 banding as
     * batch q35: each doc's 4 band signatures are computed as per-row
@@ -249,7 +140,7 @@ object TextStreams {
     * `ttl` bounds the ownership horizon (processing-time TTL, the
     * state-store contract): a production pipeline sets it to its
     * compaction interval — once [[IndexCompaction.compact]] folds the
-    * landed docs into the gate index, [[nearDupGate]] owns their
+    * landed docs into the gate index, [[IndexCompaction.gate]] owns their
     * buckets and stream state can forget (drop-set equality across
     * that handoff is pinned in CompactionSpec and measured in
     * StreamBench's lsh_compaction stage); TTLConfig.NONE keeps owners
@@ -277,7 +168,7 @@ object TextStreams {
       // are pure element extraction (see Text.minHashBankOnce)
       .withColumn("hs", Text.shingleHashes)
       .withColumn("mhb", Text.minHashBankOnce(banding))
-      .select(col("doc_id"), explode(array(bandStructs(banding): _*)).as("b"))
+      .select(col("doc_id"), explode(Text.bandArray(banding)).as("b"))
     bandOwners(spark, banded, ttl).filter(col("ownerDoc") =!= col("docId"))
   }
 
@@ -317,7 +208,7 @@ object TextStreams {
       // BAND — measured 2,300 vs 4,912 rows/s on the 500k-doc drain
       .withColumn("mhb", Text.minHashBankOnce(banding))
       .withColumn("bs",
-        when(size(col("w")) >= 3, array(bandStructs(banding): _*))
+        when(size(col("w")) >= 3, Text.bandArray(banding))
           .otherwise(array(struct(lit(-1).as("band"),
             concat(lit("short|"), col("doc_id")).as("sig")))))
       .select(col("doc_id"), explode(col("bs")).as("b"))
@@ -341,15 +232,16 @@ object TextStreams {
     * q116 for an ARRIVING corpus: per incoming doc, how many of its
     * fixed-stride 60-char spans (operators.Text.docSpans geometry) are
     * verbatim-present in a static corpus span index. Unlike
-    * [[nearDupGate]] (stateless drop), this emits per-doc accounting —
-    * the shape a quarantine/review queue consumes — so it carries ONE
+    * [[IndexCompaction.gate]] (stateless drop), this emits per-doc
+    * accounting — the shape a quarantine/review queue consumes — so it carries ONE
     * watermark-bounded streaming aggregation keyed by (doc, eventTime):
     * state is O(docs inside the horizon), never O(corpus); finalized
     * rows append on watermark passage.
     *
     * The static span index lands once at gate construction (the
-    * [[nearDupGate]] contract — a stream-static join re-evaluates its
-    * static plan every micro-batch otherwise); the stream side is
+    * [[IndexCompaction.gate]] contract — a stream-static join
+    * re-evaluates its static plan every micro-batch otherwise); the
+    * stream side is
     * per-row span hashing → explode → one stream-static LEFT join on
     * the 8-byte hash. No stream-stream join anywhere.
     */

@@ -13,7 +13,7 @@ import graft.operators.Vectors
 object VectorStreams {
 
   /** Stream-static SEMANTIC near-dup gate — the vector twin of
-    * [[TextStreams.nearDupGate]] (and the streaming face of batch
+    * [[IndexCompaction.gate]] (and the streaming face of batch
     * q45/q69's multi-table LSH): an arriving embedding is admitted only
     * if none of its `tables` sign-projection bucket keys collides with
     * the corpus bucket index. One stateless stream-static anti-join per
@@ -32,7 +32,7 @@ object VectorStreams {
       tables: Int = 6, bits: Int = 3): DataFrame = {
     // landed once — the static side of a stream-static join re-evaluates
     // per micro-batch, and the fold anti-joins it `tables` times per
-    // trigger (see TextStreams.nearDupGate)
+    // trigger (see IndexCompaction.gate)
     val idx = Vectors.bucketIndexOf(corpus, tables, bits).localCheckpoint(true)
     (0 until tables).foldLeft(stream) { (df, t) =>
       df.withColumn("b", Vectors.bucketCol(t, bits))

@@ -14,6 +14,22 @@ import graft.streaming.IndexCompaction
   */
 class BandingSpec extends SparkSpec {
 
+  /** Reference (band, sig) rows of `docs` under `bd`, spelled
+    * independently of the library's minhash bank: one explicit `min`
+    * aggregate column per minhash over the shingle hashes, banded
+    * through the one band projection.
+    */
+  private def aggregateBands(docs: org.apache.spark.sql.DataFrame,
+      bd: Banding): Set[(Int, String)] = {
+    import graft.functions.MinHashes60.{P, mhA, mhB}
+    val sh = Text.shinglesOf(docs).withColumn("hh", Text.hash60(col("sh")) % P)
+    val mhCols = (0 until bd.nMh).map(j =>
+      min((lit(mhA(j)) * col("hh") + lit(mhB(j))) % P).as(s"mh$j"))
+    val mh = sh.groupBy(col("doc_id")).agg(mhCols.head, mhCols.tail: _*)
+      .select(col("doc_id"), array((0 until bd.nMh).map(j => col(s"mh$j")): _*).as("mhb"))
+    Text.bandRows(mh, bd).collect().map(r => (r.getInt(1), r.getString(2))).toSet
+  }
+
   test("derivation floors at the reference-scale 4x2 for every driver SF") {
     // the driver's sf-series caps at ~6250 docs (sf0.1); the floor
     // holds to double that, so the 150 oracle hashes cannot move
@@ -34,25 +50,24 @@ class BandingSpec extends SparkSpec {
   }
 
   test("per-row and batch minhash paths agree under a non-default construction") {
-    val bd = Banding(5, 3)
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val P = 1073741789L
-    val sh = Text.shinglesOf(docs).withColumn("hh", Text.hash60(col("sh")) % P)
-    val mhCols = (0 until bd.nMh).map(j =>
-      min((lit(Text.mhA(j)) * col("hh") + lit(Text.mhB(j))) % P).as(s"mh$j"))
-    val mh = sh.groupBy(col("doc_id")).agg(mhCols.head, mhCols.tail: _*)
-    val batchBands = Text.mhBands(mh, bd).collect()
-      .map(r => (r.getInt(1), r.getString(2))).toSet
-    val perRow = Text.bandIndexOf(docs, bd).collect()
-      .map(r => (r.getInt(0), r.getString(1))).toSet
-    assert(perRow === batchBands,
-      "streaming per-row banding must agree with the batch banding at (5,3)")
-    // the generalized default reproduces the legacy shape bit-for-bit
-    val legacy = Text.bandIndexOf(docs, Banding.Default).collect()
-      .map(r => (r.getInt(0), r.getString(1))).toSet
-    assert(legacy.forall { case (b, _) => b < 4 })
-    assert(legacy.forall { case (_, s) => s.count(_ == '_') == 1 })
-    assert(perRow.forall { case (b, s) => b < 5 && s.count(_ == '_') == 2 })
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("band"), col("sig")).collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSet
+    Seq(Banding.Default, Banding(5, 3)).foreach { bd =>
+      val reference = aggregateBands(docs, bd)
+      // the landed batch stage (collected shingle hashes → minhash bank)
+      val landed = rows(Text.bandRows(Text.minhashAgg(spark, sfDir, bd), bd))
+      assert(landed === reference,
+        s"the landed minhash stage must agree with the aggregate at $bd")
+      // the per-row streaming path from the text
+      val perRow = rows(Text.docBands(docs, bd))
+      assert(perRow === reference,
+        s"streaming per-row banding must agree with the aggregate at $bd")
+      assert(rows(Text.bandIndexOf(docs, bd)) === reference)
+      assert(reference.forall { case (b, s) =>
+        b < bd.bands && s.count(_ == '_') == bd.rows - 1 })
+    }
   }
 
   test("index pins its banding at init and deltas honor the pin") {
@@ -131,15 +146,9 @@ class BandingSpec extends SparkSpec {
       assert(sig.count(_ == '_') == 1 && !sig.split("_").exists(_.isEmpty),
         s"band ${r.getInt(0)} sig '$sig' is truncated/empty")
     }
-    // and the wide per-row path still agrees with the batch spelling
-    val P = 1073741789L
-    val sh = Text.shinglesOf(docs).withColumn("hh", Text.hash60(col("sh")) % P)
-    val mhCols = (0 until bd.nMh).map(j =>
-      min((lit(Text.mhA(j)) * col("hh") + lit(Text.mhB(j))) % P).as(s"mh$j"))
-    val mh = sh.groupBy(col("doc_id")).agg(mhCols.head, mhCols.tail: _*)
-    val batch = Text.mhBands(mh, bd).collect()
-      .map(r => (r.getInt(1), r.getString(2))).toSet
-    assert(idx.map(r => (r.getInt(0), r.getString(1))).toSet === batch)
+    // and the wide per-row path still agrees with the aggregate spelling
+    assert(idx.map(r => (r.getInt(0), r.getString(1))).toSet ===
+      aggregateBands(docs, bd))
   }
 
   test("Banding.parse validates shape and names its source") {

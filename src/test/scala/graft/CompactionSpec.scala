@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import graft.operators.Text
+import graft.operators.{Banding, Text}
 import graft.streaming.{IndexCompaction, TextStreams}
 
 /** The stream→landed-index compaction contract: folding landed arrivals
@@ -18,18 +18,11 @@ class CompactionSpec extends SparkSpec {
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"), col("source"))
 
-  /** Per-doc (band, sig) rows — the same 4×2 banding every operator in
-    * the dedup family uses.
+  /** Per-doc (doc_id, band, sig) rows — the same 4×2 banding every
+    * operator in the dedup family uses.
     */
-  private def bandRows(docs: DataFrame): DataFrame = {
-    val banded = docs
-      .withColumn("w", split(col("text"), " "))
-      .filter(size(col("w")) >= 3)
-      .withColumn("hs", Text.shingleHashes)
-    (0 until 4).map { b =>
-      banded.select(col("doc_id"), lit(b).as("band"), Text.bandSigCol(b).as("sig"))
-    }.reduce(_ unionAll _)
-  }
+  private def bandRows(docs: DataFrame): DataFrame =
+    Text.docBands(docs, Banding.Default)
 
   test("epoch mechanics: init, delta compaction, union reads, merge, races") {
     import spark.implicits._
@@ -219,7 +212,7 @@ class CompactionSpec extends SparkSpec {
     // the SELF-audit (landed batch bands + solo-bucket skip) agrees too
     val bd = Text.bandingOf(spark, sfDir)
     val self = IndexCompaction.arrivalSelfAudit(spark, root,
-      Text.mhBands(Text.minhashAgg(spark, sfDir, bd), bd))
+      Text.bandRows(Text.minhashAgg(spark, sfDir, bd), bd))
       .as[(Long, Long, Long)].collect().toSeq
     assert(self === expected,
       "self-audit from the batch aggregate must match the q123 table")

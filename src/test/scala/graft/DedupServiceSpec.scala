@@ -122,13 +122,14 @@ class DedupServiceSpec extends SparkSpec {
   private def waveDrops(earlier: DataFrame, wave: DataFrame, bd: Banding,
       waveFloor: Long): Set[Long] = {
     import spark.implicits._
-    val P = 1073741789L
+    import graft.functions.MinHashes60.{P, mhA, mhB}
     val sh = Text.shinglesOf(earlier.unionAll(wave))
       .withColumn("hh", Text.hash60(col("sh")) % P)
     val mhCols = (0 until bd.nMh).map(j =>
-      min((lit(Text.mhA(j)) * col("hh") + lit(Text.mhB(j))) % P).as(s"mh$j"))
+      min((lit(mhA(j)) * col("hh") + lit(mhB(j))) % P).as(s"mh$j"))
     val mh = sh.groupBy(col("doc_id")).agg(mhCols.head, mhCols.tail: _*)
-    Text.mhBands(mh, bd)
+      .select(col("doc_id"), array((0 until bd.nMh).map(j => col(s"mh$j")): _*).as("mhb"))
+    Text.bandRows(mh, bd)
       .withColumn("mn", min(col("doc_id")).over(Window.partitionBy("band", "sig")))
       .filter(col("mn") < col("doc_id") && col("doc_id") >= waveFloor)
       .select(col("doc_id")).distinct().as[Long].collect().toSet

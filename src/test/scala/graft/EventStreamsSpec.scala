@@ -31,6 +31,8 @@ class EventStreamsSpec extends SparkSpec {
     val longA = (0 until 40).map(i => s"alpha$i").mkString(" ")
     val longB = (0 until 40).map(i => s"beta$i").mkString(" ")
     val corpus = Seq((100L, longA), (101L, longB)).toDF("doc_id", "text")
+    val root = tempDir("gate_idx").toPath.toString + "/idx"
+    graft.streaming.IndexCompaction.init(spark, root, corpus)
     val arrivals = Seq(
       (1L, longA, "2025-08-03T13:00:01Z"),             // exact dup -> dropped
       (2L, longA.replace("alpha39", "changed"),        // near-dup  -> band hit
@@ -41,7 +43,7 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String, String)](spark)
     val df = mem.toDF().toDF("doc_id", "text", "timestamp")
       .withColumn("eventTime", to_timestamp(col("timestamp")))
-    val q = TextStreams.nearDupGate(df, corpus)
+    val q = graft.streaming.IndexCompaction.gate(spark, root, df)
       .writeStream.format("memory").queryName("gate_stream")
       .outputMode(OutputMode.Append).start()
     try {
@@ -54,7 +56,7 @@ class EventStreamsSpec extends SparkSpec {
       // the same plan in batch mode is the semantic oracle
       val batchDf = arrivals.toDF("doc_id", "text", "timestamp")
         .withColumn("eventTime", to_timestamp(col("timestamp")))
-      val batch = TextStreams.nearDupGate(batchDf, corpus)
+      val batch = graft.streaming.IndexCompaction.gate(spark, root, batchDf)
         .collect().map(_.getLong(0)).toSet
       assert(streamed === batch)
     } finally q.stop()
@@ -248,23 +250,6 @@ class EventStreamsSpec extends SparkSpec {
     }
   }
 
-  test("landed-stage gate decides exactly like the DataFrame-corpus gate") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val corpus = docs.filter(col("source") === "src0")
-      .select(col("doc_id"), col("text"))
-    val arrivals = docs.filter(col("source") =!= "src0")
-      .select(col("doc_id"), col("text"))
-      .withColumn("eventTime", to_timestamp(lit("2025-08-03T13:00:00Z")))
-    val fromDf = TextStreams.nearDupGate(arrivals, corpus)
-      .collect().map(_.getLong(0)).toSet
-    val fromLanded = TextStreams.nearDupGateLanded(spark, arrivals, sfDir)
-      .collect().map(_.getLong(0)).toSet
-    assert(fromLanded === fromDf,
-      "reading the static sides from landed stages must not change the decision")
-    assert(fromDf.nonEmpty && fromDf.size < arrivals.count(),
-      "fixture must exercise both admit and drop paths")
-  }
-
   test("intra-stream LSH collisions: golden owners and bands") {
     withRocksDb {
       import spark.implicits._
@@ -438,14 +423,7 @@ class EventStreamsSpec extends SparkSpec {
       val docs = sources.Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text"))
       // batch truth: a doc drops iff an EARLIER doc shares >=1 band sig
-      val banded = docs
-        .withColumn("w", split(col("text"), " "))
-        .filter(size(col("w")) >= 3)
-        .withColumn("hs", Text.shingleHashes)
-      val exploded = (0 until 4).map { b =>
-        banded.select(col("doc_id"), lit(b).as("band"),
-          Text.bandSigCol(b).as("sig"))
-      }.reduce(_ unionAll _)
+      val exploded = Text.docBands(docs, graft.operators.Banding.Default)
       val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "sig")
       val expected = exploded.withColumn("own", min(col("doc_id")).over(w))
         .filter(col("doc_id") > col("own"))

@@ -294,7 +294,8 @@ class IngestLoopSpec extends SparkSpec {
       // each extra doc's EARLIER band sharers must all be docs the
       // loop never landed: admitting content that duplicates nothing
       // in the dataset is the deliberate policy divergence from q123
-      val bands = operators.Text.mhBands(operators.Text.minhashAgg(spark, dir))
+      val bands = operators.Text.bandRows(operators.Text.minhashAgg(spark, dir),
+        operators.Banding.Default)
       val sharers = bands.as("a")
         .join(bands.as("b"),
           col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&

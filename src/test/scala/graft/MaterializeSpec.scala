@@ -19,8 +19,9 @@ class MaterializeSpec extends SparkSpec {
     d
   }
 
+  /** The stage dir name this engine build lands `key` under. */
   private def safeKey(key: String, fp: String): String =
-    key.map(c => if (c.isLetterOrDigit) c else '_') + "__" + fp
+    Materialize.stageName(key, Materialize.buildTag, fp)
 
   private val sharedBase = new java.io.File(
     new java.io.File(System.getProperty("java.io.tmpdir")), "graft_mat_v2")
@@ -82,6 +83,32 @@ class MaterializeSpec extends SparkSpec {
       spark.range(2).toDF("x"))
     assert(out.count() == 2,
       "a regeneration must build fresh, never serve the old landed stage")
+  }
+
+  test("a stage landed under build tag A is rebuilt, not read, under tag B") {
+    val src = tmpDirWith("corpus-v1")
+    val key = s"spec_build_${System.nanoTime}"
+    val fp = Materialize.fingerprint(src.toString)
+    // a previous process of build A landed a 1-row stage over this data
+    val landed = new java.io.File(sharedBase, Materialize.stageName(key, "a0a0", fp))
+    spark.range(1).toDF("x").write.parquet(landed.toString)
+    Files.writeString(landed.toPath.resolve("_graft_src"), src.toString)
+    assert(Materialize.table(spark, key, src.toString,
+      sys.error("build A must reuse its own stage"), tag = "a0a0").count() == 1)
+    // build B over the same data must build its own stage
+    val out = Materialize.table(spark, key, src.toString,
+      spark.range(2).toDF("x"), tag = "b1b1")
+    assert(out.count() == 2, "another build's stage must never be served")
+    assert(Materialize.buildSeconds.contains(Materialize.stageName(key, "b1b1", fp)))
+    // the sweep keeps another build's stage while it is in use and
+    // retires it once untouched past the grace window
+    val later = System.currentTimeMillis() + Materialize.LegacyTmpGraceMs + 60000L
+    assert(!Materialize.isStaleShared(landed, tag = "b1b1"),
+      "a recently used stage of another build is kept")
+    assert(Materialize.isStaleShared(landed, nowMs = later, tag = "b1b1"),
+      "an untouched stage of another build is swept after the grace window")
+    assert(!Materialize.isStaleShared(landed, nowMs = later, tag = "a0a0"),
+      "a build's own stage over unchanged data is never aged out")
   }
 
   // ------------------------------------------------------------------

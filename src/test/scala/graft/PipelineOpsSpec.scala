@@ -188,10 +188,10 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("per-row band signatures match the batch explode/groupBy minhash bands") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val P = 1073741789L
+    import graft.functions.MinHashes60.{P, mhA, mhB}
     val sh = Text.shinglesOf(docs).withColumn("hh", Text.hash60(col("sh")) % P)
     val mhCols = (0 until 8).map(j =>
-      min((lit(Text.mhA(j)) * col("hh") + lit(Text.mhB(j))) % P).as(s"mh$j"))
+      min((lit(mhA(j)) * col("hh") + lit(mhB(j))) % P).as(s"mh$j"))
     val mh = sh.groupBy(col("doc_id")).agg(mhCols.head, mhCols.tail: _*)
     val batchBands = mh.select((0 until 4).map(b =>
         concat_ws("_", col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")).as(s"b$b")): _*)

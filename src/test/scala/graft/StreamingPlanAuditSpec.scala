@@ -53,11 +53,13 @@ class StreamingPlanAuditSpec extends SparkSpec {
 
   test("near-dup gate: broadcast-only joins, stateless, no cartesian") {
     import spark.implicits._
+    val root = tempDir("audit_gate").toPath.toString + "/idx"
+    graft.streaming.IndexCompaction.init(spark, root, docCorpus)
     val mem = MemoryStream[(Long, String, java.sql.Timestamp)](spark)
     mem.addData(Seq((9L, s"gamma $filler", ts0)))
     val plan = executedPlan(
-      TextStreams.nearDupGate(
-        mem.toDF().toDF("doc_id", "text", "eventTime"), docCorpus)
+      graft.streaming.IndexCompaction.gate(spark, root,
+        mem.toDF().toDF("doc_id", "text", "eventTime"))
         .writeStream.format("memory").queryName("audit_gate")
         .outputMode(OutputMode.Append).start())
     assert(!plan.contains("CartesianProduct"), plan)

@@ -6,7 +6,10 @@ Reads
   - the newest CORRECTNESS_r*.json (query count + oracle passes), or
     the local tools/check.py output dir if none exists yet;
   - an sbt test log (``sbt -batch test > log``) for test/suite counts;
-  - the SparkEntry registry size via the committed bench artifact.
+  - the SparkEntry registry size via the committed bench artifact;
+  - the design counts of the main tree (src/main): lines of Scala,
+    `def main` entry points and distinct SPARK_GRAFT_* environment
+    variables the code reads.
 
 Prints one JSON line with the live counts, then greps README.md and
 SURVEY.md for stale hardcoded counts ("N tests / M suites", "K named
@@ -14,6 +17,11 @@ queries") and exits 1 listing each drifted claim — so the round's
 docs can never silently lag the registry again.
 
 Usage: tally.py [--test-log FILE]
+       tally.py --design [DIR ...]
+
+``--design`` prints only the design counts, one JSON line per checkout
+DIR (default: this one), so a change's before → after is one command:
+``tally.py --design <parent checkout> .``.
 
 Without --test-log the auditor reads the canonical log location
 ``target/test_run.log`` (produced by ``sbt -batch test | tee
@@ -84,10 +92,32 @@ def doc_claims():
     return claims
 
 
+def design_counts(root):
+    """Design counts of the main tree under ``root``: Scala LoC,
+    ``def main`` entry points, distinct SPARK_GRAFT_* env vars read."""
+    loc = mains = 0
+    env = set()
+    read = re.compile(
+        r'(?:sys\.env(?:\.get|\.getOrElse)?|getenv)\(\s*"(SPARK_GRAFT_\w+)"')
+    for f in sorted(glob.glob(os.path.join(root, "src", "main", "**", "*.scala"),
+                              recursive=True)):
+        txt = open(f, errors="replace").read()
+        loc += txt.count("\n")
+        mains += len(re.findall(r"\bdef main\b", txt))
+        env.update(read.findall(txt))
+    return {"main_loc": loc, "main_entry_points": mains,
+            "env_vars": len(env), "env_var_names": sorted(env)}
+
+
 DEFAULT_TEST_LOG = os.path.join(ROOT, "target", "test_run.log")
 
 
 def main():
+    if "--design" in sys.argv:
+        dirs = sys.argv[sys.argv.index("--design") + 1:] or [ROOT]
+        for d in dirs:
+            print(json.dumps({"tree": d, **design_counts(d)}))
+        return
     log = DEFAULT_TEST_LOG
     if "--test-log" in sys.argv:
         log = sys.argv[sys.argv.index("--test-log") + 1]
@@ -96,7 +126,8 @@ def main():
     n_tests, n_suites = test_counts(log)
     live = {"correctness_file": cfile, "oracle_queries": n_corr,
             "oracle_pass": n_ok, "bench_queries": n_bench,
-            "tests": n_tests, "suites": n_suites, "test_log": log}
+            "tests": n_tests, "suites": n_suites, "test_log": log,
+            **design_counts(ROOT)}
     print(json.dumps(live))
     if n_tests is None:
         print(f"NO TEST LOG at {log} — run "
