@@ -3,6 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.{FloatDot, LongL2, MinGramHash60, MinHashes60, SpanHashes60}
 
@@ -10,7 +16,8 @@ import graft.functions.{FloatDot, LongL2, MinGramHash60, MinHashes60, SpanHashes
   * wired in GraftSession.configure): registers the engine's native
   * Catalyst expressions so they are callable from SQL and `expr(...)` in
   * any session — the idiomatic way to ship custom codegen'd functions
-  * without forking Spark.
+  * without forking Spark — and the [[OnePartitionSort]] rule, in both the
+  * static and the AQE runtime optimizer.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -34,5 +41,55 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("min_hashes60"),
       new ExpressionInfo(classOf[MinHashes60].getName, "min_hashes60"),
       (children: Seq[Expression]) => MinHashes60(children.head, children(1))))
+    ext.injectOptimizerRule(_ => OnePartitionSort)
+    ext.injectRuntimeOptimizerRule(_ => OnePartitionSort)
+  }
+}
+
+/** Sorts a small ORDER BY input in one task. A global `Sort` whose input
+  * Spark sizes at or under `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+  * gets `Repartition(1, shuffle = false)` under it, so it plans as
+  * `SortExec` over `CoalesceExec(1)`: a single partition already satisfies
+  * the ordered distribution, and neither the job that samples range bounds
+  * nor the range shuffle runs. Without the rule AQE coalesces that shuffle
+  * back into one partition anyway whenever it is under the same size.
+  *
+  * The size is Spark's `stats.sizeInBytes`: file sizes at static planning
+  * (the basis of the broadcast threshold too), the bytes of materialized
+  * shuffle stages at AQE re-optimization. A sort above the size keeps its
+  * range partitioning. The rule leaves alone
+  *  - streaming plans;
+  *  - anything under a limit, offset or tail: a top-k plans as
+  *    `TakeOrderedAndProject`, which has no range exchange to save;
+  *  - a sort whose input holds an operator or leaf outside [[bounded]],
+  *    whose estimate may undercount (`Generate`, typed/object operators,
+  *    `LogicalRDD`), or a `Repartition` — which is what the rule puts
+  *    there, so a second application changes nothing;
+  *  - a sort whose own range shuffle is already a query stage.
+  */
+object OnePartitionSort extends Rule[LogicalPlan] {
+  def apply(plan: LogicalPlan): LogicalPlan =
+    if (plan.isStreaming) plan else rewrite(plan)
+
+  private def rewrite(plan: LogicalPlan): LogicalPlan = plan match {
+    case _: GlobalLimit | _: LocalLimit | _: Offset | _: Tail => plan
+    case s @ Sort(_, true, child, _) if bounded(child) &&
+        child.stats.sizeInBytes <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) =>
+      s.copy(child = Repartition(1, shuffle = false, child))
+    case _ => plan.mapChildren(rewrite)
+  }
+
+  /** Whether every operator from `p` down to its leaves has a size
+    * estimate that is an upper bound on its output.
+    */
+  private def bounded(p: LogicalPlan): Boolean = p match {
+    case LogicalQueryStage(_, s: ShuffleQueryStageExec) =>
+      !s.outputPartitioning.isInstanceOf[RangePartitioning]
+    case _: LogicalQueryStage | _: LogicalRelation | _: LocalRelation => true
+    case Sort(_, false, _, _) | _: Project | _: Filter | _: Aggregate | _: Window | _: Union |
+        _: Expand | _: Join | _: Intersect | _: Except | _: GlobalLimit | _: LocalLimit |
+        _: Offset | _: SubqueryAlias | _: Deduplicate | _: Distinct =>
+      p.children.forall(bounded)
+    case _ => false
   }
 }

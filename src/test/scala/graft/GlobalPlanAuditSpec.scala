@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Registry-WIDE physical-plan audit: every declared query's plan is
@@ -205,5 +210,59 @@ class GlobalPlanAuditSpec extends SparkSpec {
       case (n, p) if !p.contains("parquet") && !p.contains("ExistingRDD") => n
     }
     assert(offenders.isEmpty, s"queries reading no stored data: $offenders")
+  }
+
+  /** Job ids started from the first to the last job that `body` runs:
+    * a one-task job tagged through a local property brackets `body` on
+    * each side, and the listener bus delivers events in order, so the
+    * closing bracket's start means every job in between was seen.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.jobBudget"
+    val started = new ConcurrentLinkedQueue[(Int, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(e.jobId -> Option(e.properties).map(_.getProperty(key)).orNull): Unit
+    }
+    def bracket(tag: String): Unit = {
+      sc.setLocalProperty(key, tag)
+      try sc.parallelize(Seq(1), 1).count(): Unit finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      bracket("open"); body; bracket("close")
+      val deadline = System.currentTimeMillis() + 30000
+      while (!started.asScala.exists(_._2 == "close") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      val ids = started.asScala.toSeq
+      val open = ids.collectFirst { case (id, "open") => id }.get
+      val close = ids.collectFirst { case (id, "close") => id }.get
+      ids.count { case (id, _) => id > open && id < close }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** perfbench catalog-floor's queries, each with the jobs of a warm
+    * execution at the test SF: construction plus a full collect, after
+    * one such run. A global sort over an input at or under the advisory
+    * partition size runs in one task (`OnePartitionSort`), without a
+    * range-bounds sampling job or a range shuffle.
+    */
+  private val jobBudget = Map(
+    "q40_knn_cosine" -> 1, "q39_quality_filter" -> 1, "q65_repetition" -> 2,
+    "q15_above_brand_avg" -> 3, "q143_order_priority_check" -> 3, "q79_split_manifest" -> 3,
+    "q10_rollup" -> 2, "q135_profit_by_nation_year" -> 6, "q76_token_budget" -> 5,
+    "q71_boilerplate" -> 5)
+
+  test("catalog-floor queries keep their job budget on a warm run") {
+    def run(name: String): Unit = {
+      SparkEntry.queries(name)(spark, sfDir).collect(): Unit
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    }
+    val counts = jobBudget.keys.toSeq.sorted.map { name =>
+      run(name)
+      name -> jobsOf(run(name))
+    }.toMap
+    assert(counts == jobBudget, s"warm jobs per query ${counts.toSeq.sorted}")
   }
 }

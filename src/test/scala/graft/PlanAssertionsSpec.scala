@@ -1,12 +1,21 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Repartition, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{CoalesceExec, FormattedMode, InputAdapter, SortExec,
+  SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Plan-quality regression tests: the physical plans that make these
   * queries viable at 100 TB are asserted, not just eyeballed — a change
   * that silently drops a pushdown or broadcast fails CI.
   */
-class PlanAssertionsSpec extends SparkSpec {
+class PlanAssertionsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def formatted(name: String): String =
     SparkEntry.queries(name)(spark, sfDir)
@@ -861,5 +870,99 @@ class PlanAssertionsSpec extends SparkSpec {
     // crossJoin; the old `bkp < bk` prefix-max join must never return
     assertBnljUnconditioned(plan)
     assert(!plan.contains("CartesianProduct"))
+  }
+
+  // ---- OnePartitionSort: a small ORDER BY sorts in one task ----
+
+  private val sortRuleOff = Seq(
+    "spark.sql.optimizer.excludedRules" -> OnePartitionSort.ruleName,
+    "spark.sql.adaptive.optimizer.excludedRules" -> OnePartitionSort.ruleName)
+
+  /** Five priority groups, ordered by a total key. */
+  private def prioritySort: DataFrame =
+    sources.Tables.orders(spark, sfDir).groupBy("o_orderpriority")
+      .agg(count(lit(1)).as("n"), sum("o_totalprice").as("total"))
+      .orderBy(col("n").desc, col("o_orderpriority"))
+
+  /** Collects `df`, then returns its rows and the plan that ran. */
+  private def ran(df: DataFrame): (Seq[Row], SparkPlan) = {
+    val rows = df.collect().toSeq
+    (rows, df.queryExecution.executedPlan)
+  }
+
+  private def rangeExchanges(plan: SparkPlan) = collect(plan) {
+    case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+  }
+
+  private def coalesces(plan: SparkPlan) = collect(plan) { case c: CoalesceExec => c }
+
+  test("OnePartitionSort: a small ORDER BY sorts one coalesced partition, no range exchange") {
+    val (_, plan) = ran(prioritySort)
+    assert(rangeExchanges(plan).isEmpty, s"range exchange planned:\n$plan")
+    val sorts = collect(plan) { case s: SortExec if s.global => s }
+    val under = sorts.map(_.child match { case i: InputAdapter => i.child; case c => c })
+    assert(under.collect { case c: CoalesceExec if c.numPartitions == 1 => c }.size == 1,
+      s"expected the global sort over one single-partition coalesce:\n$plan")
+    assert(coalesces(plan).size == 1, s"one coalesce:\n$plan")
+  }
+
+  test("OnePartitionSort: the rows equal the range-partitioned sort's") {
+    val (rows, _) = ran(prioritySort)
+    val (offRows, offPlan) = GraftSession.withConf(spark, sortRuleOff)(ran(prioritySort))
+    assert(rangeExchanges(offPlan).nonEmpty, s"rule not excluded:\n$offPlan")
+    assert(rows.size == 5 && rows == offRows)
+  }
+
+  test("OnePartitionSort: an input above the advisory partition size keeps its range exchange") {
+    // the orders file is ~36 KB at the test SF
+    def byPrice = sources.Tables.orders(spark, sfDir).orderBy(col("o_totalprice"), col("o_orderkey"))
+    val (small, smallPlan) = ran(byPrice)
+    assert(rangeExchanges(smallPlan).isEmpty, s"range exchange planned:\n$smallPlan")
+    val (big, bigPlan) = GraftSession.withConf(spark,
+      Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k"))(ran(byPrice))
+    assert(rangeExchanges(bigPlan).nonEmpty && coalesces(bigPlan).isEmpty,
+      s"a sort over its advisory size must stay range-partitioned:\n$bigPlan")
+    assert(big == small)
+  }
+
+  test("OnePartitionSort: an explode under the sort keeps the range exchange") {
+    // Generate's estimate is its child's size, not an upper bound; the
+    // range stage that then runs must not pick up a coalesce either
+    val df = sources.Tables.orders(spark, sfDir)
+      .select(col("o_orderkey"), posexplode(split(col("o_orderpriority"), "-")))
+      .orderBy(col("o_orderkey"), col("pos"))
+    val (rows, plan) = ran(df)
+    assert(rangeExchanges(plan).nonEmpty && coalesces(plan).isEmpty,
+      s"explode must keep the range exchange:\n$plan")
+    assert(rows.nonEmpty)
+  }
+
+  test("OnePartitionSort: orderBy + limit stays TakeOrderedAndProject, no coalesce") {
+    val (rows, plan) = ran(prioritySort.limit(3))
+    assert(collect(plan) { case t: TakeOrderedAndProjectExec => t }.size == 1,
+      s"top-k must plan TakeOrderedAndProject:\n$plan")
+    assert(coalesces(plan).isEmpty, s"a top-k input must not be coalesced:\n$plan")
+    assert(rows.size == 3)
+  }
+
+  /** A global sort over an empty relation, streaming or not. */
+  private def sortOver(streaming: Boolean): Sort = {
+    val rel = LocalRelation(Seq(AttributeReference("x", LongType)()), Nil, isStreaming = streaming)
+    Sort(Seq(SortOrder(rel.output.head, Ascending)), global = true, rel)
+  }
+
+  test("OnePartitionSort: a streaming plan is left untouched") {
+    assert(OnePartitionSort(sortOver(streaming = false)).collectFirst {
+      case r: Repartition => r }.nonEmpty, "the batch twin must be rewritten")
+    val streaming = sortOver(streaming = true)
+    assert(OnePartitionSort(streaming) eq streaming)
+  }
+
+  test("OnePartitionSort: applying the rule twice equals applying it once") {
+    val plain = GraftSession.withConf(spark, sortRuleOff)(prioritySort.queryExecution.optimizedPlan)
+    assert(plain.collectFirst { case r: Repartition => r }.isEmpty)
+    val once = OnePartitionSort(plain)
+    assert(once.collectFirst { case r: Repartition => r }.nonEmpty, s"rule did not fire:\n$once")
+    assert(OnePartitionSort(once) == once)
   }
 }
