@@ -925,6 +925,22 @@ class PlanAssertionsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(big == small)
   }
 
+  test("OnePartitionSort: a scan above one split keeps its range sort; its aggregate sorts in one task") {
+    // 8 KB splits cut the ~36 KB orders file into several scan tasks; the
+    // aggregate's shuffle stage is a few hundred bytes, one AQE partition
+    val splits = Seq("spark.sql.files.maxPartitionBytes" -> "8k",
+      "spark.sql.files.openCostInBytes" -> "1k")
+    def byPrice = sources.Tables.orders(spark, sfDir).orderBy(col("o_totalprice"), col("o_orderkey"))
+    val (scan, scanPlan) = GraftSession.withConf(spark, splits)(ran(byPrice))
+    assert(rangeExchanges(scanPlan).nonEmpty && coalesces(scanPlan).isEmpty,
+      s"a scan of several splits must keep its range exchange:\n$scanPlan")
+    assert(scan == ran(byPrice)._1)
+    val (agg, aggPlan) = GraftSession.withConf(spark, splits)(ran(prioritySort))
+    assert(rangeExchanges(aggPlan).isEmpty && coalesces(aggPlan).size == 1,
+      s"the aggregate's one-partition shuffle must sort in one task:\n$aggPlan")
+    assert(agg == ran(prioritySort)._1)
+  }
+
   test("OnePartitionSort: an explode under the sort keeps the range exchange") {
     // Generate's estimate is its child's size, not an upper bound; the
     // range stage that then runs must not pick up a coalesce either
