@@ -13,8 +13,12 @@ import graft.streaming.{IndexCompaction, IngestLoop}
   * scheduled service until signalled: every interval it collects the
   * parquet files that ARRIVED in `streamDir` since the last cycle,
   * runs them through gate → admit → exactly-once landing → MINOR
-  * compaction, and prints one JSON telemetry line per cycle (the same
-  * fields StreamBench's `ingest_loop` stage artifacts). Every 4th
+  * compaction, and prints one JSON telemetry line per cycle. The line
+  * shares the per-cycle counters and timings of StreamBench's
+  * `ingest_loop` stage (`cycle` through `compact_s`), except that the
+  * index's epoch count is `epochs` here and `epochs_after` there; it
+  * adds `files`, `merge_s`, `index_docs` and `reband_drift`, and lacks
+  * the stage's `batches`. Every 4th
   * cycle it also runs the MAJOR merge (the epoch-fold cadence
   * StreamBench's `gate_rebuild` stage prices). An empty interval is a
   * no-op cycle.

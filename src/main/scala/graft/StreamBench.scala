@@ -869,7 +869,7 @@ object StreamBench {
     // in_rows: both stream branches scan the doc replay → 2x docs
     s"""${progressJson(progress, 2 * nDocs, regs.length.toLong, wall)},""" +
       s""""groups":${batch.size},"groups_match":$matches,""" +
-      s""""state_rows_bound":${256L * batch.size}"""
+      s""""state_rows_bound":${operators.Text.Hll.M * batch.size}"""
   }
 
   // stage 5a''''''b: the live count-min frequency sketch —
@@ -883,7 +883,6 @@ object StreamBench {
   private def countMinLive(c: Ctx): String = {
     val spark = c.spark
     import spark.implicits._
-    val w = operators.Text.CountMinWidth
     val docsAll = c.docs.select(col("doc_id"), col("text"))
     val nToks = docsAll.select(explode(split(col("text"), " "))).count()
     sliceOrdered(docsAll, "doc_id", Slices, s"${c.base}/docs_cm")
@@ -898,15 +897,11 @@ object StreamBench {
     val batch = SparkEntry.queries("q90_countmin")(spark, c.sfDir)
       .select(col("term"), col("est")).as[(String, Long)].collect().toMap
     val matches = batch.count { case (term, est) =>
-      val live = (0 until 4).map { j =>
-        cells.getOrElse(
-          j.toLong * w + streaming.TextStreams.hash60(s"$term#$j") % w, 0L)
-      }.min
-      live == est
+      streaming.TextStreams.countMinCells(term).map(cells.getOrElse(_, 0L)).min == est
     }
     s"""${progressJson(progress, nToks, emitted.length.toLong, wall)},""" +
       s""""vocab":${batch.size},"terms_match":$matches,""" +
-      s""""state_rows_bound":${4L * w}"""
+      s""""state_rows_bound":${operators.Text.CountMin.Rows * operators.Text.CountMinWidth}"""
   }
 
   // stage 5a''''''': the COMPOSED INGEST LOOP — gate → admit →

@@ -13,6 +13,12 @@ object TextQueries {
   private def h60(e: String): String =
     s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
 
+  /** DuckDB one-column table `0 until n` named `v` — a sketch's hash-row
+    * (count-min `j`) or hash-position (Bloom `i`) index.
+    */
+  private def valuesOf(n: Int, v: String): String =
+    s"(VALUES ${(0 until n).map(i => s"($i)").mkString(",")}) AS $v$v($v)"
+
   /** Shingle CTE over an arbitrary docs relation (default the full
     * table) — q150 points it at the deterministic doc sample.
     */
@@ -893,7 +899,7 @@ object TextQueries {
       s"""WITH t AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
          |f AS (SELECT term, COUNT(*) AS cnt FROM t GROUP BY term),
          |e AS (SELECT term, cnt, j, ${h60("concat(term, '#', j)")} % ${operators.Text.CountMinWidth} AS bkt
-         |      FROM f CROSS JOIN (VALUES (0),(1),(2),(3)) AS jj(j)),
+         |      FROM f CROSS JOIN ${valuesOf(CountMin.Rows, "j")}),
          |sk AS (SELECT j, bkt, CAST(SUM(cnt) AS BIGINT) AS bsum
          |       FROM e GROUP BY 1, 2)
          |SELECT e.term, e.cnt, MIN(bsum) AS est,
@@ -911,7 +917,7 @@ object TextQueries {
       s"""WITH t AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
          |f AS (SELECT term, COUNT(*) AS cnt FROM t GROUP BY term),
          |e AS (SELECT term, cnt, j, ${h60("concat(term, '#', j)")} % ${operators.Text.CountMinWidth} AS bkt
-         |      FROM f CROSS JOIN (VALUES (0),(1),(2),(3)) AS jj(j)),
+         |      FROM f CROSS JOIN ${valuesOf(CountMin.Rows, "j")}),
          |sk AS (SELECT j, bkt, CAST(SUM(cnt) AS BIGINT) AS bsum
          |       FROM e GROUP BY 1, 2),
          |est AS (SELECT e.term, e.cnt, MIN(bsum) AS est
@@ -919,11 +925,11 @@ object TextQueries {
          |tt AS (SELECT term, true_rank FROM (
          |         SELECT term, CAST(row_number() OVER
          |           (ORDER BY cnt DESC, term) AS INT) AS true_rank
-         |         FROM est) r WHERE true_rank <= 10),
+         |         FROM est) r WHERE true_rank <= ${CountMin.TopK}),
          |te AS (SELECT term, est_rank FROM (
          |         SELECT term, CAST(row_number() OVER
          |           (ORDER BY est DESC, term) AS INT) AS est_rank
-         |         FROM est) r WHERE est_rank <= 10),
+         |         FROM est) r WHERE est_rank <= ${CountMin.TopK}),
          |keep AS (SELECT term FROM tt UNION SELECT term FROM te)
          |SELECT est.term, est.cnt, est.est,
          |  COALESCE(true_rank, 0) AS true_rank,
@@ -945,7 +951,7 @@ object TextQueries {
          |fc AS (SELECT cls, term, COUNT(*) AS cnt FROM t GROUP BY 1, 2),
          |ec AS (SELECT cls, term, cnt, j,
          |    ${h60("concat(term, '#', j)")} % ${operators.Text.CountMinWidth} AS bkt
-         |  FROM fc CROSS JOIN (VALUES (0),(1),(2),(3)) AS jj(j)),
+         |  FROM fc CROSS JOIN ${valuesOf(CountMin.Rows, "j")}),
          |skc AS (SELECT cls, j, bkt, CAST(SUM(cnt) AS BIGINT) AS bsum
          |        FROM ec GROUP BY 1, 2, 3),
          |mg AS (SELECT j, bkt, CAST(SUM(bsum) AS BIGINT) AS bsum_m
@@ -953,7 +959,7 @@ object TextQueries {
          |f AS (SELECT term, SUM(cnt) AS cnt FROM fc GROUP BY 1),
          |e AS (SELECT term, cnt, j,
          |    ${h60("concat(term, '#', j)")} % ${operators.Text.CountMinWidth} AS bkt
-         |  FROM f CROSS JOIN (VALUES (0),(1),(2),(3)) AS jj(j)),
+         |  FROM f CROSS JOIN ${valuesOf(CountMin.Rows, "j")}),
          |skd AS (SELECT j, bkt, CAST(SUM(cnt) AS BIGINT) AS bsum_d
          |        FROM e GROUP BY 1, 2)
          |SELECT e.term, CAST(e.cnt AS BIGINT) AS cnt,
@@ -972,15 +978,15 @@ object TextQueries {
     QueryDef("q142_bloom_merge", (s, d) => bloomMerge(s, d), Some(
       s"""WITH d AS (SELECT source, md5(text) AS h FROM documents),
          |k AS (SELECT DISTINCT h FROM d),
-         |mm AS (SELECT COUNT(*) * 8 AS m FROM k),
+         |mm AS (SELECT COUNT(*) * ${Bloom.BitsPerKey} AS m FROM k),
          |kc AS (SELECT DISTINCT
          |         CASE WHEN source = 'src0' THEN 'src0' ELSE 'rest' END AS cls,
          |         h FROM d),
          |merged AS (SELECT DISTINCT ${h60("concat(h, '#', i)")} % m AS pos
-         |           FROM kc CROSS JOIN (VALUES (0),(1),(2),(3),(4)) AS ii(i)
+         |           FROM kc CROSS JOIN ${valuesOf(Bloom.K, "i")}
          |             CROSS JOIN mm),
          |direct AS (SELECT DISTINCT ${h60("concat(h, '#', i)")} % m AS pos
-         |           FROM k CROSS JOIN (VALUES (0),(1),(2),(3),(4)) AS ii(i)
+         |           FROM k CROSS JOIN ${valuesOf(Bloom.K, "i")}
          |             CROSS JOIN mm),
          |bs AS (SELECT
          |    (SELECT COUNT(*) FROM merged) AS n_bits_merged,
@@ -1001,15 +1007,15 @@ object TextQueries {
          |             THEN 1 ELSE 0 END) AS nd
          |       FROM (SELECT key, member,
          |               ${h60("concat(key, '#', i)")} % m AS pos
-         |             FROM pr CROSS JOIN (VALUES (0),(1),(2),(3),(4)) AS ii(i)
+         |             FROM pr CROSS JOIN ${valuesOf(Bloom.K, "i")}
          |               CROSS JOIN mm) p
          |       GROUP BY key, member)
          |SELECT member, COUNT(*) AS n_probes,
-         |  CAST(SUM(CASE WHEN nm = 5 THEN 1 ELSE 0 END) AS BIGINT)
+         |  CAST(SUM(CASE WHEN nm = ${Bloom.K} THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_pass_merged,
-         |  CAST(SUM(CASE WHEN nd = 5 THEN 1 ELSE 0 END) AS BIGINT)
+         |  CAST(SUM(CASE WHEN nd = ${Bloom.K} THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_pass_direct,
-         |  CAST(SUM(CASE WHEN (nm = 5) = (nd = 5) THEN 1 ELSE 0 END)
+         |  CAST(SUM(CASE WHEN (nm = ${Bloom.K}) = (nd = ${Bloom.K}) THEN 1 ELSE 0 END)
          |    AS BIGINT) AS n_verdicts_equal,
          |  (SELECT n_bits_merged FROM bs) AS n_bits_merged,
          |  (SELECT n_bits_direct FROM bs) AS n_bits_direct,
@@ -1022,10 +1028,10 @@ object TextQueries {
     // built over src0, probed by every other source's arrivals.
     QueryDef("q91_bloom_prefilter", (s, d) => bloomPrefilter(s, d), Some(
       s"""WITH d AS (SELECT doc_id, source, md5(text) AS h FROM documents),
-         |mm AS (SELECT COUNT(*) * 8 AS m FROM d WHERE source = 'src0'),
+         |mm AS (SELECT COUNT(*) * ${Bloom.BitsPerKey} AS m FROM d WHERE source = 'src0'),
          |pos AS (SELECT doc_id, source, h,
          |          ${h60("concat(h, '#', i)")} % m AS pos
-         |        FROM d CROSS JOIN (VALUES (0),(1),(2),(3),(4)) AS ii(i)
+         |        FROM d CROSS JOIN ${valuesOf(Bloom.K, "i")}
          |          CROSS JOIN mm),
          |bits AS (SELECT DISTINCT pos FROM pos WHERE source = 'src0'),
          |ch AS (SELECT DISTINCT h FROM d WHERE source = 'src0'),
@@ -1033,11 +1039,11 @@ object TextQueries {
          |       FROM pos JOIN bits USING (pos) WHERE source <> 'src0'
          |       GROUP BY 1)
          |SELECT d.source, COUNT(*) AS n_new,
-         |  CAST(SUM(CASE WHEN n_bits_set = 5 THEN 1 ELSE 0 END) AS BIGINT)
+         |  CAST(SUM(CASE WHEN n_bits_set = ${Bloom.K} THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_pass,
          |  CAST(SUM(CASE WHEN d.h IN (SELECT h FROM ch) THEN 1 ELSE 0 END)
          |    AS BIGINT) AS n_dup,
-         |  CAST(SUM(CASE WHEN n_bits_set = 5 THEN 1 ELSE 0 END) AS BIGINT) -
+         |  CAST(SUM(CASE WHEN n_bits_set = ${Bloom.K} THEN 1 ELSE 0 END) AS BIGINT) -
          |  CAST(SUM(CASE WHEN d.h IN (SELECT h FROM ch) THEN 1 ELSE 0 END)
          |    AS BIGINT) AS n_false_pos
          |FROM d LEFT JOIN np ON np.doc_id = d.doc_id
@@ -1062,27 +1068,27 @@ object TextQueries {
          |  FROM (SELECT lang, string_split(text, ' ') AS w FROM documents)),
          |h AS (SELECT domain, lang, ${h60("item")} AS h FROM it),
          |regs AS (
-         |  SELECT domain, lang, h % 256 AS bucket,
-         |    MAX(CASE WHEN (h // 256) = 0 THEN 24
-         |      ELSE LEAST(CAST(round(log2((h // 256) & (-(h // 256)))) AS INT)
-         |        + 1, 24) END) AS r
+         |  SELECT domain, lang, h % ${Hll.M} AS bucket,
+         |    MAX(CASE WHEN (h // ${Hll.M}) = 0 THEN ${Hll.Cap}
+         |      ELSE LEAST(CAST(round(log2((h // ${Hll.M}) & (-(h // ${Hll.M})))) AS INT)
+         |        + 1, ${Hll.Cap}) END) AS r
          |  FROM h GROUP BY 1, 2, 3),
          |summ AS (
          |  SELECT domain, lang,
-         |    SUM(CAST(1 AS BIGINT) << (24 - r)) +
-         |      (256 - COUNT(*)) * (CAST(1 AS BIGINT) << 24) AS s_total,
+         |    SUM(CAST(1 AS BIGINT) << (${Hll.Cap} - r)) +
+         |      (${Hll.M} - COUNT(*)) * (CAST(1 AS BIGINT) << ${Hll.Cap}) AS s_total,
          |    CAST(COUNT(*) AS BIGINT) AS n_buckets,
          |    CAST(MAX(r) AS INT) AS max_rho
          |  FROM regs GROUP BY 1, 2),
          |est AS (
          |  SELECT domain, lang, n_buckets, max_rho,
-         |    789749515417550848 // (1000000 * s_total) AS raw,
-         |    256 - n_buckets AS zeros
+         |    ${Hll.Numerator} // (1000000 * s_total) AS raw,
+         |    ${Hll.M} - n_buckets AS zeros
          |  FROM summ),
          |fin AS (
          |  SELECT domain, lang, n_buckets, max_rho,
-         |    CASE WHEN zeros > 0 AND raw <= 640
-         |      THEN (256 * CAST(round(ln(256.0 / zeros) * 1000000) AS BIGINT))
+         |    CASE WHEN zeros > 0 AND raw <= ${5 * Hll.M / 2}
+         |      THEN (${Hll.M} * CAST(round(ln(${Hll.M}.0 / zeros) * 1000000) AS BIGINT))
          |        // 1000000
          |      ELSE raw END AS n_hll
          |  FROM est),
@@ -1112,51 +1118,51 @@ object TextQueries {
          |  WHERE len(w) >= 3),
          |h AS (SELECT lang, cls, ${h60("item")} AS h FROM it),
          |rho AS (
-         |  SELECT lang, cls, h % 256 AS bucket,
-         |    CASE WHEN (h // 256) = 0 THEN 24
-         |      ELSE LEAST(CAST(round(log2((h // 256) & (-(h // 256)))) AS INT)
-         |        + 1, 24) END AS r0
+         |  SELECT lang, cls, h % ${Hll.M} AS bucket,
+         |    CASE WHEN (h // ${Hll.M}) = 0 THEN ${Hll.Cap}
+         |      ELSE LEAST(CAST(round(log2((h // ${Hll.M}) & (-(h // ${Hll.M})))) AS INT)
+         |        + 1, ${Hll.Cap}) END AS r0
          |  FROM h),
          |pc AS (SELECT lang, cls, bucket, MAX(r0) AS r FROM rho
          |       GROUP BY 1, 2, 3),
          |cls_est AS (
          |  SELECT lang, cls,
-         |    CASE WHEN (256 - nb) > 0 AND raw <= 640
-         |      THEN (256 * CAST(round(ln(256.0 / (256 - nb)) * 1000000) AS BIGINT))
+         |    CASE WHEN (${Hll.M} - nb) > 0 AND raw <= ${5 * Hll.M / 2}
+         |      THEN (${Hll.M} * CAST(round(ln(${Hll.M}.0 / (${Hll.M} - nb)) * 1000000) AS BIGINT))
          |        // 1000000
          |      ELSE raw END AS n_hll
          |  FROM (
          |    SELECT lang, cls, COUNT(*) AS nb,
-         |      789749515417550848 // (1000000 *
-         |        (SUM(CAST(1 AS BIGINT) << (24 - r)) +
-         |         (256 - COUNT(*)) * (CAST(1 AS BIGINT) << 24))) AS raw
+         |      ${Hll.Numerator} // (1000000 *
+         |        (SUM(CAST(1 AS BIGINT) << (${Hll.Cap} - r)) +
+         |         (${Hll.M} - COUNT(*)) * (CAST(1 AS BIGINT) << ${Hll.Cap}))) AS raw
          |    FROM pc GROUP BY 1, 2)),
          |mg AS (SELECT lang, bucket, MAX(r) AS r FROM pc GROUP BY 1, 2),
          |mg_est AS (
          |  SELECT lang,
-         |    CASE WHEN (256 - nb) > 0 AND raw <= 640
-         |      THEN (256 * CAST(round(ln(256.0 / (256 - nb)) * 1000000) AS BIGINT))
+         |    CASE WHEN (${Hll.M} - nb) > 0 AND raw <= ${5 * Hll.M / 2}
+         |      THEN (${Hll.M} * CAST(round(ln(${Hll.M}.0 / (${Hll.M} - nb)) * 1000000) AS BIGINT))
          |        // 1000000
          |      ELSE raw END AS n_hll_merged
          |  FROM (
          |    SELECT lang, COUNT(*) AS nb,
-         |      789749515417550848 // (1000000 *
-         |        (SUM(CAST(1 AS BIGINT) << (24 - r)) +
-         |         (256 - COUNT(*)) * (CAST(1 AS BIGINT) << 24))) AS raw
+         |      ${Hll.Numerator} // (1000000 *
+         |        (SUM(CAST(1 AS BIGINT) << (${Hll.Cap} - r)) +
+         |         (${Hll.M} - COUNT(*)) * (CAST(1 AS BIGINT) << ${Hll.Cap}))) AS raw
          |    FROM mg GROUP BY 1)),
          |dregs AS (SELECT lang, bucket, MAX(r0) AS r FROM rho
          |          GROUP BY 1, 2),
          |dr_est AS (
          |  SELECT lang,
-         |    CASE WHEN (256 - nb) > 0 AND raw <= 640
-         |      THEN (256 * CAST(round(ln(256.0 / (256 - nb)) * 1000000) AS BIGINT))
+         |    CASE WHEN (${Hll.M} - nb) > 0 AND raw <= ${5 * Hll.M / 2}
+         |      THEN (${Hll.M} * CAST(round(ln(${Hll.M}.0 / (${Hll.M} - nb)) * 1000000) AS BIGINT))
          |        // 1000000
          |      ELSE raw END AS n_hll_direct
          |  FROM (
          |    SELECT lang, COUNT(*) AS nb,
-         |      789749515417550848 // (1000000 *
-         |        (SUM(CAST(1 AS BIGINT) << (24 - r)) +
-         |         (256 - COUNT(*)) * (CAST(1 AS BIGINT) << 24))) AS raw
+         |      ${Hll.Numerator} // (1000000 *
+         |        (SUM(CAST(1 AS BIGINT) << (${Hll.Cap} - r)) +
+         |         (${Hll.M} - COUNT(*)) * (CAST(1 AS BIGINT) << ${Hll.Cap}))) AS raw
          |    FROM dregs GROUP BY 1)),
          |ex AS (SELECT lang, COUNT(DISTINCT item) AS n_exact_union FROM it
          |       GROUP BY 1)

@@ -1073,12 +1073,97 @@ object Text {
     ws.map(w => "'" + w.replace("'", "''") + "'").mkString("(", ", ", ")")
 
   /** Count-min sketch width shared by the batch operator, the q90 oracle
-    * SQL, and [[graft.streaming.TextStreams.streamingCountMin]] — a
-    * single constant so the three can never drift apart (the cell-id
-    * scheme and oracle equality silently break if any one changes
-    * alone).
+    * SQL, and [[graft.streaming.TextStreams.streamingCountMin]]. Each
+    * §7.6 sketch below has ONE owner holding its parameters and its row
+    * expansion: the batch queries call the Column spelling, the oracle
+    * SQL reads the parameters, and the streaming twins
+    * (`TextStreams.countMinCells`, `hllRegister`, `hllEstimate`) are the
+    * Scala spelling of the same rule over the same constants.
     */
   val CountMinWidth = 16
+
+  /** Count-min (q90, q139, q148): `Rows` rows salted `term#j`. */
+  object CountMin {
+    val Rows = 4
+    val TopK = 10 // q148's heavy hitters
+
+    /** `(keys…, term, cnt)` → one row per hash row, `(…, j, bkt)`. */
+    def cells(freq: DataFrame): DataFrame = freq
+      .select(col("*"), explode(array((0 until Rows).map(lit): _*)).as("j"))
+      .withColumn("bkt",
+        hash60(concat(col("term"), lit("#"), col("j"))) % CountMinWidth)
+
+    /** The cell sums of a cell expansion: `(keys…, j, bkt, <name>)`. */
+    def table(cells: DataFrame, name: String, keys: String*): DataFrame =
+      cells.groupBy(keys.map(col) ++ Seq(col("j"), col("bkt")): _*)
+        .agg(sum(col("cnt")).cast(LongType).as(name))
+
+    /** `(term, cnt)` → `(term, cnt, est)`, the min over the term's cells. */
+    def estimates(freq: DataFrame): DataFrame = {
+      val expanded = cells(freq)
+      expanded.join(table(expanded, "bsum"), Seq("j", "bkt"))
+        .groupBy(col("term"), col("cnt"))
+        .agg(min(col("bsum")).as("est"))
+    }
+  }
+
+  /** HyperLogLog (q134, q138): `M` registers, bucket `h mod M`, rank the
+    * trailing zeros of `h >>> BucketBits` plus one, capped at `Cap`.
+    */
+  object Hll {
+    val BucketBits = 8
+    val M: Int = 1 << BucketBits
+    val Cap = 24
+    /** alpha_M in millionths (0.718273) times M² · 2^Cap. */
+    val Numerator: Long = (718273L * M * M) << Cap
+
+    /** `(keys…, h)` → `(keys…, bucket, r)`, the max rank per bucket. */
+    def registers(hashed: DataFrame, keys: String*): DataFrame = {
+      val v = shiftright(col("h"), BucketBits)
+      val rank = when(v === 0, lit(Cap)).otherwise(
+        least(round(log2(v.bitwiseAND(-v))).cast(IntegerType) + lit(1), lit(Cap)))
+      hashed.groupBy(keys.map(col) :+ pmod(col("h"), lit(M)).as("bucket"): _*)
+        .agg(max(rank).as("r"))
+    }
+
+    /** The estimator over `(keys…, bucket, r)`: per key group, the
+      * rank-capped BIGINT harmonic sum, one exact integer division, and
+      * the linear-counting small-range switch (one float ln rounded at
+      * micro precision, the q80 discipline).
+      */
+    def summary(regs: DataFrame, keys: String*): DataFrame =
+      regs.groupBy(keys.map(col): _*)
+        .agg(sum(expr(s"shiftleft(1L, $Cap - r)")).as("s_present"),
+          count(lit(1)).as("n_buckets"), max(col("r")).as("max_rho"))
+        .withColumn("s_total", col("s_present") +
+          (lit(M.toLong) - col("n_buckets")) * lit(1L << Cap))
+        .withColumn("raw", expr(s"${Numerator}L div (1000000L * s_total)"))
+        .withColumn("zeros", lit(M.toLong) - col("n_buckets"))
+        .withColumn("n_hll", expr(
+          s"""CASE WHEN zeros > 0 AND raw <= ${5 * M / 2}
+             |  THEN (${M}L * CAST(round(ln(${M}.0 / zeros) * 1000000) AS BIGINT))
+             |    div 1000000L
+             |  ELSE raw END""".stripMargin))
+  }
+
+  /** Bloom (q91, q142): `K` positions `hash60(key#i) mod m`, the bit
+    * space `m` sized at `BitsPerKey` bits per built key.
+    */
+  object Bloom {
+    val K = 5
+    val BitsPerKey = 8
+
+    /** Each row → `K` rows carrying `pos`, a bit of `key` among `m`. */
+    def positions(keyed: DataFrame, key: String, m: Column): DataFrame = keyed
+      .select(col("*"), explode(array((0 until K).map(lit): _*)).as("i"))
+      .withColumn("pos", hash60(concat(col(key), lit("#"), col("i"))) % m)
+  }
+
+  /** The source-class split the mergeability audits (q138, q139, q142)
+    * build their per-class sketches over: src0 vs the rest.
+    */
+  private def sourceClass: Column =
+    when(col("source") === "src0", lit("src0")).otherwise(lit("rest"))
 
   /** Lexicon scrub — deny-list redaction with an audit trail, the
     * auditable form of PII scrubbing (the synthetic corpus carries no
@@ -1960,27 +2045,14 @@ object Text {
     * aggregation); everything after runs on the vocabulary (×4 hash
     * rows) and the 4·w-cell sketch — both corpus-size-independent.
     */
-  def countMinSketch(s: SparkSession, dir: String): DataFrame = {
-    val w = CountMinWidth
+  def countMinSketch(s: SparkSession, dir: String): DataFrame =
     // true frequencies roll up from the landed TF stage (vocab-bounded
     // input rows) — the corpus token stream is never re-exploded
-    val freq = tfStage(s, dir)
-      .groupBy(col("term")).agg(sum(col("cnt")).as("cnt"))
-    val expanded = freq
-      .select(col("term"), col("cnt"),
-        explode(array((0 until 4).map(lit): _*)).as("j"))
-      .withColumn("bkt",
-        hash60(concat(col("term"), lit("#"), col("j"))) % w)
-    val sketch = expanded.groupBy(col("j"), col("bkt"))
-      .agg(sum(col("cnt")).cast(LongType).as("bsum"))
-    expanded
-      .join(sketch, Seq("j", "bkt"))
-      .groupBy(col("term"), col("cnt"))
-      .agg(min(col("bsum")).as("est"))
+    CountMin.estimates(
+      tfStage(s, dir).groupBy(col("term")).agg(sum(col("cnt")).as("cnt")))
       .select(col("term"), col("cnt"), col("est"),
         (col("est") - col("cnt")).as("overcount"))
       .orderBy(col("term"))
-  }
 
   /** Count-min MERGEABILITY audit (q139) — the LINEAR twin of q138's
     * max-merge: count-min cells merge by SUM, so per-partition (here:
@@ -1995,30 +2067,17 @@ object Text {
     * integers throughout, the q90 discipline).
     */
   def countMinMerge(s: SparkSession, dir: String): DataFrame = {
-    val w = CountMinWidth
     val freqCls = tfStage(s, dir)
-      .withColumn("cls", when(col("source") === "src0", lit("src0"))
-        .otherwise(lit("rest")))
+      .withColumn("cls", sourceClass)
       .groupBy(col("cls"), col("term")).agg(sum(col("cnt")).as("cnt"))
-    val expandedCls = freqCls
-      .select(col("cls"), col("term"), col("cnt"),
-        explode(array((0 until 4).map(lit): _*)).as("j"))
-      .withColumn("bkt",
-        hash60(concat(col("term"), lit("#"), col("j"))) % w)
-    val sketchCls = expandedCls.groupBy(col("cls"), col("j"), col("bkt"))
-      .agg(sum(col("cnt")).cast(LongType).as("bsum"))
+    val sketchCls = CountMin.table(CountMin.cells(freqCls), "bsum", "cls")
     // the MERGE: cell-wise SUM across the class sketches — no token
     // or term is re-read
     val merged = sketchCls.groupBy(col("j"), col("bkt"))
       .agg(sum(col("bsum")).cast(LongType).as("bsum_m"))
     val freq = freqCls.groupBy(col("term")).agg(sum(col("cnt")).as("cnt"))
-    val expanded = freq
-      .select(col("term"), col("cnt"),
-        explode(array((0 until 4).map(lit): _*)).as("j"))
-      .withColumn("bkt",
-        hash60(concat(col("term"), lit("#"), col("j"))) % w)
-    val sketchDirect = expanded.groupBy(col("j"), col("bkt"))
-      .agg(sum(col("cnt")).cast(LongType).as("bsum_d"))
+    val expanded = CountMin.cells(freq)
+    val sketchDirect = CountMin.table(expanded, "bsum_d")
     expanded
       .join(merged, Seq("j", "bkt"))
       .join(sketchDirect, Seq("j", "bkt"))
@@ -2051,17 +2110,7 @@ object Text {
     * summaries, never the corpus (the q24/q82/q89/q114 allowlist
     * class).
     */
-  def heavyHitters(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    val w = CountMinWidth
-    val freq = tfStage(s, dir)
-      .groupBy(col("term")).agg(sum(col("cnt")).as("cnt"))
-    val expanded = freq
-      .select(col("term"), col("cnt"),
-        explode(array((0 until 4).map(lit): _*)).as("j"))
-      .withColumn("bkt",
-        hash60(concat(col("term"), lit("#"), col("j"))) % w)
-    val sketch = expanded.groupBy(col("j"), col("bkt"))
-      .agg(sum(col("cnt")).cast(LongType).as("bsum"))
+  def heavyHitters(s: SparkSession, dir: String): DataFrame = {
     // Optimization round 16: checkpoint removal was TRIED here (the r15
     // q94 discipline) and reverted on measurement — two of the four
     // consumers are TakeOrdered top-k's, which AQE executes as eager
@@ -2071,16 +2120,15 @@ object Text {
     // term-not-null pin did not change it). The pinned table is
     // VOCAB-bounded (sublinear in corpus bytes), not corpus-row-sized,
     // so the q94 unevictable-state hazard is bounded here.
-    val est = expanded.join(sketch, Seq("j", "bkt"))
-      .groupBy(col("term"), col("cnt"))
-      .agg(min(col("bsum")).as("est"))
+    val est = CountMin.estimates(
+        tfStage(s, dir).groupBy(col("term")).agg(sum(col("cnt")).as("cnt")))
       .localCheckpoint(true) // four consumers (two top-k's + attach)
     val wTrue = Window.orderBy(col("cnt").desc, col("term"))
     val wEst = Window.orderBy(col("est").desc, col("term"))
-    val topTrue = est.orderBy(col("cnt").desc, col("term")).limit(k)
+    val topTrue = est.orderBy(col("cnt").desc, col("term")).limit(CountMin.TopK)
       .withColumn("true_rank", row_number().over(wTrue))
       .select(col("term"), col("true_rank"))
-    val topEst = est.orderBy(col("est").desc, col("term")).limit(k)
+    val topEst = est.orderBy(col("est").desc, col("term")).limit(CountMin.TopK)
       .withColumn("est_rank", row_number().over(wEst))
       .select(col("term").as("term_e"), col("est_rank"))
     val keep = topTrue.select(col("term"))
@@ -2121,8 +2169,7 @@ object Text {
     * merged OR is exactly the map-side-combine that lets every
     * executor keep a local filter and union lazily.
     */
-  def bloomMerge(s: SparkSession, dir: String, bitsPerKey: Int = 8)
-      : DataFrame = {
+  def bloomMerge(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
       .select(col("source"), md5(col("text").cast(BinaryType)).as("h"))
     // Optimization round 16 (guide §2.3/§1.2 — don't pay the corpus pass
@@ -2133,8 +2180,7 @@ object Text {
     // (its count() is unavoidable — the bit space m derives from data)
     // and derive `keys` from it with an O(distinct-h) re-dedup.
     val keyedCls = d
-      .withColumn("cls", when(col("source") === "src0", lit("src0"))
-        .otherwise(lit("rest")))
+      .withColumn("cls", sourceClass)
       .select(col("cls"), col("h")).distinct()
     val keys = keyedCls.select(col("h")).distinct()
     // Optimization round 16 (guide §2.4/§5 — the r15 q94 lesson):
@@ -2151,17 +2197,12 @@ object Text {
     // has an md5, so corpus non-empty ⟺ m > 0.
     require(!Tables.documents(s, dir).select(col("doc_id")).limit(1)
       .isEmpty, "bloomMerge: empty corpus — no bit space to build")
-    val m = keys.agg((count(lit(1)) * bitsPerKey).as("m")).scalar()
-    val five = explode(array((0 until 5).map(lit): _*))
-    val bitsCls = keyedCls
-      .select(col("cls"), col("h"), five.as("i"))
-      .withColumn("pos", hash60(concat(col("h"), lit("#"), col("i"))) % m)
+    val m = keys.agg((count(lit(1)) * Bloom.BitsPerKey).as("m")).scalar()
+    val bitsCls = Bloom.positions(keyedCls, "h", m)
       .select(col("cls"), col("pos")).distinct()
     // the MERGE: position-wise OR = set union across the class sketches
     val merged = bitsCls.select(col("pos")).distinct()
-    val direct = keys
-      .select(col("h"), five.as("i"))
-      .withColumn("pos", hash60(concat(col("h"), lit("#"), col("i"))) % m)
+    val direct = Bloom.positions(keys, "h", m)
       .select(col("pos")).distinct()
     val bitStats = merged.withColumn("a", lit(1))
       .join(direct.withColumn("b", lit(1)), Seq("pos"), "full_outer")
@@ -2173,16 +2214,14 @@ object Text {
       .unionByName(s.range(1000)
         .select(concat(lit("probe#"), col("id")).as("key"),
           lit(0).as("member")))
-    probes
-      .select(col("key"), col("member"), five.as("i"))
-      .withColumn("pos", hash60(concat(col("key"), lit("#"), col("i"))) % m)
+    Bloom.positions(probes, "key", m)
       .join(broadcast(merged.withColumn("in_m", lit(1))), Seq("pos"), "left")
       .join(broadcast(direct.withColumn("in_d", lit(1))), Seq("pos"), "left")
       .groupBy(col("key"), col("member"))
       .agg(sum(coalesce(col("in_m"), lit(0))).as("nm"),
         sum(coalesce(col("in_d"), lit(0))).as("nd"))
-      .withColumn("pass_m", (col("nm") === 5).cast(IntegerType))
-      .withColumn("pass_d", (col("nd") === 5).cast(IntegerType))
+      .withColumn("pass_m", (col("nm") === Bloom.K).cast(IntegerType))
+      .withColumn("pass_d", (col("nd") === Bloom.K).cast(IntegerType))
       .groupBy(col("member"))
       .agg(count(lit(1)).as("n_probes"),
         sum(col("pass_m")).cast(LongType).as("n_pass_merged"),
@@ -2220,7 +2259,7 @@ object Text {
     *    not;
     *  - the estimate is one exact integer division:
     *    `(alpha_256 in millionths * m^2 * 2^24) div (10^6 * S)` — the
-    *    numerator precomputed as a literal, alpha_256 = 0.718273
+    *    numerator is the constant `Hll.Numerator`, alpha_256 = 0.718273
     *    (0.7213 / (1 + 1.079/256)) — plus the textbook small-range
     *    switch to linear counting (`m·ln(m/zeros)` when zeros > 0 and
     *    the raw estimate ≤ 2.5m), its one float ln rounded at micro
@@ -2236,9 +2275,6 @@ object Text {
     * two-shuffle distinct the sketch replaces.
     */
   def hllDistinct(s: SparkSession, dir: String): DataFrame = {
-    val m = 256
-    val cap = 24
-    val num = 789749515417550848L // 718273 * 2^40 = alpha_ppm * m^2 * 2^cap
     val docs = Tables.documents(s, dir)
     // two cardinality regimes in one audit: the per-lang token vocab is
     // TINY in this corpus (exercises the linear-counting branch) and
@@ -2257,14 +2293,9 @@ object Text {
       .select(lit("shingle").as("domain"), col("lang"),
         col("sh").as("item"), col("h"))
     val items = toks.unionAll(shing)
-    val hashed = items.select(col("domain"), col("lang"), col("h"))
-    val v = shiftright(col("h"), 8)
-    val rho = when(v === 0, lit(cap)).otherwise(
-      least(round(log2(v.bitwiseAND(-v))).cast(IntegerType) + lit(1), lit(cap)))
-    val regs = hashed
-      .groupBy(col("domain"), col("lang"), pmod(col("h"), lit(m)).as("bucket"))
-      .agg(max(rho).as("r"))
-    val summary = hllSummaryOf(regs, "domain", "lang")
+    val regs = Hll.registers(
+      items.select(col("domain"), col("lang"), col("h")), "domain", "lang")
+    val summary = Hll.summary(regs, "domain", "lang")
     val exact = items.groupBy(col("domain"), col("lang"))
       .agg(countDistinct(col("item")).as("n_exact"))
     exact.join(summary, Seq("domain", "lang"))
@@ -2273,34 +2304,6 @@ object Text {
           .as("abs_err_ppm"),
         col("n_buckets"), col("max_rho"))
       .orderBy(col("domain"), col("lang"))
-  }
-
-  /** The q134 HLL estimator over a register table `(keys..., bucket,
-    * r)`: per key group, the rank-capped BIGINT harmonic sum, one
-    * exact integer division, and the micro-rounded linear-counting
-    * small-range switch — shared by the one-shot audit (q134) and the
-    * merge audit (q138), spelled once so every consumer computes the
-    * identical integer arithmetic the oracle replays.
-    */
-  private[graft] def hllSummaryOf(regs: DataFrame, keys: String*): DataFrame = {
-    val m = 256
-    val cap = 24
-    val num = 789749515417550848L // 718273 * 2^40 = alpha_ppm * m^2 * 2^cap
-    regs.groupBy(keys.map(col): _*)
-      .agg(sum(expr(s"shiftleft(1L, $cap - r)")).as("s_present"),
-        count(lit(1)).as("n_buckets"), max(col("r")).as("max_rho"))
-      .withColumn("s_total", col("s_present") +
-        (lit(m.toLong) - col("n_buckets")) * lit(1L << cap))
-      .withColumn("raw", expr(s"${num}L div (1000000L * s_total)"))
-      .withColumn("zeros", lit(m.toLong) - col("n_buckets"))
-      // textbook small-range correction (linear counting), in the q80
-      // round-micro-ln discipline: one float ln rounded at micro
-      // precision, then exact integer arithmetic
-      .withColumn("n_hll", expr(
-        s"""CASE WHEN zeros > 0 AND raw <= ${5 * m / 2}
-           |  THEN (${m}L * CAST(round(ln(${m}.0 / zeros) * 1000000) AS BIGINT))
-           |    div 1000000L
-           |  ELSE raw END""".stripMargin))
   }
 
   /** HLL MERGEABILITY audit (q138) — the property that makes the
@@ -2320,8 +2323,6 @@ object Text {
     * 1 for every lang in both engines.
     */
   def hllMerge(s: SparkSession, dir: String): DataFrame = {
-    val m = 256
-    val cap = 24
     val docs = Tables.documents(s, dir)
     // the LANDED shingle stage already carries the identical per-doc
     // word-3-gram set AND its hash60 — re-deriving them here would pay
@@ -2330,13 +2331,9 @@ object Text {
     // only the doc→lang attribution is joined on
     val items = docShingles(s, dir)
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-      .select(col("lang"),
-        when(col("source") === "src0", lit("src0")).otherwise(lit("rest"))
-          .as("cls"), col("sh").as("item"), col("h"))
+      .select(col("lang"), sourceClass.as("cls"), col("sh").as("item"),
+        col("h"))
     val hashed = items.select(col("lang"), col("cls"), col("h"))
-    val v = shiftright(col("h"), 8)
-    val rho = when(v === 0, lit(cap)).otherwise(
-      least(round(log2(v.bitwiseAND(-v))).cast(IntegerType) + lit(1), lit(cap)))
     // Optimization round 16: the register table is SKETCH-sized (langs ×
     // cls × 256 buckets) so the old localCheckpoint was not a scale
     // hazard, but it still cost a driver-blocking materialization per
@@ -2345,22 +2342,18 @@ object Text {
     // build once. (direct and exact intentionally re-derive from the
     // raw items: computing them from perClass would make the
     // mergeability audit vacuous.)
-    val perClass = hashed
-      .groupBy(col("lang"), col("cls"), pmod(col("h"), lit(m)).as("bucket"))
-      .agg(max(rho).as("r"))
-    val classEst = hllSummaryOf(perClass, "lang", "cls")
+    val perClass = Hll.registers(hashed, "lang", "cls")
+    val classEst = Hll.summary(perClass, "lang", "cls")
       .groupBy(col("lang"))
       .agg(max(when(col("cls") === "src0", col("n_hll"))).as("n_hll_src0"),
         max(when(col("cls") === "rest", col("n_hll"))).as("n_hll_rest"))
     // the MERGE: per-bucket max across the class sketches — no item
     // is re-read; this is the shuffle a 1000-executor reduce performs
-    val merged = hllSummaryOf(
+    val merged = Hll.summary(
       perClass.groupBy(col("lang"), col("bucket")).agg(max(col("r")).as("r")),
       "lang").select(col("lang"), col("n_hll").as("n_hll_merged"))
-    val direct = hllSummaryOf(
-      hashed.groupBy(col("lang"), pmod(col("h"), lit(m)).as("bucket"))
-        .agg(max(rho).as("r")),
-      "lang").select(col("lang"), col("n_hll").as("n_hll_direct"))
+    val direct = Hll.summary(Hll.registers(hashed, "lang"), "lang")
+      .select(col("lang"), col("n_hll").as("n_hll_direct"))
     val exact = items.groupBy(col("lang"))
       .agg(countDistinct(col("item")).as("n_exact_union"))
     classEst.join(merged, Seq("lang")).join(direct, Seq("lang"))
@@ -2392,7 +2385,7 @@ object Text {
     * the same one-broadcast shape); arrivals are probed map-side with
     * one k-row expansion; only per-source counters shuffle.
     */
-  def bloomPrefilter(s: SparkSession, dir: String, bitsPerKey: Int = 8): DataFrame = {
+  def bloomPrefilter(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), md5(col("text").cast(BinaryType)).as("h"))
     val corpus = d.filter(col("source") === "src0")
@@ -2400,20 +2393,16 @@ object Text {
     // single aggregate the broadcast-crossJoin form ran) so an empty
     // existing corpus fails loudly here instead of `% 0` yielding nulls
     // in Spark while the DuckDB oracle errors
-    val m = corpus.count() * bitsPerKey
+    val m = corpus.count() * Bloom.BitsPerKey
     require(m > 0, "bloomPrefilter: existing corpus (source=src0) is empty — no bit space to build")
-    def positions(df: DataFrame): DataFrame = df
-      .select(col("doc_id"), col("source"), col("h"),
-        explode(array((0 until 5).map(lit): _*)).as("i"))
-      .withColumn("pos", hash60(concat(col("h"), lit("#"), col("i"))) % m)
-    val bits = positions(corpus).select(col("pos")).distinct()
+    val bits = Bloom.positions(corpus, "h", lit(m)).select(col("pos")).distinct()
     val corpusHashes = corpus.select(col("h")).distinct()
     val news = d.filter(col("source") =!= "src0")
-    val pass = positions(news)
+    val pass = Bloom.positions(news, "h", lit(m))
       .join(broadcast(bits), "pos")
       .groupBy(col("doc_id"), col("source"), col("h"))
       .agg(count(lit(1)).as("n_bits_set"))
-      .withColumn("bloom_pass", (col("n_bits_set") === 5).cast("int"))
+      .withColumn("bloom_pass", (col("n_bits_set") === Bloom.K).cast("int"))
     val withDup = pass
       .join(broadcast(corpusHashes.withColumn("is_dup", lit(1))), Seq("h"), "left")
       .withColumn("is_dup", coalesce(col("is_dup"), lit(0)))

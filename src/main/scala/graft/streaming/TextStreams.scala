@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-import graft.operators.Banding
+import graft.operators.{Banding, Text}
 
 /** The batch text-pipeline operators (operators.Text, q38/q39/q33/q37
   * family) composed as ONE streaming ingest pipeline — the shape a
@@ -28,7 +28,7 @@ object TextStreams {
     * store un-scrubbed.
     */
   def ingestPipeline(df: DataFrame, delay: String = "10 seconds"): DataFrame = {
-    val inSet = graft.operators.Text.sqlInSet(graft.operators.Text.ScrubLexicon)
+    val inSet = Text.sqlInSet(Text.ScrubLexicon)
     val scored = df
       .withColumn("w", split(col("text"), " "))
       .withColumn("n_words", size(col("w")))
@@ -158,7 +158,6 @@ object TextStreams {
   def streamingLshCollisions(spark: SparkSession, stream: DataFrame,
       ttl: TTLConfig = TTLConfig.NONE,
       banding: Banding = Banding.Default): Dataset[BandVerdict] = {
-    import graft.operators.Text
     val banded = stream
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 3)
@@ -198,7 +197,6 @@ object TextStreams {
   def streamingNearDupAdmit(spark: SparkSession, stream: DataFrame,
       ttl: TTLConfig = TTLConfig.NONE,
       banding: Banding = Banding.Default): Dataset[BandVerdict] = {
-    import graft.operators.Text
     val banded = stream
       .withColumn("w", split(col("text"), " "))
       .withColumn("hs", Text.shingleHashesOnce)
@@ -247,7 +245,6 @@ object TextStreams {
     */
   def spanContaminationAudit(stream: DataFrame, corpus: DataFrame,
       delay: String = "10 seconds"): DataFrame = {
-    import graft.operators.Text
     val corpusSpans = corpus
       .select(explode(Text.spanHashesExpr("text")).as("h")).distinct()
       .withColumn("hit", lit(1L))
@@ -311,7 +308,6 @@ object TextStreams {
     * exact integer spelling of batch q64/q119 scoring.
     */
   private[graft] def frozenModel(spark: SparkSession, dir: String): Seq[FrozenTerm] = {
-    import graft.operators.Text
     val tf = Text.tfStage(spark, dir).select(col("term"), col("doc_id"), col("cnt"))
     val ndocs = graft.sources.Tables.documents(spark, dir).count()
     val total = tf.agg(sum(col("cnt"))).head().getLong(0)
@@ -513,25 +509,25 @@ object TextStreams {
     }
   }
 
-  /** The 4 count-min cells `term` increments: cell id = j·w + bucket,
-    * the same d=4 salted buckets as the batch q90 sketch.
+  /** The count-min cells `term` increments, one per hash row: cell id =
+    * j·w + bucket, the Scala spelling of [[Text.CountMin.cells]].
     */
   private[graft] def countMinCells(term: String): Seq[Long] = {
-    val w = graft.operators.Text.CountMinWidth
-    (0 until 4).map(j => j.toLong * w + hash60(s"$term#$j") % w)
+    val w = Text.CountMinWidth
+    (0 until Text.CountMin.Rows).map(j => j.toLong * w + hash60(s"$term#$j") % w)
   }
 
-  /** The HLL register `item` updates and its rank: the batch q134
-    * sketch's 256 buckets of the 60-bit hash and its trailing-zero rank
-    * of the remaining bits, capped at 24.
+  /** The HLL register `item` updates and its rank: the Scala spelling of
+    * [[Text.Hll.registers]] for one item.
     */
   private[graft] def hllRegister(item: String): (Long, Int) = {
+    import Text.Hll.{BucketBits, Cap, M}
     val h = hash60(item)
-    val v = h >>> 8
+    val v = h >>> BucketBits
     val rho =
-      if (v == 0L) 24
-      else math.min(java.lang.Long.numberOfTrailingZeros(v) + 1, 24)
-    (h % 256, rho)
+      if (v == 0L) Cap
+      else math.min(java.lang.Long.numberOfTrailingZeros(v) + 1, Cap)
+    (h % M, rho)
   }
 
   /** The q90 count-min sketch maintained INCREMENTALLY over a term
@@ -610,25 +606,23 @@ object TextStreams {
   }
 
   /** The q134 estimate over a register snapshot (latest rank per
-    * bucket): the identical integer arithmetic as the batch/oracle
-    * spelling — BIGINT harmonic sum with ranks capped at 24, one exact
-    * integer division, micro-rounded linear counting in the
-    * small range.
+    * bucket): the Scala spelling of [[Text.Hll.summary]] — BIGINT
+    * harmonic sum with capped ranks, one exact integer division,
+    * micro-rounded linear counting in the small range.
     */
   def hllEstimate(regs: Iterable[(Long, Int)]): Long = {
-    val m = 256
-    val cap = 24
+    import Text.Hll.{Cap, M, Numerator}
     // reduce by MAX per bucket: an Update-mode sink's full emission
     // history arrives in partition-dependent order, so a snapshot that
     // still carries superseded (bucket, rank) rows must not let a stale
     // lower rank win (a plain toMap keeps the LAST duplicate)
     val present = regs.groupMapReduce(_._1)(_._2)(math.max)
-    val sTotal = present.values.map(r => 1L << (cap - r)).sum +
-      (m - present.size).toLong * (1L << cap)
-    val raw = 789749515417550848L / (1000000L * sTotal)
-    val zeros = m - present.size
-    if (zeros > 0 && raw <= 5L * m / 2)
-      m * math.round(math.log(m.toDouble / zeros) * 1e6) / 1000000L
+    val sTotal = present.values.map(r => 1L << (Cap - r)).sum +
+      (M - present.size).toLong * (1L << Cap)
+    val raw = Numerator / (1000000L * sTotal)
+    val zeros = M - present.size
+    if (zeros > 0 && raw <= 5L * M / 2)
+      M * math.round(math.log(M.toDouble / zeros) * 1e6) / 1000000L
     else raw
   }
 }

@@ -22,8 +22,8 @@ import graft.operators.Relational
   * `plan` prints each query's `explain("formatted")`, so plan claims in an
   * optimization write-up are checkable without running the query.
   *
-  * `stats` runs each query SPARK_GRAFT_STATS_REPS times (default 2; the
-  * first rep also pays codegen and landed-stage builds) and prints one
+  * `stats` runs each query twice (the first rep also pays codegen and
+  * landed-stage builds; the second is the warm figure) and prints one
   * line per rep. The line splits wall time into DRIVER phases — DataFrame
   * construction (`build`), analysis + optimization + physical planning
   * (`plan`, forcing `executedPlan`) and execution (`exec`) — and carries
@@ -86,13 +86,12 @@ object Probe {
   }
 
   private def stats(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
-    val reps = sys.env.getOrElse("SPARK_GRAFT_STATS_REPS", "2").toInt
     val c = new Counters
     spark.sparkContext.addSparkListener(c)
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
-    for (name <- names; rep <- 1 to reps) {
+    for (name <- names; rep <- 1 to 2) {
       c.reset()
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val (df, build) = timed(SparkEntry.queries(name)(spark, sfDir))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import graft.operators.Text
 import graft.streaming.{EventStreams, TextStreams, VectorStreams}
 
 /** The driver `events` table through Structured Streaming: same plans,
@@ -1121,6 +1122,23 @@ class EventStreamsSpec extends SparkSpec {
     }
     assert(got.exists { case (_, hex, _) => Integer.parseInt(hex.take(2), 16) >= 0x80 },
       "the set must cover an MD5 byte 0 >= 0x80 (the sign-extension case)")
+    // the two spellings of each sketch rule over the same strings: the
+    // streaming Scala count-min cells and HLL (bucket, rank) equal the
+    // batch owners' Column expansions element for element
+    val w = Text.CountMinWidth
+    val cells = Text.CountMin.cells(strings.toDF("term").withColumn("cnt", lit(1L)))
+      .select(col("term"), col("j"), col("bkt")).as[(String, Int, Long)].collect()
+      .groupBy(_._1).view.mapValues(_.sortBy(_._2).toSeq.map { case (_, j, b) => j * w + b })
+      .toMap
+    val regs = Text.Hll.registers(
+        strings.toDF("item").withColumn("h", Text.hash60(col("item"))), "item")
+      .as[(String, Long, Int)].collect()
+      .map { case (item, bucket, r) => item -> (bucket, r) }.toMap
+    assert(cells.size === strings.size && regs.size === strings.size)
+    strings.foreach { str =>
+      assert(TextStreams.countMinCells(str) === cells(str), s"count-min cells of '$str'")
+      assert(TextStreams.hllRegister(str) === regs(str), s"HLL register of '$str'")
+    }
   }
 
   test("streaming count-min cell sums accumulate across micro-batches to the batch sketch") {
